@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
 /** Per-round benchmark (driver contract): one JSON line with headline query
   * timings at SPARK_GRAFT_SF_DIR, plus the north-rule scaling evidence — the
   * identical synthetic crawl at two cluster sizes (N=2 and 4N=8 cores, each
-  * a CPU-pinned child JVM; no real multi-executor cluster in this sandbox,
-  * per BASELINE.md), reporting frontier URLs/sec at both, the raw scaling
+  * a CPU-pinned child JVM, clamped to the cores the box has — see
+  * [[coreLevels]]; no real multi-executor cluster in this sandbox, per
+  * BASELINE.md), reporting frontier URLs/sec at both, the raw scaling
   * efficiency (rate_4N/rate_N)/4, and — as the headline — that efficiency
   * normalized by the box's WORKLOAD-MATCHED thread-scaling ceiling (the
   * per-page render+parse work on plain threads at the same core pair, zero
@@ -73,13 +74,26 @@ object Bench {
     facultyPerDept = sys.env.getOrElse("GRAFT_BENCH_FACULTY", "288").toInt,
     errorFraction = 0.05, pubsPerFaculty = 12, bioWords = 250)
   private val benchCrawl = CrawlConfig(waveSeconds = 320.0, saltShards = 1)
-  private val nCores  = 2
-  private val n4Cores = 8
+  private val coresAvailable = Runtime.getRuntime.availableProcessors
+  private val (nCores, n4Cores, coresClamped) = coreLevels(coresAvailable)
+
+  /** The N and 4N crawl levels for a box with `available` cores: N=2, 4N=8
+    * when it has 8; below that 4N is every available core and N a quarter of
+    * them (at least 1), so no pinned child is handed cores the box lacks
+    * (`taskset -c 0-7` on 4 cores runs the "8-core" child on 4). The flag
+    * says the levels were clamped.
+    */
+  private[graft] def coreLevels(available: Int): (Int, Int, Boolean) =
+    if (available >= 8) (2, 8, false)
+    else {
+      val n4 = math.max(1, available)
+      (math.max(1, n4 / 4), n4, true)
+    }
 
   /** One cluster-size measurement: best-of rate, total URLs, whether the
     * pinned-child path was really used (the JSON must not claim a pinned
     * methodology when the fork fell back), and — from the wide child — the
-    * workload thread-scaling ceiling's raw rates at 2 and `cores` threads.
+    * workload thread-scaling ceiling's raw rates at the N and 4N levels.
     */
   private final case class ChildResult(rate: Double, urls: Long,
       pinned: Boolean, ceil: Option[(Double, Double)],
@@ -101,7 +115,7 @@ object Bench {
     forkPinnedChild(cpus, Seq(site.universities, site.deptsPerU,
       site.facultyPerDept).map(_.toString) ++ Seq(waveSeconds.toString, "2",
         benchCrawl.saltShards.toString, site.errorFraction.toString,
-        site.pubsPerFaculty.toString, site.bioWords.toString), env)
+        site.pubsPerFaculty.toString, site.bioWords.toString, nCores.toString), env)
       .getOrElse {
         // the fallback honors the SAME env contract as the child (ADVICE r4:
         // a sharded-regime request silently ran the broadcast regime here,
@@ -477,6 +491,7 @@ object Bench {
         f""""agg_deep_shuffle_mb":${selAggDeep.shufMb}%.1f,""" +
         f""""native_deep_shuffle_mb":${selNatDeep.shufMb}%.1f,""" +
         f""""window_deep_shuffle_mb":${selWinDeep.shufMb}%.1f},""" +
-        f""""n_cores":$nCores,"4n_cores":$n4Cores,"pinned":$pinned}}""")
+        f""""n_cores":$nCores,"4n_cores":$n4Cores,"pinned":$pinned,""" +
+        f""""cores_available":$coresAvailable,"cores_clamped":$coresClamped}}""")
   }
 }

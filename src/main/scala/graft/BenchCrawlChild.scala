@@ -53,6 +53,8 @@ object BenchCrawlChild {
       else base
     val runs  = args(5).toInt
     val skipCeil = sys.env.contains("GRAFT_SKIP_CEIL")
+    // the parent's narrow (N) level, which the ceilings are measured against
+    val narrow = if (args.length > 10) args(10).toInt else 2
 
     // GRAFT_MASTER overrides the master — e.g. "local-cluster[2,1,6144]"
     // runs REAL separate executor JVMs (the honest N-executors simulation:
@@ -126,12 +128,12 @@ object BenchCrawlChild {
       f"shufrows=${best._5} shufmb=${best._6 / 1e6}%.1f")
     // workload-matched scaling ceiling (only meaningful in the wide child):
     // the per-page fetch work itself (HTML render + parse, zero Spark) run on
-    // plain threads at 2 vs `cores` under the same pinning. On one box this
+    // plain threads at `narrow` vs `cores` under the same pinning. On one box this
     // bounds ANY engine's thread-scaling for this workload — memory bandwidth
     // and allocator contention are properties of the box, not the engine; a
     // real 4N-node cluster adds them linearly.
-    if (cores > 2 && !skipCeil) {
-      val c2 = workloadPagesPerSec(2)
+    if (cores > narrow && !skipCeil) {
+      val c2 = workloadPagesPerSec(narrow)
       val cN = workloadPagesPerSec(cores)
       println(f"CEIL ${c2}%.1f ${cN}%.1f")
     }
@@ -143,8 +145,8 @@ object BenchCrawlChild {
     // this box at these two widths — task scheduling, row encode, and cache
     // store contention included. The engine's raw ratio is graded against
     // the tighter of the two.
-    if (cores > 2 && !skipCeil) {
-      val s2 = sparkMapOnlyPagesPerSec(2)
+    if (cores > narrow && !skipCeil) {
+      val s2 = sparkMapOnlyPagesPerSec(narrow)
       val sN = sparkMapOnlyPagesPerSec(cores)
       println(f"CEILSPARK ${s2}%.1f ${sN}%.1f")
     }

@@ -30,6 +30,20 @@ final case class WaveFetch(url: String, urlHash: Long, host: String, depth: Int,
   *            → Bloom pre-filter + exact anti-join (URL-seen)
   *            → state DELTA committed;  wave outputs committed atomically.
   *
+  * Leaf waves: the wave's one select+fetch action also counts the fetched
+  * pages that may still link within `maxDepth` (`ok` and `depth < maxDepth`).
+  * When there are none the wave is a leaf: it skips link extraction, the
+  * URL-seen probe, the filter delta build and the unseen cache, and its delta
+  * is just the batch's new statuses. In the reference crawl (index page →
+  * profiles, `scraper.py:43-63`, `maxDepth = 1`) every wave after the index
+  * wave is a leaf.
+  *
+  * Work fixed for the crawl runs once, not per wave: the robots rules are
+  * merged to one row per host on the driver before the loop
+  * ([[graft.frontier.Robots.mergeRules]]), and a cold start seeds the
+  * broadcast-regime URL-seen filter by putting the seed hashes into it on the
+  * driver (a resume rebuilds it distributed, from the store's seen set).
+  *
   * Wave-synchronous batches — not Structured Streaming — because the primary
   * correctness obligation is deterministic, reproducible ordering vs the
   * sequential reference (`scraper.py:43-63`); see SURVEY.md §2.9.
@@ -199,7 +213,8 @@ object WaveRunner {
     val whitelist = cfg.hostWhitelist.getOrElse(
       seeds.map(s => Urls.hostOf(Urls.normalize(s.url))).distinct)
     runLoop(spark, basePending0, Nil, seen0, startWave = 0, Nil, whitelist,
-      fetcher, rules, cfg, initialPending = Some(seeds.size.toLong))
+      fetcher, rules, cfg, initialPending = Some(seeds.size.toLong),
+      seedHashes = Some(seedEntriesOf(seeds).map(_.urlHash)))
   }
 
   /** Resume a snapshot-mode crawl from its last committed wave: reconstruct
@@ -248,7 +263,7 @@ object WaveRunner {
     // extra job — the skip-empty-final-wave shortcut stays off and the loop
     // terminates on an observed empty batch as before
     runLoop(spark, basePending0, doneDeltas0, seen0, last + 1, waves, whitelist,
-      fetcher, rules, cfg, initialPending = None)
+      fetcher, rules, cfg, initialPending = None, seedHashes = None)
   }
 
   /** The wave loop (shared by cold start and resume).
@@ -257,6 +272,9 @@ object WaveRunner {
     * @param doneDeltas0    already-done frontier rows (resume reconstruction)
     * @param committedWaves already-committed wave ids, whose deltas are
     *                       stitched into the returned result
+    * @param seedHashes     cold start: the whole seen set as url hashes, put
+    *                       into the broadcast-regime filter on the driver;
+    *                       None (resume): build it distributed from seenBase0
     */
   private def runLoop(
       spark: SparkSession,
@@ -269,7 +287,8 @@ object WaveRunner {
       fetcher: String => Option[SpanDoc],
       rules: Seq[RobotsRule],
       cfg: CrawlConfig,
-      initialPending: Option[Long]
+      initialPending: Option[Long],
+      seedHashes: Option[Seq[Long]]
   ): CrawlResult = {
     import spark.implicits._
     import scala.concurrent.{Await, Future}
@@ -337,13 +356,19 @@ object WaveRunner {
     var bloomTable: Dataset[BloomShard]  = null
     var seenTotal = 0L
     if (bloomBroadcast) {
-      bloomDriver =
-        if (cfg.seenFilter == "cuckoo")
-          PartitionedCuckoo.build(seenBase0.select(col("url_hash")),
-            cfg.bloomShards, cfg.bloomExpected)
-        else
-          PartitionedBloom.build(seenBase0.select(col("url_hash")),
-            cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
+      val cuckoo = cfg.seenFilter == "cuckoo"
+      bloomDriver = seedHashes match {
+        case Some(hashes) =>
+          val f =
+            if (cuckoo) PartitionedCuckoo.empty(cfg.bloomShards, cfg.bloomExpected)
+            else PartitionedBloom.empty(cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
+          hashes.foreach(f.put)
+          f
+        case None =>
+          val hashes = seenBase0.select(col("url_hash"))
+          if (cuckoo) PartitionedCuckoo.build(hashes, cfg.bloomShards, cfg.bloomExpected)
+          else PartitionedBloom.build(hashes, cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
+      }
     } else {
       require(cfg.seenFilter == "bloom",
         "the sharded (beyond-broadcast) URL-seen regime is bloom-backed")
@@ -352,9 +377,12 @@ object WaveRunner {
       seenTotal = BloomTable.totalKeys(bloomTable)
     }
 
+    // merged to one row per host here, once: the per-wave join then needs no
+    // aggregate over the rules
+    val perHost = Robots.mergeRules(rules)
     val rulesDF = Robots.rulesDF(spark,
-      if (rules.nonEmpty) rules else Seq(RobotsRule("__none__", Nil, Robots.DefaultCrawlDelayS)))
-    val rulesBroadcastable = rules.size <= cfg.rulesBroadcastMaxRows
+      if (perHost.nonEmpty) perHost else Seq(RobotsRule("__none__", Nil, Robots.DefaultCrawlDelayS)))
+    val rulesBroadcastable = perHost.size <= cfg.rulesBroadcastMaxRows
     val whitelistDF = whitelist.toDF("host")
 
     // snapshot-mode table store (G10) — the engine speaks only to WaveStore;
@@ -549,71 +577,84 @@ object WaveRunner {
       }.toDF()
         .persist(StorageLevel.MEMORY_AND_DISK)
 
-      // one materializing action per wave decides termination AND warms the
-      // cache every downstream consumer reuses (keep driver barriers minimal:
-      // each extra .count/.isEmpty is a full job the wave loop serializes on)
-      val batchCount = phase("select+fetch", wave) { fetched.count() }
+      // one materializing action per wave decides termination, warms the
+      // cache every downstream consumer reuses, AND counts the pages that may
+      // still link within maxDepth (keep driver barriers minimal: each extra
+      // .count/.isEmpty is a full job the wave loop serializes on)
+      val isParent = col("ok") && col("depth") < cfg.maxDepth
+      val (batchCount, parentCount) = phase("select+fetch", wave) {
+        val r = fetched.agg(count(lit(1)), count(when(isParent, lit(1)))).first()
+        (r.getLong(0), r.getLong(1))
+      }
       totalFetches += batchCount
       if (batchCount == 0L) {
         fetched.unpersist()
         done = true
       } else {
-        // -- link discovery → canonical candidates (G2/G3).
-        // Two projections on purpose: the first materializes the sorted spans
-        // and first-heading offset per ROW; referencing those as attributes in
-        // the second keeps link extraction O(spans), not O(spans × links)
-        // (an inlined aggregate re-evaluates per transform element).
-        val links = fetched.filter(col("ok"))
-          .select(col("url").as("parent_url"), col("depth").as("parent_depth"),
-            col("discoveredRank").as("parent_rank"),
-            SpanExtract.sortedSpans(col("spans")).as("__spans"))
-          .withColumn("__firstH", SpanExtract.firstAnyHeadingOffset(col("__spans")))
-          .select(col("parent_url"), col("parent_depth"), col("parent_rank"),
-            explode(SpanExtract.pageLinksFrom(col("__spans"), col("__firstH"))).as("lnk"))
-          .filter(col("lnk.anchorKind") === "anchor") // name-element anchors only (scraper.py:54)
-          .select(col("parent_url"), col("parent_depth"), col("parent_rank"),
-            col("lnk.url").as("raw_url"), col("lnk.rank").as("link_rank"))
-        val candidates = links
-          // depth guard FIRST: at the leaf wave every link dies here, and the
-          // canonicalize/host UDFs are the expensive per-link work — filter
-          // before computing them, not after
-          .withColumn("depth", col("parent_depth") + 1)
-          .filter(col("depth") <= cfg.maxDepth)
-          .withColumn("url", Urls.canonicalizeUdf(col("raw_url"), col("parent_url")))
-          .withColumn("host", Urls.hostOfUdf(col("url")))
-          .withColumn("url_hash", xxhash64(col("url")))
-          // first-discovery ordering encodes (parent_rank, link_rank) into one
-          // long: rank = parent*RankBase + link. The guard fails LOUDLY on a
-          // page with ≥ RankBase links (silent collision would corrupt the
-          // first-discovery-wins ordering the exactness oracle checks); depth
-          // overflow (RankBase^depth past ~3 with large seed ranks) throws in
-          // Spark 4 ANSI arithmetic rather than wrapping.
-          .withColumn("discoveredRank",
-            when(col("link_rank") < RankBase,
-              col("parent_rank") * RankBase + col("link_rank"))
-              .otherwise(raise_error(concat(
-                lit(s"page has >= $RankBase link spans (url="), col("parent_url"),
-                lit("); discoveredRank encoding cannot order them")))))
-          // whitelist as a broadcast SEMI JOIN, not an isInCollection literal:
-          // a large host list inlined into codegen recompiles every wave (and
-          // a real crawl's whitelist is millions of hosts — join-shaped)
-          .join(broadcast(whitelistDF), Seq("host"), "left_semi")
-          // first discovery wins when several pages link the same URL this wave
-          .groupBy(col("url_hash"))
-          .agg(min(struct(col("discoveredRank"), col("url"), col("host"),
-            col("depth"), col("parent_url"))).as("c"))
-          .select(col("url_hash"), col("c.*"))
-
-        // -- URL-seen: shard-local Bloom fast path + exact anti-join (G4).
-        // The exact rescue never rewrites the seen set: it anti-joins the
-        // stable seenBase (partitioning reused) and broadcast-anti-joins the
-        // bounded accumulator of post-compaction discoveries. The PREVIOUS
-        // wave's deferred bloom/seen delta resolves here first — this is the
-        // first point in the wave that READS the seen state, which is what
-        // let its build overlap this wave's whole selection + fetch.
+        // The PREVIOUS wave's deferred bloom/seen delta resolves here first —
+        // the first point in the wave that may READ the seen state, which is
+        // what let its build overlap this wave's whole selection + fetch. A
+        // leaf wave resolves it too: its compaction below must see it applied.
         resolveBloom()
-        val seenAccBcast = seenAccRows <= cfg.deltaBroadcastMaxRows
-        val unseen =
+
+        // -- link discovery → canonical candidates → URL-seen (G2-G4), only
+        // when some fetched page may still link within maxDepth. A leaf wave
+        // (no such page) discovers nothing, so it builds none of this.
+        val unseen: Option[DataFrame] = if (parentCount == 0L) None else Some {
+          // Two projections on purpose: the first materializes the sorted
+          // spans and first-heading offset per ROW; referencing those as
+          // attributes in the second keeps link extraction O(spans), not
+          // O(spans × links) (an inlined aggregate re-evaluates per transform
+          // element). The depth guard comes first: a leaf row's links would
+          // all die at it, so they are never extracted or canonicalized.
+          val links = fetched.filter(isParent)
+            .select(col("url").as("parent_url"), col("depth").as("parent_depth"),
+              col("discoveredRank").as("parent_rank"),
+              // from the parent rows, not a lit(): an inlined wave literal
+              // would change the generated code every wave
+              (col("wave") + 1).as("discoveredWave"),
+              SpanExtract.sortedSpans(col("spans")).as("__spans"))
+            .withColumn("__firstH", SpanExtract.firstAnyHeadingOffset(col("__spans")))
+            .select(col("parent_url"), col("parent_depth"), col("parent_rank"),
+              col("discoveredWave"),
+              explode(SpanExtract.pageLinksFrom(col("__spans"), col("__firstH"))).as("lnk"))
+            .filter(col("lnk.anchorKind") === "anchor") // name-element anchors only (scraper.py:54)
+            .select(col("parent_url"), col("parent_depth"), col("parent_rank"),
+              col("discoveredWave"),
+              col("lnk.url").as("raw_url"), col("lnk.rank").as("link_rank"))
+          val candidates = links
+            .withColumn("depth", col("parent_depth") + 1)
+            .withColumn("url", Urls.canonicalizeUdf(col("raw_url"), col("parent_url")))
+            .withColumn("host", Urls.hostOfUdf(col("url")))
+            .withColumn("url_hash", xxhash64(col("url")))
+            // first-discovery ordering encodes (parent_rank, link_rank) into one
+            // long: rank = parent*RankBase + link. The guard fails LOUDLY on a
+            // page with ≥ RankBase links (silent collision would corrupt the
+            // first-discovery-wins ordering the exactness oracle checks); depth
+            // overflow (RankBase^depth past ~3 with large seed ranks) throws in
+            // Spark 4 ANSI arithmetic rather than wrapping.
+            .withColumn("discoveredRank",
+              when(col("link_rank") < RankBase,
+                col("parent_rank") * RankBase + col("link_rank"))
+                .otherwise(raise_error(concat(
+                  lit(s"page has >= $RankBase link spans (url="), col("parent_url"),
+                  lit("); discoveredRank encoding cannot order them")))))
+            // whitelist as a broadcast SEMI JOIN, not an isInCollection literal:
+            // a large host list inlined into codegen recompiles every wave (and
+            // a real crawl's whitelist is millions of hosts — join-shaped)
+            .join(broadcast(whitelistDF), Seq("host"), "left_semi")
+            // first discovery wins when several pages link the same URL this
+            // wave (every parent of a wave carries the same discoveredWave)
+            .groupBy(col("url_hash"))
+            .agg(min(struct(col("discoveredRank"), col("url"), col("host"),
+              col("depth"), col("parent_url"), col("discoveredWave"))).as("c"))
+            .select(col("url_hash"), col("c.*"))
+
+          // URL-seen: shard-local Bloom fast path + exact anti-join. The exact
+          // rescue never rewrites the seen set: it anti-joins the stable
+          // seenBase (partitioning reused) and broadcast-anti-joins the
+          // bounded accumulator of post-compaction discoveries.
+          val seenAccBcast = seenAccRows <= cfg.deltaBroadcastMaxRows
           (if (bloomBroadcast)
             UrlSeen.filterUnseen(candidates, seenBase, seenAcc, bloomDriver,
               seenAccBcast)
@@ -621,31 +662,31 @@ object WaveRunner {
             UrlSeen.filterUnseenSharded(candidates, seenBase, seenAcc,
               bloomTable, cfg.bloomShards, seenAccBcast))
             .persist(StorageLevel.MEMORY_AND_DISK)
-        val seenDelta = unseen.select(col("url_hash"), col("url"))
+        }
         // buildBloom only READS state vars and returns the wave's update
         // (count, driver-regime delta, sharded-regime table); the caller
         // applies it after the future joins (Await is the memory barrier)
         val bloomTableNow  = bloomTable
         val seenTotalNow   = seenTotal
-        def buildBloom(): (Long, SeenPreFilter, Dataset[BloomShard]) =
+        def buildBloom(delta: DataFrame): (Long, SeenPreFilter, Dataset[BloomShard]) =
           if (bloomBroadcast) {
-            val (delta, n) =
+            val (f, n) =
               if (cfg.seenFilter == "cuckoo")
-                PartitionedCuckoo.buildWithCount(seenDelta.select(col("url_hash")),
+                PartitionedCuckoo.buildWithCount(delta.select(col("url_hash")),
                   cfg.bloomShards, cfg.bloomExpected)
               else
-                PartitionedBloom.buildWithCount(seenDelta.select(col("url_hash")),
+                PartitionedBloom.buildWithCount(delta.select(col("url_hash")),
                   cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
-            (n, delta, null)
+            (n, f, null)
           } else {
-            val bloomDelta = BloomTable.fromHashes(seenDelta.select(col("url_hash")),
+            val bloomDelta = BloomTable.fromHashes(delta.select(col("url_hash")),
               cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
             val nb = BloomTable.merge(bloomTableNow, bloomDelta)
               .localCheckpoint(false) // lazy: materialized by the totalKeys action
             (BloomTable.totalKeys(nb) - seenTotalNow, null, nb)
           }
 
-        val newEntries = unseen.select(
+        val newEntries = unseen.map(_.select(
           col("url"),
           col("url_hash").as("urlHash"),
           col("host"),
@@ -654,9 +695,9 @@ object WaveRunner {
             WaveSelector.profileShaped(col("url"))).as("priority"),
           lit(FrontierStatus.Pending).as("status"),
           lit(0).as("retries"),
-          lit(wave + 1).as("discoveredWave"),
+          col("discoveredWave"),
           col("discoveredRank"),
-          col("parent_url").as("parentUrl"))
+          col("parent_url").as("parentUrl")))
 
         // -- state transition (G8): selected rows leave pending (errors
         // retry); the wave's DELTA is just their new statuses + discoveries —
@@ -669,7 +710,7 @@ object WaveRunner {
               .otherwise(FrontierStatus.Error).as("status"),
             when(col("ok"), col("retries")).otherwise(col("retries") + 1).as("retries"),
             col("discoveredWave"), col("discoveredRank"), col("parentUrl"))
-        val waveDelta = finished.unionByName(newEntries)
+        val waveDelta = newEntries.fold(finished)(finished.unionByName(_))
 
         val docsDelta = fetched.filter(col("ok"))
           .select(col("url"), col("urlHash"), col("host"), col("depth"), col("wave"), col("spans"))
@@ -699,16 +740,18 @@ object WaveRunner {
             // snapshot mode stays fully synchronous: a committed wave's
             // marker must imply its seen/bloom state is durable+applied
             // before the next wave starts (the resume contract)
-            val (n, drv, tbl) = phase("discover+seen", wave) { buildBloom() }
-            val metricsDelta = mkMetricsDelta(n)
-            st.commitWave(wave, waveDelta, seenDelta, docsDelta, orderDelta,
-              metricsDelta)
+            val update = unseen.map(u => phase("discover+seen", wave) { buildBloom(u) })
+            val metricsDelta = mkMetricsDelta(update.fold(0L)(_._1))
+            val seenDelta = unseen.fold(union(spark, Nil, "url_hash long, url string"))(
+              _.select(col("url_hash"), col("url")))
+            st.commitWave(wave, waveDelta, seenDelta, docsDelta, orderDelta, metricsDelta)
             val waveDeltaDisk = st.readDelta(wave, "frontier_delta")
             // batch keys = the finished rows of the committed delta (new
-            // entries carry discoveredWave = wave+1, finished rows ≤ wave) —
-            // disk-backed so no per-wave cache is pinned
+            // entries are pending with no retries) — the predicate of
+            // batchKeysSinceCompaction, not a wave literal, so the plan is the
+            // same every wave; disk-backed so no per-wave cache is pinned
             val batchKeysDisk = waveDeltaDisk
-              .filter(col("discoveredWave") <= lit(wave))
+              .filter(col("status") =!= FrontierStatus.Pending || col("retries") > 0)
               .select(col("urlHash"))
             deltaState = phase("delta-ckpt", wave) {
               nextDeltaState(waveDeltaDisk, batchKeysDisk).localCheckpoint(true)
@@ -716,11 +759,14 @@ object WaveRunner {
             docsDeltas += st.readDelta(wave, "docs_delta")
             orderDeltas += st.readDelta(wave, "order_delta")
             metricsDeltas += st.readDelta(wave, "metrics_delta")
-            unseen.unpersist(); fetched.unpersist()
+            unseen.foreach(_.unpersist()); fetched.unpersist()
             deltaRowsBound += batchCount
             fetchedSinceCompaction += batchCount
             pendingKnown = pendingKnown.map(_ - batchCount)
-            applyBloom(wave, n, drv, tbl)
+            update match {
+              case Some((n, drv, tbl)) => applyBloom(wave, n, drv, tbl)
+              case None                => maybeCompact(wave)
+            }
           case None =>
             // memory mode: deltas stay as views over the persisted `fetched`/
             // `unseen` caches, which live as long as the result does — no
@@ -733,7 +779,7 @@ object WaveRunner {
             // (both futures first-compute the shared `unseen` cache, which
             // the block manager serializes per-partition, so they cooperate
             // rather than duplicate).
-            val bf = Future { buildBloom() }
+            val bf = unseen.map(u => (u, Future { buildBloom(u) }))
             val ds2 = phase("delta-ckpt", wave) {
               Await.result(Future {
                 nextDeltaState(waveDelta, fetched.select(col("urlHash")))
@@ -747,7 +793,12 @@ object WaveRunner {
             deltaRowsBound += batchCount
             fetchedSinceCompaction += batchCount
             pendingKnown = pendingKnown.map(_ - batchCount)
-            pendingBloom = Some((wave, bf, unseen, mkMetricsDelta _))
+            bf match {
+              case Some((u, f)) => pendingBloom = Some((wave, f, u, mkMetricsDelta _))
+              case None =>
+                metricsDeltas += mkMetricsDelta(0L)
+                maybeCompact(wave)
+            }
         }
         wave += 1
       }

@@ -48,6 +48,10 @@ object SpanExtract {
   def email(spans: Column): Column =
     regexp_extract(fullText(spans), EmailRe, 0)
 
+  /** Heading patterns of the profile fields (reference `scraper.py:122,139`). */
+  private val ResearchHeading     = "research"
+  private val PublicationsHeading = "publications|selected publications"
+
   /** Offset of the first heading whose text matches the (case-insensitive,
     * search-anywhere) pattern; MaxOff when absent.
     */
@@ -68,10 +72,10 @@ object SpanExtract {
 
   /** Research interests (reference `scraper.py:122-130`): text block after the
     * /research/i heading, split on `[,;•]`, trimmed, empties dropped.
-    * Empty array when the heading or block is absent.
+    * Empty array when the heading or block is absent. `hOff` is the research
+    * heading's offset, projected as its own column (see [[profileFieldsDF]]).
     */
-  def researchInterests(spans: Column): Column = {
-    val hOff = firstHeadingOffset(spans, "research")
+  def researchInterests(spans: Column, hOff: Column): Column = {
     val blob = get(
       filter(spans, s => s.getField("kind") === "text" && s.getField("offset") > hOff),
       lit(0)).getField("text")
@@ -82,28 +86,38 @@ object SpanExtract {
 
   /** Publications (reference `scraper.py:139-158`): listitems after the
     * /publications/i heading up to the next heading, first 5 in document order.
+    * `hOff` and `nextH` are the offsets of that heading and of the heading
+    * after it, each projected as its own column (see [[profileFieldsDF]]). An
+    * absent heading has offset MaxOff, and so has the heading after it: a
+    * heading not below its next heading has no block.
     */
-  def publications(spans: Column): Column = {
-    val hOff  = firstHeadingOffset(spans, "publications|selected publications")
-    val nextH = nextHeadingOffset(spans, hOff)
+  def publications(spans: Column, hOff: Column, nextH: Column): Column = {
     val items = transform(
       filter(spans, s =>
         s.getField("kind") === "listitem" &&
           s.getField("offset") > hOff && s.getField("offset") < nextH),
       s => s.getField("text"))
-    when(hOff === MaxOff, array().cast("array<string>"))
-      .otherwise(slice(items, 1, 5))
+    when(hOff >= nextH, array().cast("array<string>")).otherwise(slice(items, 1, 5))
   }
+
+  /** Offsets of the page's headings, in span order (document order for
+    * sorted spans).
+    */
+  def headingOffsets(spans: Column): Column =
+    transform(filter(spans, s => s.getField("kind") === "heading"), s => s.getField("offset"))
 
   /** Faculty index rows (reference `scraper.py:43-55`):
     * array<struct<rank:int, name:string, title:string, href:string>>.
     * `href`/`title` are null when the row has no anchor / no title text.
+    * `headingOffs` is the page's [[headingOffsets]], projected as its own
+    * column (see [[indexRowsDF]]).
     */
-  def indexRows(spans: Column): Column = {
+  def indexRows(spans: Column, headingOffs: Column): Column = {
     val headings = filter(spans, s => s.getField("kind") === "heading")
     transform(headings, (h, i) => {
       val hOff  = h.getField("offset")
-      val nextH = nextHeadingOffset(spans, hOff)
+      val nextH = aggregate(filter(headingOffs, o => o > hOff), lit(MaxOff),
+        (acc, o) => least(acc, o))
       val inRow = (s: Column) => s.getField("offset") > hOff && s.getField("offset") < nextH
       val link = get(filter(spans, s => s.getField("kind") === "link" && inRow(s)), lit(0))
       val text = get(filter(spans, s => s.getField("kind") === "text" && inRow(s)), lit(0))
@@ -220,10 +234,16 @@ object SpanExtract {
 
   // ---- DataFrame-level pipelines over a docs table (url, depth, spans, ...) ----
 
+  // Each page's sorted spans and heading offsets are projected as their own
+  // columns BEFORE the higher-order functions that read them: inlined into
+  // a lambda body they would be re-evaluated for every element it visits.
+
   /** Index-row table from depth-0 docs: (parent_url, rank, name, title, href). */
   def indexRowsDF(docs: DataFrame): DataFrame =
     docs
-      .withColumn("row", explode(indexRows(sortedSpans(col("spans")))))
+      .select(col("url"), sortedSpans(col("spans")).as("__spans"))
+      .withColumn("__hoffs", headingOffsets(col("__spans")))
+      .withColumn("row", explode(indexRows(col("__spans"), col("__hoffs"))))
       .select(
         col("url").as("parent_url"),
         col("row.rank").as("rank"),
@@ -232,12 +252,15 @@ object SpanExtract {
         col("row.href").as("href"))
 
   /** Profile-field table from docs: (url, email, research_interests, publications). */
-  def profileFieldsDF(docs: DataFrame): DataFrame = {
-    val s = sortedSpans(col("spans"))
-    docs.select(
-      col("url"),
-      email(s).as("email"),
-      researchInterests(s).as("research_interests"),
-      publications(s).as("publications"))
-  }
+  def profileFieldsDF(docs: DataFrame): DataFrame =
+    docs
+      .select(col("url"), sortedSpans(col("spans")).as("__spans"))
+      .withColumn("__research", firstHeadingOffset(col("__spans"), ResearchHeading))
+      .withColumn("__pubs", firstHeadingOffset(col("__spans"), PublicationsHeading))
+      .withColumn("__pubsEnd", nextHeadingOffset(col("__spans"), col("__pubs")))
+      .select(
+        col("url"),
+        email(col("__spans")).as("email"),
+        researchInterests(col("__spans"), col("__research")).as("research_interests"),
+        publications(col("__spans"), col("__pubs"), col("__pubsEnd")).as("publications"))
 }

@@ -199,7 +199,7 @@ final class PartitionedCuckoo(val nShards: Int, val shards: Array[CuckooFilter])
   }
   def shardOf(hash: Long): Int = (((hash % nShards) + nShards) % nShards).toInt
   def mightContain(hash: Long): Boolean = shards(shardOf(hash)).mightContain(hash)
-  def put(hash: Long): Unit = {
+  override def put(hash: Long): Unit = {
     if (!shards(shardOf(hash)).put(hash))
       throw new IllegalStateException("cuckoo shard over capacity")
   }

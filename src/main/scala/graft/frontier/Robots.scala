@@ -23,15 +23,29 @@ object Robots {
     rules.toDS().toDF()
   }
 
+  /** Rules merged to ONE row per host, on the driver: deny prefixes unioned,
+    * sorted and de-duplicated; the most conservative — largest — crawl delay
+    * kept. Duplicate host rows would fan the frontier out through the
+    * [[withRules]] join and the same URL would be selected/fetched twice in
+    * a wave, corrupting ordering and budgets. Hosts keep first-seen order.
+    */
+  def mergeRules(rules: Seq[RobotsRule]): Seq[RobotsRule] = {
+    val byHost = rules.groupBy(_.host)
+    rules.map(_.host).distinct.map { host =>
+      val rs = byHost(host)
+      RobotsRule(host, rs.flatMap(_.denyPrefixes).distinct.sorted, rs.map(_.crawlDelayS).max)
+    }
+  }
+
   /** Left-join rules onto a frontier (must carry `host`, `url`); null rule →
     * default allow + 1 s delay. Adds:
     *   `crawl_delay_s: double`, `allowed: boolean`.
     * Deny semantics: URL path starts with any deny prefix.
     *
-    * Rules are first merged to ONE row per host (deny prefixes unioned, the
-    * most conservative — largest — crawl delay kept): duplicate host rows
-    * would fan the frontier out through the join and the same URL would be
-    * selected/fetched twice in a wave, corrupting ordering and budgets.
+    * `rules` must hold at most ONE row per host — merge a rule list with
+    * [[mergeRules]] first (the crawl does, once per crawl); [[fetchRulesDF]]
+    * over distinct hosts already is. The join then adds no aggregate over
+    * the rules to the plan that uses it.
     *
     * Join regime is chosen STATICALLY by the caller (same pattern as the
     * URL-seen Bloom residency): `broadcastRules = true` below the configured
@@ -41,10 +55,8 @@ object Robots {
     */
   def withRules(frontier: DataFrame, rules: DataFrame,
       broadcastRules: Boolean = true): DataFrame = {
-    val perHost = rules.groupBy(col("host")).agg(
-      array_sort(array_distinct(flatten(collect_list(col("denyPrefixes")))))
-        .as("__deny"),
-      max(col("crawlDelayS")).as("__delay"))
+    val perHost = rules.select(col("host"), col("denyPrefixes").as("__deny"),
+      col("crawlDelayS").as("__delay"))
     val rulesSide = if (broadcastRules) broadcast(perHost) else perHost.hint("shuffle_hash")
     val joined = frontier.join(rulesSide, Seq("host"), "left")
     val path = regexp_replace(col("url"), "^https?://[^/]*", "")

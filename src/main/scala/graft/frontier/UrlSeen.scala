@@ -12,6 +12,8 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 trait SeenPreFilter extends Serializable {
   def mightContain(hash: Long): Boolean
+  /** Insert one key on the driver (a crawl's seed set, known up front). */
+  def put(hash: Long): Unit
   /** Merge a same-shape delta built with identical sizing. */
   def mergeWith(delta: SeenPreFilter): Unit
 }
@@ -48,7 +50,7 @@ final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter])
   }
   def shardOf(hash: Long): Int = (((hash % nShards) + nShards) % nShards).toInt
   def mightContain(hash: Long): Boolean = shards(shardOf(hash)).mightContainLong(hash)
-  def put(hash: Long): Unit = { shards(shardOf(hash)).putLong(hash); () }
+  override def put(hash: Long): Unit = { shards(shardOf(hash)).putLong(hash); () }
   /** Merge a same-shape delta in place (shards built with identical sizing). */
   def mergeInPlace(delta: PartitionedBloom): Unit = {
     require(delta.nShards == nShards, "incompatible bloom sharding")

@@ -110,6 +110,30 @@ class CrawlDepth2Spec extends SparkSpec {
     engine.release()
   }
 
+  test("depth 2: a wave mixing leaf and non-leaf pages still discovers every link") {
+    // h1: s1 → a1 → b1 (b1 is depth 2: a leaf).  h2: s2 → p2, q2; q2 → r2.
+    // At one fetch per host per wave, wave 2 fetches b1 (leaf) with q2
+    // (depth 1, not a leaf), whose link r2 must be discovered in that wave.
+    import graft.model.{Span, SpanDoc}
+    val (s1, a1, b1) = ("https://h1.test/", "https://h1.test/a", "https://h1.test/b")
+    val (s2, p2, q2, r2) =
+      ("https://h2.test/", "https://h2.test/p", "https://h2.test/q", "https://h2.test/r")
+    def page(self: String, links: String*): SpanDoc = SpanDoc(self,
+      (Span("heading", "Page", "", 0) +: links.zipWithIndex.map { case (l, i) =>
+        Span("link", "next", l, i + 1) }).toArray)
+    val pages = Map(s1 -> page(s1, a1), a1 -> page(a1, b1), b1 -> page(b1),
+      s2 -> page(s2, p2, q2), p2 -> page(p2), q2 -> page(q2, r2), r2 -> page(r2))
+    val engine = WaveRunner.run(spark,
+      Seq(Seed(s1, 0, "U", "D1"), Seed(s2, 1, "U", "D2")), pages.get, Nil,
+      CrawlConfig(maxDepth = 2, waveSeconds = 1.0))
+    val byWave = engine.crawlOrder.collect()
+      .map(r => r.getAs[Int]("wave") -> r.getAs[String]("url"))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    assert(byWave === Map(0 -> Set(s1, s2), 1 -> Set(a1, p2), 2 -> Set(b1, q2), 3 -> Set(r2)))
+    assert(engine.seen.collect().map(_.getAs[String]("url")).toSet === pages.keySet)
+    engine.release()
+  }
+
   test("retries: failed fetches re-enter the frontier up to maxRetries, then error out") {
     val site  = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 4,
       errorFraction = 0.5)

@@ -132,4 +132,36 @@ class CrawlOracleSpec extends SparkSpec {
     assert(engine.seen.collect().map(_.getAs[String]("url")).toSet === oracle.seen)
     assert(engineRecords(spark, engine, seeds) === oracle.records)
   }
+
+  // The leaf-wave rule: a wave with no fetched page below maxDepth skips
+  // discovery. At maxDepth 1 every profile wave is a leaf; at maxDepth 2 none
+  // is (its links are all duplicates), so both must give the oracle's crawl,
+  // in every URL-seen regime and in snapshot mode.
+  private val leafRegimes: Seq[(String, () => CrawlConfig)] = Seq(
+    "memory mode"   -> (() => CrawlConfig()),
+    "snapshot mode" -> (() => CrawlConfig(
+      snapshotDir = Some(java.nio.file.Files.createTempDirectory("graft_leaf").toString))),
+    "sharded bloom" -> (() => CrawlConfig(bloomBroadcastMaxBytes = 0L)),
+    "cuckoo filter" -> (() => CrawlConfig(seenFilter = "cuckoo")))
+
+  for ((regime, cfg) <- leafRegimes; maxDepth <- Seq(1, 2))
+    test(s"leaf waves, $regime, maxDepth $maxDepth: order, seen set and records match") {
+      // 2 hosts × 5 profiles at 2 per wave: an index wave, then 3 profile waves
+      val site = SiteConfig(universities = 2, deptsPerU = 1, facultyPerDept = 5,
+        errorFraction = 0.2)
+      val (seeds, oracle, engine) =
+        runBoth(site, cfg().copy(maxDepth = maxDepth, waveSeconds = 2.0))
+      val got = engineOrder(engine).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      val exp = oracle.crawlOrder.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      assert(got === exp)
+      assert(engine.seen.collect().map(_.getAs[String]("url")).toSet === oracle.seen)
+      assert(engineRecords(spark, engine, seeds) === oracle.records)
+      assert(engine.waves === 4)
+      // only the index wave enqueues: every profile link is a duplicate
+      val enqueued = engine.metrics.select("wave", "urlsEnqueued").distinct().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val profiles = (oracle.seen.size - seeds.size).toLong
+      assert(enqueued === Map(0 -> profiles, 1 -> 0L, 2 -> 0L, 3 -> 0L))
+      engine.release()
+    }
 }

@@ -5,7 +5,10 @@ import graft.crawl.WaveRunner.CrawlConfig
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.SiteConfig
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.model.SpanDoc
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
@@ -22,7 +25,9 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * Also: compaction (delta fold-in) must be behavior-invisible — forced
   * every-wave compaction yields bit-identical crawl state — and a snapshot
-  * crawl must resume correctly from a compacted frontier base.
+  * crawl must resume correctly from a compacted frontier base. Leaf waves
+  * (no fetched page below maxDepth) skip discovery jobs, and no wave after
+  * the first few compiles new code.
   */
 class CrawlScaleSpec extends SparkSpec {
 
@@ -118,4 +123,64 @@ class CrawlScaleSpec extends SparkSpec {
     val resumed = WaveRunner.resume(spark, seeds, fetcher, Nil, cfgOf(dirB, 10000))
     assert(stateOf(resumed) === expected)
   }
+
+  test("leaf waves run fewer Spark jobs than the same waves with discovery") {
+    // on this site a depth-2 crawl fetches exactly what a depth-1 crawl does
+    // (every profile link is already seen), but its profile waves are not
+    // leaves: they extract links and probe the URL-seen filter
+    val site    = SiteConfig(universities = 2, deptsPerU = 1, facultyPerDept = 5)
+    val seeds   = SyntheticSite.seeds(site)
+    def jobsOf(maxDepth: Int): (Long, Long) = {
+      val jobs = new AtomicLong(0L)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val r = WaveRunner.run(spark, seeds, SyntheticSite.fetcher(site), Nil,
+          CrawlConfig(maxDepth = maxDepth, waveSeconds = 2.0))
+        org.apache.spark.GraftListenerSync.drain(spark.sparkContext)
+        r.release()
+        (jobs.get(), r.fetches)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (leaf, leafFetches) = jobsOf(1)
+    val (discovering, fetches) = jobsOf(2)
+    assert(leafFetches === fetches)
+    assert(leaf < discovering, s"maxDepth 1: $leaf jobs, maxDepth 2: $discovering jobs")
+  }
+
+  test("waves after the warm-up compile no new code: the generated code is the same every wave") {
+    // one host, 8 profiles at 1 per wave: 9 waves, profile f(k) in wave k+1.
+    // The fetcher records Spark's codegen compilation count when each page
+    // is fetched; once the index wave and two leaf waves have compiled the
+    // loop's plans, the count must stay flat to the last wave. (Measured
+    // inside one crawl: one crawl uses more classes than Spark's 100-entry
+    // codegen cache holds, so a second crawl recompiles evicted ones.)
+    val one  = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 8)
+    val base = SyntheticSite.fetcher(one)
+    val fetcher: String => Option[SpanDoc] = { url =>
+      CompileCounts.atFetch.putIfAbsent(url, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+      base(url)
+    }
+    for (snapshot <- Seq(false, true)) {
+      CompileCounts.atFetch.clear()
+      val r = WaveRunner.run(spark, SyntheticSite.seeds(one), fetcher, Nil,
+        CrawlConfig(waveSeconds = 1.0, snapshotDir =
+          if (snapshot) Some(Files.createTempDirectory("graft_codegen").toString) else None))
+      assert(r.waves === 9)
+      r.release()
+      def at(k: Int): Long = CompileCounts.atFetch.get(SyntheticSite.profileUrl(0, 0, k))
+      assert(at(7) === at(2),
+        s"snapshot = $snapshot: waves 3-8 compiled ${at(7) - at(2)} new classes")
+    }
+  }
+}
+
+/** Codegen compilation counts by fetched URL. An object, so the fetcher
+  * closure shipped to the fetch tasks records into this one JVM-wide map
+  * rather than into a deserialized copy.
+  */
+object CompileCounts {
+  val atFetch = new java.util.concurrent.ConcurrentHashMap[String, Long]()
 }

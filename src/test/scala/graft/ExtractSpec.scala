@@ -14,14 +14,10 @@ class ExtractSpec extends SparkSpec {
   private def spansDF(spans: Seq[Span]) =
     Seq(("d1", spans.toArray)).toDF("url", "spans")
 
-  private def profile(spans: Seq[Span]) = {
-    val df = spansDF(spans)
-    val s  = SpanExtract.sortedSpans(col("spans"))
-    df.select(
-      SpanExtract.email(s).as("email"),
-      SpanExtract.researchInterests(s).as("interests"),
-      SpanExtract.publications(s).as("pubs")).collect().head
-  }
+  private def profile(spans: Seq[Span]) =
+    SpanExtract.profileFieldsDF(spansDF(spans))
+      .select(col("email"), col("research_interests").as("interests"), col("publications").as("pubs"))
+      .collect().head
 
   test("email: first match in document order wins (scraper.py:133-136)") {
     val r = profile(Seq(
@@ -91,6 +87,96 @@ class ExtractSpec extends SparkSpec {
     assert(rows(1).getAs[String]("title") === "Lecturer")
   }
 
+  // the table pipelines Records uses, checked against the sequential oracle's
+  // independent parse of the same spans
+  private def indexRowsOf(spans: Seq[Span]) =
+    SpanExtract.indexRowsDF(spansDF(spans)).orderBy("rank").collect()
+      .map(r => (r.getAs[String]("name"), r.getAs[String]("title"),
+        Option(r.getAs[String]("href")))).toSeq
+
+  private def oracleIndexRows(spans: Seq[Span]) =
+    graft.oracle.SequentialOracle.parseIndexRows(spans.toArray).map(r => (r.name, r.title, r.href))
+
+  private def profileFieldsOf(spans: Seq[Span]) = {
+    val r = profile(spans)
+    (r.getString(0), r.getSeq[String](1).toList, r.getSeq[String](2).toList)
+  }
+
+  private def oracleProfileFields(spans: Seq[Span]) = {
+    import graft.oracle.SequentialOracle._
+    val a = spans.toArray
+    (extractEmail(a), extractInterests(a).toList, extractPublications(a).toList)
+  }
+
+  test("table pipelines: spans out of order give the document-order rows and fields") {
+    val index = Seq(
+      Span("heading", "Dr. A", "", 2),
+      Span("link", "Dr. A", "/people/f0", 3),
+      Span("text", "Professor", "", 4),
+      Span("heading", "Dr. B", "", 5),
+      Span("text", "Lecturer", "", 6),
+      Span("link", "Dr. B", "/people/f1", 7))
+    val shuffled = Seq(index(4), index(1), index(5), index(0), index(3), index(2))
+    assert(indexRowsOf(shuffled) === Seq(
+      ("Dr. A", "Professor", Some("/people/f0")), ("Dr. B", "Lecturer", Some("/people/f1"))))
+    assert(indexRowsOf(shuffled) === oracleIndexRows(shuffled))
+
+    val profile = Seq(
+      Span("text", "mail a@b.edu", "", 0),
+      Span("heading", "Research", "", 1),
+      Span("text", "X; Y", "", 2),
+      Span("heading", "Publications", "", 3),
+      Span("listitem", "P1", "", 4),
+      Span("listitem", "P2", "", 5),
+      Span("heading", "Teaching", "", 6),
+      Span("listitem", "not a pub", "", 7))
+    val reversed = profile.reverse
+    assert(profileFieldsOf(reversed) === (("a@b.edu", List("X", "Y"), List("P1", "P2"))))
+    assert(profileFieldsOf(reversed) === oracleProfileFields(reversed))
+  }
+
+  test("table pipelines: the last heading's row and block run to the end of the page") {
+    val index = Seq(
+      Span("heading", "Dr. A", "", 0),
+      Span("text", "Professor", "", 1),
+      Span("heading", "Dr. B", "", 2),
+      Span("text", "Lecturer", "", 3),
+      Span("link", "Dr. B", "/people/f1", 4))
+    assert(indexRowsOf(index) === Seq(
+      ("Dr. A", "Professor", None), ("Dr. B", "Lecturer", Some("/people/f1"))))
+    assert(indexRowsOf(index) === oracleIndexRows(index))
+
+    val profile = Seq(
+      Span("heading", "Research", "", 0),
+      Span("text", "X", "", 1),
+      Span("heading", "Selected Publications", "", 2)) ++
+      (1 to 6).map(i => Span("listitem", s"P$i", "", 2 + i))
+    assert(profileFieldsOf(profile) === (("", List("X"), (1 to 5).map(i => s"P$i").toList)))
+    assert(profileFieldsOf(profile) === oracleProfileFields(profile))
+  }
+
+  test("table pipelines: adjacent headings with nothing between them") {
+    val index = Seq(
+      Span("heading", "Dr. A", "", 0),
+      Span("heading", "Dr. B", "", 1),
+      Span("link", "Dr. B", "/people/f1", 2),
+      Span("text", "Lecturer", "", 3),
+      Span("heading", "Dr. C", "", 4))
+    assert(indexRowsOf(index) === Seq(
+      ("Dr. A", "", None), ("Dr. B", "Lecturer", Some("/people/f1")), ("Dr. C", "", None)))
+    assert(indexRowsOf(index) === oracleIndexRows(index))
+
+    // an empty publications block, and a research heading whose text block
+    // sits after the next heading (the reference takes the first text after it)
+    val profile = Seq(
+      Span("heading", "Publications", "", 0),
+      Span("heading", "Research", "", 1),
+      Span("heading", "Contact", "", 2),
+      Span("text", "X, Y", "", 3))
+    assert(profileFieldsOf(profile) === (("", List("X", "Y"), Nil)))
+    assert(profileFieldsOf(profile) === oracleProfileFields(profile))
+  }
+
   test("pageLinks: links before the first heading are nav, after are anchors") {
     val df = spansDF(Seq(
       Span("link", "nav", "/about", 0),
@@ -152,9 +238,8 @@ class ExtractSpec extends SparkSpec {
       // `.field-content .people-title` select_one misses -> title ""
       Span("text", "Lecturer", "", 8, "views-row people-title"))
     val df = spansDF(spans)
-    val ordered = df.select(explode(
-      SpanExtract.indexRows(SpanExtract.sortedSpans(col("spans")))).as("r"))
-      .select("r.name", "r.title", "r.href").collect()
+    val ordered = SpanExtract.indexRowsDF(df).orderBy("rank")
+      .select("name", "title", "href").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
     val byClass = df.select(explode(
       SpanExtract.indexRowsByClass(SpanExtract.sortedSpans(col("spans")),

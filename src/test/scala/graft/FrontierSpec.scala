@@ -326,6 +326,38 @@ class FrontierSpec extends SparkSpec {
       s"above-threshold rules must not broadcast:\n$plan")
   }
 
+  test("property: driver-merged robots rules equal the per-wave groupBy merge on duplicate hosts") {
+    // the merge the crawl used to run in every wave, restated: rules grouped
+    // by host inside the plan (deny prefixes unioned, largest delay kept)
+    def groupByMerged(rules: org.apache.spark.sql.DataFrame) = rules.groupBy(col("host")).agg(
+      array_sort(array_distinct(flatten(collect_list(col("denyPrefixes"))))).as("denyPrefixes"),
+      max(col("crawlDelayS")).as("crawlDelayS"))
+    val hosts = Seq("h0.com", "h1.com", "h2.com")
+    val rule = for {
+      host  <- Gen.oneOf(hosts)
+      deny  <- Gen.listOf(Gen.oneOf("/a", "/b", "/p", "/p/x", "/private"))
+      delay <- Gen.oneOf(0.25, 0.5, 1.0, 2.0, 3.0)
+    } yield RobotsRule(host, deny, delay)
+    val gen = for {
+      rules <- Gen.nonEmptyListOf(rule)
+      paths <- Gen.nonEmptyListOf(Gen.oneOf("/a/1", "/b", "/p/x/2", "/p2", "/q", "/private/z"))
+    } yield (rules, paths)
+    samples(gen, 12).foreach { case (rules, paths) =>
+      val frontier = (hosts :+ "h3.com").flatMap(h => paths.distinct.map(p => (h, s"https://$h$p")))
+        .toDF("host", "url")
+      def result(rulesSide: org.apache.spark.sql.DataFrame) =
+        Robots.withRules(frontier, rulesSide)
+          .withColumn("budget", Robots.waveBudget(3.0))
+          .select("url", "allowed", "crawl_delay_s", "budget").collect()
+          .map(r => (r.getString(0), r.getBoolean(1), r.getDouble(2), r.getLong(3))).toSet
+      val merged = Robots.mergeRules(rules)
+      assert(merged.map(_.host).distinct.size === merged.size, "one row per host")
+      val got = result(Robots.rulesDF(spark, merged))
+      assert(got.size === frontier.count(), "merged rules must not fan the frontier out")
+      assert(got === result(groupByMerged(Robots.rulesDF(spark, rules))), s"rules: $rules")
+    }
+  }
+
   test("robots fetch: per-host robots.txt probed through the fetcher") {
     import graft.model.{Span, SpanDoc}
     val bodies = Map(

@@ -316,4 +316,34 @@ class PlanSpec extends SparkSpec {
     assert(graft.functions.L2Dist2(a, b).eval(null).asInstanceOf[Double] === 0.0)
     assert(graft.functions.DotProduct(a, b).eval(null).asInstanceOf[Double] === 5.0)
   }
+
+  test("faculty records: one span sort per side; per-page offsets keep their own projections") {
+    // Records' two sides each sort a page's spans and compute its heading
+    // offsets ONCE, in projections below the higher-order functions reading
+    // them. If CollapseProject inlined one back, it would be re-evaluated per
+    // lambda element: more ArraySorts, or a per-page alias gone from the plan.
+    import graft.crawl.Records
+    import graft.model.Span
+    import org.apache.spark.sql.catalyst.expressions.{Alias, ArraySort}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import spark.implicits._
+    val docs = spark.sparkContext.parallelize(Seq(
+      ("https://h.edu/people/faculty", 1L, "h.edu", 0, 0,
+        Array(Span("heading", "A", "", 0), Span("link", "A", "/people/f0", 1))),
+      ("https://h.edu/people/f0", 2L, "h.edu", 1, 1,
+        Array(Span("heading", "Publications", "", 0), Span("listitem", "P", "", 1)))))
+      .toDF("url", "urlHash", "host", "depth", "wave", "spans")
+    val seeds = Seq(graft.synth.SyntheticSite.Seed("https://h.edu/people/faculty", 0, "U", "D"))
+    val records = Records.facultyRecords(spark, docs, seeds)
+    val plan = records.queryExecution.optimizedPlan
+    val sorts = plan.collect { case n => n.expressions.flatMap(_.collect { case a: ArraySort => a }) }
+      .flatten
+    assert(sorts.size === 2, plan.toString)
+    val projected = plan.collect { case p: Project =>
+      p.projectList.collect { case a: Alias => a.name } }.flatten
+    Seq("__hoffs", "__research", "__pubs", "__pubsEnd").foreach { name =>
+      assert(projected.count(_ == name) === 1, s"$name is not its own projection:\n$plan")
+    }
+    assert(records.count() === 1L)
+  }
 }

@@ -52,6 +52,36 @@ class ResumeSpec extends SparkSpec {
       new java.io.File(dirA).listFiles().count(_.getName.startsWith("wave=")))
   }
 
+  test("resume after committed leaf waves == uninterrupted run, in both Bloom regimes") {
+    // waves 1-3 are leaf waves (profile pages at maxDepth 1): they commit an
+    // empty seen delta and no new frontier entries. Stopping after wave 2
+    // leaves the resumed crawl to restore the seen filter from the store and
+    // run the last leaf wave.
+    for (sharded <- Seq(false, true)) {
+      def cfg(dir: String, maxWaves: Int = CrawlConfig().maxWaves) = CrawlConfig(
+        waveSeconds = 2.0, snapshotDir = Some(dir), maxWaves = maxWaves,
+        bloomBroadcastMaxBytes = if (sharded) 0L else CrawlConfig().bloomBroadcastMaxBytes)
+      val full = WaveRunner.run(spark, seeds, fetcher, Nil,
+        cfg(Files.createTempDirectory("graft_leaf_full").toString))
+      val expected = stateOf(full)
+      val dir = Files.createTempDirectory("graft_leaf_cut").toString
+      WaveRunner.run(spark, seeds, fetcher, Nil, cfg(dir, maxWaves = 3)).release()
+      val store = new graft.crawl.ParquetSnapshotStore(spark, dir,
+        spark.sessionState.conf.numShufflePartitions)
+      assert(store.listCommitted().sorted === Seq(0, 1, 2))
+      Seq(1, 2).foreach { w =>
+        assert(store.readDelta(w, "seen_delta").count() === 0L, s"leaf wave $w seen delta")
+        assert(store.readDelta(w, "frontier_delta")
+          .filter(org.apache.spark.sql.functions.col("status") === "pending").count() === 0L,
+          s"leaf wave $w enqueued a URL")
+      }
+      val resumed = WaveRunner.resume(spark, seeds, fetcher, Nil, cfg(dir))
+      assert(stateOf(resumed) === expected, s"sharded = $sharded")
+      assert(store.listCommitted().sorted === Seq(0, 1, 2, 3))
+      full.release(); resumed.release()
+    }
+  }
+
   test("time travel: frontier/seen as-of wave w == a crawl stopped at wave w") {
     // Iceberg-snapshot semantics over the delta-commit log: for EVERY
     // committed wave w of a finished crawl, WaveSnapshots.frontierAsOf /
