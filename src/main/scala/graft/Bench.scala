@@ -383,21 +383,21 @@ object Bench {
     val shardedRaw = (sh4.rate / shN.rate) / (n4Cores.toDouble / nCores)
     val shardedPairOk = okTrios.nonEmpty
 
-    // politeness-real selection regime (r4 verdict #2): the agg selector's
+    // politeness-real selection regime (r4 verdict #2): the native selector's
     // reason to exist — O(hosts×budget) selection shuffle when budgets BIND
-    // (budget ≪ per-host pending) — wall-clock measured for the first time.
+    // (budget ≪ per-host pending).
     // 256 hosts, budget 8/wave, a fixed 6-wave timing window, frontier depth
     // 100 vs 1000 per host (~10× pending): the window selector re-shuffles
     // and re-windows EVERY pending row each wave, so its rate degrades with
-    // depth; the agg selector ships bounded per-host buffers and holds. Both
-    // selectors share discovery/scan costs, so the comparison is
-    // within-depth agg-vs-window and across-depth retention.
+    // depth; the native selector ships bounded per-host buffers and holds.
+    // Both selectors share discovery/scan costs, so the comparison is
+    // within-depth native-vs-window and across-depth retention.
     // 20 timed waves so the one-time wave-1 discovery amortizes and the
     // per-wave selection cost (the measurand) dominates the across-depth
     // delta. Besides wall-clock, each child reports its total SHUFFLED
     // rows/bytes: on one box shuffles hit the page cache and are nearly
     // free, so the volume channel — what costs network on a real cluster —
-    // is where the agg selector's O(hosts×budget) bound shows regardless of
+    // is where the native selector's O(hosts×budget) bound shows regardless of
     // window.
     val selEnv = skipCeil + ("GRAFT_MAX_WAVES" -> "20")
     // GRAFT_BENCH_SELHOSTS shrinks the selection corpus for harness smoke
@@ -409,13 +409,9 @@ object Bench {
       crawlRate(n4Cores, selEnv + ("GRAFT_SELECTOR" -> selector),
         site = selSite(f), waveSeconds = 8.0)
     // interleave selectors within each depth so each comparison shares its
-    // tenancy window; "native" is the TypedImperativeAggregate rebuild of the
-    // agg selector (same O(hosts×budget) shuffle bound, per-row decode cost
-    // removed — see [[graft.frontier.TopKSelectNative]])
-    val selAggSmall = selRun("agg", 100)
+    // tenancy window
     val selNatSmall = selRun("native", 100)
     val selWinSmall = selRun("window", 100)
-    val selAggDeep  = selRun("agg", 1000)
     val selNatDeep  = selRun("native", 1000)
     val selWinDeep  = selRun("window", 1000)
 
@@ -472,23 +468,16 @@ object Bench {
         // politeness-real selection regime: URLs/sec + total shuffled
         // rows/MB over a fixed 20-wave window at budget 8/host/wave,
         // per-host frontier depth 100 vs 1000
-        f""""selection_bench":{"agg_small":${selAggSmall.rate}%.1f,""" +
-        f""""native_small":${selNatSmall.rate}%.1f,""" +
+        f""""selection_bench":{"native_small":${selNatSmall.rate}%.1f,""" +
         f""""window_small":${selWinSmall.rate}%.1f,""" +
-        f""""agg_deep":${selAggDeep.rate}%.1f,""" +
         f""""native_deep":${selNatDeep.rate}%.1f,""" +
         f""""window_deep":${selWinDeep.rate}%.1f,""" +
-        f""""agg_deep_retention":${selAggDeep.rate / selAggSmall.rate}%.3f,""" +
         f""""native_deep_retention":${selNatDeep.rate / selNatSmall.rate}%.3f,""" +
         f""""window_deep_retention":${selWinDeep.rate / selWinSmall.rate}%.3f,""" +
-        f""""agg_over_window_deep":${selAggDeep.rate / selWinDeep.rate}%.3f,""" +
-        f""""native_over_agg_deep":${selNatDeep.rate / selAggDeep.rate}%.3f,""" +
-        f""""agg_small_shuffle_rows":${selAggSmall.shufRows},""" +
+        f""""native_over_window_deep":${selNatDeep.rate / selWinDeep.rate}%.3f,""" +
         f""""window_small_shuffle_rows":${selWinSmall.shufRows},""" +
-        f""""agg_deep_shuffle_rows":${selAggDeep.shufRows},""" +
         f""""native_deep_shuffle_rows":${selNatDeep.shufRows},""" +
         f""""window_deep_shuffle_rows":${selWinDeep.shufRows},""" +
-        f""""agg_deep_shuffle_mb":${selAggDeep.shufMb}%.1f,""" +
         f""""native_deep_shuffle_mb":${selNatDeep.shufMb}%.1f,""" +
         f""""window_deep_shuffle_mb":${selWinDeep.shufMb}%.1f},""" +
         f""""n_cores":$nCores,"4n_cores":$n4Cores,"pinned":$pinned,""" +

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{HashExprs, VectorExprs}
+import graft.functions.VectorExprs
 import graft.ops.{Ann, Cluster, Dedup}
 
 import org.apache.spark.sql.{Column, SparkSession}
@@ -34,9 +34,6 @@ object VectorBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    VectorExprs.register(spark)
-    HashExprs.register(spark)
-    graft.functions.TextExprs.register(spark)
 
     // deterministic synthetic corpus, persisted so generation isn't timed
     val e = spark.range(rows).select(col("id").as("vec_id"),
@@ -50,7 +47,6 @@ object VectorBench {
     val qvCol = array(qv.map(lit): _*)
     val cents = Array.tabulate(k)(c => Array.tabulate(dims)(d =>
       math.cos(c * dims + d + 1.0)))
-    VectorExprs.registerNearest(spark, cents)
 
     // token corpus for the hash-signature arms: ~40 distinct synthetic
     // tokens per row (the documents table's distinct-token order of
@@ -73,7 +69,7 @@ object VectorBench {
       "cosine_hof"    -> (() => drive(Ann.cosineHof(col("v"), qvCol))),
       "dist2_native"  -> (() => drive(VectorExprs.dist2(col("v"), qvCol))),
       "dist2_hof"     -> (() => drive(Cluster.dist2(col("v"), qvCol))),
-      "nearest_native" -> (() => drive(VectorExprs.nearestCell(col("v")))),
+      "nearest_native" -> (() => drive(VectorExprs.nearestCell(col("v"), cents))),
       "nearest_hof"    -> (() => drive(Cluster.nearestCellHof(col("v"), cents))),
       "minhash_native" -> (() => driveT(Dedup.minhashSignatureFromTokens(col("toks")))),
       "minhash_hof"    -> (() => driveT(Dedup.minhashSignatureFromTokensHof(col("toks")))),

@@ -65,10 +65,10 @@ object CrawlQueries {
       |WHERE rk <= 3""".stripMargin
 
   /** The same wave-batch selection through the native Catalyst
-    * [[graft.frontier.TopKSelectNative]] aggregate (the engine's third
-    * selector variant) against the SAME ranked-window oracle — the driver's
-    * DuckDB gate then covers every batch-selector implementation, not just
-    * the salted-window path.
+    * [[graft.frontier.TopKSelectNative]] aggregate (the crawl's default
+    * selector) against the SAME ranked-window oracle — the DuckDB gate then
+    * covers both batch-selector implementations, not just the salted-window
+    * path.
     */
   def frontierSelectNative(spark: SparkSession, dir: String): DataFrame = {
     val frontier = orders(spark, dir).select(

@@ -92,13 +92,10 @@ object WaveRunner {
       saltShards: Int = 1,          // skew pre-prune shards for the "window" selector
       /** Batch selector: "native" (default — exact per-host top-k as a
         * Catalyst TypedImperativeAggregate: O(hosts×budget) heap buffers on
-        * the shuffle, no per-row case-class decode, zero-allocation reject
-        * path; see [[graft.frontier.TopKSelectNative]]), "agg" (the same
-        * partial-aggregation shape as an Aggregator UDAF — kept for
-        * cross-checks; measured ~14% slower wall-clock and +20% selection
-        * shuffle bytes, BENCH.md round-5), or "window" (the two-stage
+        * the shuffle, zero-allocation reject path; see
+        * [[graft.frontier.TopKSelectNative]]) or "window" (the two-stage
         * salted window — exact-equal, shuffles O(pending) rows per wave;
-        * kept for plan comparison and property cross-checks).
+        * the skew path, see [[graft.frontier.WaveSelector]]).
         */
       selector: String = "native",
       bloomShards: Int = 32,
@@ -145,6 +142,9 @@ object WaveRunner {
       snapshotDir: Option[String] = None, // Some(dir) = committed, resumable waves
       hostWhitelist: Option[Seq[String]] = None // default: seed hosts
   ) {
+    require(selector == "native" || selector == "window",
+      s"selector must be \"native\" or \"window\", got \"$selector\"")
+
     /** Conservative whole-filter size estimate from the configured sizing. */
     def bloomBytesEstimate: Long =
       (bloomExpected * math.ceil(
@@ -547,9 +547,7 @@ object WaveRunner {
             .select(col("url"), col("urlHash"), col("host"), col("depth"),
               col("priority"), col("retries"), col("discoveredWave"),
               col("discoveredRank"), col("parentUrl"), col("host_rank"))
-        else if (cfg.selector == "native")
-          graft.frontier.TopKSelectNative.select(ruled)
-        else WaveSelector.selectAgg(ruled)
+        else graft.frontier.TopKSelectNative.select(ruled)
       // Size fetch parallelism by request count, NOT by shuffle bytes: the
       // selection output is tiny (batch rows), so AQE would coalesce it to
       // ~1 partition and run the expensive fetch+encode stage serially.

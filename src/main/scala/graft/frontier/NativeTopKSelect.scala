@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumn}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -20,15 +20,17 @@ private[graft] final class NativeCand(
     val discoveredWave: Int, val discoveredRank: Long,
     val parentUrl: UTF8String)
 
-/** Mutable native top-k buffer: the same worst-at-root binary heap as
-  * [[WaveSelector.TopKBuf]] (order = [[WaveSelector.SelOrd]]'s fields), but
-  * over [[NativeCand]] and with the ordering unrolled so the accept/reject
-  * decision needs only four primitives — see [[TopKSelectNative.update]].
+/** Mutable native top-k buffer: an array-backed binary heap with the WORST
+  * candidate at the root, so a full buffer evicts in O(log k). The order is
+  * priority desc, then (discoveredWave, discoveredRank, urlHash) asc — the
+  * window selector's order, total because urlHash is unique — unrolled so
+  * the accept/reject decision needs only four primitives (see
+  * [[TopKSelectNative.update]]).
   */
 private[graft] final class NativeTopKBuf(var k: Long, var n: Int,
     var items: Array[NativeCand]) {
 
-  /** SelOrd on NativeCand: priority desc, then (wave, rank, urlHash) asc. */
+  /** Candidate order: priority desc, then (wave, rank, urlHash) asc. */
   private def cmp(aP: Double, aW: Int, aR: Long, aH: Long, b: NativeCand): Int = {
     var c = java.lang.Double.compare(b.priority, aP)
     if (c != 0) return c
@@ -86,24 +88,29 @@ private[graft] final class NativeTopKBuf(var k: Long, var n: Int,
 }
 
 /** Exact per-host top-`budget` selection as a NATIVE Catalyst
-  * [[TypedImperativeAggregate]] — the same semantics and partial-aggregation
-  * shape as [[WaveSelector.TopKSelectAgg]] (bounded per-host heaps map-side,
-  * O(hosts×budget) rows on the selection shuffle), with the UDAF's remaining
-  * per-row cost removed:
+  * [[TypedImperativeAggregate]], partial-aggregating: each input partition
+  * reduces to a bounded per-host heap map-side, so the selection shuffle
+  * moves O(hostsPerPartition × budget) buffers — never O(pending), which is
+  * what the window-based [[WaveSelector.select]] shuffles every wave. A hot
+  * host's final merge combines ≤ P bounded buffers, not its raw rows.
   *
-  *   - the Aggregator path deserializes EVERY input row into a [[SelCand]]
-  *     case class (one allocation + three String conversions per pending
-  *     row) before its buffer can look at it. Here `update` reads the four
-  *     ordering primitives straight off the [[InternalRow]], asks the heap
-  *     [[NativeTopKBuf.accepts]], and only materializes the three strings
-  *     for ACCEPTED rows. In the politeness-real regime (budget ≪ pending)
-  *     almost every row takes the zero-allocation reject path.
+  *   - `update` reads the four ordering primitives straight off the
+  *     [[InternalRow]], asks the heap [[NativeTopKBuf.accepts]], and only
+  *     materializes the three strings for ACCEPTED rows. In the
+  *     politeness-real regime (budget ≪ pending) almost every row takes the
+  *     zero-allocation reject path.
   *   - buffer serialization (once per host per map partition, on the
   *     shuffle) is a flat length-prefixed byte image, not an encoder pass.
   *
+  * REQUIRES `budget` constant per host (true for the engine's own caller:
+  * budget derives from the host-level crawl delay in [[Robots.waveBudget]],
+  * and the aggregation key is the host). The contract is ENFORCED in
+  * `update` and `merge`: per-row budgets fail with an
+  * IllegalArgumentException naming the host, not a silently mis-sized batch.
+  *
   * Semantics (order, tiebreaks, constant-budget contract, k=0, overflow
-  * growth) are pinned equal to the UDAF by FrontierSpec's shared property
-  * tests; [[WaveSelector]]'s scaladoc carries the regime discussion.
+  * growth) are pinned equal to the window selector by FrontierSpec's
+  * property tests; [[WaveSelector]]'s scaladoc carries the skew discussion.
   */
 final case class TopKSelectNative(
     url: Expression, urlHash: Expression, host: Expression, depth: Expression,
@@ -115,7 +122,7 @@ final case class TopKSelectNative(
   override def children: Seq[Expression] = Seq(url, urlHash, host, depth,
     priority, retries, discoveredWave, discoveredRank, parentUrl, budget)
 
-  // input types are exact by construction ([[select]] feeds the SelCand
+  // input types are exact by construction ([[select]] feeds the frontier
   // columns); type-coercion traits (ImplicitCastInputTypes) are private[sql]
   // and unnecessary here
   override def nullable: Boolean = false
@@ -129,11 +136,11 @@ final case class TopKSelectNative(
     StructField("parentUrl", StringType))), containsNull = false)
 
   override def createAggregationBuffer(): NativeTopKBuf =
-    new NativeTopKBuf(WaveSelector.UnsetK, 0, new Array[NativeCand](16))
+    new NativeTopKBuf(TopKSelectNative.UnsetK, 0, new Array[NativeCand](16))
 
   override def update(buf: NativeTopKBuf, input: InternalRow): NativeTopKBuf = {
     val b = budget.eval(input).asInstanceOf[Long]
-    if (buf.k == WaveSelector.UnsetK) buf.k = b
+    if (buf.k == TopKSelectNative.UnsetK) buf.k = b
     else require(b == buf.k,
       s"TopKSelectNative requires a constant per-host budget (the " +
         s"aggregation key is host): host ${host.eval(input)} carries " +
@@ -154,8 +161,8 @@ final case class TopKSelectNative(
   }
 
   override def merge(a: NativeTopKBuf, b: NativeTopKBuf): NativeTopKBuf = {
-    if (a.k == WaveSelector.UnsetK) a.k = b.k
-    else require(b.k == WaveSelector.UnsetK || b.k == a.k,
+    if (a.k == TopKSelectNative.UnsetK) a.k = b.k
+    else require(b.k == TopKSelectNative.UnsetK || b.k == a.k,
       s"TopKSelectNative requires a constant per-host budget (the " +
         s"aggregation key is host): merged buffers carry budgets " +
         s"${a.k} and ${b.k}")
@@ -251,32 +258,25 @@ final case class TopKSelectNative(
 
 object TopKSelectNative {
 
-  /** SQL-facing name; registration rides the same [[FunctionRegistry]] entry
-    * point `SparkSessionExtensions.injectFunction` uses, done lazily here so
-    * callers need no session-construction hook.
+  /** Sentinel budget of a buffer that has not yet absorbed a row (budgets
+    * from [[Robots.waveBudget]] are ≥ 0, so -1 is unreachable as data).
     */
-  val FnName = "graft_topk_select"
+  val UnsetK: Long = -1L
 
-  private def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 10,
-          s"$FnName expects the 10 SelCand columns, got ${exprs.length}")
-        TopKSelectNative(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4),
-          exprs(5), exprs(6), exprs(7), exprs(8), exprs(9))
-      },
-      "scala_udf")
-
-  /** Select this wave's batch via the native aggregate — same output columns
-    * as [[WaveSelector.selectAgg]] (SelCand minus budget, plus `host_rank`).
+  /** Select this wave's batch via the native aggregate: the candidate
+    * columns (minus `budget`) plus `host_rank`, the 0-based intra-host fetch
+    * position. `pending` must carry the url, urlHash, host, depth, priority,
+    * retries, discoveredWave, discoveredRank, parentUrl and budget columns.
     */
   def select(pending: DataFrame): DataFrame = {
-    register(pending.sparkSession)
+    val e = GraftColumn.expr _
+    val topk = TopKSelectNative(e(col("url")), e(col("urlHash")),
+      e(col("host")), e(col("depth")), e(col("priority")), e(col("retries")),
+      e(col("discoveredWave")), e(col("discoveredRank")), e(col("parentUrl")),
+      e(col("budget")))
     pending
       .groupBy(col("host"))
-      .agg(expr(s"$FnName(url, urlHash, host, depth, priority, retries, " +
-        "discoveredWave, discoveredRank, parentUrl, budget)").as("sel"))
+      .agg(GraftColumn(topk.toAggregateExpression()).as("sel"))
       .select(col("host"), posexplode(col("sel")).as(Seq("host_rank", "c")))
       .select(col("c.url"), col("c.urlHash"), col("host"), col("c.depth"),
         col("c.priority"), col("c.retries"), col("c.discoveredWave"),

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native Catalyst expressions for the dedup hash signatures (MinHash,
@@ -32,26 +31,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * hash chain skips it, exactly like XxHash64's null-child skip; null array
   * → NULL). OpsSpec pins native ≡ HOF bit-equality, so every downstream
   * LSH band, bucket, and oracle is unchanged.
+  *
+  * The builders bind the expressions straight into the `Column`
+  * ([[GraftColumn]]), with no function registry entry.
   */
 object HashExprs {
 
-  val MinhashFn = "graft_minhash"
-  val SimhashFn = "graft_simhash"
-
-  /** Idempotent per-session registration (same [[SparkSession]] function
-    * registry entry point `SparkSessionExtensions.injectFunction` rides).
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(MinhashFn,
-      (es: Seq[Expression]) => MinHashSig(es(0), graft.ops.Dedup.MinhashK),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(SimhashFn,
-      (es: Seq[Expression]) => SimHash64(es(0)), "scala_udf")
-  }
-
-  def minhash(toks: Column): Column = call_function(MinhashFn, toks)
-  def simhash(toks: Column): Column = call_function(SimhashFn, toks)
+  def minhash(toks: Column): Column =
+    GraftColumn(MinHashSig(GraftColumn.expr(toks), graft.ops.Dedup.MinhashK))
+  def simhash(toks: Column): Column = GraftColumn(SimHash64(GraftColumn.expr(toks)))
 }
 
 private[graft] trait StringArrayInput {

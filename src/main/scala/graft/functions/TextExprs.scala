@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,74 +22,33 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * OpsSpec pins bit-parity against the regex form on the corpus plus
   * Unicode/edge fixtures; every token-path oracle is unchanged.
+  *
+  * Each builder binds its expression straight into the `Column`
+  * ([[GraftColumn]]): no function registry entry, so the `Column` resolves
+  * in any session.
   */
 object TextExprs {
 
-  val TokensFn  = "graft_tokens"
-  val GramsFn   = "graft_grams"
-  val NonStopFn = "graft_nonstop"
-  val CharSumFn = "graft_charsum"
-  val SetHitsFn = "graft_sethits"
-
-  /** Idempotent per-session registration (same registry entry point as
-    * [[VectorExprs.register]]; `GraftExtensions` injects it too).
-    */
-  /** Expression builders, shared by [[register]] and `GraftExtensions`. */
-  private[graft] val gramsBuilder: Seq[Expression] => Expression = es => {
-    val k = es(1) match {
-      case Literal(i: Int, _) => i
-      case other => throw new IllegalArgumentException(
-        s"$GramsFn expects a literal int k, got $other")
-    }
-    WordGrams(es(0), k)
-  }
-  private[graft] val nonStopBuilder: Seq[Expression] => Expression =
-    es => StopFilter(es(0), graft.ops.TextOps.Stopwords)
-  private[graft] val setHitsBuilder: Seq[Expression] => Expression =
-    es => SetHits(es(0), literalWords(es(1)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(TokensFn,
-      (es: Seq[Expression]) => AsciiTokens(es(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(GramsFn, gramsBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction(NonStopFn, nonStopBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction(CharSumFn,
-      (es: Seq[Expression]) => CharSum(es(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(SetHitsFn, setHitsBuilder, "scala_udf")
-  }
-
-  private def literalWords(e: Expression): Seq[String] = e match {
-    case CreateArray(elems, _) =>
-      elems.map {
-        case Literal(s: UTF8String, StringType) => s.toString
-        case other => throw new IllegalArgumentException(
-          s"$SetHitsFn expects an array of string literals, got element $other")
-      }
-    case other => throw new IllegalArgumentException(
-      s"$SetHitsFn expects a literal string array, got $other")
-  }
-
   /** Lowercase-alphabetic-run tokens of an ALREADY-LOWERCASED string. */
-  def asciiTokens(loweredText: Column): Column = call_function(TokensFn, loweredText)
+  def asciiTokens(loweredText: Column): Column =
+    GraftColumn(AsciiTokens(GraftColumn.expr(loweredText)))
 
   /** Adjacent k-grams joined by single spaces (null array → empty). */
   def grams(toks: Column, k: Int): Column =
-    call_function(GramsFn, toks, org.apache.spark.sql.functions.lit(k))
+    GraftColumn(WordGrams(GraftColumn.expr(toks), k))
 
   /** Tokens not in the engine stopword list (null elements dropped). */
-  def nonStop(toks: Column): Column = call_function(NonStopFn, toks)
+  def nonStop(toks: Column): Column =
+    GraftColumn(StopFilter(GraftColumn.expr(toks), graft.ops.TextOps.Stopwords))
 
   /** Sum of per-token character counts (null element → NULL). */
-  def charSum(toks: Column): Column = call_function(CharSumFn, toks)
+  def charSum(toks: Column): Column = GraftColumn(CharSum(GraftColumn.expr(toks)))
 
   /** Count of tokens that are members of `words` (null elements not
     * counted — the exact semantics of `size(filter(toks, isin(words…)))`).
     */
   def setHits(toks: Column, words: Seq[String]): Column =
-    call_function(SetHitsFn, toks,
-      org.apache.spark.sql.functions.array(
-        words.map(org.apache.spark.sql.functions.lit): _*))
+    GraftColumn(SetHits(GraftColumn.expr(toks), words))
 }
 
 /** Maximal `[a-z]+` byte runs of a (lowercased) string as `array<string>` —

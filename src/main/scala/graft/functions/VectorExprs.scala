@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native Catalyst expressions for the vector math on the similarity /
@@ -25,41 +24,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * Null semantics also match `zip_with`: length mismatch or a null element
   * yields NULL (zip_with pads the short side with nulls, which nulls the
   * product and then the fold).
+  *
+  * The builders bind the expressions straight into the `Column`
+  * ([[GraftColumn]]), with no function registry entry.
   */
 object VectorExprs {
 
-  val CosineFn  = "graft_cosine"
-  val Dist2Fn   = "graft_dist2"
-  val DotFn     = "graft_dot"
-  val NearestFn = "graft_nearest_cell"
+  private def bind2(f: (Expression, Expression) => Expression)(a: Column, b: Column) =
+    GraftColumn(f(GraftColumn.expr(a), GraftColumn.expr(b)))
 
-  /** Idempotent per-session registration (same entry point the native top-k
-    * selector uses; `SparkSessionExtensions.injectFunction` rides it too).
+  def cosine(a: Column, b: Column): Column = bind2(CosineSim)(a, b)
+  def dist2(a: Column, b: Column): Column = bind2(L2Dist2)(a, b)
+  def dot(a: Column, b: Column): Column = bind2(DotProduct)(a, b)
+
+  /** Nearest-centroid cell of `v` over a snapshot of `cents`, taken now: the
+    * centroids live in this `Column`'s expression, not in any shared state,
+    * so plans built at once with different centroids stay independent.
     */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(CosineFn,
-      (es: Seq[Expression]) => CosineSim(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(Dist2Fn,
-      (es: Seq[Expression]) => L2Dist2(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(DotFn,
-      (es: Seq[Expression]) => DotProduct(es(0), es(1)), "scala_udf")
-  }
-
-  /** Per-call registration for the centroid-carrying nearest-cell expression:
-    * the centroid snapshot is baked into the builder, so each k-means
-    * iteration re-registers before constructing its plan (Dataset analysis is
-    * eager — the function resolves at construction, never later).
-    */
-  def registerNearest(spark: SparkSession, cents: Array[Array[Double]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(NearestFn,
-      (es: Seq[Expression]) => NearestCell(es(0), cents.map(_.clone())),
-      "scala_udf")
-
-  def cosine(a: Column, b: Column): Column = call_function(CosineFn, a, b)
-  def dist2(a: Column, b: Column): Column = call_function(Dist2Fn, a, b)
-  def dot(a: Column, b: Column): Column = call_function(DotFn, a, b)
-  def nearestCell(v: Column): Column = call_function(NearestFn, v)
+  def nearestCell(v: Column, cents: Array[Array[Double]]): Column =
+    GraftColumn(NearestCell(GraftColumn.expr(v), cents.map(_.clone())))
 }
 
 private[graft] trait DoubleArrayPair {

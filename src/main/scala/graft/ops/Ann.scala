@@ -25,8 +25,6 @@ object Ann {
   /** Cosine similarity — the NATIVE fused expression
     * ([[graft.functions.VectorExprs]]): one codegen'd pass instead of three
     * interpreted HOF folds, bit-identical results (same accumulation order).
-    * Callers must have [[graft.functions.VectorExprs.register]]ed on the
-    * owning session (every public op here does).
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosine(a, b)
@@ -40,7 +38,6 @@ object Ann {
     * vector, TakeOrderedAndProject for the top-k — no shuffle of the corpus.
     */
   def cosineTopk(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val e = emb(spark, dir).withColumn("v", col("embedding").cast("array<double>"))
     val qId = e.agg(min(col("vec_id")).as("q_id"))
     val q = e.join(broadcast(qId), e("vec_id") === qId("q_id"))
@@ -151,7 +148,6 @@ object Ann {
     */
   def lshTopkIndexed(index: DataFrame, qv: Array[Double], planes: Int,
       nProbe: Int, k: Int): DataFrame = {
-    graft.functions.VectorExprs.register(index.sparkSession)
     val buckets = lshProbeBuckets(qv, planes, nProbe)
     // literals typed to match the raw partition column (int when read back
     // from [[readLshIndex]], long when probing an in-memory build): a
@@ -264,7 +260,6 @@ object Ann {
     * and plan-inspectable.)
     */
   def assignIvfCells(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val e = emb.withColumn("v", col("embedding").cast("array<double>"))
     val d2 = graft.functions.VectorExprs.dist2(col("v"), col("centroid"))
     e.crossJoin(broadcast(centroids))
@@ -295,7 +290,6 @@ object Ann {
     */
   def ivfTopkIndexed(index: DataFrame, centroids: DataFrame, qv: Array[Double],
       nProbe: Int, k: Int): DataFrame = {
-    graft.functions.VectorExprs.register(index.sparkSession)
     val qCells = centroids.collect().map { r =>
       val c = r.getSeq[Double](r.fieldIndex("centroid")).toArray
       var d = 0.0; var j = 0
@@ -346,7 +340,6 @@ object Ann {
     * [[Dedup.ngramJaccard]].
     */
   def embeddingNearDup(spark: SparkSession, dir: String, threshold: Double = 0.95): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     // persist the shared (vec_id, v) projection feeding both self-join sides
     // (round 6 — the same single-scan contract as ngramJaccard /
     // semanticNearDup: unpersisted, the scan + array<double> cast ran twice

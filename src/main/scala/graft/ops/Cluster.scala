@@ -67,14 +67,10 @@ object Cluster {
     */
   def kmeansAssign(e0: DataFrame, k: Int, iters: Int, dims: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = e0.sparkSession
-    // Dataset analysis is eager, so each registration binds the centroid
-    // snapshot into the plan built right after it; later re-registrations
-    // never touch an already-analyzed plan.
-    def assign(cents: Array[Array[Double]]): Column = {
-      graft.functions.VectorExprs.registerNearest(spark, cents)
-      graft.functions.VectorExprs.nearestCell(col("v"))
-    }
+    // each assignment Column carries its own centroid snapshot: no shared
+    // state, so plans built at once in one session stay independent
+    def assign(cents: Array[Array[Double]]): Column =
+      graft.functions.VectorExprs.nearestCell(col("v"), cents)
     // Persist the narrow (vec_id, label, v) projection (round 6, guide §5 —
     // cache what is reused): the init collect, every per-iteration
     // assign+recompute pass, and the final assignment each consumed the
@@ -122,7 +118,6 @@ object Cluster {
     */
   def semanticNearDup(spark: SparkSession, dir: String, k: Int = 8,
       iters: Int = 3, threshold: Double = 0.3): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     // persist the assignment projection: it feeds BOTH sides of the
     // within-cluster self-join — unpersisted, the final k-means assignment
     // pass (a full corpus scan + nearest-cell eval) executed twice per query

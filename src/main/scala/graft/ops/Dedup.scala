@@ -109,9 +109,8 @@ object Dedup {
     * expression ([[graft.functions.MinHashSig]] — one token pass, each
     * token's bytes hashed once with the k lane values derived by cheap
     * int-hash chaining; the HOF form below walks the array k times and
-    * re-hashes the full token per lane, interpreted). Callers must have
-    * [[graft.functions.HashExprs.register]]ed on the session (every
-    * [[Dedup]] query does; `GraftExtensions` injects it too).
+    * re-hashes the full token per lane, interpreted). The expression is
+    * bound into the `Column` directly, so it resolves in any session.
     */
   def minhashSignatureFromTokens(toks: Column): Column =
     graft.functions.HashExprs.minhash(toks)
@@ -188,7 +187,6 @@ object Dedup {
     * callers still release blocks via `clearCache()`/GC as before.
     */
   def minhashLshPairs(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
-    graft.functions.HashExprs.register(spark)
     // parallelized: a sub-split-size corpus file would otherwise run the
     // tokenize AND the 32-hash signature build on ONE core (see TextOps)
     val toks = TextOps.parallelized(docs(spark, dir))
@@ -545,7 +543,6 @@ object Dedup {
     * shuffle carries only surviving pairs.
     */
   def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
-    graft.functions.HashExprs.register(spark)
     val d = TextOps.parallelized(docs(spark, dir))
       .select(col("doc_id"), array_distinct(TextOps.tokens(col("text"))).as("toks"))
       .select(col("doc_id"), simhashFromTokens(col("toks")).as("sh"))

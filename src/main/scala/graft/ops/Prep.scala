@@ -404,17 +404,10 @@ object Prep {
   // ---- shared n-gram plumbing (repetition stats + decontamination) ----
 
   /** Row-local token k-grams joined with single spaces — the fused native
-    * scan ([[graft.functions.WordGrams]]) when a session is active (same
-    * registration pattern as `TextOps.tokens`); HOF fallback + parity spec
-    * below.
+    * scan ([[graft.functions.WordGrams]]); the HOF parity spec is below.
     */
   private def gramArr(toks: Column, k: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.TextExprs.register(s)
-        graft.functions.TextExprs.grams(toks, k)
-      case None => gramArrHof(toks, k)
-    }
+    graft.functions.TextExprs.grams(toks, k)
 
   /** HOF reference form of [[gramArr]]. `sequence(1, 0)` in Spark counts
     * DOWN (step −1), so short docs must short-circuit to an empty array

@@ -71,23 +71,13 @@ object TextOps {
     *
     * Compiled as the native byte-run scanner
     * ([[graft.functions.AsciiTokens]] — bit-identical to the regex by the
-    * UTF-8 argument on its doc; OpsSpec pins parity) when a session is
-    * active to register against — tokens() is a pure Column builder, so
-    * registration rides the thread's active session, the invariant every
-    * driver-side query construction satisfies. With no active session the
-    * regex form compiles instead: same results, just the slower engine.
+    * UTF-8 argument on its doc; OpsSpec pins parity).
     */
   def tokens(text: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.TextExprs.register(s)
-        graft.functions.TextExprs.asciiTokens(lower(text))
-      case None => tokensRegex(text)
-    }
+    graft.functions.TextExprs.asciiTokens(lower(text))
 
   /** The regex reference form of [[tokens]] — the declarative spec the
-    * native scanner is bit-parity-tested against (OpsSpec), and the
-    * no-active-session fallback.
+    * native scanner is bit-parity-tested against (OpsSpec).
     */
   def tokensRegex(text: Column): Column =
     regexp_extract_all(lower(text), lit("[a-z]+"), lit(0))
@@ -101,39 +91,27 @@ object TextOps {
   def contentTokens(text: Column): Column =
     array_except(tokens(text), stopwordsLit)
 
-  /** Non-stopword tokens with duplicates kept (for tf counting). Native
-    * one-pass hashed-probe filter when a session is active (the same
-    * registration pattern as [[tokens]]); the HOF reference form below is
-    * the fallback and the parity spec.
+  /** Non-stopword tokens with duplicates kept (for tf counting): the native
+    * one-pass hashed-probe filter; the HOF reference form below is the
+    * parity spec.
     */
   def nonStopTokens(text: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.TextExprs.register(s)
-        graft.functions.TextExprs.nonStop(tokens(text))
-      case None => nonStopTokensHof(text)
-    }
+    graft.functions.TextExprs.nonStop(tokens(text))
 
-  /** HOF reference form of [[nonStopTokens]] (parity spec + fallback). */
+  /** HOF reference form of [[nonStopTokens]] (parity spec). */
   def nonStopTokensHof(text: Column): Column =
     filter(tokens(text), t => !t.isin(Stopwords.map(_.asInstanceOf[Any]): _*))
 
   /** Adjacent-token bigrams joined by a single space, from an already-filtered
     * token array (the reference vectorizer builds ngrams AFTER stopword
     * removal — sklearn semantics, `matcher.py:46-50`). Row-local; compiled
-    * as the fused native k-gram scan ([[graft.functions.WordGrams]]) when a
-    * session is active; empty for arrays shorter than 2 (and for a NULL
-    * array — both forms).
+    * as the fused native k-gram scan ([[graft.functions.WordGrams]]); empty
+    * for arrays shorter than 2 (and for a NULL array — both forms).
     */
   def bigrams(toks: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.TextExprs.register(s)
-        graft.functions.TextExprs.grams(toks, 2)
-      case None => bigramsHof(toks)
-    }
+    graft.functions.TextExprs.grams(toks, 2)
 
-  /** HOF reference form of [[bigrams]] (parity spec + fallback). */
+  /** HOF reference form of [[bigrams]] (parity spec). */
   def bigramsHof(toks: Column): Column =
     when(size(toks) >= 2,
       zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
@@ -238,7 +216,6 @@ object TextOps {
     * references attributes, not re-evaluated filters.
     */
   private def withPredictedLang(df: DataFrame, tks: Column): DataFrame = {
-    graft.functions.TextExprs.register(df.sparkSession)
     val withHits = langMarkers.foldLeft(df) { case (d, (l, ms)) =>
       // native hashed-probe membership count — exact semantics of
       // size(filter(tks, isin(ms…))), see [[graft.functions.SetHits]]
@@ -291,7 +268,6 @@ object TextOps {
     * between engines (a double formulation flaked at exactly .xxxx5).
     */
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.register(spark)
     val tks    = tokens(col("text"))
     val nWords = size(tks).cast("long")
     // native one-pass membership count and character sum — exact semantics
@@ -356,7 +332,6 @@ object TextOps {
   def corpusPrep(spark: SparkSession, dir: String,
       minQualityBp: Long = 4000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextExprs.register(spark)
     val d0 = docs(spark, dir)
     // exact dedup keep-min as a PARTITIONED window (rank within each content
     // hash), not a groupBy + self-semi-join — the join form reads the corpus

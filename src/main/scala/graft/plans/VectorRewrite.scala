@@ -1,9 +1,8 @@
 package graft.plans
 
-import graft.functions.{AsciiTokens, CosineSim, DotProduct, HashExprs, L2Dist2, MinHashSig, SimHash64, TextExprs, VectorExprs}
+import graft.functions.{CosineSim, DotProduct, L2Dist2, MinHashSig}
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -133,49 +132,21 @@ object VectorRewrite extends Rule[LogicalPlan] {
   }
 }
 
-/** `spark.sql.extensions`-style entry point: inject the rewrite rule and the
-  * named native functions into every session built with
+/** `spark.sql.extensions`-style entry point: inject the rewrite rule into
+  * every session built with
   *
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   *
   * (or `.withExtensions(new GraftExtensions)`). Sessions created without it
   * can still opt in per-session via
-  * `spark.experimental.extraOptimizations :+= VectorRewrite` and
-  * [[VectorExprs.register]] — the spec exercises that path on the shared
-  * test session, since `getOrCreate` cannot re-extend an existing one.
+  * `spark.experimental.extraOptimizations :+= VectorRewrite` — the spec
+  * exercises that path on the shared test session, since `getOrCreate`
+  * cannot re-extend an existing one. The native expressions themselves need
+  * no session hook: their builders bind them straight into the `Column`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     ext.injectOptimizerRule(_ => VectorRewrite)
-    def info(name: String) = new ExpressionInfo(classOf[GraftExtensions].getName, name)
-    ext.injectFunction((FunctionIdentifier(VectorExprs.CosineFn),
-      info(VectorExprs.CosineFn),
-      (es: Seq[Expression]) => CosineSim(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier(VectorExprs.Dist2Fn),
-      info(VectorExprs.Dist2Fn),
-      (es: Seq[Expression]) => L2Dist2(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier(VectorExprs.DotFn),
-      info(VectorExprs.DotFn),
-      (es: Seq[Expression]) => DotProduct(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier(HashExprs.MinhashFn),
-      info(HashExprs.MinhashFn),
-      (es: Seq[Expression]) => MinHashSig(es(0), graft.ops.Dedup.MinhashK)))
-    ext.injectFunction((FunctionIdentifier(HashExprs.SimhashFn),
-      info(HashExprs.SimhashFn),
-      (es: Seq[Expression]) => SimHash64(es(0))))
-    ext.injectFunction((FunctionIdentifier(TextExprs.TokensFn),
-      info(TextExprs.TokensFn),
-      (es: Seq[Expression]) => AsciiTokens(es(0))))
-    ext.injectFunction((FunctionIdentifier(TextExprs.GramsFn),
-      info(TextExprs.GramsFn), TextExprs.gramsBuilder))
-    ext.injectFunction((FunctionIdentifier(TextExprs.NonStopFn),
-      info(TextExprs.NonStopFn), TextExprs.nonStopBuilder))
-    ext.injectFunction((FunctionIdentifier(TextExprs.CharSumFn),
-      info(TextExprs.CharSumFn),
-      (es: Seq[Expression]) => graft.functions.CharSum(es(0))))
-    ext.injectFunction((FunctionIdentifier(TextExprs.SetHitsFn),
-      info(TextExprs.SetHitsFn), TextExprs.setHitsBuilder))
-  }
 }

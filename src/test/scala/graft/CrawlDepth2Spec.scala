@@ -40,7 +40,7 @@ class CrawlDepth2Spec extends SparkSpec {
     val fetcher = SyntheticSite.fetcher(hot)
     val oracle  = graft.oracle.SequentialOracle.run(seeds, fetcher)
     val engine  = WaveRunner.run(spark, seeds, fetcher, Nil,
-      CrawlConfig(waveSeconds = 7.0, saltShards = 8))
+      CrawlConfig(waveSeconds = 7.0, saltShards = 8, selector = "window"))
     val got = engine.crawlOrder.orderBy("seq").collect()
       .map(r => (r.getAs[String]("host"), r.getAs[String]("url"))).toVector
     assert(got === oracle.crawlOrder, "salted skew path must preserve exact order")

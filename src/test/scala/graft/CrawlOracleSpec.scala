@@ -123,7 +123,7 @@ class CrawlOracleSpec extends SparkSpec {
   test("salted selection (skew path) leaves ordering and state unchanged") {
     val site = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 9)
     val (seeds, oracle, engine) =
-      runBoth(site, CrawlConfig(waveSeconds = 3.0, saltShards = 4))
+      runBoth(site, CrawlConfig(waveSeconds = 3.0, saltShards = 4, selector = "window"))
     assert(engineOrder(engine) === {
       // oracle order regrouped to the engine's wave-major commit order:
       // per-host sequences are the invariant; single host ⇒ identical
@@ -131,6 +131,8 @@ class CrawlOracleSpec extends SparkSpec {
     })
     assert(engine.seen.collect().map(_.getAs[String]("url")).toSet === oracle.seen)
     assert(engineRecords(spark, engine, seeds) === oracle.records)
+    // "native" and "window" are the only selectors
+    intercept[IllegalArgumentException](CrawlConfig(selector = "agg"))
   }
 
   // The leaf-wave rule: a wave with no fetched page below maxDepth skips

@@ -94,12 +94,6 @@ class FrontierSpec extends SparkSpec {
       assert(sel(1) === expected)
       assert(sel(4) === expected, "salted two-stage selection must be exact")
       assert(sel(16) === expected)
-      // the partial-aggregating selector must be exact-equal to the window
-      // selector on the same input
-      val agg = WaveSelector.selectAgg(df)
-        .select("host", "host_rank", "urlHash")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(agg === expected, "partial-agg top-k selection must be exact")
       // the native TypedImperativeAggregate selector (the crawl-engine
       // default) must be exact-equal too
       val nat = graft.frontier.TopKSelectNative.select(df)
@@ -109,7 +103,7 @@ class FrontierSpec extends SparkSpec {
     }
   }
 
-  test("agg selection is input-order and partitioning invariant") {
+  test("native selection is input-order and partitioning invariant") {
     // the distributed bounded-heap top-k must not depend on row arrival
     // order or partition layout (its tiebreak order is total via urlHash)
     val rows = (1 to 400).map(i => (s"h${i % 5}", (i % 13).toDouble, i.toLong))
@@ -121,53 +115,26 @@ class FrontierSpec extends SparkSpec {
       .withColumn("retries", lit(0))
       .withColumn("parentUrl", lit(""))
       .withColumn("budget", lit(6L))
-    def sel(d: org.apache.spark.sql.DataFrame) = WaveSelector.selectAgg(d)
-      .select("host", "host_rank", "urlHash")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    def sel(d: org.apache.spark.sql.DataFrame) =
+      graft.frontier.TopKSelectNative.select(d)
+        .select("host", "host_rank", "urlHash")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val a = sel(df(identity))
     val b = sel(df(_.orderBy(col("urlHash").desc).repartition(7)))
     val c = sel(df(_.repartition(3, col("priority"))))
     assert(a === b)
     assert(a === c)
-    // native selector: same invariance, same result set
-    def selN(d: org.apache.spark.sql.DataFrame) =
-      graft.frontier.TopKSelectNative.select(d)
-        .select("host", "host_rank", "urlHash")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(selN(df(identity)) === a)
-    assert(selN(df(_.orderBy(col("urlHash").desc).repartition(7))) === a)
-  }
-
-  test("TopKBuf heap: random insert/merge sequences equal sorted top-k (unit property)") {
-    // direct property on the struct-encoded heap buffer (r4): any split of a
-    // candidate stream into partial buffers, merged in any order, must
-    // finish as exactly the SelOrd-sorted top-k — the invariant the UDAF's
-    // partial aggregation relies on
-    val rnd = new scala.util.Random(11)
-    def cand(id: Long) = graft.frontier.SelCand(s"u$id", id, "h", 1,
-      (id % 17).toDouble, 0, 0, id, "", budget = 9L)
-    (1 to 20).foreach { _ =>
-      val n = 1 + rnd.nextInt(60)
-      val all = rnd.shuffle((0L until 200L).toList).take(n).map(cand)
-      // split into 1-4 partial buffers
-      val parts = all.grouped(1 + rnd.nextInt(4)).toList
-      val bufs = parts.map { p =>
-        val b = new WaveSelector.TopKSelectAgg().zero
-        p.foreach(b.insert)
-        b
-      }
-      val merged = bufs.reduce { (a, b) => new WaveSelector.TopKSelectAgg().merge(a, b) }
-      val got = new WaveSelector.TopKSelectAgg().finish(merged).toSeq
-      val want = all.sorted(WaveSelector.SelOrd).take(9)
-      assert(got === want, s"n=$n")
-    }
+    // and the window selector agrees on the same input
+    assert(WaveSelector.select(df(identity))
+      .select("host", "host_rank", "urlHash")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet === a)
   }
 
   test("native buffer: split + serialize round-trip + merge equals sorted top-k") {
     // the native TypedImperativeAggregate's partial-aggregation invariant:
     // any split of a candidate stream into partial buffers, each pushed
     // through the shuffle byte format, merged in any order, must finish as
-    // the SelOrd-sorted top-k — mirror of the TopKBuf unit property
+    // the sorted top-k (priority desc, then urlHash asc)
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.unsafe.types.UTF8String
@@ -199,23 +166,30 @@ class FrontierSpec extends SparkSpec {
     }
   }
 
-  test("selectAgg rejects differing budgets on one host (constant-budget contract)") {
-    // the UDAF sizes each host's selection by its budget, which must be
+  test("native selector rejects differing budgets on one host (constant-budget contract)") {
+    // the aggregate sizes each host's selection by its budget, which must be
     // host-constant (the engine derives it from the host crawl delay); a
     // caller passing per-row budgets must fail loudly, not get a silently
     // mis-sized batch
-    def cand(id: Long, budget: Long) =
-      graft.frontier.SelCand(s"u$id", id, "h", 1, 1.0, 0, 0, id, "", budget)
-    val b = new WaveSelector.TopKSelectAgg().zero
-    b.insert(cand(1L, 4L))
-    val exIns = intercept[IllegalArgumentException] { b.insert(cand(2L, 5L)) }
-    assert(exIns.getMessage.contains("constant per-host budget"))
-    val b2 = new WaveSelector.TopKSelectAgg().zero
-    b2.insert(cand(3L, 5L))
-    val exMrg = intercept[IllegalArgumentException] {
-      new WaveSelector.TopKSelectAgg().merge(b, b2)
-    }
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val types = Seq(StringType, LongType, StringType, IntegerType, DoubleType,
+      IntegerType, IntegerType, LongType, StringType, LongType)
+    val refs = types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = false) }
+    val expr = graft.frontier.TopKSelectNative(refs(0), refs(1), refs(2),
+      refs(3), refs(4), refs(5), refs(6), refs(7), refs(8), refs(9))
+    def row(id: Long, budget: Long) = new GenericInternalRow(Array[Any](
+      UTF8String.fromString(s"u$id"), id, UTF8String.fromString("h"), 1, 1.0,
+      0, 0, id, UTF8String.fromString(""), budget))
+    val b = expr.update(expr.createAggregationBuffer(), row(1L, 4L))
+    val exUpd = intercept[IllegalArgumentException] { expr.update(b, row(2L, 5L)) }
+    assert(exUpd.getMessage.contains("constant per-host budget"))
+    val b2 = expr.update(expr.createAggregationBuffer(), row(3L, 5L))
+    val exMrg = intercept[IllegalArgumentException] { expr.merge(b, b2) }
     assert(exMrg.getMessage.contains("constant per-host budget"))
+    // an empty buffer merges with either side
+    assert(expr.merge(expr.createAggregationBuffer(), b2).k === 5L)
     // end-to-end: the contract violation surfaces as a job failure
     val df = Seq(("h", 1.0, 1L, 4L), ("h", 2.0, 2L, 5L))
       .toDF("host", "priority", "urlHash", "budget")
@@ -225,11 +199,8 @@ class FrontierSpec extends SparkSpec {
       .withColumn("depth", lit(1))
       .withColumn("retries", lit(0))
       .withColumn("parentUrl", lit(""))
-    val exJob = intercept[Exception] { WaveSelector.selectAgg(df).collect() }
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
-    assert(chain(exJob).exists(m => m != null && m.contains("constant per-host budget")))
-    // the native selector enforces the same contract
     val exNat = intercept[Exception] {
       graft.frontier.TopKSelectNative.select(df).collect()
     }

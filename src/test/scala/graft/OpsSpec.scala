@@ -1,6 +1,8 @@
 package graft
 
-import graft.ops.{Ann, Dedup, Multimodal, TextOps}
+import graft.functions.{HashExprs, TextExprs, VectorExprs}
+import graft.ops.{Ann, Cluster, Dedup, Multimodal, TextOps}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Training-data-pipeline operators: dedup family (exact, MinHash/LSH,
@@ -30,7 +32,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("minhash signature: identical texts → identical signatures; stable length") {
-    graft.functions.HashExprs.register(spark)
     val df = Seq(("a b c d e", "a b c d e"), ("a b c d e", "f g h i j"))
       .toDF("t1", "t2")
       .select(Dedup.minhashSignature(col("t1")).as("s1"),
@@ -66,8 +67,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("property: native text/hash expressions match HOF forms on random inputs") {
-    graft.functions.HashExprs.register(spark)
-    graft.functions.TextExprs.register(spark)
     import org.scalacheck.Gen
     // random TEXTS: mixed unicode/ascii/digits/punct/whitespace — drives the
     // tokenizer parity over shapes no fixture anticipates
@@ -112,7 +111,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("native grams/nonstop/charsum/sethits match their HOF forms (corpus + edges)") {
-    graft.functions.TextExprs.register(spark)
     import graft.functions.TextExprs
     // HOF reference forms, written inline where no main-source form exists
     def charSumHof(c: org.apache.spark.sql.Column) =
@@ -153,7 +151,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("native minhash/simhash are bit-identical to the HOF folds (corpus + edges)") {
-    graft.functions.HashExprs.register(spark)
     // real corpus texts plus the edge shapes the null/empty semantics cover:
     // empty token array, empty-string token, null element, unicode, and a
     // null array (→ NULL through both forms)
@@ -210,7 +207,6 @@ class OpsSpec extends SparkSpec {
       assert(r.getLong(2) === r.getLong(3))
       // the text expressions with codegen separate from eval(): tokenizer,
       // char sum, and the null→empty grams branch, on the interpreted path
-      graft.functions.TextExprs.register(spark)
       val t = Seq(("İs KELVIN K a1b2 🦊fox", Seq("ab", "cd", "ef"))).toDF("text", "toks")
         .select(TextOps.tokens(col("text")).as("tn"),
           TextOps.tokensRegex(col("text")).as("tr"),
@@ -281,7 +277,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("simhash: near-identical texts within small hamming; distinct texts far") {
-    graft.functions.HashExprs.register(spark)
     val df = Seq(
       ("the quick brown fox jumps over the lazy dog and runs far away tonight",
         "the quick brown fox jumps over the lazy dog and runs far away today"),
@@ -643,7 +638,6 @@ class OpsSpec extends SparkSpec {
   test("native vector expressions: bit-identical to the HOF folds, matching null semantics") {
     import graft.functions.VectorExprs
     import java.lang.Double.doubleToLongBits
-    VectorExprs.register(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .withColumn("v", col("embedding").cast("array<double>"))
     val a = e.select(col("vec_id").as("a_id"), col("v").as("a_v"))
@@ -664,8 +658,7 @@ class OpsSpec extends SparkSpec {
     // nearest cell: native reference-object loop == HOF fold, every vector
     val cents = e.orderBy(col("vec_id")).limit(5)
       .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    VectorExprs.registerNearest(spark, cents)
-    val cells = e.select(VectorExprs.nearestCell(col("v")).as("n"),
+    val cells = e.select(VectorExprs.nearestCell(col("v"), cents).as("n"),
       graft.ops.Cluster.nearestCellHof(col("v"), cents).as("h")).collect()
     cells.foreach(r => assert(r.getInt(0) === r.getInt(1)))
 
@@ -709,5 +702,106 @@ class OpsSpec extends SparkSpec {
       assert(out(i)._1 === 7L)
     }
     assert(out(9L)._2 === 0L, "unique doc carries no boilerplate")
+  }
+
+  // Native expressions are bound into their Columns, not looked up by name:
+  // a Column built under one session resolves in any other, and plans built
+  // at once in one session cannot see each other's bound state.
+  test("a native Column built in one session evaluates in another, equal to its HOF form") {
+    SparkSession.setActiveSession(spark)
+    // built while the shared session is active ...
+    val native: Seq[(String, Column)] = Seq(
+      "tokens"  -> TextOps.tokens(col("text")),
+      "nonstop" -> TextOps.nonStopTokens(col("text")),
+      "bigrams" -> TextOps.bigrams(col("toks")),
+      "minhash" -> HashExprs.minhash(col("toks")),
+      "simhash" -> HashExprs.simhash(col("toks")),
+      "charsum" -> TextExprs.charSum(col("toks")),
+      "sethits" -> TextExprs.setHits(col("toks"), TextOps.Stopwords),
+      "cosine"  -> VectorExprs.cosine(col("a"), col("b")),
+      "dist2"   -> VectorExprs.dist2(col("a"), col("b")),
+      "dot"     -> VectorExprs.dot(col("a"), col("b")))
+    // ... and evaluated in a fresh session whose registry holds no graft_* name
+    val ns = spark.newSession()
+    assert(SparkSession.getActiveSession.contains(spark))
+    val df = ns.createDataFrame(Seq(
+      ("The quick brown fox and the lazy dog of the town", Seq(1.0, 2.0, 3.0), Seq(0.5, -1.0, 2.0)),
+      ("İstanbul KELVIN K a1b2 🦊fox🦊dog", Seq(0.25, 4.0, -3.0), Seq(1.0, 1.0, 1.0)),
+      ("to be", Seq(2.0, 0.0, 1.0), Seq(2.0, 0.0)),
+      ("", Seq(1.0), Seq(3.0))))
+      .toDF("text", "a", "b")
+      .withColumn("toks", TextOps.tokensRegex(col("text")))
+    val hof: Map[String, Column] = Map(
+      "tokens"  -> TextOps.tokensRegex(col("text")),
+      "nonstop" -> TextOps.nonStopTokensHof(col("text")),
+      "bigrams" -> TextOps.bigramsHof(col("toks")),
+      "minhash" -> Dedup.minhashSignatureFromTokensHof(col("toks")),
+      "simhash" -> Dedup.simhashFromTokensHof(col("toks")),
+      "charsum" -> aggregate(col("toks"), lit(0), (acc, t) => acc + length(t)).cast("long"),
+      "sethits" -> size(filter(col("toks"),
+        t => t.isin(TextOps.Stopwords.map(_.asInstanceOf[Any]): _*))),
+      "cosine"  -> Ann.cosineHof(col("a"), col("b")),
+      "dist2"   -> Cluster.dist2(col("a"), col("b")),
+      "dot"     -> Ann.dot(col("a"), col("b")))
+    native.foreach { case (name, c) =>
+      val got = df.select(c).collect().toSeq
+      assert(got === df.select(hof(name)).collect().toSeq, name)
+      assert(got.length === 4)
+    }
+
+    // the native batch selector on a DataFrame of the fresh session
+    val frontier = ns.createDataFrame(
+        (1 to 60).map(i => (s"h${i % 4}", (i % 7).toDouble, i.toLong)))
+      .toDF("host", "priority", "urlHash")
+      .withColumn("discoveredWave", lit(0))
+      .withColumn("discoveredRank", col("urlHash"))
+      .withColumn("url", concat(lit("u"), col("urlHash")))
+      .withColumn("depth", lit(1))
+      .withColumn("retries", lit(0))
+      .withColumn("parentUrl", lit(""))
+      .withColumn("budget", lit(3L))
+    def sel(d: DataFrame) = d.select("host", "host_rank", "urlHash").collect().toSet
+    assert(sel(graft.frontier.TopKSelectNative.select(frontier)) ===
+      sel(graft.frontier.WaveSelector.select(frontier)))
+
+    // a whole dedup query runs there and registers nothing
+    assert(SparkEntry.queries("q_minhash_lsh")(ns, sf).count() >= 0L)
+    val graftFns = ns.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_"))
+    assert(graftFns.isEmpty, graftFns.mkString(", "))
+    ns.catalog.clearCache()
+  }
+
+  test("k-means plans built at once in one session each equal their solo run") {
+    // each assignment Column carries its own centroid snapshot; two plans
+    // with different data and k, built on two threads, must not bind each
+    // other's centroids
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    def planA() = Cluster.kmeansAssign(emb, 3, 3, Ann.Dims)
+    def planB() = Cluster.kmeansAssign(emb.filter(col("vec_id") % 2 === 0), 5, 3, Ann.Dims)
+    def result(df: DataFrame): Seq[(Long, Long)] =
+      df.select("vec_id", "cluster").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+    val soloA = result(planA())
+    val soloB = result(planB())
+    assert(soloA.map(_._2).distinct.size > 1 && soloB.map(_._2).distinct.size > 1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      (1 to 20).foreach { round =>
+        val start = new java.util.concurrent.CountDownLatch(1)
+        def task(plan: () => DataFrame) = pool.submit(
+          new java.util.concurrent.Callable[Seq[(Long, Long)]] {
+            def call(): Seq[(Long, Long)] = { start.await(); result(plan()) }
+          })
+        val a = task(() => planA())
+        val b = task(() => planB())
+        start.countDown()
+        assert(a.get() === soloA, s"round $round: plan A")
+        assert(b.get() === soloB, s"round $round: plan B")
+      }
+    } finally {
+      pool.shutdown()
+      spark.catalog.clearCache()
+    }
   }
 }

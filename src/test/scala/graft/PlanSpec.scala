@@ -33,10 +33,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("native selector: partial ObjectHashAggregate before the host exchange") {
-    // the native TypedImperativeAggregate must keep the agg selector's
-    // partial-aggregation shape: a map-side ObjectHashAggregate combines each
-    // partition's candidates into ≤k-entry heaps BEFORE the host shuffle, so
-    // the exchange moves O(hosts×budget) buffers, never O(pending) rows
+    // the native TypedImperativeAggregate must keep its partial-aggregation
+    // shape: a map-side ObjectHashAggregate combines each partition's
+    // candidates into ≤k-entry heaps BEFORE the host shuffle, so the
+    // exchange moves O(hosts×budget) buffers, never O(pending) rows
     val p = plan(SparkEntry.queries("q_frontier_select_native")(spark, sf))
     assert(p.contains("ObjectHashAggregate"), p)
     assert("ObjectHashAggregate".r.findAllIn(p).size >= 2,
@@ -92,7 +92,6 @@ class PlanSpec extends SparkSpec {
     // builders below are the exact Columns those projections are built from
     // (minhashSignature = minhashSignatureFromTokens ∘ tokens; simhash =
     // simhashFromTokens ∘ tokens).
-    graft.functions.HashExprs.register(spark)
     val base = spark.range(1).selectExpr("CAST(id AS STRING) AS text")
     val pm = plan(base.select(graft.ops.Dedup.minhashSignature(org.apache.spark.sql.functions.col("text")).as("sig")))
     assert(pm.contains("minhashsig"), "minhash must be the native expression")
@@ -302,19 +301,26 @@ class PlanSpec extends SparkSpec {
   }
 
   test("graft extensions: the injection entry point registers cleanly") {
-    // getOrCreate cannot re-extend the shared test session, so exercise the
-    // injection surface directly (a fresh SparkSessionExtensions accepts the
-    // rule + the three function descriptors without throwing), and evaluate
-    // an injected builder's expression interpreted.
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    // getOrCreate cannot re-extend the shared test session, so record what
+    // the entry point injects: the rewrite rule and nothing else — the native
+    // expressions bind into their Columns and need no registry entries
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    val rules = scala.collection.mutable.Buffer[SparkSession => Rule[LogicalPlan]]()
+    var functions = 0
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectOptimizerRule(b: SparkSession => Rule[LogicalPlan]): Unit =
+        rules += b
+      override def injectFunction(f: org.apache.spark.sql.SparkSessionExtensions#FunctionDescription): Unit =
+        functions += 1
+    }
     new graft.plans.GraftExtensions().apply(ext)
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val a = Literal.create(Array(1.0, 2.0))
-    val b = Literal.create(Array(1.0, 2.0))
-    assert(math.abs(graft.functions.CosineSim(a, b).eval(null)
-      .asInstanceOf[Double] - 1.0) < 1e-12)
-    assert(graft.functions.L2Dist2(a, b).eval(null).asInstanceOf[Double] === 0.0)
-    assert(graft.functions.DotProduct(a, b).eval(null).asInstanceOf[Double] === 5.0)
+    assert(rules.map(_(spark)) === Seq(graft.plans.VectorRewrite))
+    assert(functions === 0)
+    // no graft_* name is left in the session registry either
+    assert(!spark.sessionState.functionRegistry.listFunction()
+      .exists(_.funcName.startsWith("graft_")))
   }
 
   test("faculty records: one span sort per side; per-page offsets keep their own projections") {
