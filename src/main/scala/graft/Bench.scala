@@ -43,11 +43,15 @@ object Bench {
     "q_kmeans_clusters", "q_semantic_neardup", "q_chunk_dedup",
     "q_boilerplate_grams")
 
-  private def session(cpus: Int): SparkSession = {
+  /** The one session shape of the dev mains (Bench, BenchExtra, PlanDump,
+    * Verify, CrawlDemo): local[cpus], shuffle.partitions = cpus, AQE, UTC,
+    * `GraftExtensions`.
+    */
+  def session(cpus: Int, app: String): SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
+      .appName(app)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -167,7 +171,7 @@ object Bench {
 
   private def inProcessRate(cpus: Int, env: Map[String, String],
       site: SiteConfig, waveSeconds: Double): (Double, Long) = {
-    val spark = session(cpus)
+    val spark = session(cpus, s"graft-bench-$cpus")
     // mirror BenchCrawlChild's env contract (regime/selector/wave bound) so
     // an unpinned fallback still measures the requested configuration
     val base = benchCrawl.copy(waveSeconds = waveSeconds,
@@ -236,7 +240,7 @@ object Bench {
     // per-round label stats for the iterative CC queries land on stderr
     // (round count, max label multiplicity, salt activation — r4 verdict #4)
     sys.props("graft.cc.debug") = "1"
-    val spark = session(cpus)
+    val spark = session(cpus, s"graft-bench-$cpus")
     // Warmup: one cheap representative query per TABLE FAMILY, so session,
     // codegen/JIT, and parquet-footer first-touch costs stay out of every
     // query's timing — not just the lineitem family's. (Protocol note,

@@ -56,23 +56,17 @@ object BenchCrawlChild {
     // the parent's narrow (N) level, which the ceilings are measured against
     val narrow = if (args.length > 10) args(10).toInt else 2
 
-    // GRAFT_MASTER overrides the master — e.g. "local-cluster[2,1,6144]"
-    // runs REAL separate executor JVMs (the honest N-executors simulation:
-    // separate heaps/GC, like a real cluster node layout)
-    val master = sys.env.getOrElse("GRAFT_MASTER", s"local[$cores]")
     val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(master)
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
+      .master(s"local[$cores]")
       .appName(s"graft-bench-child-$cores")
       .config("spark.sql.shuffle.partitions", (cores * 2).toString) // 2x cores: stage tails overlap
-      // AQE OFF in the bench children (GRAFT_AQE=true restores for A/B):
-      // every shuffle is already explicitly sized, so AQE's per-stage
-      // re-planning is pure driver latency with no executor to hide behind
-      // in local mode — measured equal-or-better with it off at BOTH widths
-      // (best-of: 28.9k vs 26.6k at 8 cores, 10.0k vs 9.2k at 2). On a real
-      // cluster leave it ON: runtime skew-join handling matters there.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "false"))
+      // AQE OFF in the bench children: every shuffle is already explicitly
+      // sized, so AQE's per-stage re-planning is pure driver latency with no
+      // executor to hide behind in local mode — measured equal-or-better
+      // with it off at BOTH widths (best-of: 28.9k vs 26.6k at 8 cores,
+      // 10.0k vs 9.2k at 2). On a real cluster leave it ON: runtime
+      // skew-join handling matters there.
+      .config("spark.sql.adaptive.enabled", "false")
       // local mode: shuffle files hit the page cache and the cache is heap —
       // lz4/columnar compression is pure CPU+bandwidth overhead here (on a
       // real cluster with network shuffle + memory pressure, leave them on)
@@ -160,8 +154,7 @@ object BenchCrawlChild {
       .config("spark.sql.shuffle.partitions", (threads * 2).toString)
       // same AQE setting as the engine children — the ceiling must bound the
       // engine under the SAME session regime to be a fair contemporaneous bar
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "false"))
+      .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.shuffle.compress", "false")

@@ -30,20 +30,6 @@ object BenchExtra {
     "q_kmeans_clusters", "q_semantic_neardup", "q_chunk_dedup",
     "q_boilerplate_grams")
 
-  def session(cpus: Int, app: String): SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def warm(spark: SparkSession, sfDir: String): Unit =
     Seq("q_agg_lineitem", "q_token_stats", "q_cosine_topk", "q_events_window")
       .foreach { w =>
@@ -57,7 +43,7 @@ object BenchExtra {
     val reps  = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = session(cpus, "graft-bench-extra")
+    val spark = Bench.session(cpus, "graft-bench-extra")
     // per-rep scheduling-volume telemetry: jobs/stages/tasks + summed task
     // time — separates "the engine did more work" from "the box was noisy"
     val jobs = new java.util.concurrent.atomic.AtomicLong

@@ -5,7 +5,6 @@ import graft.crawl.WaveRunner.CrawlConfig
 import graft.oracle.SequentialOracle
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.SiteConfig
-import org.apache.spark.sql.SparkSession
 
 /** User-facing demo / operational entry: run the crawl engine on the
   * deterministic synthetic site and report what the north rule measures —
@@ -30,23 +29,12 @@ object CrawlDemo {
     val snapshotDir = if (pos.length > 6) Some(pos(6)) else None
     val checkOracle = args.contains("--check-oracle")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-crawl-demo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = Bench.session(cpus, "graft-crawl-demo")
 
     val seeds   = SyntheticSite.seeds(site)
     val fetcher = SyntheticSite.fetcher(site)
-    // same selector env contract as BenchCrawlChild, so each batch-selector
-    // variant can be driven end-to-end against the crawl oracle
-    val cfg     = CrawlConfig(waveSeconds = waveSeconds, snapshotDir = snapshotDir,
-      selector = sys.env.getOrElse("GRAFT_SELECTOR", CrawlConfig().selector))
+    val cfg     = CrawlConfig(waveSeconds = waveSeconds, snapshotDir = snapshotDir)
 
     val t0 = System.nanoTime()
     val result = snapshotDir match {

@@ -22,7 +22,7 @@ object PlanDump {
       else args(2).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = BenchExtra.session(cpus, "graft-plan-dump")
+    val spark = Bench.session(cpus, "graft-plan-dump")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {

@@ -1,7 +1,7 @@
 package graft.crawl
 
 import graft.extract.SpanExtract
-import graft.frontier.{BloomShard, BloomTable, PartitionedBloom, PartitionedCuckoo, Robots, SeenPreFilter, UrlSeen, WaveSelector}
+import graft.frontier.{BloomShard, BloomTable, PartitionedBloom, Robots, UrlSeen, WaveSelector}
 import graft.model._
 import graft.synth.SyntheticSite.Seed
 import graft.urls.Urls
@@ -111,12 +111,6 @@ object WaveRunner {
         * sharded path regardless of sizing (tests do).
         */
       bloomBroadcastMaxBytes: Long = 256L << 20,
-      /** Pre-filter family in the broadcast regime: "bloom" (default) or
-        * "cuckoo" (supports deletion, ~0.01% FPP at 16-bit fingerprints —
-        * see [[graft.frontier.CuckooFilter]]). The sharded 10^10 regime is
-        * bloom-backed.
-        */
-      seenFilter: String = "bloom",
       /** Frontier/seen compaction threshold: when the keys touched since the
         * last compaction exceed this, deltas fold into new base tables (the
         * only O(frontier) shuffle — amortized over the waves between
@@ -352,26 +346,20 @@ object WaveRunner {
     //    exponentially (measured: OOM building plan strings by wave ~6); the
     //    totalKeys action is what materializes the checkpoint — no extra job.
     val bloomBroadcast = cfg.bloomBroadcastable
-    var bloomDriver: SeenPreFilter       = null
+    var bloomDriver: PartitionedBloom    = null
     var bloomTable: Dataset[BloomShard]  = null
     var seenTotal = 0L
     if (bloomBroadcast) {
-      val cuckoo = cfg.seenFilter == "cuckoo"
       bloomDriver = seedHashes match {
         case Some(hashes) =>
-          val f =
-            if (cuckoo) PartitionedCuckoo.empty(cfg.bloomShards, cfg.bloomExpected)
-            else PartitionedBloom.empty(cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
+          val f = PartitionedBloom.empty(cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
           hashes.foreach(f.put)
           f
         case None =>
-          val hashes = seenBase0.select(col("url_hash"))
-          if (cuckoo) PartitionedCuckoo.build(hashes, cfg.bloomShards, cfg.bloomExpected)
-          else PartitionedBloom.build(hashes, cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
+          PartitionedBloom.build(seenBase0.select(col("url_hash")),
+            cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
       }
     } else {
-      require(cfg.seenFilter == "bloom",
-        "the sharded (beyond-broadcast) URL-seen regime is bloom-backed")
       bloomTable = BloomTable.fromHashes(seenBase0.select(col("url_hash")),
         cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp).localCheckpoint(false)
       seenTotal = BloomTable.totalKeys(bloomTable)
@@ -437,7 +425,7 @@ object WaveRunner {
     // resolves right before the next unseen construction. Holds
     // (wave, future of (n, driverDelta, tableDelta), unseen cache to release,
     // metrics-delta constructor awaiting n).
-    var pendingBloom: Option[(Int, scala.concurrent.Future[(Long, SeenPreFilter, Dataset[BloomShard])],
+    var pendingBloom: Option[(Int, scala.concurrent.Future[(Long, PartitionedBloom, Dataset[BloomShard])],
         DataFrame, Long => DataFrame)] = None
 
     // shared post-bloom bookkeeping: merge the wave's filter delta, account
@@ -450,10 +438,10 @@ object WaveRunner {
     // the discoveries were stamped against (committedWave + 1), or the
     // in-flight wave's discoveries are excluded from the seen accumulator
     // forever (never folded into seenBase → re-fetch on rediscovery).
-    def applyBloom(committedWave: Int, n: Long, drvDelta: SeenPreFilter,
+    def applyBloom(committedWave: Int, n: Long, drvDelta: PartitionedBloom,
         tblDelta: Dataset[BloomShard]): Unit = {
       if (bloomBroadcast) {
-        if (n > 0L) bloomDriver.mergeWith(drvDelta)
+        if (n > 0L) bloomDriver.mergeInPlace(drvDelta)
       } else {
         bloomTable.unpersist()
         bloomTable = tblDelta
@@ -666,15 +654,10 @@ object WaveRunner {
         // applies it after the future joins (Await is the memory barrier)
         val bloomTableNow  = bloomTable
         val seenTotalNow   = seenTotal
-        def buildBloom(delta: DataFrame): (Long, SeenPreFilter, Dataset[BloomShard]) =
+        def buildBloom(delta: DataFrame): (Long, PartitionedBloom, Dataset[BloomShard]) =
           if (bloomBroadcast) {
-            val (f, n) =
-              if (cfg.seenFilter == "cuckoo")
-                PartitionedCuckoo.buildWithCount(delta.select(col("url_hash")),
-                  cfg.bloomShards, cfg.bloomExpected)
-              else
-                PartitionedBloom.buildWithCount(delta.select(col("url_hash")),
-                  cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
+            val (f, n) = PartitionedBloom.buildWithCount(delta.select(col("url_hash")),
+              cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
             (n, f, null)
           } else {
             val bloomDelta = BloomTable.fromHashes(delta.select(col("url_hash")),

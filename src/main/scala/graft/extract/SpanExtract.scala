@@ -140,12 +140,6 @@ object SpanExtract {
   def hasClass(s: Column, cls: String): Column =
     array_contains(split(s.getField("cls"), " "), cls)
 
-  /** First span of `kind` carrying class `cls`, in document order; null
-    * struct when none (callers coalesce).
-    */
-  def firstWithClass(spans: Column, kind: String, cls: String): Column =
-    get(filter(spans, s => s.getField("kind") === kind && hasClass(s, cls)), lit(0))
-
   /** Class-ADDRESSED faculty index rows — the reference's actual NESTED
     * selector logic (`scraper.py:41-55`): rows are `.views-row` containers
     * (`rowCls` — a `.field-content h3` outside any container is page chrome

@@ -1,26 +1,14 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Approximate-membership pre-filter contract shared by the Bloom and
-  * Cuckoo URL-seen variants (north rule: "partitioned Bloom/Cuckoo filter").
-  * Only ever a FAST PATH: false positives are rescued by the exact
-  * anti-join; implementations must have no false negatives for inserted keys.
-  */
-trait SeenPreFilter extends Serializable {
-  def mightContain(hash: Long): Boolean
-  /** Insert one key on the driver (a crawl's seed set, known up front). */
-  def put(hash: Long): Unit
-  /** Merge a same-shape delta built with identical sizing. */
-  def mergeWith(delta: SeenPreFilter): Unit
-}
-
-/** URL-seen set: partitioned Bloom pre-filter + exact anti-join
-  * (SURVEY.md §2.8 G4; BASELINE.json: "URL-seen is a partitioned Bloom/Cuckoo
-  * filter keyed by canonicalized-URL xxHash64").
+/** URL-seen set: partitioned Bloom pre-filter + exact anti-join, keyed by
+  * canonicalized-URL xxHash64 (SURVEY.md §2.8 G4; BASELINE.json north star).
+  * Bloom is the one filter family: the seen set only grows, so a filter
+  * that also supports deletion would buy nothing.
   *
   * Exactness contract: the Bloom alone has false positives, which would
   * wrongly DROP unseen URLs if trusted. It is therefore only the cheap
@@ -36,21 +24,20 @@ trait SeenPreFilter extends Serializable {
   * into 1024 shards that is ~12 MB/shard; executors probing a co-partitioned
   * candidate stream touch exactly one shard per partition.
   *
-  * THIS class is the driver-resident/broadcast form — convenient below
-  * broadcast scale, a hard OOM at 10^10. The crawl engine holds the filter
-  * as a [[BloomTable]] (`Dataset[BloomShard]`) instead: built, merged, and
-  * probed shard-locally on executors, so residency carries to 10^10.
+  * THIS class is the driver-resident/broadcast form — the crawl engine's
+  * regime while the configured filter fits `bloomBroadcastMaxBytes`, a hard
+  * OOM at 10^10. Above that bound the engine holds the filter as a
+  * [[BloomTable]] (`Dataset[BloomShard]`) instead: built, merged, and probed
+  * shard-locally on executors, so residency carries to 10^10. Both forms
+  * are built by the same job ([[BloomTable.fromHashes]]) with the same
+  * sizing, so for the same keys their shards hold the same bits.
   */
 final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter])
-    extends SeenPreFilter {
-  override def mergeWith(delta: SeenPreFilter): Unit = delta match {
-    case b: PartitionedBloom => mergeInPlace(b)
-    case other => throw new IllegalArgumentException(
-      s"cannot merge ${other.getClass.getSimpleName} into PartitionedBloom")
-  }
-  def shardOf(hash: Long): Int = (((hash % nShards) + nShards) % nShards).toInt
+    extends Serializable {
+  def shardOf(hash: Long): Int = BloomTable.shardOf(hash, nShards)
   def mightContain(hash: Long): Boolean = shards(shardOf(hash)).mightContainLong(hash)
-  override def put(hash: Long): Unit = { shards(shardOf(hash)).putLong(hash); () }
+  /** Insert one key on the driver (a crawl's seed set, known up front). */
+  def put(hash: Long): Unit = { shards(shardOf(hash)).putLong(hash); () }
   /** Merge a same-shape delta in place (shards built with identical sizing). */
   def mergeInPlace(delta: PartitionedBloom): Unit = {
     require(delta.nShards == nShards, "incompatible bloom sharding")
@@ -64,45 +51,28 @@ object PartitionedBloom {
     * per-wave deltas stay merge-compatible.
     */
   def empty(nShards: Int, expectedTotal: Long, fpp: Double): PartitionedBloom = {
-    val perShard = math.max(64L, expectedTotal / nShards)
+    val perShard = BloomTable.perShard(expectedTotal, nShards)
     new PartitionedBloom(nShards,
       Array.fill(nShards)(BloomFilter.create(perShard, fpp)))
   }
 
-  /** Build a delta Bloom from a DataFrame of `url_hash: long`, distributed:
-    * each shard is assembled from its hash-range partition, then the (small,
-    * fixed-size) shard filters are collected and merged driver-side.
+  /** Build a delta Bloom from a DataFrame of `url_hash: long`: the shard
+    * table of [[BloomTable.fromHashes]] (at most `nShards` small rows) is
+    * collected and OR-ed into an empty filter of the same sizing.
     */
   def build(hashes: DataFrame, nShards: Int, expectedTotal: Long, fpp: Double): PartitionedBloom =
     buildWithCount(hashes, nShards, expectedTotal, fpp)._1
 
-  /** Like [[build]] but also returns the input row count, piggybacked on the
-    * same job — callers needing both (the wave loop) save a full action.
+  /** Like [[build]] but also returns the input row count (the shards' `n`
+    * summed, from the same job) — callers needing both (the wave loop) save
+    * a full action.
     */
   def buildWithCount(hashes: DataFrame, nShards: Int, expectedTotal: Long,
       fpp: Double): (PartitionedBloom, Long) = {
-    val spark = hashes.sparkSession
-    import spark.implicits._
-    val perShard = math.max(64L, expectedTotal / nShards)
     val pb = empty(nShards, expectedTotal, fpp)
-    val shardBlooms = hashes
-      .select(col("url_hash").cast("long"))
-      .as[Long]
-      .groupByKey(h => (((h % nShards) + nShards) % nShards).toInt)
-      .mapGroups { (shard, it) =>
-        val bf = BloomFilter.create(perShard, fpp)
-        var n  = 0L
-        it.foreach { h => bf.putLong(h); n += 1 }
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (shard, bos.toByteArray, n)
-      }
-      .collect()
-    shardBlooms.foreach { case (shard, bytes, _) =>
-      pb.shards(shard).mergeInPlace(
-        BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
-    }
-    (pb, shardBlooms.map(_._3).sum)
+    val rows = BloomTable.fromHashes(hashes, nShards, expectedTotal, fpp).collect()
+    rows.foreach(s => pb.shards(s.shard).mergeInPlace(BloomTable.deserialize(s.bytes)))
+    (pb, rows.iterator.map(_.n).sum)
   }
 }
 
@@ -118,8 +88,8 @@ final case class BloomShard(shard: Int, n: Long, bytes: Array[Byte])
   * broadcasts the whole filter; at 10^10 keys / 1% FPP that is a ~12 GB
   * driver allocation and a ~12 GB broadcast per wave — a hard OOM, not a
   * slowdown. Here the filter lives as a `Dataset[BloomShard]` keyed by
-  * `shard = pmod(url_hash, nShards)`: builds and merges are `groupByKey`
-  * jobs over the hash ranges, probes are a cogroup that co-partitions the
+  * `shard = pmod(url_hash, nShards)`: builds and merges are aggregates
+  * over the hash ranges, probes are a cogroup that co-partitions the
   * candidate stream with its shards, so each executor ever holds only the
   * shards of its own hash range (~12 MB each at 1024 shards). Nothing
   * driver-side grows with total URL count.
@@ -132,7 +102,7 @@ object BloomTable {
   import org.apache.spark.sql.expressions.Aggregator
   import org.apache.spark.sql.Encoder
 
-  private def perShard(expectedTotal: Long, nShards: Int): Long =
+  private[frontier] def perShard(expectedTotal: Long, nShards: Int): Long =
     math.max(64L, expectedTotal / nShards)
 
   private def serialize(bf: BloomFilter): Array[Byte] = {
@@ -141,7 +111,7 @@ object BloomTable {
     bos.toByteArray
   }
 
-  private def deserialize(bytes: Array[Byte]): BloomFilter =
+  private[frontier] def deserialize(bytes: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
 
   def shardOf(hash: Long, nShards: Int): Int =
@@ -180,7 +150,8 @@ object BloomTable {
 
   /** Build shard filters from a DataFrame of `url_hash: long`, fully
     * distributed: each shard is assembled inside its hash-range group and
-    * stays there — nothing is collected.
+    * stays there — nothing is collected here (the broadcast regime's
+    * [[PartitionedBloom.buildWithCount]] collects these ≤ nShards rows).
     *
     * The RAW HASHES are shuffled to their shard partition BEFORE the
     * aggregate, on purpose: a bare `groupBy(shard).agg(build)` would
@@ -238,14 +209,15 @@ object UrlSeen {
     * (Bloom-positive, rescued by `left_anti` against `seen`). Returns rows of
     * `candidates` whose url_hash is NOT in the seen set — exactly.
     *
-    * Broadcast-resident variant: fine while the whole filter fits the driver
-    * (small frontiers, standalone queries). The crawl engine uses
-    * [[filterUnseenSharded]], whose residency carries to 10^10.
+    * Broadcast-resident variant: fine while the whole filter fits the driver.
+    * The crawl engine uses it while its configured filter fits
+    * `bloomBroadcastMaxBytes`, and [[filterUnseenSharded]] (whose residency
+    * carries to 10^10) above that bound.
     *
     * @param seen DataFrame with `url_hash: long`, hash-partitioned upstream
     *             so the anti-join's probe side shuffles minimally.
     */
-  def filterUnseen(candidates: DataFrame, seen: DataFrame, bloom: SeenPreFilter): DataFrame =
+  def filterUnseen(candidates: DataFrame, seen: DataFrame, bloom: PartitionedBloom): DataFrame =
     filterUnseen(candidates, seen, None, bloom)
 
   /** Delta-aware variant: the seen set is a stable hash-partitioned `seenBase`
@@ -257,7 +229,7 @@ object UrlSeen {
     * or rewrites the cumulative seen set.
     */
   def filterUnseen(candidates: DataFrame, seenBase: DataFrame,
-      seenAcc: Option[DataFrame], bloom: SeenPreFilter,
+      seenAcc: Option[DataFrame], bloom: PartitionedBloom,
       accBroadcastable: Boolean = true): DataFrame = {
     val spark = candidates.sparkSession
     val bc = spark.sparkContext.broadcast(bloom)

@@ -1,6 +1,5 @@
 package graft.urls
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** URL canonicalization + identity keys.
@@ -121,7 +120,4 @@ object Urls {
     udf((raw: String, base: String) => canonicalize(raw, base))
 
   val hostOfUdf = udf((url: String) => hostOf(url))
-
-  /** Codegen'd hash of an already-canonical URL column. */
-  def urlHashCol(canonicalUrl: Column): Column = xxhash64(canonicalUrl)
 }

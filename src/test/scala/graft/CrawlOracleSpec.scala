@@ -143,8 +143,7 @@ class CrawlOracleSpec extends SparkSpec {
     "memory mode"   -> (() => CrawlConfig()),
     "snapshot mode" -> (() => CrawlConfig(
       snapshotDir = Some(java.nio.file.Files.createTempDirectory("graft_leaf").toString))),
-    "sharded bloom" -> (() => CrawlConfig(bloomBroadcastMaxBytes = 0L)),
-    "cuckoo filter" -> (() => CrawlConfig(seenFilter = "cuckoo")))
+    "sharded bloom" -> (() => CrawlConfig(bloomBroadcastMaxBytes = 0L)))
 
   for ((regime, cfg) <- leafRegimes; maxDepth <- Seq(1, 2))
     test(s"leaf waves, $regime, maxDepth $maxDepth: order, seen set and records match") {

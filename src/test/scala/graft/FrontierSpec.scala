@@ -355,6 +355,20 @@ class FrontierSpec extends SparkSpec {
     (0L until 1000L).foreach(delta.put)
     pb.mergeInPlace(delta)
     (0L until 1000L).foreach(k => assert(pb.mightContain(k)))
+    // cold start (driver put of the seeds) and resume (distributed build of
+    // the same keys) must give bit-identical shards and the same key count
+    val keys = (-500L until 500L).map(_ * 0x9E3779B97F4A7C15L)
+    val (built, n) = PartitionedBloom.buildWithCount(keys.toDF("url_hash"),
+      nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
+    val put = PartitionedBloom.empty(nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
+    keys.foreach(put.put)
+    def bytes(bf: org.apache.spark.util.sketch.BloomFilter): Seq[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos)
+      bos.toByteArray.toSeq
+    }
+    assert(n === keys.size.toLong)
+    assert(built.shards.map(bytes).toSeq === put.shards.map(bytes).toSeq)
     // documented 10^10 sizing: ~9.6 bits/key at 1% fpp → ~1.2 GB per 10^9 keys,
     // sharded so a single shard stays executor-resident
     val bitsPerKey = -math.log(0.01) / (math.log(2) * math.log(2))
