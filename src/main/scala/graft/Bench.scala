@@ -180,8 +180,7 @@ object Bench {
         .getOrElse(CrawlConfig().maxWaves))
     val cfg =
       if (env.get("GRAFT_REGIME").contains("sharded"))
-        base.copy(bloomBroadcastMaxBytes = 0L, rulesBroadcastMaxRows = 0L,
-          deltaBroadcastMaxRows = 0L)
+        base.copy(bloomBroadcastMaxBytes = 0L, rulesBroadcastMaxRows = 0L)
       else base
     val warmSite = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 4)
     WaveRunner.run(spark, SyntheticSite.seeds(warmSite),

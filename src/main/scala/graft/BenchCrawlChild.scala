@@ -42,14 +42,12 @@ object BenchCrawlChild {
       maxWaves = sys.env.get("GRAFT_MAX_WAVES").map(_.toInt)
         .getOrElse(CrawlConfig().maxWaves))
     // GRAFT_REGIME=sharded forces every beyond-broadcast path at once — the
-    // sharded Bloom table, the shuffle-join robots rules, and the shuffled
-    // key-set anti-joins — so the bench can record the 10^10-regime
-    // machinery's CONSTANTS on the same corpus, not just its property-tested
-    // shape (r3 verdict ask #4)
+    // sharded Bloom table and the shuffle-join robots rules — so the bench
+    // can record the 10^10-regime machinery's CONSTANTS on the same corpus,
+    // not just its property-tested shape (r3 verdict ask #4)
     val crawl =
       if (sys.env.get("GRAFT_REGIME").contains("sharded"))
-        base.copy(bloomBroadcastMaxBytes = 0L, rulesBroadcastMaxRows = 0L,
-          deltaBroadcastMaxRows = 0L)
+        base.copy(bloomBroadcastMaxBytes = 0L, rulesBroadcastMaxRows = 0L)
       else base
     val runs  = args(5).toInt
     val skipCeil = sys.env.contains("GRAFT_SKIP_CEIL")

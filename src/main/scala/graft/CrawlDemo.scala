@@ -6,10 +6,14 @@ import graft.oracle.SequentialOracle
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.SiteConfig
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** User-facing demo / operational entry: run the crawl engine on the
   * deterministic synthetic site and report what the north rule measures —
-  * frontier URLs/sec, waves, seen-set size, record count, and (optionally)
-  * exactness vs the sequential oracle.
+  * frontier URLs/sec, waves, seen-set size, record count, the classes Spark
+  * compiled for the crawl and its records (`codegen_compiles`, `codegen_ms`),
+  * and (optionally) exactness vs the sequential oracle.
   *
   * Usage: runMain graft.CrawlDemo [universities] [deptsPerU] [facultyPerDept]
   *          [errorFraction] [waveSeconds] [snapshotDir] [--check-oracle]
@@ -36,6 +40,10 @@ object CrawlDemo {
     val fetcher = SyntheticSite.fetcher(site)
     val cfg     = CrawlConfig(waveSeconds = waveSeconds, snapshotDir = snapshotDir)
 
+    // classes Spark compiles for the crawl plus its records, and the time
+    // spent compiling them (the JVM-wide codegen counters, before and after)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val t0 = System.nanoTime()
     val result = snapshotDir match {
       case Some(_) => WaveRunner.resume(spark, seeds, fetcher, Nil, cfg)
@@ -43,11 +51,14 @@ object CrawlDemo {
     }
     val fetches = result.fetches
     val secs    = (System.nanoTime() - t0) / 1e9
-    val seen    = result.seen.count()
     val records = Records.facultyRecords(spark, result.docs, seeds).count()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
+    val seen    = result.seen.count()
     println(f"""{"hosts":${seeds.size},"waves":${result.waves},"fetches":$fetches,""" +
       f""""seen":$seen,"records":$records,"sec":$secs%.2f,""" +
-      f""""urls_per_sec":${fetches / secs}%.1f}""")
+      f""""urls_per_sec":${fetches / secs}%.1f,""" +
+      f""""codegen_compiles":$compiles,"codegen_ms":$compileMs%.1f}""")
 
     if (checkOracle) {
       val oracle = SequentialOracle.run(seeds, fetcher)

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *   indexRows(depth-0 docs)  LEFT JOIN  profileFields(depth-1 docs)
   *                            ON canonical profile URL
   *
-  * — a row-local extraction on both sides (no UDF), one equi-join. The seeds
-  * table (university/department per index URL) is tiny → broadcast.
+  * — a row-local extraction on both sides (no UDF), one shuffled equi-join.
+  * The seeds table (university/department per index URL) is tiny →
+  * broadcast.
   */
 object Records {
 
@@ -38,7 +39,11 @@ object Records {
     val profiles = SpanExtract.profileFieldsDF(docs.filter(col("depth") === 1))
       .withColumnRenamed("url", "profile_url")
 
-    rows.join(profiles, Seq("profile_url"), "left")
+    // a shuffled hash join by hint: left to itself, adaptive execution turns
+    // the join into a broadcast when the profile side's shuffle happens to
+    // finish first and small, so the plan — and the classes it compiles —
+    // would depend on task timing and crawl size
+    rows.join(profiles.hint("shuffle_hash"), Seq("profile_url"), "left")
       .select(
         col("name"),
         col("title"),

@@ -6,43 +6,60 @@ import graft.model._
 import graft.synth.SyntheticSite.Seed
 import graft.urls.Urls
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, GraftRows, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
-
-// fetch-stage rows (typed — per-row invariants matter here, SURVEY §1.3).
-// Top-level (not nested/private) so Catalyst codegen can reach them.
-final case class Selected(url: String, urlHash: Long, host: String, depth: Int,
-    priority: Double, retries: Int, discoveredWave: Int, discoveredRank: Long,
-    parentUrl: String, host_rank: Long)
-final case class WaveFetch(url: String, urlHash: Long, host: String, depth: Int,
-    priority: Double, retries: Int, discoveredWave: Int, discoveredRank: Long,
-    parentUrl: String, host_rank: Long, ok: Boolean, spans: Array[Span], fetchMs: Long,
-    wave: Int)
-
-/** The crawl engine: a wave-synchronous driver loop of DataFrame jobs
-  * (SURVEY.md §3 E1, §2.8). Each wave is one declarative pipeline:
+/** The crawl engine: a wave-synchronous driver loop of Spark jobs
+  * (SURVEY.md §3 E1, §2.8). Each wave is one pipeline:
   *
   *   frontier → robots broadcast-join → per-host top-k batch select
-  *            → mapPartitions fetch → span docs
+  *            → fetch (per partition) → span docs
   *            → link explode → canonicalize → xxhash64 → whitelist/depth
-  *            → Bloom pre-filter + exact anti-join (URL-seen)
+  *            → first discovery per key → Bloom pre-filter + exact check
   *            → state DELTA committed;  wave outputs committed atomically.
   *
-  * Leaf waves: the wave's one select+fetch action also counts the fetched
-  * pages that may still link within `maxDepth` (`ok` and `depth < maxDepth`).
-  * When there are none the wave is a leaf: it skips link extraction, the
-  * URL-seen probe, the filter delta build and the unseen cache, and its delta
-  * is just the batch's new statuses. In the reference crawl (index page →
-  * profiles, `scraper.py:43-63`, `maxDepth = 1`) every wave after the index
-  * wave is a leaf.
+  * SQL runs the relational steps whose semantics live in Column
+  * expressions: selection (robots join, native top-k), link extraction
+  * ([[graft.extract.SpanExtract]]) and the records. The engine's own
+  * bookkeeping — fetch, first-discovery dedup, URL-seen check, delta,
+  * compaction — works on RDDs of rows, which compile no code.
+  *
+  * Class budget. Spark caches generated classes in a Guava cache of 100
+  * entries built with 4 segments, so each segment is an LRU of 25; the key
+  * includes the class loader, so every whole-stage-codegen stage takes two
+  * entries (the driver's check compile and the task compile), and every
+  * interpreted projection, predicate or ordering one. A crawl plus its
+  * records must stay well inside that (64 entries keep the chance that any
+  * segment overflows under 2% per JVM), or every crawl recompiles classes
+  * the previous one evicted and runs them cold. Count them with
+  * `CodegenMetrics.METRIC_COMPILATION_TIME` around a crawl in a fresh JVM
+  * (`CrawlDemo` reports it as `codegen_compiles`); CrawlScaleSpec pins that
+  * a second crawl of the benchmark shape compiles none. Keep per-wave and
+  * per-crawl values out of plans (no `lit` of a wave id or a count), keep
+  * one plan shape per step, and read a set of row RDDs as ONE scan
+  * ([[org.apache.spark.sql.GraftRows.scan]]): a union has one stage per
+  * branch.
+  *
+  * Leaf waves: the wave's one fetch job also counts the fetched pages that
+  * may still link within `maxDepth` (`ok` and `depth < maxDepth`). When
+  * there are none the wave is a leaf: it skips link extraction and the
+  * URL-seen check, and its delta is just the batch's new statuses. In the
+  * reference crawl (index page → profiles, `scraper.py:43-63`,
+  * `maxDepth = 1`) every wave after the index wave is a leaf.
   *
   * Work fixed for the crawl runs once, not per wave: the robots rules are
   * merged to one row per host on the driver before the loop
-  * ([[graft.frontier.Robots.mergeRules]]), and a cold start seeds the
-  * broadcast-regime URL-seen filter by putting the seed hashes into it on the
-  * driver (a resume rebuilds it distributed, from the store's seen set).
+  * ([[graft.frontier.Robots.mergeRules]]). In the broadcast regime the
+  * URL-seen Bloom filter lives on the driver and takes every new key there:
+  * the seeds at a cold start, the store's seen set on resume, and each
+  * wave's discoveries as the job that stores them ends.
   *
   * Wave-synchronous batches — not Structured Streaming — because the primary
   * correctness obligation is deterministic, reproducible ordering vs the
@@ -51,24 +68,23 @@ final case class WaveFetch(url: String, urlHash: Long, host: String, depth: Int,
   * State model (the 1000-executor / 10^10-URL design): per-wave work is
   * O(wave batch), never O(frontier). The frontier lives as
   *
-  *  - `basePending`: the pending rows as of the last compaction — a stable,
-  *    hash-partitioned, lineage-truncated table that per-wave jobs only ever
-  *    SCAN (no per-wave shuffle, rewrite, or snapshot of it exists);
-  *  - `deltaState`: the latest state of only the keys touched since the last
+  *  - base rows: the pending rows as of the last compaction — stable,
+  *    lineage-truncated rows that per-wave jobs only ever SCAN (no per-wave
+  *    shuffle, rewrite, or snapshot of them exists);
+  *  - delta rows: the latest state of only the keys touched since the last
   *    compaction (fetched/error/retry statuses + newly discovered entries) —
   *    O(batches since compaction) rows, re-checkpointed each wave;
-  *  - `doneDeltas`: append-only fetched/error rows, never re-materialized
+  *  - done rows: append-only fetched/error rows, never re-materialized
   *    (a fetched URL can never be re-enqueued — the seen set guarantees it).
   *
-  * The live frontier is the view `basePending ⧹ keys(deltaState) ∪ deltaState
-  * ∪ doneDeltas`; a compaction every ~`frontierDeltaMaxRows` touched keys
-  * folds deltas into a new base (the only O(frontier) shuffle, amortized).
-  * The URL-seen table gets the same split: a stable `seenBase` whose
-  * anti-join side reuses its partitioning wave-over-wave, plus a small
-  * accumulator of post-compaction discoveries that joins as a broadcast.
-  * Selection is a partial-aggregating exact top-k (map-side bounded heaps),
-  * so even the selection shuffle moves O(hosts × budget) buffer rows, not
-  * O(pending). Fetch is `mapPartitions` over the selected batch only.
+  * The live frontier is `base ⧹ batch keys ∪ delta ∪ done`; a compaction
+  * every ~`frontierDeltaMaxRows` touched keys folds deltas into a new base
+  * (the only O(frontier) work, amortized). The URL-seen rows get the same
+  * split: stable seen rows placed by key hash, which a Bloom-positive
+  * candidate's check reads one partition of, plus the discoveries since
+  * compaction. Selection is a partial-aggregating exact top-k (map-side
+  * bounded heaps), so even the selection shuffle moves O(hosts × budget)
+  * buffer rows, not O(pending). Fetch maps the selected batch only.
   */
 object WaveRunner {
 
@@ -79,6 +95,10 @@ object WaveRunner {
     */
   val RankBase = 100000L
 
+  // every frontier row set has this schema, nullability included: the
+  // generated code of a plan depends on its input's nullability, so a
+  // non-null seed table would give wave 0 and the waves after a compaction
+  // different classes
   private val FrontierDdl =
     "url string, urlHash long, host string, depth int, priority double, " +
       "status string, retries int, discoveredWave int, discoveredRank long, " +
@@ -112,21 +132,13 @@ object WaveRunner {
         */
       bloomBroadcastMaxBytes: Long = 256L << 20,
       /** Frontier/seen compaction threshold: when the keys touched since the
-        * last compaction exceed this, deltas fold into new base tables (the
-        * only O(frontier) shuffle — amortized over the waves between
-        * compactions). Also bounds the delta-key broadcasts: size it so
-        * `frontierDeltaMaxRows` × ~16 B fits comfortably in executor memory.
+        * last compaction exceed this, deltas fold into new base rows (the
+        * only O(frontier) work — amortized over the waves between
+        * compactions). Also bounds the batch keys the driver holds and
+        * broadcasts each wave: size it so `frontierDeltaMaxRows` × 8 B fits
+        * comfortably in driver and executor memory.
         */
       frontierDeltaMaxRows: Long = 1L << 22,
-      /** Key-set anti-joins against the bounded delta/batch accumulators use
-        * a BROADCAST below this many rows (no shuffle, but the driver
-        * collects+ships the keys — serial time) and degrade to a shuffled
-        * hash join above it (fully parallel; the stable side's partitioning
-        * is reused). Measured crossover on the bench crawl: a 440k-key
-        * broadcast costs ~0.5 s of serial driver time per wave that the
-        * shuffle path spends in parallel.
-        */
-      deltaBroadcastMaxRows: Long = 1L << 17,
       /** Robots-rules join regime bound (static, like the Bloom residency):
         * rule sets with ≤ this many rows broadcast-join onto the frontier;
         * above it (millions of hosts) the join degrades to a shuffled hash
@@ -154,7 +166,7 @@ object WaveRunner {
       metrics: DataFrame,    // wave, host, fetched, errors, fetchMsTotal, urlsEnqueued
       waves: Int,
       fetches: Long,         // total attempted fetches (= crawlOrder row count)
-      cached: Seq[DataFrame] // per-wave caches backing docs/order in memory mode
+      held: Seq[RDD[InternalRow]] // checkpointed row sets the DataFrames above read
   ) {
     /** Global crawl order (seq, wave, host, host_rank, url). Lazy: deriving
       * the seq offsets runs a small distributed job over the metrics views,
@@ -163,15 +175,12 @@ object WaveRunner {
       */
     lazy val crawlOrder: DataFrame = orderThunk()
 
-    /** Unpersist the per-wave caches this result's DataFrames are views over.
+    /** Free the checkpointed blocks this result's DataFrames are views over.
       * Call when done with the result — in-JVM crawl reruns otherwise
-      * accumulate cached blocks until the block manager thrashes (measured:
-      * 2.6× throughput loss on the second run).
+      * accumulate blocks until the block manager thrashes (measured: 2.6×
+      * throughput loss on the second run).
       */
-    def release(): Unit = {
-      cached.foreach(_.unpersist())
-      frontier.unpersist(); seen.unpersist()
-    }
+    def release(): Unit = held.foreach(_.unpersist(blocking = false))
   }
 
   private def seedEntriesOf(seeds: Seq[Seed]): Seq[FrontierEntry] =
@@ -187,8 +196,9 @@ object WaveRunner {
     * history predates the first compacted base.
     */
   def seedFrontier(spark: SparkSession, seeds: Seq[Seed]): DataFrame = {
-    import spark.implicits._
-    seedEntriesOf(seeds).toDS().toDF()
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(seedEntriesOf(seeds).map(e => Row.fromTuple(e)).asJava,
+      StructType.fromDDL(FrontierDdl))
   }
 
   /** Cold-start crawl from a seed list. */
@@ -199,11 +209,8 @@ object WaveRunner {
       rules: Seq[RobotsRule] = Nil,
       cfg: CrawlConfig = CrawlConfig()
   ): CrawlResult = {
-    import spark.implicits._
-    val P = shufflePartitions(spark)
-    val basePending0 = seedEntriesOf(seeds).toDS().toDF().repartition(P, col("urlHash"))
+    val basePending0 = seedFrontier(spark, seeds)
     val seen0 = basePending0.select(col("urlHash").as("url_hash"), col("url"))
-      .repartition(P, col("url_hash"))
     val whitelist = cfg.hostWhitelist.getOrElse(
       seeds.map(s => Urls.hostOf(Urls.normalize(s.url))).distinct)
     runLoop(spark, basePending0, Nil, seen0, startWave = 0, Nil, whitelist,
@@ -243,14 +250,12 @@ object WaveRunner {
     // time-travel read at wave `last` ([[WaveSnapshots.frontierAsOf]])
     val frontier0 = WaveSnapshots.frontierAsOf(store, seedRows, last)
     val basePending0 = frontier0.filter(col("status") === FrontierStatus.Pending)
-      .repartition(P, col("urlHash"))
     val doneDeltas0 = Seq(frontier0.filter(col("status") =!= FrontierStatus.Pending))
 
     val seedSeen = seeds
       .map { s => val u = Urls.normalize(s.url); (Urls.urlHash64(u), u) }
       .toDF("url_hash", "url")
     val seen0 = WaveSnapshots.seenAsOf(store, seedSeen, last)
-      .repartition(P, col("url_hash"))
     val whitelist = cfg.hostWhitelist.getOrElse(
       seeds.map(s => Urls.hostOf(Urls.normalize(s.url))).distinct)
     // resumed crawls don't know the restored pending-row count without an
@@ -268,7 +273,7 @@ object WaveRunner {
     *                       stitched into the returned result
     * @param seedHashes     cold start: the whole seen set as url hashes, put
     *                       into the broadcast-regime filter on the driver;
-    *                       None (resume): build it distributed from seenBase0
+    *                       None (resume): put seenBase0's hashes instead
     */
   private def runLoop(
       spark: SparkSession,
@@ -288,82 +293,104 @@ object WaveRunner {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val P = shufflePartitions(spark)
+    val P  = shufflePartitions(spark)
+    val sc = spark.sparkContext
+
+    // The frontier/seen state is RDDs of rows, local-checkpointed: the
+    // bookkeeping between waves (delta, compaction, seen) is row filters,
+    // unions and a key partitioning, with no query plan to compile. SQL
+    // runs the relational work — selection and link extraction — over
+    // scans of these rows. Every stored RDD is in `held` until it is
+    // superseded, or until the result is released.
+    val held = scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
+    def hold(rdd: RDD[InternalRow], eager: Boolean): RDD[InternalRow] = {
+      rdd.localCheckpoint()
+      if (eager) rdd.count()
+      held.synchronized { held += rdd }
+      rdd
+    }
+    def drop(rdd: RDD[InternalRow]): Unit = {
+      held.synchronized { held -= rdd }
+      rdd.unpersist(blocking = false)
+      ()
+    }
+    // seen rows, and each wave's candidates, are placed by their url hash
+    val byKey = new HashPartitioner(P)
+    def partitioned(rows: RDD[InternalRow], keyAt: Int): RDD[InternalRow] =
+      rows.map(r => (r.getLong(keyAt), r)).partitionBy(byKey).values
+    def stored(df: DataFrame, cols: Seq[String]): RDD[InternalRow] =
+      GraftRows.rows(df.select(cols.map(col): _*)).map(_.copy())
 
     // -- frontier/seen state (see the class doc for the model) --
-    var basePending = basePending0.persist(StorageLevel.MEMORY_AND_DISK)
-    var seenBase    = seenBase0.persist(StorageLevel.MEMORY_AND_DISK)
-    var deltaState  = union(spark, Nil, FrontierDdl) // empty until a wave commits
+    var baseRdd  = hold(stored(basePending0, FrontierCols), eager = false)
+    var seenRdd  = hold(partitioned(stored(seenBase0, Seq("url_hash", "url")), 0), eager = false)
+    var deltaRdd = sc.emptyRDD[InternalRow]
+    val doneRdds = scala.collection.mutable.ArrayBuffer(
+      doneDeltas0.map(d => hold(stored(d, FrontierCols), eager = false)): _*)
     var deltaRowsBound = 0L  // upper bound on |deltaState| (drives compaction)
-    var seenAccRows  = 0L
-    var fetchedSinceCompaction = 0L
-    // discoveredWave watermark of the last compaction: rows discovered after
-    // it (discoveredWave > seenSinceWave) are exactly the seen-set additions
-    // not yet folded into seenBase — so the seen ACCUMULATOR derives from the
-    // checkpointed deltaState for free (no per-wave seen checkpoint job; a
-    // fetched discovery keeps its discoveredWave, a base retry keeps its
-    // pre-compaction one)
-    var seenSinceWave = startWave
+    var newSinceCompaction = 0L
     // keys SELECTED into a batch since the last compaction — the only base
     // rows a delta can supersede (discoveries never enter the base between
-    // compactions), bounded by the politeness budgets and typically far
-    // smaller than deltaState. Derived from the CHECKPOINTED deltaState (a
-    // fetched key's latest state is fetched/error/pending-retry), never from
-    // per-wave `fetched` views — a view over wave w's fetch plan references
-    // wave w-1's views through the pending lineage, and plans grow
-    // exponentially (persist caches data, not plans).
-    def batchKeysSinceCompaction: DataFrame = deltaState
-      .filter(col("status") =!= FrontierStatus.Pending || col("retries") > 0)
-      .select(col("urlHash"))
-    val doneDeltas   = scala.collection.mutable.ArrayBuffer(doneDeltas0: _*)
-    def seenAcc: Option[DataFrame] =
-      if (seenAccRows == 0L) None
-      else Some(deltaState.filter(col("discoveredWave") > lit(seenSinceWave))
-        .select(col("urlHash").as("url_hash"), col("url")))
+    // compactions). Bounded by the politeness budgets and the compaction
+    // threshold; sorted, on the driver.
+    var batchKeys = Array.emptyLongArray
+    // discoveredWave watermark of the last compaction: rows discovered after
+    // it (discoveredWave > watermark) are exactly the seen-set additions not
+    // yet folded into seenRdd — a fetched discovery keeps its
+    // discoveredWave, a base retry keeps its pre-compaction one
+    var watermark = startWave
 
-    // bounded-key-set anti-join: broadcast below the configured bound (no
-    // shuffle, but serial driver collect+ship), shuffled hash join above it
-    // (parallel; a hash-partitioned left reuses its partitioning)
-    def antiKeys(left: DataFrame, keys: DataFrame, keyCol: String,
-        rowsBound: Long): DataFrame = {
-      val right =
-        if (rowsBound <= cfg.deltaBroadcastMaxRows) broadcast(keys)
-        else keys.hint("shuffle_hash")
-      left.join(right, Seq(keyCol), "left_anti")
+    def seenBase: DataFrame = GraftRows.scan(spark, Seq(seenRdd), SeenSchema)
+    def newKeys: RDD[InternalRow] = {
+      val w = watermark
+      deltaRdd.filter(_.getInt(DiscoveredWaveAt) > w).mapPartitions(asRows(SeenSchema) { r =>
+        Array[Any](r.getLong(UrlHashAt), r.getUTF8String(UrlAt)) })
     }
+    def liveBase: RDD[InternalRow] = withoutKeys(baseRdd, batchKeys)
 
     // URL-seen Bloom state, residency chosen statically from the configured
     // sizing (cfg.bloomBroadcastable, like Spark's broadcast-join threshold):
-    //  - broadcast regime (filter fits the bound): a driver PartitionedBloom,
-    //    re-broadcast per wave, probed row-locally — no extra shuffle. The
-    //    driver object is BOUNDED BY CONFIG, it does not grow with URL count.
+    //  - broadcast regime (filter fits the bound): a driver PartitionedBloom
+    //    that takes each wave's new keys on the driver (putHashes) and is
+    //    broadcast as a copy per wave, probed row-locally — no extra shuffle.
+    //    The driver object is BOUNDED BY CONFIG and putHashes throws past it.
     //  - sharded regime (the 10^10 path): a Dataset[BloomShard] living on
     //    executors, probed via shard-local cogroup — nothing whole-filter
-    //    ever exists in one place. LAZY localCheckpoint, not persist: like
-    //    the frontier state this is iterative — a persist caches data but
-    //    keeps the logical plan, and the bloom plan references ITSELF twice
-    //    per wave (probe + merge), so un-truncated lineage grows
-    //    exponentially (measured: OOM building plan strings by wave ~6); the
-    //    totalKeys action is what materializes the checkpoint — no extra job.
+    //    ever exists in one place. LAZY localCheckpoint, not persist: the
+    //    bloom plan references ITSELF twice per wave (probe + merge), so
+    //    un-truncated lineage grows exponentially (measured: OOM building
+    //    plan strings by wave ~6); the totalKeys action is what materializes
+    //    the checkpoint — no extra job.
     val bloomBroadcast = cfg.bloomBroadcastable
     var bloomDriver: PartitionedBloom    = null
     var bloomTable: Dataset[BloomShard]  = null
     var seenTotal = 0L
     if (bloomBroadcast) {
-      bloomDriver = seedHashes match {
-        case Some(hashes) =>
-          val f = PartitionedBloom.empty(cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
-          hashes.foreach(f.put)
-          f
-        case None =>
-          PartitionedBloom.build(seenBase0.select(col("url_hash")),
-            cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
+      bloomDriver = PartitionedBloom.empty(cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
+      seedHashes match {
+        case Some(hashes) => bloomDriver.putAll(hashes.toArray)
+        case None         => bloomDriver.putHashes(seenBase)
       }
     } else {
-      bloomTable = BloomTable.fromHashes(seenBase0.select(col("url_hash")),
+      bloomTable = BloomTable.fromHashes(seenBase.select(col("url_hash")),
         cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp).localCheckpoint(false)
       seenTotal = BloomTable.totalKeys(bloomTable)
     }
+    // puts a wave's new frontier rows' keys into the filter; returns how many
+    def addToBloom(rows: RDD[InternalRow]): Long =
+      if (bloomBroadcast) bloomDriver.putHashes(rows, UrlHashAt)
+      else {
+        val hashes = GraftRows.scan(spark, Seq(rows), FrontierSchema)
+          .select(col("urlHash").as("url_hash"))
+        val nb = BloomTable.merge(bloomTable, BloomTable.fromHashes(
+          hashes, cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp))
+          .localCheckpoint(false) // lazy: materialized by the totalKeys action
+        val total = BloomTable.totalKeys(nb)
+        bloomTable.unpersist(); bloomTable = nb
+        val n = total - seenTotal
+        seenTotal = total
+        n
+      }
 
     // merged to one row per host here, once: the per-wave join then needs no
     // aggregate over the rules
@@ -377,16 +404,8 @@ object WaveRunner {
     // a real Iceberg/Delta catalog drops in behind the trait
     val store: Option[WaveStore] =
       cfg.snapshotDir.map(d => new ParquetSnapshotStore(spark, d, P))
-
-    val docsDeltas    = Seq.newBuilder[DataFrame]
-    val orderDeltas   = Seq.newBuilder[DataFrame]
-    val metricsDeltas = Seq.newBuilder[DataFrame]
-    val cached        = Seq.newBuilder[DataFrame]
-    committedWaves.foreach { w =>
-      docsDeltas += store.get.readDelta(w, "docs_delta")
-      orderDeltas += store.get.readDelta(w, "order_delta")
-      metricsDeltas += store.get.readDelta(w, "metrics_delta")
-    }
+    // memory mode: every wave's fetched rows, read back as one fetch log
+    val fetchedRdds = scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
 
     val debug = sys.env.contains("GRAFT_CRAWL_DEBUG")
     var lastMark = System.nanoTime()
@@ -418,109 +437,45 @@ object WaveRunner {
     var pendingKnown: Option[Long] =
       if (cfg.maxRetries == 0) initialPending else None
 
-    // Deferred bloom resolution (memory mode): the wave's bloom/seen delta
-    // is only NEEDED at the NEXT wave's discovery phase (its unseen filter),
-    // not at wave end — so the build runs as a future that overlaps the next
-    // wave's selection + fetch stages (which never read the seen state), and
-    // resolves right before the next unseen construction. Holds
-    // (wave, future of (n, driverDelta, tableDelta), unseen cache to release,
-    // metrics-delta constructor awaiting n).
-    var pendingBloom: Option[(Int, scala.concurrent.Future[(Long, PartitionedBloom, Dataset[BloomShard])],
-        DataFrame, Long => DataFrame)] = None
-
-    // shared post-bloom bookkeeping: merge the wave's filter delta, account
-    // its discoveries, then (possibly) compact — the compaction check sits
-    // here so the deferred path still compacts within one wave of the
-    // threshold (bounded slack, documented on frontierDeltaMaxRows).
-    // `committedWave` is the wave whose delta is being applied — NOT the
-    // loop's current `wave` var: the deferred path resolves after the loop
-    // advanced, and the compaction watermark must be derived from the wave
-    // the discoveries were stamped against (committedWave + 1), or the
-    // in-flight wave's discoveries are excluded from the seen accumulator
-    // forever (never folded into seenBase → re-fetch on rediscovery).
-    def applyBloom(committedWave: Int, n: Long, drvDelta: PartitionedBloom,
-        tblDelta: Dataset[BloomShard]): Unit = {
-      if (bloomBroadcast) {
-        if (n > 0L) bloomDriver.mergeInPlace(drvDelta)
-      } else {
-        bloomTable.unpersist()
-        bloomTable = tblDelta
-        seenTotal += n
-      }
-      deltaRowsBound += n
-      seenAccRows += n
-      pendingKnown = pendingKnown.map(_ + n)
-      maybeCompact(committedWave)
-    }
-
-    def resolveBloom(): Unit = pendingBloom.foreach { case (w, fut, unseenCache, mkMetrics) =>
-      val (n, drv, tbl) = phase("bloom-resolve", w) { Await.result(fut, Duration.Inf) }
-      metricsDeltas += mkMetrics(n)
-      unseenCache.unpersist()
-      pendingBloom = None
-      applyBloom(w, n, drv, tbl)
-    }
-
-    // -- compaction: fold deltas into new base tables — the ONLY O(frontier)
-    // shuffle in the engine, amortized over the waves between compactions.
-    // Done rows move to the append-only doneDeltas views (they are never
-    // re-materialized again).
+    // -- compaction: fold deltas into new base rows and the discoveries into
+    // the seen rows (re-placed by key) — the ONLY O(frontier) work in the
+    // engine, amortized over the waves between compactions.
+    // Done rows move to the append-only doneRdds (never rewritten again).
     def maybeCompact(committedWave: Int): Unit = if (deltaRowsBound > cfg.frontierDeltaMaxRows) {
       phase("compaction", committedWave) {
-        val dk = deltaState.select(col("urlHash"))
-        val newBasePending = antiKeys(basePending, dk, "urlHash", deltaRowsBound)
-          .select(basePending.columns.map(col): _*)
-          .unionByName(deltaState.filter(col("status") === FrontierStatus.Pending))
-          .repartition(P, col("urlHash"))
-        val newSeenBase = seenAcc match {
-          case Some(acc) => seenBase.unionByName(acc).repartition(P, col("url_hash"))
-          case None      => null
-        }
-        val bpF = Future { newBasePending.localCheckpoint(true) }
+        val pendingDelta = deltaRdd.filter(_.getUTF8String(StatusAt) == PendingUtf8)
+        val bpF = Future { hold(sc.union(liveBase, pendingDelta).coalesce(P), eager = true) }
         val sbF =
-          if (newSeenBase == null) Future.successful(seenBase)
-          else Future { newSeenBase.localCheckpoint(true) }
+          if (newSinceCompaction == 0L) Future.successful(seenRdd)
+          else Future { hold(partitioned(sc.union(seenRdd, newKeys), 0), eager = true) }
         val bp2 = Await.result(bpF, Duration.Inf)
         val sb2 = Await.result(sbF, Duration.Inf)
-        doneDeltas += deltaState.filter(col("status") =!= FrontierStatus.Pending)
+        // the folded deltaRdd stays held: the done rows are a view over it
+        doneRdds += deltaRdd.filter(_.getUTF8String(StatusAt) != PendingUtf8)
         store.foreach { st =>
           st.commitFrontierBase(committedWave,
-            bp2.unionByName(union(spark, doneDeltas.toSeq, FrontierDdl)))
+            GraftRows.scan(spark, bp2 +: doneRdds.toSeq, FrontierSchema))
         }
-        basePending.unpersist(); basePending = bp2
-        if (!(sb2 eq seenBase)) { seenBase.unpersist(); seenBase = sb2 }
-        deltaState = union(spark, Nil, FrontierDdl)
+        drop(baseRdd); baseRdd = bp2
+        if (!(sb2 eq seenRdd)) { drop(seenRdd); seenRdd = sb2 }
+        deltaRdd = sc.emptyRDD[InternalRow]
         // watermark = the wave the folded deltas were committed against:
         // wave w's discoveries are stamped discoveredWave = w + 1 and ARE
-        // folded above (seenAcc was evaluated with the old watermark), so
-        // anything stamped > committedWave + 1 is exactly the not-yet-folded
-        // set. Using the loop's `wave` here is wrong in the deferred path
-        // (it has already advanced) — regression-tested in CrawlDepth2Spec.
-        seenAccRows = 0L; seenSinceWave = committedWave + 1
-        fetchedSinceCompaction = 0L
+        // folded above, so anything stamped > committedWave + 1 is exactly
+        // the not-yet-folded set (regression-tested in CrawlDepth2Spec)
+        watermark = committedWave + 1
+        batchKeys = Array.emptyLongArray
+        newSinceCompaction = 0L
         deltaRowsBound = 0L
       }
     }
 
-    while (!done && wave < cfg.maxWaves && {
-      // the arithmetic count lags by the DEFERRED discovery count (memory
-      // mode hands the bloom/seen build to the next wave) — an apparent
-      // zero must resolve the pending wave first to fold its discoveries in
-      if (pendingKnown.exists(_ <= 0L)) resolveBloom()
-      !pendingKnown.exists(_ <= 0L)
-    }) {
-      // live pending view: untouched base rows + touched keys' latest state.
-      // The base side is a SCAN (its partitioning/caching is stable); the
-      // only keys that move are the batch keys selected since compaction —
-      // the sole base rows a delta can supersede — which are budget-bounded
-      // and usually a small fraction of deltaState (discoveries live only in
-      // the delta union below, they never need an anti-join).
-      val basePart =
-        if (fetchedSinceCompaction == 0L) basePending
-        else antiKeys(basePending, batchKeysSinceCompaction, "urlHash",
-          fetchedSinceCompaction)
-      val pending = basePart
-        .unionByName(deltaState)
+    while (!done && wave < cfg.maxWaves && !pendingKnown.exists(_ <= 0L)) {
+      // live pending rows: untouched base rows + touched keys' latest state,
+      // as ONE scan. The base rows lose the batch keys selected since
+      // compaction — the sole base rows a delta can supersede (discoveries
+      // live only in the delta). The plan is the same in every wave.
+      val pending = GraftRows.scan(spark, Seq(liveBase, deltaRdd), FrontierSchema)
         .filter(col("status") === FrontierStatus.Pending &&
           col("retries") <= cfg.maxRetries)
       val ruled = Robots.withRules(pending, rulesDF, rulesBroadcastable)
@@ -547,46 +502,52 @@ object WaveRunner {
       // tail — so the round-robin stays unconditional.
       val batch = selected.repartition(P * 3)
 
-      // wave id travels in the closure, not as a lit() column: an inlined
-      // literal changes the generated code every wave and forces a full
-      // Janino recompile of the largest plan in the loop
+      // the fetch maps the batch rows (url, urlHash, host, depth, priority,
+      // retries, discoveredWave, discoveredRank, parentUrl, host_rank) to
+      // fetch-log rows; the wave id travels in the closure
       val waveNow = wave
-      val fetched = batch.as[Selected].mapPartitions { it =>
-        it.map { e =>
-          val t0  = System.nanoTime()
-          val doc = fetcher(e.url)
-          WaveFetch(e.url, e.urlHash, e.host, e.depth, e.priority, e.retries,
-            e.discoveredWave, e.discoveredRank, e.parentUrl, e.host_rank,
-            ok = doc.isDefined, spans = doc.map(_.spans).getOrElse(Array.empty[Span]),
-            fetchMs = (System.nanoTime() - t0) / 1000000L, wave = waveNow)
-        }
-      }.toDF()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val fetchedRdd = hold(GraftRows.rows(batch).mapPartitions(asRows(FetchSchema) { e =>
+        val t0  = System.nanoTime()
+        val doc = fetcher(e.getUTF8String(0).toString)
+        val fetchMs = (System.nanoTime() - t0) / 1000000L
+        val spans = doc.fold(Array.empty[Any])(_.spans.map { s =>
+          new GenericInternalRow(Array[Any](UTF8String.fromString(s.kind),
+            UTF8String.fromString(s.text), UTF8String.fromString(s.media_ref), s.offset,
+            UTF8String.fromString(s.cls))): Any })
+        Array[Any](e.getUTF8String(0), e.getLong(1), e.getUTF8String(2), e.getInt(3),
+          e.getDouble(4), e.getInt(5), e.getInt(6), e.getLong(7), e.getUTF8String(8),
+          e.getLong(9), doc.isDefined, new GenericArrayData(spans), fetchMs, waveNow)
+      }), eager = false)
 
-      // one materializing action per wave decides termination, warms the
-      // cache every downstream consumer reuses, AND counts the pages that may
-      // still link within maxDepth (keep driver barriers minimal: each extra
-      // .count/.isEmpty is a full job the wave loop serializes on)
-      val isParent = col("ok") && col("depth") < cfg.maxDepth
-      val (batchCount, parentCount) = phase("select+fetch", wave) {
-        val r = fetched.agg(count(lit(1)), count(when(isParent, lit(1)))).first()
-        (r.getLong(0), r.getLong(1))
+      // one job per wave over the fetched rows (a plain RDD job: no plan to
+      // compile) stores them, decides termination, counts the pages that may
+      // still link within maxDepth, and brings the batch keys to the driver
+      val maxDepth = cfg.maxDepth
+      val parts = phase("select+fetch", wave) {
+        sc.runJob(fetchedRdd, (it: Iterator[InternalRow]) => {
+          var parents = 0L
+          val keys = Array.newBuilder[Long]
+          it.foreach { r =>
+            if (r.getBoolean(FetchOkAt) && r.getInt(DepthAt) < maxDepth) parents += 1
+            keys += r.getLong(UrlHashAt)
+          }
+          (parents, keys.result())
+        })
       }
+      val waveKeys = parts.flatMap(_._2).sorted
+      val batchCount = waveKeys.length.toLong
+      val parentCount = parts.map(_._1).sum
       totalFetches += batchCount
       if (batchCount == 0L) {
-        fetched.unpersist()
+        drop(fetchedRdd)
         done = true
       } else {
-        // The PREVIOUS wave's deferred bloom/seen delta resolves here first —
-        // the first point in the wave that may READ the seen state, which is
-        // what let its build overlap this wave's whole selection + fetch. A
-        // leaf wave resolves it too: its compaction below must see it applied.
-        resolveBloom()
-
+        val fetched = GraftRows.scan(spark, Seq(fetchedRdd), FetchSchema)
         // -- link discovery → canonical candidates → URL-seen (G2-G4), only
         // when some fetched page may still link within maxDepth. A leaf wave
         // (no such page) discovers nothing, so it builds none of this.
-        val unseen: Option[DataFrame] = if (parentCount == 0L) None else Some {
+        val isParent = col("ok") && col("depth") < cfg.maxDepth
+        val newRows: Option[RDD[InternalRow]] = if (parentCount == 0L) None else Some {
           // Two projections on purpose: the first materializes the sorted
           // spans and first-heading offset per ROW; referencing those as
           // attributes in the second keeps link extraction O(spans), not
@@ -608,245 +569,218 @@ object WaveRunner {
             .select(col("parent_url"), col("parent_depth"), col("parent_rank"),
               col("discoveredWave"),
               col("lnk.url").as("raw_url"), col("lnk.rank").as("link_rank"))
+          // every candidate as a pending frontier row
           val candidates = links
             .withColumn("depth", col("parent_depth") + 1)
             .withColumn("url", Urls.canonicalizeUdf(col("raw_url"), col("parent_url")))
             .withColumn("host", Urls.hostOfUdf(col("url")))
-            .withColumn("url_hash", xxhash64(col("url")))
-            // first-discovery ordering encodes (parent_rank, link_rank) into one
-            // long: rank = parent*RankBase + link. The guard fails LOUDLY on a
-            // page with ≥ RankBase links (silent collision would corrupt the
-            // first-discovery-wins ordering the exactness oracle checks); depth
-            // overflow (RankBase^depth past ~3 with large seed ranks) throws in
-            // Spark 4 ANSI arithmetic rather than wrapping.
-            .withColumn("discoveredRank",
-              when(col("link_rank") < RankBase,
-                col("parent_rank") * RankBase + col("link_rank"))
-                .otherwise(raise_error(concat(
-                  lit(s"page has >= $RankBase link spans (url="), col("parent_url"),
-                  lit("); discoveredRank encoding cannot order them")))))
             // whitelist as a broadcast SEMI JOIN, not an isInCollection literal:
             // a large host list inlined into codegen recompiles every wave (and
             // a real crawl's whitelist is millions of hosts — join-shaped)
             .join(broadcast(whitelistDF), Seq("host"), "left_semi")
-            // first discovery wins when several pages link the same URL this
-            // wave (every parent of a wave carries the same discoveredWave)
-            .groupBy(col("url_hash"))
-            .agg(min(struct(col("discoveredRank"), col("url"), col("host"),
-              col("depth"), col("parent_url"), col("discoveredWave"))).as("c"))
-            .select(col("url_hash"), col("c.*"))
-
-          // URL-seen: shard-local Bloom fast path + exact anti-join. The exact
-          // rescue never rewrites the seen set: it anti-joins the stable
-          // seenBase (partitioning reused) and broadcast-anti-joins the
-          // bounded accumulator of post-compaction discoveries.
-          val seenAccBcast = seenAccRows <= cfg.deltaBroadcastMaxRows
-          (if (bloomBroadcast)
-            UrlSeen.filterUnseen(candidates, seenBase, seenAcc, bloomDriver,
-              seenAccBcast)
-          else
-            UrlSeen.filterUnseenSharded(candidates, seenBase, seenAcc,
-              bloomTable, cfg.bloomShards, seenAccBcast))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .select(
+              col("url"),
+              xxhash64(col("url")).as("urlHash"),
+              col("host"),
+              col("depth"),
+              WaveSelector.priority(col("depth"), lit(true),
+                WaveSelector.profileShaped(col("url"))).as("priority"),
+              lit(FrontierStatus.Pending).as("status"),
+              lit(0).as("retries"),
+              col("discoveredWave"),
+              // first-discovery ordering encodes (parent_rank, link_rank) into
+              // one long: rank = parent*RankBase + link. The guard fails LOUDLY
+              // on a page with ≥ RankBase links (silent collision would corrupt
+              // the first-discovery-wins ordering the exactness oracle checks);
+              // depth overflow (RankBase^depth past ~3 with large seed ranks)
+              // throws in Spark 4 ANSI arithmetic rather than wrapping.
+              when(col("link_rank") < RankBase,
+                col("parent_rank") * RankBase + col("link_rank"))
+                .otherwise(raise_error(concat(
+                  lit(s"page has >= $RankBase link spans (url="), col("parent_url"),
+                  lit("); discoveredRank encoding cannot order them"))))
+                .as("discoveredRank"),
+              col("parent_url").as("parentUrl"))
+          // first discovery wins when several pages link the same URL this
+          // wave (every parent of a wave carries the same discoveredWave); the
+          // keys land where seenRdd holds theirs
+          val firsts = GraftRows.rows(candidates).map(r => (r.getLong(UrlHashAt), r.copy()))
+            .reduceByKey(byKey, firstDiscovery _)
+          // URL-seen: Bloom fast path + exact check. The exact rescue never
+          // rewrites the seen set: it reads seenRdd's partition of each
+          // Bloom-positive key, and the discoveries since compaction. The
+          // broadcast regime probes a copy: the driver filter takes this
+          // wave's keys while the copy is in use.
+          val flagged =
+            if (bloomBroadcast) UrlSeen.flag(firsts, bloomDriver.copy())
+            else UrlSeen.flagSharded(firsts, bloomTable, cfg.bloomShards)
+          hold(UrlSeen.exact(flagged, seenRdd, newKeys.map(_.getLong(0)), byKey), eager = false)
         }
-        // buildBloom only READS state vars and returns the wave's update
-        // (count, driver-regime delta, sharded-regime table); the caller
-        // applies it after the future joins (Await is the memory barrier)
-        val bloomTableNow  = bloomTable
-        val seenTotalNow   = seenTotal
-        def buildBloom(delta: DataFrame): (Long, PartitionedBloom, Dataset[BloomShard]) =
-          if (bloomBroadcast) {
-            val (f, n) = PartitionedBloom.buildWithCount(delta.select(col("url_hash")),
-              cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
-            (n, f, null)
-          } else {
-            val bloomDelta = BloomTable.fromHashes(delta.select(col("url_hash")),
-              cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
-            val nb = BloomTable.merge(bloomTableNow, bloomDelta)
-              .localCheckpoint(false) // lazy: materialized by the totalKeys action
-            (BloomTable.totalKeys(nb) - seenTotalNow, null, nb)
-          }
-
-        val newEntries = unseen.map(_.select(
-          col("url"),
-          col("url_hash").as("urlHash"),
-          col("host"),
-          col("depth"),
-          WaveSelector.priority(col("depth"), lit(true),
-            WaveSelector.profileShaped(col("url"))).as("priority"),
-          lit(FrontierStatus.Pending).as("status"),
-          lit(0).as("retries"),
-          col("discoveredWave"),
-          col("discoveredRank"),
-          col("parent_url").as("parentUrl")))
+        // the job that puts the new keys into the filter also stores them
+        val n = newRows.fold(0L) { rows => phase("discover+seen", wave) { addToBloom(rows) } }
 
         // -- state transition (G8): selected rows leave pending (errors
         // retry); the wave's DELTA is just their new statuses + discoveries —
-        // O(batch), never O(frontier). No anti-join, union, repartition, or
-        // checkpoint ever touches the full frontier here.
-        val finished = fetched
-          .select(col("url"), col("urlHash"), col("host"), col("depth"), col("priority"),
-            when(col("ok"), FrontierStatus.Fetched)
-              .when(col("retries") + 1 <= cfg.maxRetries, FrontierStatus.Pending)
-              .otherwise(FrontierStatus.Error).as("status"),
-            when(col("ok"), col("retries")).otherwise(col("retries") + 1).as("retries"),
-            col("discoveredWave"), col("discoveredRank"), col("parentUrl"))
-        val waveDelta = newEntries.fold(finished)(finished.unionByName(_))
-
-        val docsDelta = fetched.filter(col("ok"))
-          .select(col("url"), col("urlHash"), col("host"), col("depth"), col("wave"), col("spans"))
-        val orderDelta = fetched.select(col("wave"), col("host"), col("host_rank"), col("url"))
-        def mkMetricsDelta(unseenCount: Long) =
-          fetched.groupBy(col("wave"), col("host")).agg(
-            sum(when(col("ok"), 1L).otherwise(0L)).as("fetched"),
-            sum(when(col("ok"), 0L).otherwise(1L)).as("errors"),
-            sum(col("fetchMs")).as("fetchMsTotal"))
-            .withColumn("urlsEnqueued", lit(unseenCount))
-
-        // deltaState' = deltaState ⧹ batchKeys ∪ waveDelta. Only the BATCH
-        // keys need the anti-join (newEntries are unseen, so they cannot
-        // already be in deltaState), and an empty deltaState skips the join —
-        // and its key shipping — entirely (every first wave after a
-        // compaction, including discovery-heavy wave 0).
-        def nextDeltaState(delta: DataFrame, batchKeys: DataFrame): DataFrame =
-          if (deltaRowsBound == 0L) delta
-          else antiKeys(deltaState, batchKeys, "urlHash", batchCount)
-            .select(deltaState.columns.map(col): _*)
-            .unionByName(delta)
-
-        // -- commit (G10): snapshot store (resumable) or localCheckpoint.
-        // Either way the committed object is the wave DELTA.
-        store match {
-          case Some(st) =>
-            // snapshot mode stays fully synchronous: a committed wave's
-            // marker must imply its seen/bloom state is durable+applied
-            // before the next wave starts (the resume contract)
-            val update = unseen.map(u => phase("discover+seen", wave) { buildBloom(u) })
-            val metricsDelta = mkMetricsDelta(update.fold(0L)(_._1))
-            val seenDelta = unseen.fold(union(spark, Nil, "url_hash long, url string"))(
-              _.select(col("url_hash"), col("url")))
-            st.commitWave(wave, waveDelta, seenDelta, docsDelta, orderDelta, metricsDelta)
-            val waveDeltaDisk = st.readDelta(wave, "frontier_delta")
-            // batch keys = the finished rows of the committed delta (new
-            // entries are pending with no retries) — the predicate of
-            // batchKeysSinceCompaction, not a wave literal, so the plan is the
-            // same every wave; disk-backed so no per-wave cache is pinned
-            val batchKeysDisk = waveDeltaDisk
-              .filter(col("status") =!= FrontierStatus.Pending || col("retries") > 0)
-              .select(col("urlHash"))
-            deltaState = phase("delta-ckpt", wave) {
-              nextDeltaState(waveDeltaDisk, batchKeysDisk).localCheckpoint(true)
-            }
-            docsDeltas += st.readDelta(wave, "docs_delta")
-            orderDeltas += st.readDelta(wave, "order_delta")
-            metricsDeltas += st.readDelta(wave, "metrics_delta")
-            unseen.foreach(_.unpersist()); fetched.unpersist()
-            deltaRowsBound += batchCount
-            fetchedSinceCompaction += batchCount
-            pendingKnown = pendingKnown.map(_ - batchCount)
-            update match {
-              case Some((n, drv, tbl)) => applyBloom(wave, n, drv, tbl)
-              case None                => maybeCompact(wave)
-            }
-          case None =>
-            // memory mode: deltas stay as views over the persisted `fetched`/
-            // `unseen` caches, which live as long as the result does — no
-            // per-wave re-materialization of the span data. The deltaState
-            // checkpoint (O(touched keys), bounded by compaction) is awaited
-            // HERE — the next wave's pending view needs it — but the bloom
-            // build future is handed to `pendingBloom` un-awaited: nothing
-            // before the next wave's unseen filter reads the seen state, so
-            // the bloom jobs overlap that wave's whole selection + fetch
-            // (both futures first-compute the shared `unseen` cache, which
-            // the block manager serializes per-partition, so they cooperate
-            // rather than duplicate).
-            val bf = unseen.map(u => (u, Future { buildBloom(u) }))
-            val ds2 = phase("delta-ckpt", wave) {
-              Await.result(Future {
-                nextDeltaState(waveDelta, fetched.select(col("urlHash")))
-                  .localCheckpoint(true)
-              }, Duration.Inf)
-            }
-            deltaState = ds2
-            docsDeltas += docsDelta
-            orderDeltas += orderDelta
-            cached += fetched
-            deltaRowsBound += batchCount
-            fetchedSinceCompaction += batchCount
-            pendingKnown = pendingKnown.map(_ - batchCount)
-            bf match {
-              case Some((u, f)) => pendingBloom = Some((wave, f, u, mkMetricsDelta _))
-              case None =>
-                metricsDeltas += mkMetricsDelta(0L)
-                maybeCompact(wave)
-            }
+        // O(batch), never O(frontier). deltaState' = deltaState ⧹ batchKeys ∪
+        // waveDelta; only the BATCH keys need removing (discoveries are
+        // unseen, so they cannot already be in deltaState).
+        val maxRetries = cfg.maxRetries
+        val finished = fetchedRdd.mapPartitions(asRows(FrontierSchema) { r =>
+          val ok = r.getBoolean(FetchOkAt)
+          val retries = r.getInt(FetchRetriesAt)
+          val status =
+            if (ok) FetchedUtf8
+            else if (retries + 1 <= maxRetries) PendingUtf8
+            else ErrorUtf8
+          Array[Any](r.getUTF8String(0), r.getLong(1), r.getUTF8String(2), r.getInt(3),
+            r.getDouble(4), status, if (ok) retries else retries + 1, r.getInt(6),
+            r.getLong(7), r.getUTF8String(8))
+        })
+        val waveDelta = finished +: newRows.toSeq
+        // -- commit (G10): snapshot mode writes the wave's deltas durably
+        // before the state moves on (a committed wave's marker implies its
+        // seen/bloom state is durable+applied: the resume contract)
+        store.foreach { st =>
+          st.commitWave(wave, GraftRows.scan(spark, waveDelta, FrontierSchema),
+            GraftRows.scan(spark, newRows.toSeq, FrontierSchema)
+              .select(col("urlHash").as("url_hash"), col("url")),
+            docsOf(fetched), orderOf(fetched), fetchMetricsOf(fetched))
         }
+        val nextDelta = phase("delta-ckpt", wave) {
+          hold(sc.union(withoutKeys(deltaRdd, waveKeys) +: waveDelta).coalesce(P), eager = true)
+        }
+        drop(deltaRdd); deltaRdd = nextDelta
+        newRows.foreach(drop)
+        if (store.isDefined) drop(fetchedRdd) else fetchedRdds += fetchedRdd
+        deltaRowsBound += batchCount + n
+        newSinceCompaction += n
+        batchKeys = (batchKeys ++ waveKeys).sorted
+        pendingKnown = pendingKnown.map(_ - batchCount + n)
+        maybeCompact(wave)
         wave += 1
       }
     }
-    // a deferred final-wave bloom (loop exited on empty batch, drained
-    // frontier, or maxWaves) resolves before the result is assembled: it
-    // appends the wave's metrics delta and applies the last seen update
-    resolveBloom()
 
-    val docs = union(spark, docsDeltas.result(),
-      "url string, urlHash long, host string, depth int, wave int, " +
-        "spans array<struct<kind:string,text:string,media_ref:string,offset:int,cls:string>>")
-    val orderRaw = union(spark, orderDeltas.result(),
-      "wave int, host string, host_rank long, url string")
-    val metrics = union(spark, metricsDeltas.result(),
-      "wave int, host string, fetched long, errors long, fetchMsTotal long, urlsEnqueued long")
-    // Global crawl sequence, fully distributed and with NO unpartitioned
-    // window (which would funnel every fetched URL ever through ONE task):
-    // within (wave, host) the rows are already densely ranked by host_rank,
-    // so seq = group offset + host_rank. Group offsets come from the
-    // per-(wave,host) metrics — already aggregated, O(hosts×waves) rows,
-    // never O(URLs) — as an intra-wave prefix sum (window partitioned by
-    // wave; host order is Spark's own UTF8 binary sort, correct for any
-    // host) plus cross-wave offsets from a tiny O(waves²) non-equi
-    // self-join. Nothing is collected to the driver.
-    def order(): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      val counts = metrics.select(col("wave"), col("host"),
-        (col("fetched") + col("errors")).as("__n"))
-      val wIntra = Window.partitionBy(col("wave")).orderBy(col("host"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val intra = counts.withColumn("__intra",
-        coalesce(sum(col("__n")).over(wIntra), lit(0L)))
-      val waveTotals = counts.groupBy(col("wave")).agg(sum(col("__n")).as("__wn"))
-      val waveOff = waveTotals.as("a")
-        .join(waveTotals.as("b"), col("b.wave") < col("a.wave"), "left")
-        .groupBy(col("a.wave").as("wave"))
-        .agg(coalesce(sum(col("b.__wn")), lit(0L)).as("__woff"))
-      val offsets = intra.join(waveOff, Seq("wave"))
-        .select(col("wave"), col("host"), (col("__woff") + col("__intra")).as("__offset"))
-      orderRaw.join(offsets, Seq("wave", "host"))
-        .withColumn("seq", col("__offset") + col("host_rank"))
-        .select(col("seq"), col("wave"), col("host"), col("host_rank"), col("url"))
+    // the fetch log: memory mode scans the fetched rows of every wave as ONE
+    // relation; snapshot mode reads every committed wave's files in one scan
+    val allWaves = committedWaves ++ (startWave until wave)
+    val (docs, orderRaw, fetchAgg) = store match {
+      case Some(st) if allWaves.nonEmpty => (st.readDeltas(allWaves, "docs_delta"),
+        st.readDeltas(allWaves, "order_delta"), st.readDeltas(allWaves, "metrics_delta"))
+      case _ =>
+        val log = GraftRows.scan(spark, fetchedRdds.toSeq, FetchSchema)
+        (docsOf(log), orderOf(log), fetchMetricsOf(log))
     }
-    if (!bloomBroadcast) cached += bloomTable.toDF() // released with the result
-    val deltaKeysF = deltaState.select(col("urlHash"))
-    val frontierFinal = antiKeys(basePending, deltaKeysF, "urlHash", deltaRowsBound)
-      .select(basePending.columns.map(col): _*)
-      .unionByName(deltaState)
-      .unionByName(union(spark, doneDeltas.toSeq, FrontierDdl))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seenFinal = (seenAcc match {
-      case Some(acc) => seenBase.unionByName(acc)
-      case None      => seenBase
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    cached += basePending; cached += seenBase
-    CrawlResult(frontierFinal, seenFinal, docs, () => order(), metrics, wave,
-      totalFetches, cached.result())
+    if (!bloomBroadcast) held ++= bloomTable.queryExecution.logical.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd } // released with the result
+    val frontierFinal =
+      GraftRows.scan(spark, Seq(liveBase, deltaRdd) ++ doneRdds, FrontierSchema)
+    val seenFinal = GraftRows.scan(spark, Seq(seenRdd, newKeys), SeenSchema)
+    // urlsEnqueued from the frontier: wave w's discoveries are stamped
+    // discoveredWave = w + 1 (seeds are 0)
+    val enqueued = frontierFinal.filter(col("discoveredWave") > 0)
+      .groupBy((col("discoveredWave") - 1).as("wave"))
+      .agg(count(lit(1)).as("urlsEnqueued"))
+    val metrics = fetchAgg.join(enqueued, Seq("wave"), "left")
+      .select(col("wave"), col("host"), col("fetched"), col("errors"), col("fetchMsTotal"),
+        coalesce(col("urlsEnqueued"), lit(0L)).as("urlsEnqueued"))
+    CrawlResult(frontierFinal, seenFinal, docs, () => order(spark, orderRaw), metrics, wave,
+      totalFetches, held.toSeq)
+  }
+
+  // every frontier row set has this schema, nullability included: the
+  // generated code of a plan depends on its input's nullability, so a
+  // non-null seed table would give wave 0 and the waves after a compaction
+  // different classes
+  private val FrontierSchema = StructType.fromDDL(FrontierDdl)
+  private val FrontierCols = FrontierSchema.fieldNames.toSeq
+  private val SeenSchema = StructType.fromDDL("url_hash long, url string")
+  private val FetchSchema = StructType.fromDDL(
+    "url string, urlHash long, host string, depth int, priority double, retries int, " +
+      "discoveredWave int, discoveredRank long, parentUrl string, host_rank long, ok boolean, " +
+      "spans array<struct<kind:string,text:string,media_ref:string,offset:int,cls:string>>, " +
+      "fetchMs long, wave int")
+  // field positions the row-level bookkeeping reads (frontier and fetch rows
+  // share the first five fields)
+  private val UrlAt = 0
+  private val UrlHashAt = 1
+  private val HostAt = 2
+  private val DepthAt = 3
+  private val DiscoveredRankAt = FrontierSchema.fieldIndex("discoveredRank")
+  private val ParentUrlAt = FrontierSchema.fieldIndex("parentUrl")
+  private val StatusAt = FrontierSchema.fieldIndex("status")
+  private val DiscoveredWaveAt = FrontierSchema.fieldIndex("discoveredWave")
+  private val FetchRetriesAt = FetchSchema.fieldIndex("retries")
+  private val FetchOkAt = FetchSchema.fieldIndex("ok")
+  private val PendingUtf8 = UTF8String.fromString(FrontierStatus.Pending)
+  private val FetchedUtf8 = UTF8String.fromString(FrontierStatus.Fetched)
+  private val ErrorUtf8 = UTF8String.fromString(FrontierStatus.Error)
+
+  /** Per partition: `fields` of each input row as a compact row of `schema`
+    * (a copy that holds nothing of the input row).
+    */
+  private def asRows(schema: StructType)(fields: InternalRow => Array[Any])
+      : Iterator[InternalRow] => Iterator[InternalRow] = { it =>
+    val toUnsafe = UnsafeProjection.create(schema)
+    it.map(r => toUnsafe(new GenericInternalRow(fields(r))).copy())
+  }
+
+  /** Frontier rows whose `urlHash` is not among `sortedKeys`. */
+  private def withoutKeys(rows: RDD[InternalRow], sortedKeys: Array[Long]): RDD[InternalRow] =
+    if (sortedKeys.isEmpty) rows
+    else {
+      val keys = rows.sparkContext.broadcast(sortedKeys)
+      rows.filter(r => java.util.Arrays.binarySearch(keys.value, r.getLong(UrlHashAt)) < 0)
+    }
+
+  private def docsOf(fetched: DataFrame): DataFrame = fetched.filter(col("ok"))
+    .select(col("url"), col("urlHash"), col("host"), col("depth"), col("wave"), col("spans"))
+
+  private def orderOf(fetched: DataFrame): DataFrame =
+    fetched.select(col("wave"), col("host"), col("host_rank"), col("url"))
+
+  private def fetchMetricsOf(fetched: DataFrame): DataFrame =
+    fetched.groupBy(col("wave"), col("host")).agg(
+      sum(when(col("ok"), 1L).otherwise(0L)).as("fetched"),
+      sum(when(col("ok"), 0L).otherwise(1L)).as("errors"),
+      sum(col("fetchMs")).as("fetchMsTotal"))
+
+  /** Global crawl sequence (seq, wave, host, host_rank, url): the fetch log
+    * sorted by (wave, host, host_rank) — host order is Spark's own UTF8
+    * binary order — and numbered from 0. A range-partitioned sort and
+    * `zipWithIndex` over the rows: fully distributed, with nothing collected
+    * to the driver and no unpartitioned window, and no plan to compile
+    * beyond the scan of the log.
+    */
+  private def order(spark: SparkSession, orderRaw: DataFrame): DataFrame = {
+    implicit val byKey: Ordering[(Int, UTF8String, Long)] = Ordering.Tuple3(
+      Ordering.Int, (a: UTF8String, b: UTF8String) => a.compareTo(b), Ordering.Long)
+    val rows = GraftRows.rows(orderRaw.select(col("wave"), col("host"), col("host_rank"),
+      col("url"))).map(_.copy())
+    val numbered = rows.sortBy(r => (r.getInt(0), r.getUTF8String(1), r.getLong(2)))
+      .zipWithIndex().map { case (r, seq) =>
+        new GenericInternalRow(Array[Any](seq, r.getInt(0), r.getUTF8String(1),
+          r.getLong(2), r.getUTF8String(3))): InternalRow
+      }
+    GraftRows.scan(spark, Seq(numbered),
+      StructType.fromDDL("seq long, wave int, host string, host_rank long, url string"))
   }
 
   private def shufflePartitions(spark: SparkSession): Int =
     spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
-  private def union(spark: SparkSession, dfs: Seq[DataFrame], emptySchema: String): DataFrame =
-    if (dfs.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(emptySchema))
-    else dfs.reduce(_ unionByName _)
+  /** The first discovery of a key: the least (discoveredRank, url, host,
+    * depth, parentUrl, discoveredWave) of two frontier rows.
+    */
+  private def firstDiscovery(a: InternalRow, b: InternalRow): InternalRow = {
+    val byField = Iterator(
+      java.lang.Long.compare(a.getLong(DiscoveredRankAt), b.getLong(DiscoveredRankAt)),
+      a.getUTF8String(UrlAt).compareTo(b.getUTF8String(UrlAt)),
+      a.getUTF8String(HostAt).compareTo(b.getUTF8String(HostAt)),
+      Integer.compare(a.getInt(DepthAt), b.getInt(DepthAt)),
+      a.getUTF8String(ParentUrlAt).compareTo(b.getUTF8String(ParentUrlAt)),
+      Integer.compare(a.getInt(DiscoveredWaveAt), b.getInt(DiscoveredWaveAt)))
+    if (byField.find(_ != 0).getOrElse(0) <= 0) a else b
+  }
 
 }

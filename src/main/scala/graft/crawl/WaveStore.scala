@@ -41,6 +41,8 @@ trait WaveStore {
   def readFrontierBase(wave: Int): DataFrame
   /** kind ∈ {frontier_delta, seen_delta, docs_delta, order_delta, metrics_delta}. */
   def readDelta(wave: Int, kind: String): DataFrame
+  /** One delta kind of several (≥ 1) waves as ONE scan. */
+  def readDeltas(waves: Seq[Int], kind: String): DataFrame
 }
 
 /** No-catalog-jar implementation (the sandbox has no Iceberg jar): parquet
@@ -103,6 +105,9 @@ final class ParquetSnapshotStore(spark: SparkSession, dir: String,
 
   override def readDelta(wave: Int, kind: String): DataFrame =
     spark.read.parquet(s"${wdir(wave)}/$kind")
+
+  override def readDeltas(waves: Seq[Int], kind: String): DataFrame =
+    spark.read.parquet(waves.map(w => s"${wdir(w)}/$kind"): _*)
 
   /** Iceberg-style commit manifest: wave id, input snapshot, and per-partition
     * lineage (logical hash partition of the wave's frontier delta → row

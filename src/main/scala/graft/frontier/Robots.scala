@@ -58,15 +58,21 @@ object Robots {
     val perHost = rules.select(col("host"), col("denyPrefixes").as("__deny"),
       col("crawlDelayS").as("__delay"))
     val rulesSide = if (broadcastRules) broadcast(perHost) else perHost.hint("shuffle_hash")
-    val joined = frontier.join(rulesSide, Seq("host"), "left")
-    val path = regexp_replace(col("url"), "^https?://[^/]*", "")
-    joined
+    frontier.join(rulesSide, Seq("host"), "left")
       .withColumn("crawl_delay_s", coalesce(col("__delay"), lit(DefaultCrawlDelayS)))
-      .withColumn("allowed",
-        coalesce(
-          !exists(col("__deny"), p => path.startsWith(p)),
-          lit(true)))
+      .withColumn("allowed", allowedUdf(col("url"), col("__deny")))
       .drop("__deny", "__delay")
+  }
+
+  /** True unless the URL's path starts with a deny prefix. A Scala UDF, not
+    * an `exists` lambda: a higher-order function has no generated code, so
+    * it would take its filter out of the join's whole-stage-codegen stage.
+    */
+  private val allowedUdf = udf { (url: String, deny: Seq[String]) =>
+    url == null || deny == null || {
+      val path = url.replaceFirst("^https?://[^/]*", "")
+      !deny.exists(p => p != null && path.startsWith(p))
+    }
   }
 
   /** Per-host fetch budget for one wave: how many requests a wave of

@@ -1,11 +1,13 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftRows}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.util.sketch.BloomFilter
 
-/** URL-seen set: partitioned Bloom pre-filter + exact anti-join, keyed by
+/** URL-seen set: partitioned Bloom pre-filter + exact check, keyed by
   * canonicalized-URL xxHash64 (SURVEY.md §2.8 G4; BASELINE.json north star).
   * Bloom is the one filter family: the seen set only grows, so a filter
   * that also supports deletion would buy nothing.
@@ -13,8 +15,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * Exactness contract: the Bloom alone has false positives, which would
   * wrongly DROP unseen URLs if trusted. It is therefore only the cheap
   * fast-path: candidates whose shard-Bloom probe is NEGATIVE are definitely
-  * unseen and skip the join; probe-positive candidates (rare: FPP + true
-  * dups) go through the exact `left_anti` join against the seen table. The
+  * unseen and skip the check; probe-positive candidates (rare: FPP + true
+  * dups) are checked exactly against the seen rows ([[UrlSeen.exact]]). The
   * resulting seen set is exactly the reference's (reference dedup grounding:
   * `main.py:187-190` natural-key probes; `scraper.py:43-63` one fetch per
   * discovered URL).
@@ -29,50 +31,63 @@ import org.apache.spark.util.sketch.BloomFilter
   * OOM at 10^10. Above that bound the engine holds the filter as a
   * [[BloomTable]] (`Dataset[BloomShard]`) instead: built, merged, and probed
   * shard-locally on executors, so residency carries to 10^10. Both forms
-  * are built by the same job ([[BloomTable.fromHashes]]) with the same
-  * sizing, so for the same keys their shards hold the same bits.
+  * use the same sizing and sharding, so for the same keys their shards hold
+  * the same bits.
   */
-final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter])
-    extends Serializable {
+final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter],
+    val capacity: Long) extends Serializable {
+  private var keys = 0L
+  /** Keys put so far (duplicates included). */
+  def size: Long = keys
   def shardOf(hash: Long): Int = BloomTable.shardOf(hash, nShards)
   def mightContain(hash: Long): Boolean = shards(shardOf(hash)).mightContainLong(hash)
-  /** Insert one key on the driver (a crawl's seed set, known up front). */
-  def put(hash: Long): Unit = { shards(shardOf(hash)).putLong(hash); () }
-  /** Merge a same-shape delta in place (shards built with identical sizing). */
-  def mergeInPlace(delta: PartitionedBloom): Unit = {
-    require(delta.nShards == nShards, "incompatible bloom sharding")
-    var i = 0
-    while (i < nShards) { shards(i).mergeInPlace(delta.shards(i)); i += 1 }
+  /** Insert one key on the driver. */
+  def put(hash: Long): Unit = { shards(shardOf(hash)).putLong(hash); keys += 1 }
+
+  /** Put `hashes` on the driver, all or none. Throws before the filter
+    * would hold more than `capacity` keys: past its sizing the
+    * false-positive rate climbs, so the crawl must be sized larger or run in
+    * the sharded regime, never go on degraded.
+    */
+  def putAll(hashes: Array[Long]): Unit = {
+    if (keys + hashes.length > capacity)
+      throw new IllegalStateException(s"URL-seen Bloom filter sized for $capacity " +
+        s"keys would hold ${keys + hashes.length}: raise bloomExpected, or lower " +
+        "bloomBroadcastMaxBytes to use the sharded regime")
+    hashes.foreach(put)
+  }
+
+  /** [[putAll]] every `url_hash` of `hashes`, one partition at a time as
+    * its task ends (the driver never holds more than one partition's keys);
+    * returns how many were put.
+    */
+  def putHashes(hashes: DataFrame): Long =
+    putHashes(GraftRows.rows(hashes.select(col("url_hash"))), 0)
+
+  /** [[putHashes]] over rows that hold the hash at field `at`. */
+  def putHashes(rows: RDD[InternalRow], at: Int): Long = {
+    var n = 0L
+    rows.sparkContext.runJob(rows,
+      (it: Iterator[InternalRow]) => it.map(_.getLong(at)).toArray,
+      (_: Int, part: Array[Long]) => { putAll(part); n += part.length })
+    n
+  }
+
+  /** A copy to probe while this filter keeps taking puts. */
+  def copy(): PartitionedBloom = {
+    val c = new PartitionedBloom(nShards, shards.map { s =>
+      BloomTable.deserialize(BloomTable.serialize(s)) }, capacity)
+    c.keys = keys
+    c
   }
 }
 
 object PartitionedBloom {
-  /** Shards sized for `expectedTotal` keys at `fpp` — fixed at crawl start so
-    * per-wave deltas stay merge-compatible.
-    */
+  /** Shards sized for `expectedTotal` keys at `fpp`, fixed at crawl start. */
   def empty(nShards: Int, expectedTotal: Long, fpp: Double): PartitionedBloom = {
     val perShard = BloomTable.perShard(expectedTotal, nShards)
     new PartitionedBloom(nShards,
-      Array.fill(nShards)(BloomFilter.create(perShard, fpp)))
-  }
-
-  /** Build a delta Bloom from a DataFrame of `url_hash: long`: the shard
-    * table of [[BloomTable.fromHashes]] (at most `nShards` small rows) is
-    * collected and OR-ed into an empty filter of the same sizing.
-    */
-  def build(hashes: DataFrame, nShards: Int, expectedTotal: Long, fpp: Double): PartitionedBloom =
-    buildWithCount(hashes, nShards, expectedTotal, fpp)._1
-
-  /** Like [[build]] but also returns the input row count (the shards' `n`
-    * summed, from the same job) — callers needing both (the wave loop) save
-    * a full action.
-    */
-  def buildWithCount(hashes: DataFrame, nShards: Int, expectedTotal: Long,
-      fpp: Double): (PartitionedBloom, Long) = {
-    val pb = empty(nShards, expectedTotal, fpp)
-    val rows = BloomTable.fromHashes(hashes, nShards, expectedTotal, fpp).collect()
-    rows.foreach(s => pb.shards(s.shard).mergeInPlace(BloomTable.deserialize(s.bytes)))
-    (pb, rows.iterator.map(_.n).sum)
+      Array.fill(nShards)(BloomFilter.create(perShard, fpp)), expectedTotal)
   }
 }
 
@@ -105,7 +120,7 @@ object BloomTable {
   private[frontier] def perShard(expectedTotal: Long, nShards: Int): Long =
     math.max(64L, expectedTotal / nShards)
 
-  private def serialize(bf: BloomFilter): Array[Byte] = {
+  private[frontier] def serialize(bf: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
     bos.toByteArray
@@ -150,8 +165,7 @@ object BloomTable {
 
   /** Build shard filters from a DataFrame of `url_hash: long`, fully
     * distributed: each shard is assembled inside its hash-range group and
-    * stays there — nothing is collected here (the broadcast regime's
-    * [[PartitionedBloom.buildWithCount]] collects these ≤ nShards rows).
+    * stays there — nothing is collected here.
     *
     * The RAW HASHES are shuffled to their shard partition BEFORE the
     * aggregate, on purpose: a bare `groupBy(shard).agg(build)` would
@@ -204,102 +218,84 @@ object BloomTable {
 
 object UrlSeen {
 
-  /** Split `candidates` (must carry `url_hash`) into definitely-unseen rows
-    * (Bloom-negative fast path, no join) plus exactly-verified rows
-    * (Bloom-positive, rescued by `left_anti` against `seen`). Returns rows of
-    * `candidates` whose url_hash is NOT in the seen set — exactly.
+  /** A candidate row keyed by its url hash, with its Bloom probe result
+    * (true = maybe seen).
+    */
+  type Flagged = (Long, (InternalRow, Boolean))
+
+  /** Broadcast-regime probe: every candidate against the broadcast filter,
+    * row-locally (no shuffle; the candidates keep their placement).
+    */
+  def flag(candidates: RDD[(Long, InternalRow)], bloom: PartitionedBloom): RDD[Flagged] = {
+    val bc = candidates.sparkContext.broadcast(bloom)
+    candidates.mapPartitions(_.map { case (h, r) => (h, (r, bc.value.mightContain(h))) },
+      preservesPartitioning = true)
+  }
+
+  /** Sharded-regime probe: candidates meet the shard filter of their hash
+    * range in a cogroup — each task deserializes only ITS shards, so
+    * executor residency is O(shards/executor), never O(filter).
+    */
+  def flagSharded(candidates: RDD[(Long, InternalRow)], blooms: Dataset[BloomShard],
+      nShards: Int): RDD[Flagged] = {
+    val shards = GraftRows.rows(blooms.toDF())
+      .map(r => (r.getInt(0), r.getBinary(2)))
+    candidates.map { case (h, r) => (BloomTable.shardOf(h, nShards), (h, r)) }
+      .cogroup(shards)
+      .flatMap { case (_, (cands, bytes)) =>
+        val bf = bytes.map(BloomTable.deserialize).reduceOption { (x, y) => x.mergeInPlace(y); x }
+        cands.iterator.map { case (h, r) => (h, (r, bf.exists(_.mightContainLong(h)))) }
+      }
+  }
+
+  /** The rows of `flagged` whose key is NOT in the seen set — exactly.
+    * Bloom-negative rows are definitely unseen and skip the check; the
+    * Bloom-positive ones (rare: FPP + true duplicates) move to the
+    * partition of `seen` that holds their keys, which is scanned only when
+    * it has any, and are also checked against `recent`.
     *
-    * Broadcast-resident variant: fine while the whole filter fits the driver.
-    * The crawl engine uses it while its configured filter fits
-    * `bloomBroadcastMaxBytes`, and [[filterUnseenSharded]] (whose residency
-    * carries to 10^10) above that bound.
-    *
-    * @param seen DataFrame with `url_hash: long`, hash-partitioned upstream
-    *             so the anti-join's probe side shuffles minimally.
+    * @param seen   seen rows, `url_hash` first, placed by `part`
+    * @param recent more seen keys (the bounded additions not yet in `seen`)
+    */
+  def exact(flagged: RDD[Flagged], seen: RDD[InternalRow], recent: RDD[Long],
+      part: Partitioner): RDD[InternalRow] = {
+    val fast = flagged.flatMap { case (_, (r, maybe)) => if (maybe) None else Some(r) }
+    val maybe = flagged.flatMap { case (h, (r, maybe)) => if (maybe) Some((h, r)) else None }
+      .partitionBy(part)
+    val rescued = maybe.zipPartitions(seen, recent.map(h => (h, ())).partitionBy(part)) {
+      (cands, seenRows, recentKeys) =>
+        if (!cands.hasNext) Iterator.empty
+        else {
+          val byKey = cands.toArray
+          val wanted = scala.collection.mutable.HashSet.empty[Long] ++= byKey.map(_._1)
+          seenRows.foreach(r => wanted -= r.getLong(0))
+          recentKeys.foreach { case (h, _) => wanted -= h }
+          byKey.iterator.collect { case (h, r) if wanted(h) => r }
+        }
+    }
+    fast.union(rescued)
+  }
+
+  /** DataFrame form of the broadcast-regime filter: the rows of
+    * `candidates` (which carry `url_hash`) whose key is not in `seen`.
     */
   def filterUnseen(candidates: DataFrame, seen: DataFrame, bloom: PartitionedBloom): DataFrame =
-    filterUnseen(candidates, seen, None, bloom)
+    viaRows(candidates, seen)(flag(_, bloom))
 
-  /** Delta-aware variant: the seen set is a stable hash-partitioned `seenBase`
-    * (compacted rarely — its side of the anti-join reuses partitioning and is
-    * never rewritten per wave) plus a small `seenAcc` of rows discovered since
-    * the last compaction, anti-joined as a BROADCAST (bounded by the engine's
-    * compaction threshold). Exactness is identical to a single anti-join
-    * against base ∪ acc — the split exists so no per-wave job ever shuffles
-    * or rewrites the cumulative seen set.
-    */
-  def filterUnseen(candidates: DataFrame, seenBase: DataFrame,
-      seenAcc: Option[DataFrame], bloom: PartitionedBloom,
-      accBroadcastable: Boolean = true): DataFrame = {
-    val spark = candidates.sparkSession
-    val bc = spark.sparkContext.broadcast(bloom)
-    val mightContain = udf((h: Long) => bc.value.mightContain(h))
-    val flagged = candidates.withColumn("__maybe_seen", mightContain(col("url_hash")))
-    val fastPath = flagged.filter(!col("__maybe_seen")).drop("__maybe_seen")
-    val needExact = flagged.filter(col("__maybe_seen")).drop("__maybe_seen")
-    val rescued = antiSeen(needExact, seenBase, seenAcc, accBroadcastable)
-    fastPath.unionByName(rescued)
-  }
-
-  private def antiSeen(needExact: DataFrame, seenBase: DataFrame,
-      seenAcc: Option[DataFrame], accBroadcastable: Boolean): DataFrame = {
-    val vsBase = needExact.join(
-      seenBase.select(col("url_hash")).hint("shuffle_hash"),
-      Seq("url_hash"), "left_anti")
-    seenAcc match {
-      case Some(acc) =>
-        // the accumulator broadcasts while bounded-small; above the engine's
-        // threshold it degrades to a shuffled hash join (parallel, no serial
-        // driver collect) — the caller knows the row bound, we don't
-        val accKeys = acc.select(col("url_hash"))
-        val right = if (accBroadcastable) broadcast(accKeys)
-                    else accKeys.hint("shuffle_hash")
-        vsBase.join(right, Seq("url_hash"), "left_anti")
-      case None => vsBase
-    }
-  }
-
-  /** Shard-local variant of [[filterUnseen]]: candidates are co-partitioned
-    * with the [[BloomTable]] shards on `pmod(url_hash, nShards)` and probed
-    * inside the partition (each task deserializes only ITS shards, once per
-    * group — executor residency is O(shards/executor), never O(filter)).
-    * Bloom-negative rows skip the exact anti-join exactly as in the broadcast
-    * variant; the exactness contract is identical.
-    */
+  /** DataFrame form of the sharded-regime filter (see [[filterUnseen]]). */
   def filterUnseenSharded(candidates: DataFrame, seen: DataFrame,
       blooms: Dataset[BloomShard], nShards: Int): DataFrame =
-    filterUnseenSharded(candidates, seen, None, blooms, nShards)
+    viaRows(candidates, seen)(flagSharded(_, blooms, nShards))
 
-  /** Delta-aware sharded variant — see [[filterUnseen]] for the
-    * base+accumulator split rationale.
-    */
-  def filterUnseenSharded(candidates: DataFrame, seenBase: DataFrame,
-      seenAcc: Option[DataFrame], blooms: Dataset[BloomShard], nShards: Int,
-      accBroadcastable: Boolean = true): DataFrame = {
+  private def viaRows(candidates: DataFrame, seen: DataFrame)(
+      probe: RDD[(Long, InternalRow)] => RDD[Flagged]): DataFrame = {
     val spark = candidates.sparkSession
-    import spark.implicits._
-    val withShard = candidates.withColumn("__shard",
-      pmod(col("url_hash"), lit(nShards)).cast("int"))
-    val schema   = withShard.schema
-    val hashIdx  = schema.fieldIndex("url_hash")
-    val shardIdx = schema.fieldIndex("__shard")
-    val outSchema = schema.add("__maybe_seen", BooleanType, nullable = false)
-    val candByShard = withShard.as(Encoders.row(schema))
-      .groupByKey(_.getInt(shardIdx))
-    val bloomByShard = blooms.groupByKey(_.shard)
-    val flagged = candByShard.cogroup(bloomByShard) { (_, cands, shards) =>
-      val bf = shards.map(s => BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(s.bytes)))
-        .reduceOption { (x, y) => x.mergeInPlace(y); x }
-      bf match {
-        case None    => cands.map(r => Row.fromSeq(r.toSeq :+ false))
-        case Some(f) => cands.map(r =>
-          Row.fromSeq(r.toSeq :+ f.mightContainLong(r.getLong(hashIdx))))
-      }
-    }(Encoders.row(outSchema))
-    val fastPath  = flagged.filter(!col("__maybe_seen")).drop("__maybe_seen", "__shard")
-    val needExact = flagged.filter(col("__maybe_seen")).drop("__maybe_seen", "__shard")
-    val rescued = antiSeen(needExact, seenBase, seenAcc, accBroadcastable)
-    fastPath.unionByName(rescued)
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val at = candidates.schema.fieldIndex("url_hash")
+    val cands = GraftRows.rows(candidates).map(r => (r.getLong(at), r.copy()))
+    val seenRows = GraftRows.rows(seen.select(col("url_hash"))).map(r => (r.getLong(0), r.copy()))
+      .partitionBy(part).values
+    GraftRows.scan(spark, Seq(exact(probe(cands), seenRows, spark.sparkContext.emptyRDD[Long],
+      part)), candidates.schema)
   }
 }

@@ -105,11 +105,11 @@ object Urls {
     * Catalyst expression while driver-side Scala (oracle, bloom sizing)
     * computes the same value.
     */
-  def urlHash64(canonicalUrl: String): Long =
+  def urlHash64(canonicalUrl: String): Long = {
+    val utf8 = canonicalUrl.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      canonicalUrl.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-      canonicalUrl.length, 42L)
+      utf8, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, utf8.length, 42L)
+  }
 
   // ---- Column-level forms (engine side) ----
 

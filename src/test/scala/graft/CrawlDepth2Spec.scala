@@ -2,7 +2,8 @@ package graft
 
 import graft.crawl.WaveRunner
 import graft.crawl.WaveRunner.CrawlConfig
-import graft.model.RobotsRule
+import graft.model.{RobotsRule, Span, SpanDoc}
+import graft.urls.Urls
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.{Seed, SiteConfig}
 
@@ -27,6 +28,26 @@ class CrawlDepth2Spec extends SparkSpec {
     assert(urls2.sorted === urls1.sorted)
     assert(urls2.distinct.length === urls2.length, "no URL may be fetched twice")
     assert(d2.seen.count() === d1.seen.count())
+  }
+
+  test("non-ASCII seed linked back from its own page and a profile: fetched once, one seen key") {
+    // the seed is keyed on the driver, its back-links in Spark: both must
+    // hash the same UTF-8 bytes or the seed is rediscovered and refetched
+    val seedUrl = "https://a.edu/people/café"
+    val profile = "https://a.edu/people/josé"
+    val pages = Map(
+      seedUrl -> Array(Span("heading", "Faculty", "", 0), Span("link", "Café", seedUrl, 1),
+        Span("heading", "José", "", 2), Span("link", "José", profile, 3)),
+      profile -> Array(Span("heading", "José", "", 0), Span("link", "Back", seedUrl, 1)))
+    val fetcher: String => Option[SpanDoc] = url => pages.get(url).map(SpanDoc(url, _))
+    val r = WaveRunner.run(spark, Seq(Seed(seedUrl, 0, "U", "D")), fetcher, Nil,
+      CrawlConfig(maxDepth = 2, waveSeconds = 2.0))
+    val fetched = r.crawlOrder.collect().map(_.getAs[String]("url")).toSeq
+    assert(fetched.sorted === Seq(profile, seedUrl).sorted)
+    val seen = r.seen.collect().map(x => (x.getAs[Long]("url_hash"), x.getAs[String]("url")))
+    assert(seen.toSet === Set(seedUrl, profile).map(u => (Urls.urlHash64(u), u)))
+    assert(seen.length === 2)
+    r.release()
   }
 
   test("skewed hosts: salted selection keeps per-host order and budgets exact") {

@@ -26,8 +26,9 @@ import java.util.concurrent.atomic.AtomicLong
   * Also: compaction (delta fold-in) must be behavior-invisible — forced
   * every-wave compaction yields bit-identical crawl state — and a snapshot
   * crawl must resume correctly from a compacted frontier base. Leaf waves
-  * (no fetched page below maxDepth) skip discovery jobs, and no wave after
-  * the first few compiles new code.
+  * (no fetched page below maxDepth) skip discovery jobs, no wave after the
+  * first few compiles new code, and a crawl of the benchmark's shape fits
+  * Spark's codegen cache.
   */
 class CrawlScaleSpec extends SparkSpec {
 
@@ -155,8 +156,8 @@ class CrawlScaleSpec extends SparkSpec {
     // The fetcher records Spark's codegen compilation count when each page
     // is fetched; once the index wave and two leaf waves have compiled the
     // loop's plans, the count must stay flat to the last wave. (Measured
-    // inside one crawl: one crawl uses more classes than Spark's 100-entry
-    // codegen cache holds, so a second crawl recompiles evicted ones.)
+    // inside one crawl; the next test shows that a whole crawl fits the
+    // codegen cache, so a second crawl of the same shape compiles nothing.)
     val one  = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 8)
     val base = SyntheticSite.fetcher(one)
     val fetcher: String => Option[SpanDoc] = { url =>
@@ -174,6 +175,50 @@ class CrawlScaleSpec extends SparkSpec {
       assert(at(7) === at(2),
         s"snapshot = $snapshot: waves 3-8 compiled ${at(7) - at(2)} new classes")
     }
+  }
+
+  test("a crawl of the benchmark shape fits the codegen cache: a bigger one compiles nothing") {
+    // Spark's cache holds 100 classes in 4 LRU segments of 25, keyed by class
+    // loader, so a whole-stage stage takes two entries (driver check compile
+    // + task compile). After a 1-university crawl with its records and
+    // order, a 2-university crawl of the same shape — robots delays,
+    // compaction, index + profile waves — must find every class cached.
+    def crawlWithRecordsAndOrder(universities: Int): Unit = {
+      val (seeds, fetcher, rules, cfg) = BenchShape(universities)
+      val r = WaveRunner.run(spark, seeds, fetcher, rules, cfg)
+      graft.crawl.Records.facultyRecords(spark, r.docs, seeds)
+        .write.format("noop").mode("overwrite").save()
+      assert(r.crawlOrder.collect().length.toLong === r.fetches)
+      r.release()
+    }
+    crawlWithRecordsAndOrder(1)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    crawlWithRecordsAndOrder(2)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled === 0L, s"the 2-university crawl compiled $compiled classes")
+  }
+}
+
+/** The benchmark's crawl shape at `universities` × 4 hosts: 24 profiles per
+  * host with realistic page weight and 5% fetch errors, robots.txt
+  * crawl-delays of 0.5 s and 1 s so budgets bind (an index wave and two
+  * profile waves), and a delta bound that makes compaction fire.
+  */
+object BenchShape {
+  def apply(universities: Int): (Seq[SyntheticSite.Seed], String => Option[SpanDoc],
+      Seq[graft.model.RobotsRule], CrawlConfig) = {
+    val faculty = 24
+    val site = SiteConfig(universities = universities, deptsPerU = 4, facultyPerDept = faculty,
+      errorFraction = 0.05, pubsPerFaculty = 12, bioWords = 250, seed = 901L)
+    val seeds = SyntheticSite.seeds(site)
+    val rules = seeds.zipWithIndex.map { case (s, i) =>
+      val host = graft.urls.Urls.hostOf(s.url)
+      graft.frontier.Robots.parseRobotsTxt(host,
+        s"User-agent: *\nCrawl-delay: ${if (i % 2 == 0) 0.5 else 1.0}\n")
+    }
+    (seeds, SyntheticSite.htmlFetcher(site), rules,
+      CrawlConfig(waveSeconds = faculty * 1.0 / 2,
+        frontierDeltaMaxRows = seeds.size.toLong * (faculty + 1) / 4))
   }
 }
 

@@ -22,7 +22,8 @@ class FrontierSpec extends SparkSpec {
       val seen = seenKeys.toDF("url_hash")
       val cand = candKeys.toDF("url_hash")
       // tiny expectedTotal forces a high Bloom FP rate → exercises the rescue path
-      val bloom = PartitionedBloom.build(seen, nShards = 4, expectedTotal = 64, fpp = 0.5)
+      val bloom = PartitionedBloom.empty(nShards = 4, expectedTotal = 64, fpp = 0.5)
+      seenKeys.foreach(bloom.put)
       seenKeys.foreach(k => assert(bloom.mightContain(k), "bloom must have no false negatives"))
       val got = UrlSeen.filterUnseen(cand, seen, bloom)
         .collect().map(_.getLong(0)).toSet
@@ -349,26 +350,51 @@ class FrontierSpec extends SparkSpec {
     assert(rules("c.edu") === RobotsRule("c.edu", Nil, 1.0)) // no robots.txt
   }
 
+  test("broadcast Bloom: a wave whose new keys exceed the filter's sizing throws") {
+    // one index page that links 24 profiles; the filter is sized for 8 keys
+    val site = graft.synth.SyntheticSite.SiteConfig(universities = 1, deptsPerU = 1,
+      facultyPerDept = 24)
+    val cfg = graft.crawl.WaveRunner.CrawlConfig(bloomExpected = 8L)
+    assert(cfg.bloomBroadcastable)
+    val e = intercept[Exception] {
+      graft.crawl.WaveRunner.run(spark, graft.synth.SyntheticSite.seeds(site),
+        graft.synth.SyntheticSite.fetcher(site), Nil, cfg)
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage.contains("sized for 8 keys")), e.toString)
+    // all or none: a put that does not fit leaves the filter as it was
+    val pb = PartitionedBloom.empty(nShards = 4, expectedTotal = 100, fpp = 0.01)
+    pb.putAll((0L until 60L).toArray)
+    intercept[IllegalStateException](pb.putAll((60L until 120L).toArray))
+    assert(pb.size === 60L)
+  }
+
   test("partitioned bloom: shard merge and scaling math hold") {
-    val pb = PartitionedBloom.empty(nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
-    val delta = PartitionedBloom.empty(nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
-    (0L until 1000L).foreach(delta.put)
-    pb.mergeInPlace(delta)
-    (0L until 1000L).foreach(k => assert(pb.mightContain(k)))
-    // cold start (driver put of the seeds) and resume (distributed build of
-    // the same keys) must give bit-identical shards and the same key count
+    // the driver put of collected hashes (every broadcast-regime wave, and
+    // resume) and the distributed BloomTable build of the same keys (the
+    // sharded regime) must give bit-identical shards and the same key count
     val keys = (-500L until 500L).map(_ * 0x9E3779B97F4A7C15L)
-    val (built, n) = PartitionedBloom.buildWithCount(keys.toDF("url_hash"),
-      nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
     val put = PartitionedBloom.empty(nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
-    keys.foreach(put.put)
+    val n = put.putHashes(keys.toDF("url_hash").repartition(4))
+    val table = BloomTable.fromHashes(keys.toDF("url_hash"),
+      nShards = 16, expectedTotal = 1 << 14, fpp = 0.01).collect().sortBy(_.shard)
     def bytes(bf: org.apache.spark.util.sketch.BloomFilter): Seq[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       bos.toByteArray.toSeq
     }
     assert(n === keys.size.toLong)
-    assert(built.shards.map(bytes).toSeq === put.shards.map(bytes).toSeq)
+    assert(put.size === keys.size.toLong)
+    assert(table.map(_.n).sum === n)
+    assert(table.map(_.shard).toSeq === (0 until 16))
+    assert(table.map(_.bytes.toSeq).toSeq === put.shards.map(bytes).toSeq)
+    keys.foreach(k => assert(put.mightContain(k)))
+    // a copy probes the same bits and does not see later puts
+    val copy = put.copy()
+    assert(copy.shards.map(bytes).toSeq === put.shards.map(bytes).toSeq)
+    put.put(7L)
+    assert(copy.size === n && put.size === n + 1)
     // documented 10^10 sizing: ~9.6 bits/key at 1% fpp → ~1.2 GB per 10^9 keys,
     // sharded so a single shard stays executor-resident
     val bitsPerKey = -math.log(0.01) / (math.log(2) * math.log(2))

@@ -73,7 +73,9 @@ class UrlsSpec extends AnyFunSuite {
   test("urlHash64 agrees with Spark's xxhash64 expression") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val urls = Seq("https://cs.u0.edu/people/faculty", "https://h.com/p/1", "")
+    // non-ASCII: the driver must hash the UTF-8 bytes, as Spark does
+    val urls = Seq("https://cs.u0.edu/people/faculty", "https://h.com/p/1", "",
+      "https://a.edu/people/café", "https://b.edu/教員/山田")
     val got = urls.toDF("u")
       .selectExpr("xxhash64(u)").collect().map(_.getLong(0)).toSeq
     assert(got === urls.map(Urls.urlHash64))
