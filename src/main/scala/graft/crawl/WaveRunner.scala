@@ -34,7 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Class budget. Spark caches generated classes in a Guava cache of 100
   * entries built with 4 segments, so each segment is an LRU of 25; the key
   * includes the class loader, so every whole-stage-codegen stage takes two
-  * entries (the driver's check compile and the task compile), and every
+  * entries (the plan-time compile that checks the code, and the task's
+  * compile), and every
   * interpreted projection, predicate or ordering one. A crawl plus its
   * records must stay well inside that (64 entries keep the chance that any
   * segment overflows under 2% per JVM), or every crawl recompiles classes

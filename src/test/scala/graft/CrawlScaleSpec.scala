@@ -179,8 +179,8 @@ class CrawlScaleSpec extends SparkSpec {
 
   test("a crawl of the benchmark shape fits the codegen cache: a bigger one compiles nothing") {
     // Spark's cache holds 100 classes in 4 LRU segments of 25, keyed by class
-    // loader, so a whole-stage stage takes two entries (driver check compile
-    // + task compile). After a 1-university crawl with its records and
+    // loader, so a whole-stage stage takes two entries (plan-time
+    // check compile + task compile). After a 1-university crawl with its records and
     // order, a 2-university crawl of the same shape — robots delays,
     // compaction, index + profile waves — must find every class cached.
     def crawlWithRecordsAndOrder(universities: Int): Unit = {
