@@ -77,7 +77,7 @@ object Bench {
     deptsPerU = 2,
     facultyPerDept = sys.env.getOrElse("GRAFT_BENCH_FACULTY", "288").toInt,
     errorFraction = 0.05, pubsPerFaculty = 12, bioWords = 250)
-  private val benchCrawl = CrawlConfig(waveSeconds = 320.0, saltShards = 1)
+  private val benchCrawl = CrawlConfig(waveSeconds = 320.0)
   private val coresAvailable = Runtime.getRuntime.availableProcessors
   private val (nCores, n4Cores, coresClamped) = coreLevels(coresAvailable)
 
@@ -118,7 +118,7 @@ object Bench {
       waveSeconds: Double = benchCrawl.waveSeconds): ChildResult = {
     forkPinnedChild(cpus, Seq(site.universities, site.deptsPerU,
       site.facultyPerDept).map(_.toString) ++ Seq(waveSeconds.toString, "2",
-        benchCrawl.saltShards.toString, site.errorFraction.toString,
+        site.errorFraction.toString,
         site.pubsPerFaculty.toString, site.bioWords.toString, nCores.toString), env)
       .getOrElse {
         // the fallback honors the SAME env contract as the child (ADVICE r4:
@@ -172,10 +172,9 @@ object Bench {
   private def inProcessRate(cpus: Int, env: Map[String, String],
       site: SiteConfig, waveSeconds: Double): (Double, Long) = {
     val spark = session(cpus, s"graft-bench-$cpus")
-    // mirror BenchCrawlChild's env contract (regime/selector/wave bound) so
-    // an unpinned fallback still measures the requested configuration
+    // mirror BenchCrawlChild's env contract (regime/wave bound) so an
+    // unpinned fallback still measures the requested configuration
     val base = benchCrawl.copy(waveSeconds = waveSeconds,
-      selector = env.getOrElse("GRAFT_SELECTOR", CrawlConfig().selector),
       maxWaves = env.get("GRAFT_MAX_WAVES").map(_.toInt)
         .getOrElse(CrawlConfig().maxWaves))
     val cfg =
@@ -387,36 +386,26 @@ object Bench {
     val shardedPairOk = okTrios.nonEmpty
 
     // politeness-real selection regime (r4 verdict #2): the native selector's
-    // reason to exist — O(hosts×budget) selection shuffle when budgets BIND
-    // (budget ≪ per-host pending).
-    // 256 hosts, budget 8/wave, a fixed 6-wave timing window, frontier depth
-    // 100 vs 1000 per host (~10× pending): the window selector re-shuffles
-    // and re-windows EVERY pending row each wave, so its rate degrades with
-    // depth; the native selector ships bounded per-host buffers and holds.
-    // Both selectors share discovery/scan costs, so the comparison is
-    // within-depth native-vs-window and across-depth retention.
+    // O(hosts×budget) selection shuffle when budgets BIND (budget ≪ per-host
+    // pending). 256 hosts, budget 8/wave, frontier depth 100 vs 1000 per
+    // host (~10× pending): a selector that shuffled every pending row would
+    // lose rate with depth; bounded per-host buffers hold it (retention).
     // 20 timed waves so the one-time wave-1 discovery amortizes and the
     // per-wave selection cost (the measurand) dominates the across-depth
     // delta. Besides wall-clock, each child reports its total SHUFFLED
     // rows/bytes: on one box shuffles hit the page cache and are nearly
     // free, so the volume channel — what costs network on a real cluster —
-    // is where the native selector's O(hosts×budget) bound shows regardless of
-    // window.
+    // is where the O(hosts×budget) bound shows.
     val selEnv = skipCeil + ("GRAFT_MAX_WAVES" -> "20")
     // GRAFT_BENCH_SELHOSTS shrinks the selection corpus for harness smoke
     // tests (same role as GRAFT_BENCH_UNIS for the scaling corpus)
     val selHosts = sys.env.getOrElse("GRAFT_BENCH_SELHOSTS", "256").toInt
     def selSite(f: Int) = SiteConfig(universities = selHosts, deptsPerU = 1,
       facultyPerDept = f, errorFraction = 0.0, pubsPerFaculty = 2, bioWords = 40)
-    def selRun(selector: String, f: Int): ChildResult =
-      crawlRate(n4Cores, selEnv + ("GRAFT_SELECTOR" -> selector),
-        site = selSite(f), waveSeconds = 8.0)
-    // interleave selectors within each depth so each comparison shares its
-    // tenancy window
-    val selNatSmall = selRun("native", 100)
-    val selWinSmall = selRun("window", 100)
-    val selNatDeep  = selRun("native", 1000)
-    val selWinDeep  = selRun("window", 1000)
+    def selRun(f: Int): ChildResult =
+      crawlRate(n4Cores, selEnv, site = selSite(f), waveSeconds = 8.0)
+    val selNatSmall = selRun(100)
+    val selNatDeep  = selRun(1000)
 
     val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -472,17 +461,10 @@ object Bench {
         // rows/MB over a fixed 20-wave window at budget 8/host/wave,
         // per-host frontier depth 100 vs 1000
         f""""selection_bench":{"native_small":${selNatSmall.rate}%.1f,""" +
-        f""""window_small":${selWinSmall.rate}%.1f,""" +
         f""""native_deep":${selNatDeep.rate}%.1f,""" +
-        f""""window_deep":${selWinDeep.rate}%.1f,""" +
         f""""native_deep_retention":${selNatDeep.rate / selNatSmall.rate}%.3f,""" +
-        f""""window_deep_retention":${selWinDeep.rate / selWinSmall.rate}%.3f,""" +
-        f""""native_over_window_deep":${selNatDeep.rate / selWinDeep.rate}%.3f,""" +
-        f""""window_small_shuffle_rows":${selWinSmall.shufRows},""" +
         f""""native_deep_shuffle_rows":${selNatDeep.shufRows},""" +
-        f""""window_deep_shuffle_rows":${selWinDeep.shufRows},""" +
-        f""""native_deep_shuffle_mb":${selNatDeep.shufMb}%.1f,""" +
-        f""""window_deep_shuffle_mb":${selWinDeep.shufMb}%.1f},""" +
+        f""""native_deep_shuffle_mb":${selNatDeep.shufMb}%.1f},""" +
         f""""n_cores":$nCores,"4n_cores":$n4Cores,"pinned":$pinned,""" +
         f""""cores_available":$coresAvailable,"cores_clamped":$coresClamped}}""")
   }

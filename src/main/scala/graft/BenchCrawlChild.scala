@@ -13,7 +13,8 @@ import graft.synth.SyntheticSite.SiteConfig
   * measured N→4N efficiency). Separate JVMs also keep the two measurements
   * free of each other's heap/codegen state.
   *
-  * Args: cores universities deptsPerU facultyPerDept waveSeconds runs salt
+  * Args: cores universities deptsPerU facultyPerDept waveSeconds runs
+  * [errorFraction] [pubsPerFaculty] [bioWords] [narrowCores].
   * Prints `RATE <urlsPerSec> <urls> busy=<f> gc=<f>` and (wide child only)
   * `CEIL <pagesPerSec@2threads> <pagesPerSec@cores-threads>`.
   */
@@ -26,16 +27,10 @@ object BenchCrawlChild {
     val site = SiteConfig(
       universities = args(1).toInt, deptsPerU = args(2).toInt,
       facultyPerDept = args(3).toInt,
-      errorFraction = if (args.length > 7) args(7).toDouble else 0.05,
-      pubsPerFaculty = if (args.length > 8) args(8).toInt else 12,
-      bioWords = if (args.length > 9) args(9).toInt else 250) // default ~2 KB prose per profile: realistic page weight
-    // saltShards=1 by default: the bench corpus is host-uniform, so the skew
-    // pre-prune's extra window pass is pure overhead here (the salted path's
-    // exactness and skew behavior are covered by FrontierSpec/CrawlDepth2Spec)
+      errorFraction = if (args.length > 6) args(6).toDouble else 0.05,
+      pubsPerFaculty = if (args.length > 7) args(7).toInt else 12,
+      bioWords = if (args.length > 8) args(8).toInt else 250) // default ~2 KB prose per profile: realistic page weight
     val base = CrawlConfig(waveSeconds = args(4).toDouble,
-      saltShards = if (args.length > 6) args(6).toInt else 1,
-      // selector A/B for scaling experiments (default = the engine default)
-      selector = sys.env.getOrElse("GRAFT_SELECTOR", CrawlConfig().selector),
       // bounded-wave mode for the politeness-regime selection bench: time a
       // fixed number of waves over a DEEP frontier (budget ≪ pending) rather
       // than draining it — the per-wave selection cost is the measurand
@@ -52,7 +47,7 @@ object BenchCrawlChild {
     val runs  = args(5).toInt
     val skipCeil = sys.env.contains("GRAFT_SKIP_CEIL")
     // the parent's narrow (N) level, which the ceilings are measured against
-    val narrow = if (args.length > 10) args(10).toInt else 2
+    val narrow = if (args.length > 9) args(9).toInt else 2
 
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cores]")

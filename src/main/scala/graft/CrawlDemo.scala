@@ -16,7 +16,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * and (optionally) exactness vs the sequential oracle.
   *
   * Usage: runMain graft.CrawlDemo [universities] [deptsPerU] [facultyPerDept]
-  *          [errorFraction] [waveSeconds] [snapshotDir] [--check-oracle]
+  *          [errorFraction] [waveSeconds] [pubsPerFaculty] [snapshotDir]
+  *          [--check-oracle]
   */
 object CrawlDemo {
   def main(args: Array[String]): Unit = {
@@ -27,8 +28,7 @@ object CrawlDemo {
       deptsPerU = arg(1, "2").toInt,
       facultyPerDept = arg(2, "10").toInt,
       errorFraction = arg(3, "0.1").toDouble,
-      pubsPerFaculty = arg(5, "7").toInt,
-      bioWords = sys.env.getOrElse("GRAFT_BIO_WORDS", "0").toInt)
+      pubsPerFaculty = arg(5, "7").toInt)
     val waveSeconds = arg(4, "8").toDouble
     val snapshotDir = if (pos.length > 6) Some(pos(6)) else None
     val checkOracle = args.contains("--check-oracle")

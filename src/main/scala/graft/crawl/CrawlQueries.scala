@@ -1,6 +1,6 @@
 package graft.crawl
 
-import graft.frontier.{BloomTable, UrlSeen, WaveSelector}
+import graft.frontier.UrlSeen
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.SiteConfig
 import graft.urls.Urls
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 
 /** Crawl-operator queries expressed over the driver's testdata so the DuckDB
   * oracle can check them relationally (SURVEY §2.8): the canonicalizer, the
-  * wave selector, and the Bloom+anti-join seen filter each get a query whose
+  * batch selector, and the Bloom+anti-join seen filter each get a query whose
   * expected output is plain SQL; the full crawl runs as a rows-only query on
   * the synthetic site (its exactness oracle is the ScalaTest suite).
   */
@@ -37,38 +37,10 @@ object CrawlQueries {
       |  'https://shop.example.com/a/item/' || o_orderkey AS canonical_url
       |FROM orders""".stripMargin
 
-  /** Wave batch selection (W4/G5/G6): per-host ranked top-`budget` with the
-    * engine's salted two-stage selector; the oracle is the equivalent ranked
-    * window. Hosts/priorities synthesized from orders.
-    */
-  def frontierSelect(spark: SparkSession, dir: String): DataFrame = {
-    val frontier = orders(spark, dir).select(
-      concat(lit("h"), pmod(col("o_custkey"), lit(50))).as("host"),
-      concat(lit("https://h"), pmod(col("o_custkey"), lit(50)),
-        lit(".com/o/"), col("o_orderkey")).as("url"),
-      col("o_totalprice").as("priority"),
-      lit(0).as("discoveredWave"),
-      col("o_orderkey").as("discoveredRank"),
-      col("o_orderkey").as("urlHash"),
-      lit(3L).as("budget"))
-    WaveSelector.select(frontier, saltShards = 4)
-      .select(col("host"), col("host_rank"), col("url"))
-  }
-
-  val frontierSelectSql: String =
-    """SELECT host, CAST(rk - 1 AS BIGINT) AS host_rank, url FROM (
-      |  SELECT 'h' || (o_custkey % 50) AS host,
-      |    'https://h' || (o_custkey % 50) || '.com/o/' || o_orderkey AS url,
-      |    row_number() OVER (PARTITION BY o_custkey % 50
-      |      ORDER BY o_totalprice DESC, o_orderkey ASC, o_orderkey ASC) AS rk
-      |  FROM orders) x
-      |WHERE rk <= 3""".stripMargin
-
-  /** The same wave-batch selection through the native Catalyst
-    * [[graft.frontier.TopKSelectNative]] aggregate (the crawl's default
-    * selector) against the SAME ranked-window oracle — the DuckDB gate then
-    * covers both batch-selector implementations, not just the salted-window
-    * path.
+  /** Wave batch selection (W4/G5/G6): per-host ranked top-`budget` through
+    * the crawl's batch selector, the native Catalyst
+    * [[graft.frontier.TopKSelectNative]] aggregate; the oracle is the
+    * equivalent ranked window. Hosts/priorities synthesized from orders.
     */
   def frontierSelectNative(spark: SparkSession, dir: String): DataFrame = {
     val frontier = orders(spark, dir).select(
@@ -87,18 +59,25 @@ object CrawlQueries {
       .select(col("host"), col("host_rank"), col("url"))
   }
 
+  val frontierSelectSql: String =
+    """SELECT host, CAST(rk - 1 AS BIGINT) AS host_rank, url FROM (
+      |  SELECT 'h' || (o_custkey % 50) AS host,
+      |    'https://h' || (o_custkey % 50) || '.com/o/' || o_orderkey AS url,
+      |    row_number() OVER (PARTITION BY o_custkey % 50
+      |      ORDER BY o_totalprice DESC, o_orderkey ASC, o_orderkey ASC) AS rk
+      |  FROM orders) x
+      |WHERE rk <= 3""".stripMargin
+
   /** URL-seen filter (G4): seen = even order keys, candidates = all keys; the
     * shard-local Bloom fast path + exact anti-join must return exactly the
     * odd keys (Bloom false positives rescued by the join — exactness is the
-    * contract, so the oracle is plain SQL). Uses the distributed BloomTable
-    * path — the residency model that carries to 10^10 keys.
+    * contract, so the oracle is plain SQL). Uses the sharded Bloom shard
+    * rows — the residency model that carries to 10^10 keys.
     */
   def bloomAntijoin(spark: SparkSession, dir: String): DataFrame = {
     val all = orders(spark, dir).select(col("o_orderkey").as("url_hash"))
     val seen = all.filter(pmod(col("url_hash"), lit(2)) === 0)
-    val blooms = BloomTable.fromHashes(seen, nShards = 8,
-      expectedTotal = 1L << 16, fpp = 0.03)
-    UrlSeen.filterUnseenSharded(all, seen, blooms, nShards = 8)
+    UrlSeen.filterUnseenSharded(all, seen, nShards = 8, expectedTotal = 1L << 16, fpp = 0.03)
       .select(col("url_hash"))
   }
 

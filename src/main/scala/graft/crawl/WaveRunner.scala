@@ -1,14 +1,14 @@
 package graft.crawl
 
 import graft.extract.SpanExtract
-import graft.frontier.{BloomShard, BloomTable, PartitionedBloom, Robots, UrlSeen, WaveSelector}
+import graft.frontier.{BloomTable, PartitionedBloom, Robots, TopKSelectNative, UrlSeen, WaveSelector}
 import graft.model._
 import graft.synth.SyntheticSite.Seed
 import graft.urls.Urls
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, GraftRows, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftRows, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -60,7 +60,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[graft.frontier.Robots.mergeRules]]). In the broadcast regime the
   * URL-seen Bloom filter lives on the driver and takes every new key there:
   * the seeds at a cold start, the store's seen set on resume, and each
-  * wave's discoveries as the job that stores them ends.
+  * wave's discoveries as the job that stores them ends. In the sharded
+  * regime it is shard rows held like the seen rows
+  * ([[graft.frontier.BloomTable]]), which take the same keys where they live.
   *
   * Wave-synchronous batches — not Structured Streaming — because the primary
   * correctness obligation is deterministic, reproducible ordering vs the
@@ -110,26 +112,18 @@ object WaveRunner {
       maxWaves: Int = 10000,
       maxRetries: Int = 0,          // reference fetches once, no retry (scraper.py:160-162)
       waveSeconds: Double = 1.0,    // × 1/crawl_delay = per-host budget (scraper.py:83)
-      saltShards: Int = 1,          // skew pre-prune shards for the "window" selector
-      /** Batch selector: "native" (default — exact per-host top-k as a
-        * Catalyst TypedImperativeAggregate: O(hosts×budget) heap buffers on
-        * the shuffle, zero-allocation reject path; see
-        * [[graft.frontier.TopKSelectNative]]) or "window" (the two-stage
-        * salted window — exact-equal, shuffles O(pending) rows per wave;
-        * the skew path, see [[graft.frontier.WaveSelector]]).
-        */
-      selector: String = "native",
       bloomShards: Int = 32,
       bloomExpected: Long = 1L << 20,
       bloomFpp: Double = 0.01,
       /** URL-seen Bloom residency is chosen STATICALLY from the configured
         * sizing (like Spark's broadcast-join threshold): when the whole
         * filter (≈ 1.2·bloomExpected bytes at 1% fpp) fits under this bound
-        * it is broadcast and probed row-locally — no extra shuffle; above it
-        * the filter lives as a shard TABLE co-partitioned with candidates
-        * and probed shard-locally (the 10^10 path: a 12 GB filter must never
-        * exist on the driver or as one broadcast). Set to 0 to force the
-        * sharded path regardless of sizing (tests do).
+        * it lives on the driver and is broadcast, probed row-locally — no
+        * extra shuffle; above it the filter lives as shard rows on the
+        * executors ([[graft.frontier.BloomTable]]), which take the new keys
+        * and the probes where they live (the 10^10 path: a 12 GB filter must
+        * never exist on the driver or as one broadcast, nor cross the wire).
+        * Set to 0 to force the sharded path regardless of sizing (tests do).
         */
       bloomBroadcastMaxBytes: Long = 256L << 20,
       /** Frontier/seen compaction threshold: when the keys touched since the
@@ -149,9 +143,6 @@ object WaveRunner {
       snapshotDir: Option[String] = None, // Some(dir) = committed, resumable waves
       hostWhitelist: Option[Seq[String]] = None // default: seed hosts
   ) {
-    require(selector == "native" || selector == "window",
-      s"selector must be \"native\" or \"window\", got \"$selector\"")
-
     /** Conservative whole-filter size estimate from the configured sizing. */
     def bloomBytesEstimate: Long =
       (bloomExpected * math.ceil(
@@ -167,7 +158,7 @@ object WaveRunner {
       metrics: DataFrame,    // wave, host, fetched, errors, fetchMsTotal, urlsEnqueued
       waves: Int,
       fetches: Long,         // total attempted fetches (= crawlOrder row count)
-      held: Seq[RDD[InternalRow]] // checkpointed row sets the DataFrames above read
+      held: Seq[RDD[_]]      // checkpointed row sets the DataFrames above read, Bloom shards
   ) {
     /** Global crawl order (seq, wave, host, host_rank, url). Lazy: deriving
       * the seq offsets runs a small distributed job over the metrics views,
@@ -274,7 +265,8 @@ object WaveRunner {
     *                       stitched into the returned result
     * @param seedHashes     cold start: the whole seen set as url hashes, put
     *                       into the broadcast-regime filter on the driver;
-    *                       None (resume): put seenBase0's hashes instead
+    *                       None (resume), and the sharded regime, put the
+    *                       seen rows' hashes in a job
     */
   private def runLoop(
       spark: SparkSession,
@@ -303,7 +295,7 @@ object WaveRunner {
     // runs the relational work — selection and link extraction — over
     // scans of these rows. Every stored RDD is in `held` until it is
     // superseded, or until the result is released.
-    val held = scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
+    val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
     def hold(rdd: RDD[InternalRow], eager: Boolean): RDD[InternalRow] = {
       rdd.localCheckpoint()
       if (eager) rdd.count()
@@ -315,7 +307,7 @@ object WaveRunner {
       rdd.unpersist(blocking = false)
       ()
     }
-    // seen rows, and each wave's candidates, are placed by their url hash
+    // seen rows are placed by their url hash
     val byKey = new HashPartitioner(P)
     def partitioned(rows: RDD[InternalRow], keyAt: Int): RDD[InternalRow] =
       rows.map(r => (r.getLong(keyAt), r)).partitionBy(byKey).values
@@ -341,7 +333,6 @@ object WaveRunner {
     // discoveredWave, a base retry keeps its pre-compaction one
     var watermark = startWave
 
-    def seenBase: DataFrame = GraftRows.scan(spark, Seq(seenRdd), SeenSchema)
     def newKeys: RDD[InternalRow] = {
       val w = watermark
       deltaRdd.filter(_.getInt(DiscoveredWaveAt) > w).mapPartitions(asRows(SeenSchema) { r =>
@@ -352,46 +343,29 @@ object WaveRunner {
     // URL-seen Bloom state, residency chosen statically from the configured
     // sizing (cfg.bloomBroadcastable, like Spark's broadcast-join threshold):
     //  - broadcast regime (filter fits the bound): a driver PartitionedBloom
-    //    that takes each wave's new keys on the driver (putHashes) and is
-    //    broadcast as a copy per wave, probed row-locally — no extra shuffle.
-    //    The driver object is BOUNDED BY CONFIG and putHashes throws past it.
-    //  - sharded regime (the 10^10 path): a Dataset[BloomShard] living on
-    //    executors, probed via shard-local cogroup — nothing whole-filter
-    //    ever exists in one place. LAZY localCheckpoint, not persist: the
-    //    bloom plan references ITSELF twice per wave (probe + merge), so
-    //    un-truncated lineage grows exponentially (measured: OOM building
-    //    plan strings by wave ~6); the totalKeys action is what materializes
-    //    the checkpoint — no extra job.
+    //    that takes each wave's new keys on the driver and is broadcast as a
+    //    copy per wave, probed row-locally — no extra shuffle. The driver
+    //    object is BOUNDED BY CONFIG and its puts throw past it.
+    //  - sharded regime (the 10^10 path): a BloomTable, shard rows placed by
+    //    shard id on the executors like the seen rows are by key; candidates
+    //    and new keys move to their shard, the shards never move.
+    // Both take a wave's new keys in the job that stores them, and count them.
     val bloomBroadcast = cfg.bloomBroadcastable
-    var bloomDriver: PartitionedBloom    = null
-    var bloomTable: Dataset[BloomShard]  = null
-    var seenTotal = 0L
-    if (bloomBroadcast) {
-      bloomDriver = PartitionedBloom.empty(cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
-      seedHashes match {
-        case Some(hashes) => bloomDriver.putAll(hashes.toArray)
-        case None         => bloomDriver.putHashes(seenBase)
-      }
-    } else {
-      bloomTable = BloomTable.fromHashes(seenBase.select(col("url_hash")),
-        cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp).localCheckpoint(false)
-      seenTotal = BloomTable.totalKeys(bloomTable)
+    val bloomDriver =
+      if (bloomBroadcast) PartitionedBloom.empty(cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
+      else null
+    val bloomTable =
+      if (bloomBroadcast) null
+      else new BloomTable(sc, cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp, P)
+    def addToBloom(rows: RDD[InternalRow], at: Int): Long =
+      if (bloomBroadcast) bloomDriver.putHashes(rows, at) else bloomTable.putHashes(rows, at)
+    seedHashes match {
+      case Some(hashes) if bloomBroadcast => bloomDriver.putAll(hashes.toArray)
+      case _                              => addToBloom(seenRdd, 0)
     }
-    // puts a wave's new frontier rows' keys into the filter; returns how many
-    def addToBloom(rows: RDD[InternalRow]): Long =
-      if (bloomBroadcast) bloomDriver.putHashes(rows, UrlHashAt)
-      else {
-        val hashes = GraftRows.scan(spark, Seq(rows), FrontierSchema)
-          .select(col("urlHash").as("url_hash"))
-        val nb = BloomTable.merge(bloomTable, BloomTable.fromHashes(
-          hashes, cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp))
-          .localCheckpoint(false) // lazy: materialized by the totalKeys action
-        val total = BloomTable.totalKeys(nb)
-        bloomTable.unpersist(); bloomTable = nb
-        val n = total - seenTotal
-        seenTotal = total
-        n
-      }
+    // the wave's candidates are placed where their exact check (broadcast
+    // regime) or their shard (sharded regime) reads them
+    val candidatePlacement = if (bloomBroadcast) byKey else bloomTable.placement
 
     // merged to one row per host here, once: the per-wave join then needs no
     // aggregate over the rules
@@ -485,13 +459,7 @@ object WaveRunner {
       // the batch carries ALL frontier fields through the fetch stage so the
       // post-fetch state transition is a pure projection — no join back
       // against the frontier (one fewer shuffle per wave)
-      val selected =
-        if (cfg.selector == "window")
-          WaveSelector.select(ruled, cfg.saltShards)
-            .select(col("url"), col("urlHash"), col("host"), col("depth"),
-              col("priority"), col("retries"), col("discoveredWave"),
-              col("discoveredRank"), col("parentUrl"), col("host_rank"))
-        else graft.frontier.TopKSelectNative.select(ruled)
+      val selected = TopKSelectNative.select(ruled)
       // Size fetch parallelism by request count, NOT by shuffle bytes: the
       // selection output is tiny (batch rows), so AQE would coalesce it to
       // ~1 partition and run the expensive fetch+encode stage serially.
@@ -603,10 +571,9 @@ object WaveRunner {
                 .as("discoveredRank"),
               col("parent_url").as("parentUrl"))
           // first discovery wins when several pages link the same URL this
-          // wave (every parent of a wave carries the same discoveredWave); the
-          // keys land where seenRdd holds theirs
+          // wave (every parent of a wave carries the same discoveredWave)
           val firsts = GraftRows.rows(candidates).map(r => (r.getLong(UrlHashAt), r.copy()))
-            .reduceByKey(byKey, firstDiscovery _)
+            .reduceByKey(candidatePlacement, firstDiscovery _)
           // URL-seen: Bloom fast path + exact check. The exact rescue never
           // rewrites the seen set: it reads seenRdd's partition of each
           // Bloom-positive key, and the discoveries since compaction. The
@@ -614,11 +581,12 @@ object WaveRunner {
           // wave's keys while the copy is in use.
           val flagged =
             if (bloomBroadcast) UrlSeen.flag(firsts, bloomDriver.copy())
-            else UrlSeen.flagSharded(firsts, bloomTable, cfg.bloomShards)
+            else UrlSeen.flagSharded(firsts, bloomTable.shards, bloomTable.placement)
           hold(UrlSeen.exact(flagged, seenRdd, newKeys.map(_.getLong(0)), byKey), eager = false)
         }
         // the job that puts the new keys into the filter also stores them
-        val n = newRows.fold(0L) { rows => phase("discover+seen", wave) { addToBloom(rows) } }
+        val n = newRows.fold(0L) { rows =>
+          phase("discover+seen", wave) { addToBloom(rows, UrlHashAt) } }
 
         // -- state transition (G8): selected rows leave pending (errors
         // retry); the wave's DELTA is just their new statuses + discoveries —
@@ -672,8 +640,7 @@ object WaveRunner {
         val log = GraftRows.scan(spark, fetchedRdds.toSeq, FetchSchema)
         (docsOf(log), orderOf(log), fetchMetricsOf(log))
     }
-    if (!bloomBroadcast) held ++= bloomTable.queryExecution.logical.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd } // released with the result
+    if (!bloomBroadcast) held += bloomTable.shards // released with the result
     val frontierFinal =
       GraftRows.scan(spark, Seq(liveBase, deltaRdd) ++ doneRdds, FrontierSchema)
     val seenFinal = GraftRows.scan(spark, Seq(seenRdd, newKeys), SeenSchema)

@@ -23,7 +23,7 @@ private[graft] final class NativeCand(
 /** Mutable native top-k buffer: an array-backed binary heap with the WORST
   * candidate at the root, so a full buffer evicts in O(log k). The order is
   * priority desc, then (discoveredWave, discoveredRank, urlHash) asc — the
-  * window selector's order, total because urlHash is unique — unrolled so
+  * frontier order of [[WaveSelector]], total because urlHash is unique — unrolled so
   * the accept/reject decision needs only four primitives (see
   * [[TopKSelectNative.update]]).
   */
@@ -87,12 +87,13 @@ private[graft] final class NativeTopKBuf(var k: Long, var n: Int,
   }
 }
 
-/** Exact per-host top-`budget` selection as a NATIVE Catalyst
-  * [[TypedImperativeAggregate]], partial-aggregating: each input partition
-  * reduces to a bounded per-host heap map-side, so the selection shuffle
-  * moves O(hostsPerPartition × budget) buffers — never O(pending), which is
-  * what the window-based [[WaveSelector.select]] shuffles every wave. A hot
-  * host's final merge combines ≤ P bounded buffers, not its raw rows.
+/** The crawl's batch selector: exact per-host top-`budget` selection as a
+  * NATIVE Catalyst [[TypedImperativeAggregate]], partial-aggregating: each
+  * input partition reduces to a bounded per-host heap map-side, so the
+  * selection shuffle moves O(hostsPerPartition × budget) buffers — never
+  * O(pending), which a ranked window would shuffle every wave. A hot host
+  * (10^6 pending URLs on one domain) therefore needs no salting: its final
+  * merge combines ≤ P bounded buffers, not its raw rows.
   *
   *   - `update` reads the four ordering primitives straight off the
   *     [[InternalRow]], asks the heap [[NativeTopKBuf.accepts]], and only
@@ -109,8 +110,9 @@ private[graft] final class NativeTopKBuf(var k: Long, var n: Int,
   * IllegalArgumentException naming the host, not a silently mis-sized batch.
   *
   * Semantics (order, tiebreaks, constant-budget contract, k=0, overflow
-  * growth) are pinned equal to the window selector by FrontierSpec's
-  * property tests; [[WaveSelector]]'s scaladoc carries the skew discussion.
+  * growth) are pinned equal to a sorted per-host top-k restated in Scala by
+  * FrontierSpec's property tests, and to the ranked-window SQL by the
+  * `q_frontier_select` DuckDB oracle.
   */
 final case class TopKSelectNative(
     url: Expression, urlHash: Expression, host: Expression, depth: Expression,

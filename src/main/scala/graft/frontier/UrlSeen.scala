@@ -1,8 +1,8 @@
 package graft.frontier
 
-import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.{HashPartitioner, Partitioner, SparkContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftRows}
+import org.apache.spark.sql.{DataFrame, GraftRows}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -23,16 +23,16 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * Scale math (10^10 URLs, the north-rule frontier): 1% FPP needs ~9.6
   * bits/key → ~12 GB of Bloom total. Sharded by `pmod(url_hash, nShards)`
-  * into 1024 shards that is ~12 MB/shard; executors probing a co-partitioned
-  * candidate stream touch exactly one shard per partition.
+  * into 1024 shards that is ~12 MB/shard; a probe placed with its shard
+  * touches only the shards of its own partition.
   *
   * THIS class is the driver-resident/broadcast form — the crawl engine's
   * regime while the configured filter fits `bloomBroadcastMaxBytes`, a hard
   * OOM at 10^10. Above that bound the engine holds the filter as a
-  * [[BloomTable]] (`Dataset[BloomShard]`) instead: built, merged, and probed
-  * shard-locally on executors, so residency carries to 10^10. Both forms
-  * use the same sizing and sharding, so for the same keys their shards hold
-  * the same bits.
+  * [[BloomTable]] instead: shard rows placed by shard id on the executors,
+  * which take new keys and probes where they live, so residency carries to
+  * 10^10. Both forms use the same sizing and sharding, so for the same keys
+  * their shards hold the same bits.
   */
 final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter],
     val capacity: Long) extends Serializable {
@@ -45,26 +45,18 @@ final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter],
   def put(hash: Long): Unit = { shards(shardOf(hash)).putLong(hash); keys += 1 }
 
   /** Put `hashes` on the driver, all or none. Throws before the filter
-    * would hold more than `capacity` keys: past its sizing the
-    * false-positive rate climbs, so the crawl must be sized larger or run in
-    * the sharded regime, never go on degraded.
+    * would hold more than `capacity` keys ([[BloomTable.overfull]]).
     */
   def putAll(hashes: Array[Long]): Unit = {
     if (keys + hashes.length > capacity)
-      throw new IllegalStateException(s"URL-seen Bloom filter sized for $capacity " +
-        s"keys would hold ${keys + hashes.length}: raise bloomExpected, or lower " +
-        "bloomBroadcastMaxBytes to use the sharded regime")
+      throw BloomTable.overfull(capacity, keys + hashes.length)
     hashes.foreach(put)
   }
 
-  /** [[putAll]] every `url_hash` of `hashes`, one partition at a time as
-    * its task ends (the driver never holds more than one partition's keys);
-    * returns how many were put.
+  /** [[putAll]] the hash at field `at` of every row, one partition at a
+    * time as its task ends (the driver never holds more than one
+    * partition's keys); returns how many were put.
     */
-  def putHashes(hashes: DataFrame): Long =
-    putHashes(GraftRows.rows(hashes.select(col("url_hash"))), 0)
-
-  /** [[putHashes]] over rows that hold the hash at field `at`. */
   def putHashes(rows: RDD[InternalRow], at: Int): Long = {
     var n = 0L
     rows.sparkContext.runJob(rows,
@@ -91,31 +83,73 @@ object PartitionedBloom {
   }
 }
 
-/** One shard of the distributed URL-seen Bloom: the serialized filter for one
-  * hash range plus its (cumulative) key count. Top-level so Catalyst encoders
-  * reach it.
+/** One shard of the sharded URL-seen Bloom: its id, the keys put into it
+  * (duplicates included) and its filter.
   */
-final case class BloomShard(shard: Int, n: Long, bytes: Array[Byte])
+final case class BloomShard(shard: Int, keys: Long, bloom: BloomFilter)
 
-/** The URL-seen Bloom as a TABLE of shards — the 10^10 residency model.
+/** Places a url hash on the partition that holds its Bloom shard
+  * (`shard % numPartitions`): the sharded regime's candidates and new keys
+  * are placed by it, so they meet their shard where it lives.
+  */
+final case class ShardPlacement(nShards: Int, numPartitions: Int) extends Partitioner {
+  def getPartition(key: Any): Int =
+    BloomTable.shardOf(key.asInstanceOf[Long], nShards) % numPartitions
+}
+
+/** The URL-seen Bloom as shard ROWS — the 10^10 residency model.
   *
   * [[PartitionedBloom]] (above) holds every shard in one driver object and
   * broadcasts the whole filter; at 10^10 keys / 1% FPP that is a ~12 GB
   * driver allocation and a ~12 GB broadcast per wave — a hard OOM, not a
-  * slowdown. Here the filter lives as a `Dataset[BloomShard]` keyed by
-  * `shard = pmod(url_hash, nShards)`: builds and merges are aggregates
-  * over the hash ranges, probes are a cogroup that co-partitions the
-  * candidate stream with its shards, so each executor ever holds only the
-  * shards of its own hash range (~12 MB each at 1024 shards). Nothing
-  * driver-side grows with total URL count.
+  * slowdown. Here each shard is one row of a local-checkpointed RDD, placed
+  * on partition `shard % numPartitions` ([[ShardPlacement]]), so an executor
+  * only ever holds the shards of its own partitions (~12 MB each at 1024
+  * shards) and nothing driver-side grows with the URL count. Filter bytes
+  * never cross the wire:
   *
-  * All shards are created with identical (perShard, fpp) sizing — fixed at
-  * crawl start — so wave deltas stay merge-compatible.
+  *  - [[putHashes]] moves the hashes to their shard's partition and puts
+  *    them there, into a copy of each shard (stored rows are never mutated);
+  *  - a probe ([[UrlSeen.flagSharded]]) moves the candidates to their
+  *    shard's partition the same way.
+  *
+  * Same sizing and sharding as [[PartitionedBloom]], so for the same keys a
+  * shard holds the same bits. Not thread-safe: one crawl loop drives it.
   */
-object BloomTable {
+final class BloomTable(sc: SparkContext, nShards: Int, expectedTotal: Long, fpp: Double,
+    numPartitions: Int) {
+  val placement: ShardPlacement = BloomTable.placement(nShards, numPartitions)
+  private var rows: RDD[BloomShard] = BloomTable.empty(sc, placement, expectedTotal, fpp)
+  private var keys = 0L
 
-  import org.apache.spark.sql.expressions.Aggregator
-  import org.apache.spark.sql.Encoder
+  /** Keys put so far (duplicates included). */
+  def size: Long = keys
+
+  /** The current shard rows: stored once anything was put. */
+  def shards: RDD[BloomShard] = rows
+
+  /** Put the hash at field `at` of every row, in one job that also stores
+    * the grown shards; returns how many were put. All or none: throws
+    * before the table would hold more than `expectedTotal` keys, like
+    * [[PartitionedBloom.putAll]], and keeps the shards it had.
+    */
+  def putHashes(hashRows: RDD[InternalRow], at: Int): Long = {
+    val next = BloomTable.grow(rows, hashRows.map(_.getLong(at)), placement)
+    next.localCheckpoint()
+    val total = sc.runJob(next, (it: Iterator[BloomShard]) => it.map(_.keys).sum).sum
+    if (total > expectedTotal) {
+      next.unpersist(blocking = false)
+      throw BloomTable.overfull(expectedTotal, total)
+    }
+    rows.unpersist(blocking = false)
+    rows = next
+    val n = total - keys
+    keys = total
+    n
+  }
+}
+
+object BloomTable {
 
   private[frontier] def perShard(expectedTotal: Long, nShards: Int): Long =
     math.max(64L, expectedTotal / nShards)
@@ -132,88 +166,49 @@ object BloomTable {
   def shardOf(hash: Long, nShards: Int): Int =
     (((hash % nShards) + nShards) % nShards).toInt
 
-  /** Builds one shard's Bloom from its url hashes. A relational UDAF, not a
-    * typed `groupByKey.mapGroups`: the typed form plants object-serde nodes
-    * and per-wave-cleaned closures in the plan, and its Catalyst compile
-    * (analysis+optimize+toRdd) measured 1.5-5 s per crawl wave — driver-only
-    * time that idles every executor. The UDAF keeps the plan one ordinary
-    * aggregate.
+  /** A filter sized for `capacity` keys was asked to hold `total`: past its
+    * sizing the false-positive rate climbs, so the crawl must be sized
+    * larger, never go on degraded.
     */
-  private final class BloomBuildAgg(cap: Long, fpp: Double)
-      extends Aggregator[Long, BloomFilter, Array[Byte]] {
-    def zero: BloomFilter = BloomFilter.create(cap, fpp)
-    def reduce(b: BloomFilter, h: Long): BloomFilter = { b.putLong(h); b }
-    def merge(a: BloomFilter, b: BloomFilter): BloomFilter = { a.mergeInPlace(b); a }
-    def finish(b: BloomFilter): Array[Byte] = serialize(b)
-    def bufferEncoder: Encoder[BloomFilter] = Encoders.javaSerialization[BloomFilter]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  private[frontier] def overfull(capacity: Long, total: Long): IllegalStateException =
+    new IllegalStateException(s"URL-seen Bloom filter sized for $capacity " +
+      s"keys would hold $total: raise bloomExpected")
+
+  /** Shards spread over at most `partitions` partitions. */
+  def placement(nShards: Int, partitions: Int): ShardPlacement =
+    ShardPlacement(nShards, math.min(nShards, partitions))
+
+  /** Shards holding `hashes`, built where they are placed; not stored. */
+  def build(hashes: RDD[Long], placement: ShardPlacement, expectedTotal: Long,
+      fpp: Double): RDD[BloomShard] =
+    grow(empty(hashes.sparkContext, placement, expectedTotal, fpp), hashes, placement)
+
+  /** Empty shards, each on its placed partition (not stored: cheap to make). */
+  private def empty(sc: SparkContext, placement: ShardPlacement, expectedTotal: Long,
+      fpp: Double): RDD[BloomShard] = {
+    val np = placement.numPartitions
+    val nShards = placement.nShards
+    val cap = perShard(expectedTotal, nShards)
+    sc.parallelize(0 until np, np).flatMap { p =>
+      (p until nShards by np).map(s => BloomShard(s, 0L, BloomFilter.create(cap, fpp)))
+    }
   }
 
-  /** Merges already-serialized shard filters (same sizing by construction). */
-  private final class BloomMergeAgg
-      extends Aggregator[Array[Byte], BloomFilter, Array[Byte]] {
-    def zero: BloomFilter = null
-    def reduce(b: BloomFilter, bytes: Array[Byte]): BloomFilter =
-      if (b == null) deserialize(bytes)
-      else { b.mergeInPlace(deserialize(bytes)); b }
-    def merge(a: BloomFilter, b: BloomFilter): BloomFilter =
-      if (a == null) b else if (b == null) a else { a.mergeInPlace(b); a }
-    def finish(b: BloomFilter): Array[Byte] = serialize(b)
-    def bufferEncoder: Encoder[BloomFilter] = Encoders.javaSerialization[BloomFilter]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Build shard filters from a DataFrame of `url_hash: long`, fully
-    * distributed: each shard is assembled inside its hash-range group and
-    * stays there — nothing is collected here.
-    *
-    * The RAW HASHES are shuffled to their shard partition BEFORE the
-    * aggregate, on purpose: a bare `groupBy(shard).agg(build)` would
-    * partial-aggregate map-side, and a partial buffer here is a full
-    * `cap`-sized filter — up to P × nShards × shardBytes on the wire (at the
-    * 10^10 sizing, 1000 map partitions × 1024 shards × ~12 MB — a
-    * non-starter), versus 8 bytes per key for the hashes themselves. After
-    * the explicit hash-partitioning the aggregation needs no further
-    * exchange (grouping key == partitioning key), so each shard's filter is
-    * built exactly once where it lives and partial buffers never cross the
-    * wire at all — which is also why the buffer encoder's format is moot
-    * here (and BloomFilterImpl's `writeObject` already delegates byte-for-
-    * byte to its raw-bits `writeTo` — verified in the shipped bytecode — so
-    * a custom binary encoder would only shave a stream header; r3 verdict
-    * ask #5 resolves to this structural fix instead).
+  /** `shards` with `hashes` put in: the hashes move to their shard's
+    * partition and are put into a copy of each shard there.
     */
-  def fromHashes(hashes: DataFrame, nShards: Int, expectedTotal: Long,
-      fpp: Double): Dataset[BloomShard] = {
-    val spark = hashes.sparkSession
-    import spark.implicits._
-    val cap   = perShard(expectedTotal, nShards)
-    val build = udaf(new BloomBuildAgg(cap, fpp), Encoders.scalaLong)
-    val P = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    hashes.select(col("url_hash").cast("long").as("h"))
-      .withColumn("shard", pmod(col("h"), lit(nShards.toLong)).cast("int"))
-      .repartition(math.min(nShards, P), col("shard"))
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n"), build(col("h")).as("bytes"))
-      .select(col("shard"), col("n"), col("bytes"))
-      .as[BloomShard]
-  }
-
-  /** Merge two same-sizing shard tables (≤2 rows per shard in, 1 out). */
-  def merge(a: Dataset[BloomShard], b: Dataset[BloomShard]): Dataset[BloomShard] = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    val mergeU = udaf(new BloomMergeAgg, Encoders.BINARY)
-    a.toDF().union(b.toDF())
-      .groupBy(col("shard"))
-      .agg(sum(col("n")).as("n"), mergeU(col("bytes")).as("bytes"))
-      .select(col("shard"), col("n"), col("bytes"))
-      .as[BloomShard]
-  }
-
-  /** Total keys inserted across shards (one tiny job over ≤nShards rows). */
-  def totalKeys(blooms: Dataset[BloomShard]): Long =
-    blooms.select(coalesce(sum(col("n")), lit(0L)))
-      .as(Encoders.scalaLong).first()
+  private def grow(shards: RDD[BloomShard], hashes: RDD[Long],
+      placement: ShardPlacement): RDD[BloomShard] =
+    hashes.map(h => (h, ())).partitionBy(placement).zipPartitions(shards) { (hs, olds) =>
+      val mine = olds.map(s => s.shard -> s.copy(bloom = deserialize(serialize(s.bloom)))).toMap
+      val added = new Array[Long](placement.nShards)
+      hs.foreach { case (h, _) =>
+        val s = shardOf(h, placement.nShards)
+        mine(s).bloom.putLong(h)
+        added(s) += 1
+      }
+      mine.valuesIterator.map(s => s.copy(keys = s.keys + added(s.shard)))
+    }
 }
 
 object UrlSeen {
@@ -232,21 +227,19 @@ object UrlSeen {
       preservesPartitioning = true)
   }
 
-  /** Sharded-regime probe: candidates meet the shard filter of their hash
-    * range in a cogroup — each task deserializes only ITS shards, so
-    * executor residency is O(shards/executor), never O(filter).
+  /** Sharded-regime probe: each candidate moves to the partition that
+    * holds its shard (no move when they are placed there already) and is
+    * probed there; the shards stay where they are, so executor residency is
+    * O(shards/executor), never O(filter).
     */
-  def flagSharded(candidates: RDD[(Long, InternalRow)], blooms: Dataset[BloomShard],
-      nShards: Int): RDD[Flagged] = {
-    val shards = GraftRows.rows(blooms.toDF())
-      .map(r => (r.getInt(0), r.getBinary(2)))
-    candidates.map { case (h, r) => (BloomTable.shardOf(h, nShards), (h, r)) }
-      .cogroup(shards)
-      .flatMap { case (_, (cands, bytes)) =>
-        val bf = bytes.map(BloomTable.deserialize).reduceOption { (x, y) => x.mergeInPlace(y); x }
-        cands.iterator.map { case (h, r) => (h, (r, bf.exists(_.mightContainLong(h)))) }
-      }
-  }
+  def flagSharded(candidates: RDD[(Long, InternalRow)], shards: RDD[BloomShard],
+      placement: ShardPlacement): RDD[Flagged] =
+    candidates.partitionBy(placement).zipPartitions(shards, preservesPartitioning = true) {
+      (cands, own) =>
+        val bloom = own.map(s => s.shard -> s.bloom).toMap
+        cands.map { case (h, r) =>
+          (h, (r, bloom(BloomTable.shardOf(h, placement.nShards)).mightContainLong(h))) }
+    }
 
   /** The rows of `flagged` whose key is NOT in the seen set — exactly.
     * Bloom-negative rows are definitely unseen and skip the check; the
@@ -282,15 +275,24 @@ object UrlSeen {
   def filterUnseen(candidates: DataFrame, seen: DataFrame, bloom: PartitionedBloom): DataFrame =
     viaRows(candidates, seen)(flag(_, bloom))
 
-  /** DataFrame form of the sharded-regime filter (see [[filterUnseen]]). */
-  def filterUnseenSharded(candidates: DataFrame, seen: DataFrame,
-      blooms: Dataset[BloomShard], nShards: Int): DataFrame =
-    viaRows(candidates, seen)(flagSharded(_, blooms, nShards))
+  /** DataFrame form of the sharded-regime filter (see [[filterUnseen]]):
+    * the shards are built from `seen` for this query and not stored.
+    */
+  def filterUnseenSharded(candidates: DataFrame, seen: DataFrame, nShards: Int,
+      expectedTotal: Long, fpp: Double): DataFrame = {
+    val placement = BloomTable.placement(nShards, shufflePartitions(candidates))
+    val shards = BloomTable.build(GraftRows.rows(seen.select(col("url_hash"))).map(_.getLong(0)),
+      placement, expectedTotal, fpp)
+    viaRows(candidates, seen)(flagSharded(_, shards, placement))
+  }
+
+  private def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
   private def viaRows(candidates: DataFrame, seen: DataFrame)(
       probe: RDD[(Long, InternalRow)] => RDD[Flagged]): DataFrame = {
     val spark = candidates.sparkSession
-    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val part = new HashPartitioner(shufflePartitions(candidates))
     val at = candidates.schema.fieldIndex("url_hash")
     val cands = GraftRows.rows(candidates).map(r => (r.getLong(at), r.copy()))
     val seenRows = GraftRows.rows(seen.select(col("url_hash"))).map(r => (r.getLong(0), r.copy()))

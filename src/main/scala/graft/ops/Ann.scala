@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * corpus once, probe only the query's bucket — at 10^10 vectors the bucket
   * join touches 1/2^planes of the data per probe).
   *
-  * Dot products are `zip_with` + `aggregate` HOFs (codegen'd, no UDF).
+  * The LSH bucket and the cosine bind the native vector expressions
+  * ([[graft.functions.VectorExprs]]) directly, so they need no optimizer
+  * rule; [[dot]] and [[cosineHof]] are the `zip_with` + `aggregate` HOF forms
+  * they replace, kept as the parity cross-checks.
   */
 object Ann {
 
@@ -75,11 +78,13 @@ object Ann {
       (math.abs(z % 2000L).toDouble - 1000.0) / 1000.0
     }
 
-  /** Random-hyperplane LSH bucket id (sign-bit signature over `planes`). */
+  /** Random-hyperplane LSH bucket id (sign-bit signature over `planes`),
+    * from the native dot product: bit-identical to the HOF [[dot]].
+    */
   def lshBucket(v: Column, planes: Int, dims: Int): Column =
     (0 until planes).map { p =>
       val plane = array(hyperplane(p, dims).map(lit): _*)
-      when(dot(v, plane) > 0, shiftleft(lit(1L), p)).otherwise(0L)
+      when(graft.functions.VectorExprs.dot(v, plane) > 0, shiftleft(lit(1L), p)).otherwise(0L)
     }.reduce((a, b) => a.bitwiseOR(b))
 
   /** Embedding dimensionality of the driver's `embeddings` table. */

@@ -10,8 +10,8 @@ import graft.synth.SyntheticSite.{Seed, SiteConfig}
 /** Frontier dynamics beyond the reference scenario: depth-2 crawls where
   * profile pages link back to the index and to collaborators — every such
   * candidate is a duplicate, so the Bloom+anti-join dedup is exercised by
-  * the engine itself (not just unit-level); plus skewed hosts with salted
-  * selection, robots deny enforcement, and retry behavior.
+  * the engine itself (not just unit-level); plus a hot host's selection,
+  * robots deny enforcement, and retry behavior.
   */
 class CrawlDepth2Spec extends SparkSpec {
 
@@ -50,26 +50,21 @@ class CrawlDepth2Spec extends SparkSpec {
     r.release()
   }
 
-  test("skewed hosts: salted selection keeps per-host order and budgets exact") {
-    // one host with 40 faculty, three with 3 — the hot-host shape salting defuses
-    val hot  = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 40)
-    val cold = SiteConfig(universities = 3, deptsPerU = 1, facultyPerDept = 3)
-    // build a combined seed list over one synthetic universe: reuse cfg with
-    // per-host faculty via two separate configs is not expressible, so model
-    // skew with budget: big budget + salt over the single hot host
+  test("hot host: selection keeps per-host order and budgets exact") {
+    // one host with 40 faculty and a budget of 7 per wave: the selector's
+    // bounded per-host heap takes the host's top 7 of up to 40 pending rows
+    val hot     = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 40)
     val seeds   = SyntheticSite.seeds(hot)
     val fetcher = SyntheticSite.fetcher(hot)
     val oracle  = graft.oracle.SequentialOracle.run(seeds, fetcher)
-    val engine  = WaveRunner.run(spark, seeds, fetcher, Nil,
-      CrawlConfig(waveSeconds = 7.0, saltShards = 8, selector = "window"))
+    val engine  = WaveRunner.run(spark, seeds, fetcher, Nil, CrawlConfig(waveSeconds = 7.0))
     val got = engine.crawlOrder.orderBy("seq").collect()
       .map(r => (r.getAs[String]("host"), r.getAs[String]("url"))).toVector
-    assert(got === oracle.crawlOrder, "salted skew path must preserve exact order")
+    assert(got === oracle.crawlOrder, "hot-host selection must preserve exact order")
     // politeness: per wave, per host, fetch count ≤ budget (7/wave at 1s delay)
     val perWaveHost = engine.crawlOrder.groupBy("wave", "host").count()
       .collect().map(_.getLong(2))
     assert(perWaveHost.forall(_ <= 7L))
-    assert(cold.universities === 3) // (cold config documents the intended shape)
   }
 
   test("robots deny prefixes keep URLs out of the crawl; crawl_delay scales budget") {

@@ -49,9 +49,9 @@ class CrawlOracleSpec extends SparkSpec {
   }
 
   test("forced shard-local bloom residency: ordering, seen, records unchanged") {
-    // bloomBroadcastMaxBytes = 0 forces the Dataset[BloomShard] cogroup path
-    // (the 10^10 residency) through the FULL engine — exactness must hold
-    // identically to the broadcast regime
+    // bloomBroadcastMaxBytes = 0 forces the sharded Bloom (shard rows on the
+    // executors, the 10^10 residency) through the FULL engine — exactness
+    // must hold identically to the broadcast regime
     val site = SiteConfig(universities = 2, deptsPerU = 2, facultyPerDept = 5,
       errorFraction = 0.2)
     val (seeds, oracle, engine) =
@@ -120,19 +120,13 @@ class CrawlOracleSpec extends SparkSpec {
     assert(engine.waves === 3)
   }
 
-  test("salted selection (skew path) leaves ordering and state unchanged") {
+  test("single host, 3 per wave: ordering, seen set and records match exactly") {
     val site = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 9)
-    val (seeds, oracle, engine) =
-      runBoth(site, CrawlConfig(waveSeconds = 3.0, saltShards = 4, selector = "window"))
-    assert(engineOrder(engine) === {
-      // oracle order regrouped to the engine's wave-major commit order:
-      // per-host sequences are the invariant; single host ⇒ identical
-      oracle.crawlOrder
-    })
+    val (seeds, oracle, engine) = runBoth(site, CrawlConfig(waveSeconds = 3.0))
+    // per-host sequences are the invariant; single host ⇒ identical global order
+    assert(engineOrder(engine) === oracle.crawlOrder)
     assert(engine.seen.collect().map(_.getAs[String]("url")).toSet === oracle.seen)
     assert(engineRecords(spark, engine, seeds) === oracle.records)
-    // "native" and "window" are the only selectors
-    intercept[IllegalArgumentException](CrawlConfig(selector = "agg"))
   }
 
   // The leaf-wave rule: a wave with no fetched page below maxDepth skips

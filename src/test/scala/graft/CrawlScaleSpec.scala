@@ -32,12 +32,17 @@ import java.util.concurrent.atomic.AtomicLong
   */
 class CrawlScaleSpec extends SparkSpec {
 
-  private def shuffleRecordsOf(body: => WaveRunner.CrawlResult): Long = {
+  private def shuffleRecordsOf(body: => WaveRunner.CrawlResult): Long =
+    shuffleWritten(_.recordsWritten)(body)
+
+  /** `metric` of the shuffle writes of the tasks `body` runs, summed. */
+  private def shuffleWritten(metric: org.apache.spark.executor.ShuffleWriteMetrics => Long)(
+      body: => WaveRunner.CrawlResult): Long = {
     val acc = new AtomicLong(0L)
     val listener = new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics
-        if (m != null) { acc.addAndGet(m.shuffleWriteMetrics.recordsWritten); () }
+        if (m != null) { acc.addAndGet(metric(m.shuffleWriteMetrics)); () }
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -76,6 +81,23 @@ class CrawlScaleSpec extends SparkSpec {
     assert(diff < 8L * extraDiscoveries,
       s"per-wave shuffle grew with frontier size: small=$small big=$big diff=$diff")
     assert(small > 0L, "listener must observe shuffle activity")
+  }
+
+  test("sharded Bloom: a crawl's shuffle bytes do not grow with the filter's sizing") {
+    // the sharded filter's new keys and probes move to the shards, never the
+    // shards to them: a 16x larger filter must not add to the shuffle
+    val site  = SiteConfig(universities = 2, deptsPerU = 2, facultyPerDept = 6)
+    val seeds = SyntheticSite.seeds(site)
+    def crawl(bloomExpected: Long): Long = shuffleWritten(_.bytesWritten) {
+      WaveRunner.run(spark, seeds, SyntheticSite.fetcher(site), Nil,
+        CrawlConfig(maxDepth = 2, waveSeconds = 2.0, bloomBroadcastMaxBytes = 0L,
+          bloomExpected = bloomExpected))
+    }
+    val small = crawl(1L << 20)
+    val big   = crawl(1L << 24)
+    assert(small > 0L, "listener must observe shuffle activity")
+    assert(big - small <= (32L << 10),
+      s"shuffle bytes grew with bloomExpected: 2^20 wrote $small, 2^24 wrote $big")
   }
 
   private def stateOf(r: WaveRunner.CrawlResult) = {
@@ -182,20 +204,25 @@ class CrawlScaleSpec extends SparkSpec {
     // loader, so a whole-stage stage takes two entries (plan-time
     // check compile + task compile). After a 1-university crawl with its records and
     // order, a 2-university crawl of the same shape — robots delays,
-    // compaction, index + profile waves — must find every class cached.
-    def crawlWithRecordsAndOrder(universities: Int): Unit = {
-      val (seeds, fetcher, rules, cfg) = BenchShape(universities)
-      val r = WaveRunner.run(spark, seeds, fetcher, rules, cfg)
-      graft.crawl.Records.facultyRecords(spark, r.docs, seeds)
-        .write.format("noop").mode("overwrite").save()
-      assert(r.crawlOrder.collect().length.toLong === r.fetches)
-      r.release()
+    // compaction, index + profile waves — must find every class cached, in
+    // both URL-seen Bloom regimes.
+    for (sharded <- Seq(false, true)) {
+      def crawlWithRecordsAndOrder(universities: Int): Unit = {
+        val (seeds, fetcher, rules, shape) = BenchShape(universities)
+        val cfg = if (sharded) shape.copy(bloomBroadcastMaxBytes = 0L) else shape
+        val r = WaveRunner.run(spark, seeds, fetcher, rules, cfg)
+        graft.crawl.Records.facultyRecords(spark, r.docs, seeds)
+          .write.format("noop").mode("overwrite").save()
+        assert(r.crawlOrder.collect().length.toLong === r.fetches)
+        r.release()
+      }
+      crawlWithRecordsAndOrder(1)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      crawlWithRecordsAndOrder(2)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled === 0L, s"sharded = $sharded: the 2-university crawl compiled " +
+        s"$compiled classes")
     }
-    crawlWithRecordsAndOrder(1)
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    crawlWithRecordsAndOrder(2)
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    assert(compiled === 0L, s"the 2-university crawl compiled $compiled classes")
   }
 }
 

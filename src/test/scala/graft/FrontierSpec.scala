@@ -1,17 +1,46 @@
 package graft
 
-import graft.frontier.{BloomTable, PartitionedBloom, Robots, UrlSeen, WaveSelector}
+import graft.frontier.{BloomTable, PartitionedBloom, Robots, TopKSelectNative, UrlSeen}
 import graft.model.RobotsRule
+import org.apache.spark.sql.{DataFrame, GraftRows}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import GenHelper.samples
 
 /** Frontier-machinery invariants (SURVEY §5.2 #4): Bloom never drops a truly
-  * unseen URL, salted selection preserves exact per-host top-k, robots deny
+  * unseen URL, batch selection is the exact per-host top-k, robots deny
   * prefixes and budgets apply.
   */
 class FrontierSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Frontier rows (host, priority, urlHash) with every column the batch
+    * selector reads; discoveredRank = urlHash.
+    */
+  private def frontier(rows: Seq[(String, Double, Long)], budget: Long): DataFrame =
+    rows.toDF("host", "priority", "urlHash")
+      .withColumn("discoveredWave", lit(0))
+      .withColumn("discoveredRank", col("urlHash"))
+      .withColumn("url", concat(lit("u"), col("urlHash")))
+      .withColumn("depth", lit(1))
+      .withColumn("retries", lit(0))
+      .withColumn("parentUrl", lit(""))
+      .withColumn("budget", lit(budget))
+
+  private def selected(df: DataFrame): Set[(String, Long, Long)] =
+    TopKSelectNative.select(df).select("host", "host_rank", "urlHash")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+
+  /** The per-host top-`budget` of `rows` restated in Scala: priority desc,
+    * then urlHash asc (the frontier order when wave and rank tie with it).
+    */
+  private def topK(rows: Seq[(String, Double, Long)], budget: Int): Set[(String, Long, Long)] =
+    rows.groupBy(_._1).flatMap { case (h, rs) =>
+      rs.sortBy(r => (-r._2, r._3)).take(budget).zipWithIndex
+        .map { case (r, i) => (h, i.toLong, r._3) }
+    }.toSet
+
+  private def hashRows(keys: Seq[Long]) = GraftRows.rows(keys.toDF("url_hash"))
 
   test("property: Bloom pre-filter + exact anti-join never drops an unseen key") {
     val gen = for {
@@ -32,8 +61,8 @@ class FrontierSpec extends SparkSpec {
   }
 
   test("property: sharded Bloom table probe never drops an unseen key") {
-    // same exactness contract as the broadcast variant, via the distributed
-    // BloomTable path the crawl engine uses (shard-local residency)
+    // same exactness contract as the broadcast variant, via the shard rows
+    // the crawl engine uses in the sharded regime (shard-local residency)
     val gen = for {
       seenKeys <- Gen.listOf(Gen.chooseNum(-5000L, 5000L)).map(_.distinct)
       candKeys <- Gen.nonEmptyListOf(Gen.chooseNum(-5000L, 5000L)).map(_.distinct)
@@ -42,32 +71,33 @@ class FrontierSpec extends SparkSpec {
       val seen = seenKeys.toDF("url_hash")
       val cand = candKeys.toDF("url_hash")
       // tiny expectedTotal forces a high FP rate → exercises the rescue path;
-      // empty seen exercises the missing-shard (no bloom) fast path
-      val blooms = BloomTable.fromHashes(seen, nShards = 4, expectedTotal = 64, fpp = 0.5)
-      val got = UrlSeen.filterUnseenSharded(cand, seen, blooms, nShards = 4)
-        .collect().map(_.getLong(0)).toSet
+      // empty seen exercises the empty-shard fast path
+      val got = UrlSeen.filterUnseenSharded(cand, seen, nShards = 4, expectedTotal = 64,
+        fpp = 0.5).collect().map(_.getLong(0)).toSet
       assert(got === (candKeys.toSet -- seenKeys.toSet))
     }
   }
 
   test("bloom table: distributed build+merge has no false negatives; counts sum") {
-    val a = BloomTable.fromHashes((0L until 600L).toDF("url_hash"),
-      nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
-    val b = BloomTable.fromHashes((600L until 1000L).toDF("url_hash"),
-      nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
-    val merged = BloomTable.merge(a, b)
-    assert(BloomTable.totalKeys(merged) === 1000L)
-    // every inserted key must hit its own shard after the distributed merge
-    val shards = merged.collect().map(s => s.shard ->
-      org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(s.bytes))).toMap
+    // a build, then a second put grown into the stored shards where they live
+    val table = new BloomTable(spark.sparkContext, nShards = 16, expectedTotal = 1 << 14,
+      fpp = 0.01, numPartitions = 8)
+    assert(table.putHashes(hashRows(0L until 600L), 0) === 600L)
+    assert(table.putHashes(hashRows(600L until 1000L), 0) === 400L)
+    assert(table.size === 1000L)
+    val shards = table.shards.collect()
+    assert(shards.map(_.keys).sum === 1000L)
+    assert(shards.map(_.shard).sorted.toSeq === (0 until 16))
+    // every inserted key must hit its own shard
+    val byShard = shards.map(s => s.shard -> s.bloom).toMap
     (0L until 1000L).foreach { k =>
       val sh = BloomTable.shardOf(k, 16)
-      assert(shards(sh).mightContainLong(k), s"false negative for $k in shard $sh")
+      assert(byShard(sh).mightContainLong(k), s"false negative for $k in shard $sh")
     }
+    table.shards.unpersist()
   }
 
-  test("salted selection == unsalted selection == exact per-host top-k") {
+  test("native selection == exact per-host top-k restated in Scala") {
     val gen = for {
       n <- Gen.chooseNum(1, 300)
       rows <- Gen.listOfN(n, for {
@@ -77,30 +107,7 @@ class FrontierSpec extends SparkSpec {
       } yield (host, pri, id))
     } yield rows.distinctBy(_._3)
     samples(gen, 8).foreach { rows =>
-      val df = rows.toDF("host", "priority", "urlHash")
-        .withColumn("discoveredWave", lit(0))
-        .withColumn("discoveredRank", col("urlHash"))
-        .withColumn("url", concat(lit("u"), col("urlHash")))
-        .withColumn("depth", lit(1))
-        .withColumn("retries", lit(0))
-        .withColumn("parentUrl", lit(""))
-        .withColumn("budget", lit(4L))
-      def sel(s: Int) = WaveSelector.select(df, s)
-        .select("host", "host_rank", "urlHash")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      val expected = rows.groupBy(_._1).flatMap { case (h, rs) =>
-        rs.sortBy(r => (-r._2, r._3, r._3)).take(4).zipWithIndex
-          .map { case (r, i) => (h, i.toLong, r._3) }
-      }.toSet
-      assert(sel(1) === expected)
-      assert(sel(4) === expected, "salted two-stage selection must be exact")
-      assert(sel(16) === expected)
-      // the native TypedImperativeAggregate selector (the crawl-engine
-      // default) must be exact-equal too
-      val nat = graft.frontier.TopKSelectNative.select(df)
-        .select("host", "host_rank", "urlHash")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(nat === expected, "native top-k selection must be exact")
+      assert(selected(frontier(rows, 4L)) === topK(rows, 4), "native top-k selection must be exact")
     }
   }
 
@@ -108,27 +115,10 @@ class FrontierSpec extends SparkSpec {
     // the distributed bounded-heap top-k must not depend on row arrival
     // order or partition layout (its tiebreak order is total via urlHash)
     val rows = (1 to 400).map(i => (s"h${i % 5}", (i % 13).toDouble, i.toLong))
-    def df(seed: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = seed(rows.toDF("host", "priority", "urlHash"))
-      .withColumn("discoveredWave", lit(0))
-      .withColumn("discoveredRank", col("urlHash"))
-      .withColumn("url", concat(lit("u"), col("urlHash")))
-      .withColumn("depth", lit(1))
-      .withColumn("retries", lit(0))
-      .withColumn("parentUrl", lit(""))
-      .withColumn("budget", lit(6L))
-    def sel(d: org.apache.spark.sql.DataFrame) =
-      graft.frontier.TopKSelectNative.select(d)
-        .select("host", "host_rank", "urlHash")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val a = sel(df(identity))
-    val b = sel(df(_.orderBy(col("urlHash").desc).repartition(7)))
-    val c = sel(df(_.repartition(3, col("priority"))))
-    assert(a === b)
-    assert(a === c)
-    // and the window selector agrees on the same input
-    assert(WaveSelector.select(df(identity))
-      .select("host", "host_rank", "urlHash")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet === a)
+    val a = selected(frontier(rows, 6L))
+    assert(selected(frontier(rows, 6L).orderBy(col("urlHash").desc).repartition(7)) === a)
+    assert(selected(frontier(rows, 6L).repartition(3, col("priority"))) === a)
+    assert(a === topK(rows, 6))
   }
 
   test("native buffer: split + serialize round-trip + merge equals sorted top-k") {
@@ -210,12 +200,7 @@ class FrontierSpec extends SparkSpec {
 
   test("per-host per-wave budget is never exceeded (politeness invariant)") {
     val rows = (1 to 500).map(i => (s"h${i % 3}", i.toDouble, i.toLong))
-    val df = rows.toDF("host", "priority", "urlHash")
-      .withColumn("discoveredWave", lit(0))
-      .withColumn("discoveredRank", col("urlHash"))
-      .withColumn("url", concat(lit("u"), col("urlHash")))
-      .withColumn("budget", lit(7L))
-    val counts = WaveSelector.select(df, 4).groupBy("host").count()
+    val counts = TopKSelectNative.select(frontier(rows, 7L)).groupBy("host").count()
       .collect().map(_.getLong(1))
     assert(counts.forall(_ <= 7L))
     assert(counts.length === 3)
@@ -351,34 +336,49 @@ class FrontierSpec extends SparkSpec {
   }
 
   test("broadcast Bloom: a wave whose new keys exceed the filter's sizing throws") {
-    // one index page that links 24 profiles; the filter is sized for 8 keys
+    // one index page that links 24 profiles; the filter is sized for 8 keys,
+    // in the broadcast and in the sharded regime
     val site = graft.synth.SyntheticSite.SiteConfig(universities = 1, deptsPerU = 1,
       facultyPerDept = 24)
-    val cfg = graft.crawl.WaveRunner.CrawlConfig(bloomExpected = 8L)
-    assert(cfg.bloomBroadcastable)
-    val e = intercept[Exception] {
-      graft.crawl.WaveRunner.run(spark, graft.synth.SyntheticSite.seeds(site),
-        graft.synth.SyntheticSite.fetcher(site), Nil, cfg)
+    for (maxBytes <- Seq(graft.crawl.WaveRunner.CrawlConfig().bloomBroadcastMaxBytes, 0L)) {
+      val cfg = graft.crawl.WaveRunner.CrawlConfig(bloomExpected = 8L,
+        bloomBroadcastMaxBytes = maxBytes)
+      assert(cfg.bloomBroadcastable === (maxBytes > 0L))
+      val e = intercept[Exception] {
+        graft.crawl.WaveRunner.run(spark, graft.synth.SyntheticSite.seeds(site),
+          graft.synth.SyntheticSite.fetcher(site), Nil, cfg)
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage.contains("sized for 8 keys")), s"bloomBroadcastMaxBytes=$maxBytes: $e")
     }
-    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
-      c.getMessage.contains("sized for 8 keys")), e.toString)
     // all or none: a put that does not fit leaves the filter as it was
     val pb = PartitionedBloom.empty(nShards = 4, expectedTotal = 100, fpp = 0.01)
     pb.putAll((0L until 60L).toArray)
     intercept[IllegalStateException](pb.putAll((60L until 120L).toArray))
     assert(pb.size === 60L)
+    val table = new BloomTable(spark.sparkContext, nShards = 4, expectedTotal = 100,
+      fpp = 0.01, numPartitions = 2)
+    table.putHashes(hashRows(0L until 60L), 0)
+    val stored = table.shards
+    intercept[IllegalStateException](table.putHashes(hashRows(60L until 120L), 0))
+    assert(table.size === 60L && (table.shards eq stored))
+    assert(table.shards.map(_.keys).sum().toLong === 60L)
+    table.shards.unpersist()
   }
 
   test("partitioned bloom: shard merge and scaling math hold") {
     // the driver put of collected hashes (every broadcast-regime wave, and
-    // resume) and the distributed BloomTable build of the same keys (the
-    // sharded regime) must give bit-identical shards and the same key count
+    // resume) and the shard rows built from the same keys (the sharded
+    // regime) must give bit-identical shards and the same key count
     val keys = (-500L until 500L).map(_ * 0x9E3779B97F4A7C15L)
     val put = PartitionedBloom.empty(nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
-    val n = put.putHashes(keys.toDF("url_hash").repartition(4))
-    val table = BloomTable.fromHashes(keys.toDF("url_hash"),
-      nShards = 16, expectedTotal = 1 << 14, fpp = 0.01).collect().sortBy(_.shard)
+    val n = put.putHashes(GraftRows.rows(keys.toDF("url_hash").repartition(4)), 0)
+    val sharded = new BloomTable(spark.sparkContext, nShards = 16, expectedTotal = 1 << 14,
+      fpp = 0.01, numPartitions = 8)
+    assert(sharded.putHashes(hashRows(keys), 0) === n)
+    val table = sharded.shards.collect().sortBy(_.shard)
+    sharded.shards.unpersist()
     def bytes(bf: org.apache.spark.util.sketch.BloomFilter): Seq[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
@@ -386,9 +386,9 @@ class FrontierSpec extends SparkSpec {
     }
     assert(n === keys.size.toLong)
     assert(put.size === keys.size.toLong)
-    assert(table.map(_.n).sum === n)
+    assert(table.map(_.keys).sum === n)
     assert(table.map(_.shard).toSeq === (0 until 16))
-    assert(table.map(_.bytes.toSeq).toSeq === put.shards.map(bytes).toSeq)
+    assert(table.map(s => bytes(s.bloom)).toSeq === put.shards.map(bytes).toSeq)
     keys.foreach(k => assert(put.mightContain(k)))
     // a copy probes the same bits and does not see later puts
     val copy = put.copy()

@@ -312,6 +312,21 @@ class OpsSpec extends SparkSpec {
     assert(part.head.getAs[Double]("cos") === 1.0)
   }
 
+  test("LSH bucket ids from the native dot equal the HOF form's") {
+    // lshBucket binds VectorExprs.dot itself, so it needs no optimizer
+    // rule; this session has none, so the HOF form below stays a HOF
+    val planes = 8
+    val v = col("embedding").cast("array<double>")
+    val hof = (0 until planes).map { p =>
+      val plane = array(Ann.hyperplane(p, Ann.Dims).toIndexedSeq.map(lit): _*)
+      when(Ann.dot(v, plane) > 0, shiftleft(lit(1L), p)).otherwise(0L)
+    }.reduce((a, b) => a.bitwiseOR(b))
+    val got = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(Ann.lshBucket(v, planes, Ann.Dims), hof).collect()
+    assert(got.nonEmpty && got.forall(r => r.getLong(0) == r.getLong(1)))
+    assert(got.map(_.getLong(0)).distinct.length > 1, "buckets must vary")
+  }
+
   test("LSH ANN: single probe stays in the query bucket; full probe == exact; multi-probe recall bound") {
     val planes = 6
     // single probe: the query's own bucket only (contains the query itself)
@@ -760,9 +775,12 @@ class OpsSpec extends SparkSpec {
       .withColumn("retries", lit(0))
       .withColumn("parentUrl", lit(""))
       .withColumn("budget", lit(3L))
-    def sel(d: DataFrame) = d.select("host", "host_rank", "urlHash").collect().toSet
-    assert(sel(graft.frontier.TopKSelectNative.select(frontier)) ===
-      sel(graft.frontier.WaveSelector.select(frontier)))
+    val topK = (1 to 60).groupBy(i => s"h${i % 4}").toSeq.flatMap { case (h, is) =>
+      is.sortBy(i => (-(i % 7), i)).take(3).zipWithIndex
+        .map { case (i, r) => org.apache.spark.sql.Row(h, r.toLong, i.toLong) }
+    }.toSet
+    assert(graft.frontier.TopKSelectNative.select(frontier)
+      .select("host", "host_rank", "urlHash").collect().toSet === topK)
 
     // a whole dedup query runs there and registers nothing
     assert(SparkEntry.queries("q_minhash_lsh")(ns, sf).count() >= 0L)
