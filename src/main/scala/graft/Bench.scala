@@ -26,7 +26,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private val headline = Seq(
+  /** The headline queries, timed in this order (BenchExtra's default set). */
+  private[graft] val headline = Seq(
     "q_flagship_agg", "q_agg_lineitem", "q_topk_revenue", "q_window_rank",
     "q_semi_anti", "q_tfidf_cosine", "q_minhash_lsh", "q_cosine_topk",
     "q_dedup_exact", "q_token_stats", "q_quality_score", "q_events_window",
@@ -69,13 +70,7 @@ object Bench {
     * engine. N=2 vs 4N=8 cores: this box thread-scales cleanly in that range
     * (no SMT; pure-CPU probe 0.93+ at 2→8 but 0.73 at 8→32).
     */
-  // GRAFT_BENCH_UNIS/GRAFT_BENCH_FACULTY shrink the corpus for smoke-testing
-  // the bench harness itself (pair validity, retries, JSON shape) without
-  // the full ~20-minute protocol; unset = the recorded protocol corpus.
-  private val benchSite = SiteConfig(
-    universities = sys.env.getOrElse("GRAFT_BENCH_UNIS", "768").toInt,
-    deptsPerU = 2,
-    facultyPerDept = sys.env.getOrElse("GRAFT_BENCH_FACULTY", "288").toInt,
+  private val benchSite = SiteConfig(universities = 768, deptsPerU = 2, facultyPerDept = 288,
     errorFraction = 0.05, pubsPerFaculty = 12, bioWords = 250)
   private val benchCrawl = CrawlConfig(waveSeconds = 320.0)
   private val coresAvailable = Runtime.getRuntime.availableProcessors
@@ -229,6 +224,25 @@ object Bench {
     run(n) / run(n4) / (n4.toDouble / n)
   }
 
+  /** Warmup: one cheap representative query per TABLE FAMILY, so session,
+    * codegen/JIT, and parquet-footer first-touch costs stay out of every
+    * query's timing — not just the lineitem family's. (Protocol note,
+    * bench_schema 3: rounds 1-2 warmed only q_agg_lineitem, so whichever
+    * query FIRST touched `documents` absorbed the corpus tokenizer's
+    * multi-second JIT — in both rounds that was q_tfidf_cosine, inflating
+    * its recorded time by ~3-5 s vs its warmed cost. BENCH.md reports both
+    * warmed and solo-cold numbers for it alongside the recorded one.)
+    */
+  private[graft] def warm(spark: SparkSession, sfDir: String): Unit =
+    Seq("q_agg_lineitem",   // lineitem/orders family
+        "q_token_stats",    // documents family + tokenizer codegen
+        "q_cosine_topk",    // embeddings family + vector HOFs
+        "q_events_window")  // events family
+      .foreach { w =>
+        SparkEntry.queries(w)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
+      }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -239,22 +253,7 @@ object Bench {
     // (round count, max label multiplicity, salt activation — r4 verdict #4)
     sys.props("graft.cc.debug") = "1"
     val spark = session(cpus, s"graft-bench-$cpus")
-    // Warmup: one cheap representative query per TABLE FAMILY, so session,
-    // codegen/JIT, and parquet-footer first-touch costs stay out of every
-    // query's timing — not just the lineitem family's. (Protocol note,
-    // bench_schema 3: rounds 1-2 warmed only q_agg_lineitem, so whichever
-    // query FIRST touched `documents` absorbed the corpus tokenizer's
-    // multi-second JIT — in both rounds that was q_tfidf_cosine, inflating
-    // its recorded time by ~3-5 s vs its warmed cost. BENCH.md reports both
-    // warmed and solo-cold numbers for it alongside the recorded one.)
-    Seq("q_agg_lineitem",   // lineitem/orders family
-        "q_token_stats",    // documents family + tokenizer codegen
-        "q_cosine_topk",    // embeddings family + vector HOFs
-        "q_events_window")  // events family
-      .foreach { w =>
-        SparkEntry.queries(w)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
+    warm(spark, sfDir)
     val results = (if (crawlOnly) Seq.empty[String] else headline).map { name =>
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
@@ -397,10 +396,7 @@ object Bench {
     // free, so the volume channel — what costs network on a real cluster —
     // is where the O(hosts×budget) bound shows.
     val selEnv = skipCeil + ("GRAFT_MAX_WAVES" -> "20")
-    // GRAFT_BENCH_SELHOSTS shrinks the selection corpus for harness smoke
-    // tests (same role as GRAFT_BENCH_UNIS for the scaling corpus)
-    val selHosts = sys.env.getOrElse("GRAFT_BENCH_SELHOSTS", "256").toInt
-    def selSite(f: Int) = SiteConfig(universities = selHosts, deptsPerU = 1,
+    def selSite(f: Int) = SiteConfig(universities = 256, deptsPerU = 1,
       facultyPerDept = f, errorFraction = 0.0, pubsPerFaculty = 2, bioWords = 40)
     def selRun(f: Int): ChildResult =
       crawlRate(n4Cores, selEnv, site = selSite(f), waveSeconds = 8.0)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-6 measurement harness (guide §1: measure first, noop sink, labeled
   * jobs) — SEPARATE from the frozen [[Bench]] protocol. Times a chosen set of
   * SparkEntry queries solo, best/median of `reps`, with the exact session
@@ -15,31 +13,9 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchExtra {
 
-  /** The bench headline set, kept in sync with [[Bench.headline]] by the
-    * round-6 measurement notes (Bench itself is frozen; this list is only a
-    * default for the dev harness).
-    */
-  val headline = Seq(
-    "q_flagship_agg", "q_agg_lineitem", "q_topk_revenue", "q_window_rank",
-    "q_semi_anti", "q_tfidf_cosine", "q_minhash_lsh", "q_cosine_topk",
-    "q_dedup_exact", "q_token_stats", "q_quality_score", "q_events_window",
-    "q_text_search", "q_corpus_prep",
-    "q_dup_clusters", "q_dup_clusters_lsh", "q_simhash_pairs",
-    "q_redact_pii", "q_sample_stratified", "q_pack_sequences",
-    "q_length_stats",
-    "q_kmeans_clusters", "q_semantic_neardup", "q_chunk_dedup",
-    "q_boilerplate_grams")
-
-  def warm(spark: SparkSession, sfDir: String): Unit =
-    Seq("q_agg_lineitem", "q_token_stats", "q_cosine_topk", "q_events_window")
-      .foreach { w =>
-        SparkEntry.queries(w)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-
   def main(args: Array[String]): Unit = {
     val names =
-      if (args.isEmpty || args(0) == "all") headline else args(0).split(",").toSeq
+      if (args.isEmpty || args(0) == "all") Bench.headline else args(0).split(",").toSeq
     val reps  = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -75,7 +51,7 @@ object BenchExtra {
         if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
       }
     })
-    warm(spark, sfDir)
+    Bench.warm(spark, sfDir)
     val samples = names.map { name =>
       val fn = SparkEntry.queries(name)
       val ts = (1 to reps).map { i =>

@@ -18,7 +18,7 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names =
-      if (args.length < 3 || args(2) == "all") BenchExtra.headline
+      if (args.length < 3 || args(2) == "all") Bench.headline
       else args(2).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

@@ -172,7 +172,7 @@ object WaveRunner {
       * accumulate blocks until the block manager thrashes (measured: 2.6×
       * throughput loss on the second run).
       */
-    def release(): Unit = held.foreach(_.unpersist(blocking = false))
+    def release(): Unit = held.foreach(GraftRows.release)
   }
 
   private def seedEntriesOf(seeds: Seq[Seed]): Seq[FrontierEntry] =
@@ -212,8 +212,8 @@ object WaveRunner {
 
   /** Resume a snapshot-mode crawl from its last committed wave: reconstruct
     * the frontier from the newest compacted base (or the seed rows) folded
-    * latest-wins with the per-wave frontier deltas after it, restore seen
-    * from its deltas, rebuild the Bloom (fixed sizing ⇒ identical shape),
+    * latest-wins with the per-wave frontier deltas after it, take seen as
+    * its key set, rebuild the Bloom (fixed sizing ⇒ identical shape),
     * and run the remaining waves. Resuming a completed crawl is a no-op:
     * the restored frontier has no pending rows, so the loop commits nothing
     * new and returns the committed state.
@@ -225,7 +225,6 @@ object WaveRunner {
       rules: Seq[RobotsRule],
       cfg: CrawlConfig
   ): CrawlResult = {
-    import spark.implicits._
     val dir = cfg.snapshotDir.getOrElse(
       throw new IllegalArgumentException("resume requires cfg.snapshotDir"))
     val P     = shufflePartitions(spark)
@@ -243,11 +242,8 @@ object WaveRunner {
     val frontier0 = WaveSnapshots.frontierAsOf(store, seedRows, last)
     val basePending0 = frontier0.filter(col("status") === FrontierStatus.Pending)
     val doneDeltas0 = Seq(frontier0.filter(col("status") =!= FrontierStatus.Pending))
-
-    val seedSeen = seeds
-      .map { s => val u = Urls.normalize(s.url); (Urls.urlHash64(u), u) }
-      .toDF("url_hash", "url")
-    val seen0 = WaveSnapshots.seenAsOf(store, seedSeen, last)
+    // every URL ever enqueued is a frontier row: seen is the frontier's keys
+    val seen0 = frontier0.select(col("urlHash").as("url_hash"), col("url"))
     val whitelist = cfg.hostWhitelist.getOrElse(
       seeds.map(s => Urls.hostOf(Urls.normalize(s.url))).distinct)
     // resumed crawls don't know the restored pending-row count without an
@@ -304,8 +300,7 @@ object WaveRunner {
     }
     def drop(rdd: RDD[InternalRow]): Unit = {
       held.synchronized { held -= rdd }
-      rdd.unpersist(blocking = false)
-      ()
+      GraftRows.release(rdd)
     }
     // seen rows are placed by their url hash
     val byKey = new HashPartitioner(P)
@@ -606,15 +601,11 @@ object WaveRunner {
             r.getLong(7), r.getUTF8String(8))
         })
         val waveDelta = finished +: newRows.toSeq
-        // -- commit (G10): snapshot mode writes the wave's deltas durably
-        // before the state moves on (a committed wave's marker implies its
-        // seen/bloom state is durable+applied: the resume contract)
-        store.foreach { st =>
-          st.commitWave(wave, GraftRows.scan(spark, waveDelta, FrontierSchema),
-            GraftRows.scan(spark, newRows.toSeq, FrontierSchema)
-              .select(col("urlHash").as("url_hash"), col("url")),
-            docsOf(fetched), orderOf(fetched), fetchMetricsOf(fetched))
-        }
+        // -- commit (G10): snapshot mode writes the wave's frontier delta
+        // and fetch log durably before the state moves on (a committed
+        // wave's marker implies its seen/bloom state is durable+applied: the
+        // resume contract)
+        store.foreach(_.commitWave(wave, GraftRows.scan(spark, waveDelta, FrontierSchema), fetched))
         val nextDelta = phase("delta-ckpt", wave) {
           hold(sc.union(withoutKeys(deltaRdd, waveKeys) +: waveDelta).coalesce(P), eager = true)
         }
@@ -630,15 +621,13 @@ object WaveRunner {
       }
     }
 
-    // the fetch log: memory mode scans the fetched rows of every wave as ONE
-    // relation; snapshot mode reads every committed wave's files in one scan
+    // the fetch log, which docs, order and metrics project: memory mode
+    // scans the fetched rows of every wave as ONE relation; snapshot mode
+    // reads every committed wave's fetch table in one scan
     val allWaves = committedWaves ++ (startWave until wave)
-    val (docs, orderRaw, fetchAgg) = store match {
-      case Some(st) if allWaves.nonEmpty => (st.readDeltas(allWaves, "docs_delta"),
-        st.readDeltas(allWaves, "order_delta"), st.readDeltas(allWaves, "metrics_delta"))
-      case _ =>
-        val log = GraftRows.scan(spark, fetchedRdds.toSeq, FetchSchema)
-        (docsOf(log), orderOf(log), fetchMetricsOf(log))
+    val log = store match {
+      case Some(st) if allWaves.nonEmpty => st.readDeltas(allWaves, "fetch_delta")
+      case _ => GraftRows.scan(spark, fetchedRdds.toSeq, FetchSchema)
     }
     if (!bloomBroadcast) held += bloomTable.shards // released with the result
     val frontierFinal =
@@ -649,10 +638,10 @@ object WaveRunner {
     val enqueued = frontierFinal.filter(col("discoveredWave") > 0)
       .groupBy((col("discoveredWave") - 1).as("wave"))
       .agg(count(lit(1)).as("urlsEnqueued"))
-    val metrics = fetchAgg.join(enqueued, Seq("wave"), "left")
+    val metrics = fetchMetricsOf(log).join(enqueued, Seq("wave"), "left")
       .select(col("wave"), col("host"), col("fetched"), col("errors"), col("fetchMsTotal"),
         coalesce(col("urlsEnqueued"), lit(0L)).as("urlsEnqueued"))
-    CrawlResult(frontierFinal, seenFinal, docs, () => order(spark, orderRaw), metrics, wave,
+    CrawlResult(frontierFinal, seenFinal, docsOf(log), () => order(spark, log), metrics, wave,
       totalFetches, held.toSeq)
   }
 
@@ -704,9 +693,6 @@ object WaveRunner {
   private def docsOf(fetched: DataFrame): DataFrame = fetched.filter(col("ok"))
     .select(col("url"), col("urlHash"), col("host"), col("depth"), col("wave"), col("spans"))
 
-  private def orderOf(fetched: DataFrame): DataFrame =
-    fetched.select(col("wave"), col("host"), col("host_rank"), col("url"))
-
   private def fetchMetricsOf(fetched: DataFrame): DataFrame =
     fetched.groupBy(col("wave"), col("host")).agg(
       sum(when(col("ok"), 1L).otherwise(0L)).as("fetched"),
@@ -720,10 +706,10 @@ object WaveRunner {
     * to the driver and no unpartitioned window, and no plan to compile
     * beyond the scan of the log.
     */
-  private def order(spark: SparkSession, orderRaw: DataFrame): DataFrame = {
+  private def order(spark: SparkSession, log: DataFrame): DataFrame = {
     implicit val byKey: Ordering[(Int, UTF8String, Long)] = Ordering.Tuple3(
       Ordering.Int, (a: UTF8String, b: UTF8String) => a.compareTo(b), Ordering.Long)
-    val rows = GraftRows.rows(orderRaw.select(col("wave"), col("host"), col("host_rank"),
+    val rows = GraftRows.rows(log.select(col("wave"), col("host"), col("host_rank"),
       col("url"))).map(_.copy())
     val numbered = rows.sortBy(r => (r.getInt(0), r.getUTF8String(1), r.getLong(2)))
       .zipWithIndex().map { case (r, seq) =>

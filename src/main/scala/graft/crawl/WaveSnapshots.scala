@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * and fold the frontier deltas committed after it, each key taking its
   * newest delta row. Cost is O(base + deltas-since-base), never
   * O(waves × frontier) — compaction amortizes time travel exactly as it
-  * amortizes resume. The append-only states (seen, docs, order, metrics)
-  * are plain unions of their deltas up to the target wave.
+  * amortizes resume. The seen set is that frontier's key set, and docs,
+  * order and metrics are projections of the fetch log up to the target wave.
   */
 object WaveSnapshots {
 
@@ -59,22 +59,17 @@ object WaveSnapshots {
     }
   }
 
-  /** The URL-seen set as of committed `wave` (seed URLs + every seen delta
-    * through it) — append-only, so the fold is a plain union.
+  /** The URL-seen set as of committed `wave`: every URL ever enqueued is a
+    * frontier row, so the seen set is the frontier's key set.
     */
-  def seenAsOf(store: WaveStore, seedSeen: DataFrame, wave: Int): DataFrame =
-    wavesThrough(store, wave)
-      .map(w => store.readDelta(w, "seen_delta"))
-      .foldLeft(seedSeen)(_ unionByName _)
+  def seenAsOf(store: WaveStore, seedRows: DataFrame, wave: Int): DataFrame =
+    frontierAsOf(store, seedRows, wave).select(col("urlHash").as("url_hash"), col("url"))
 
-  /** Union of an append-only delta kind (docs_delta / order_delta /
-    * metrics_delta) through committed `wave`. Empty-safe: None when no
-    * committed wave wrote that kind.
+  /** The fetch log (every attempted fetch, with its spans) through committed
+    * `wave`, as one scan: docs, crawl order and metrics are projections of it.
     */
-  def appendedAsOf(store: WaveStore, kind: String, wave: Int): Option[DataFrame] =
-    wavesThrough(store, wave)
-      .map(w => store.readDelta(w, kind))
-      .reduceOption(_ unionByName _)
+  def fetchLogAsOf(store: WaveStore, wave: Int): DataFrame =
+    store.readDeltas(wavesThrough(store, wave), "fetch_delta")
 
   /** Convenience: time-travel a committed snapshot DIRECTORY (the engine's
     * parquet store layout) without constructing the store by hand.

@@ -7,16 +7,21 @@ import java.nio.file.{Files, Paths}
 
 /** Iceberg-shaped wave-snapshot table interface (SURVEY §7.4): the narrow
   * surface a real table catalog (Iceberg / Delta) drops into. The crawl
-  * engine speaks ONLY to this trait — commit one wave's five DELTAS
-  * atomically, list committed waves, read a wave's deltas back.
+  * engine speaks ONLY to this trait — commit one wave's two tables
+  * atomically, list committed waves, read a wave's tables back.
   *
-  * Per-wave commits are O(wave batch), never O(frontier): `commitWave` writes
-  * the wave's frontier DELTA (the latest state of only the keys the wave
-  * touched — fetched statuses + newly discovered entries), not the full
-  * frontier. The full frontier is recovered at read by folding deltas
-  * latest-wins over the seed rows (or over the most recent compacted base).
-  * `commitFrontierBase` writes such a compacted full snapshot — the engine
-  * calls it when its in-memory compaction fires (every ~K waves), so the
+  * A wave commits two tables, and every other crawl output is derived from
+  * them at read:
+  *  - `frontier_delta`: the latest state of only the keys the wave touched
+  *    (fetched statuses + newly discovered entries), never the full
+  *    frontier, so a commit is O(wave batch). The full frontier is recovered
+  *    by folding deltas latest-wins over the seed rows (or over the most
+  *    recent compacted base), and the URL-seen set is its key set.
+  *  - `fetch_delta`: the wave's fetch log (one row per attempted fetch,
+  *    with its spans), from which docs, the crawl order and the per-host
+  *    metrics are projected.
+  * `commitFrontierBase` writes a compacted full snapshot — the engine calls
+  * it when its in-memory compaction fires (every ~K waves), so the
   * O(frontier) write is amortized over K waves and resume reads stay cheap.
   *
   * Catalog mapping: `commitWave` = one append-only snapshot/commit per wave
@@ -27,11 +32,10 @@ import java.nio.file.{Files, Paths}
 trait WaveStore {
   /** Committed wave ids (unordered). */
   def listCommitted(): Seq[Int]
-  /** Atomically commit one wave: all five deltas + manifest, then the
-    * commit marker — a reader never observes a partial wave.
+  /** Atomically commit one wave: both tables + manifest, then the commit
+    * marker — a reader never observes a partial wave.
     */
-  def commitWave(wave: Int, frontierDelta: DataFrame, seenDelta: DataFrame,
-      docsDelta: DataFrame, orderDelta: DataFrame, metricsDelta: DataFrame): Unit
+  def commitWave(wave: Int, frontierDelta: DataFrame, fetchLog: DataFrame): Unit
   /** Commit a compacted FULL frontier snapshot as of `wave` (all statuses).
     * Readers resume from the newest base + the deltas after it.
     */
@@ -39,22 +43,24 @@ trait WaveStore {
   /** Waves at which a compacted frontier base was committed (unordered). */
   def listFrontierBases(): Seq[Int]
   def readFrontierBase(wave: Int): DataFrame
-  /** kind ∈ {frontier_delta, seen_delta, docs_delta, order_delta, metrics_delta}. */
+  /** kind ∈ {frontier_delta, fetch_delta}. */
   def readDelta(wave: Int, kind: String): DataFrame
-  /** One delta kind of several (≥ 1) waves as ONE scan. */
+  /** One table kind of several (≥ 1) waves as ONE scan. */
   def readDeltas(waves: Seq[Int], kind: String): DataFrame
 }
 
 /** No-catalog-jar implementation (the sandbox has no Iceberg jar): parquet
   * data files + JSON manifest + `_COMMITTED` / `_BASE_COMMITTED` markers as
-  * the atomic commits.
+  * the atomic commits. Refuses a directory written in the older five-table
+  * layout (`parquet-v1`, whose committed waves have no `fetch_delta`): its
+  * waves cannot be read back, and a resume must not append to it.
   */
 final class ParquetSnapshotStore(spark: SparkSession, dir: String,
     partitions: Int) extends WaveStore {
 
   private def wdir(wave: Int): String = f"$dir/wave=$wave%05d"
 
-  private def committedWaves(marker: String): Seq[Int] = {
+  private def waveDirs: Seq[java.io.File] = {
     val d = new java.io.File(dir)
     if (!d.exists()) Nil
     else {
@@ -62,32 +68,36 @@ final class ParquetSnapshotStore(spark: SparkSession, dir: String,
       if (files == null)
         throw new IllegalStateException(
           s"snapshot dir $dir exists but is not listable (not a directory, or IO error)")
-      files.toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith("wave=") &&
-          new java.io.File(f, marker).exists())
-        .map { f =>
-          try f.getName.stripPrefix("wave=").toInt
-          catch {
-            case _: NumberFormatException => throw new IllegalStateException(
-              s"malformed snapshot directory name '${f.getName}' in $dir " +
-                "(expected wave=<int>)")
-          }
-        }
+      files.toSeq.filter(f => f.isDirectory && f.getName.startsWith("wave="))
     }
   }
+
+  waveDirs.find(w => new java.io.File(w, "_COMMITTED").exists() &&
+      !new java.io.File(w, "fetch_delta").exists()).foreach { w =>
+    throw new IllegalStateException(
+      s"snapshot dir $dir holds ${w.getName} in the parquet-v1 layout (five tables per " +
+        "wave); this store reads and writes parquet-v2 (frontier_delta + fetch_delta): " +
+        "crawl into a new directory")
+  }
+
+  private def committedWaves(marker: String): Seq[Int] =
+    waveDirs.filter(f => new java.io.File(f, marker).exists()).map { f =>
+      try f.getName.stripPrefix("wave=").toInt
+      catch {
+        case _: NumberFormatException => throw new IllegalStateException(
+          s"malformed snapshot directory name '${f.getName}' in $dir " +
+            "(expected wave=<int>)")
+      }
+    }
 
   override def listCommitted(): Seq[Int] = committedWaves("_COMMITTED")
 
   override def listFrontierBases(): Seq[Int] = committedWaves("_BASE_COMMITTED")
 
-  override def commitWave(wave: Int, frontierDelta: DataFrame, seenDelta: DataFrame,
-      docsDelta: DataFrame, orderDelta: DataFrame, metricsDelta: DataFrame): Unit = {
+  override def commitWave(wave: Int, frontierDelta: DataFrame, fetchLog: DataFrame): Unit = {
     val w = wdir(wave)
     frontierDelta.write.mode("overwrite").parquet(s"$w/frontier_delta")
-    seenDelta.write.mode("overwrite").parquet(s"$w/seen_delta")
-    docsDelta.write.mode("overwrite").parquet(s"$w/docs_delta")
-    orderDelta.write.mode("overwrite").parquet(s"$w/order_delta")
-    metricsDelta.write.mode("overwrite").parquet(s"$w/metrics_delta")
+    fetchLog.write.mode("overwrite").parquet(s"$w/fetch_delta")
     writeManifest(w, wave)
     Files.writeString(Paths.get(s"$w/_COMMITTED"), "1")
     ()
@@ -123,7 +133,7 @@ final class ParquetSnapshotStore(spark: SparkSession, dir: String,
       .map(r => s"""{"partition":${r.getLong(0)},"rows":${r.getLong(1)}}""")
       .mkString("[", ",", "]")
     val json =
-      s"""{"wave":$wave,"inputSnapshot":${wave - 1},"partitions":$parts,"format":"parquet-v1"}"""
+      s"""{"wave":$wave,"inputSnapshot":${wave - 1},"partitions":$parts,"format":"parquet-v2"}"""
     Files.writeString(Paths.get(s"$w/manifest.json"), json)
     ()
   }

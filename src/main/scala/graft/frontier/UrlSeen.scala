@@ -138,10 +138,10 @@ final class BloomTable(sc: SparkContext, nShards: Int, expectedTotal: Long, fpp:
     next.localCheckpoint()
     val total = sc.runJob(next, (it: Iterator[BloomShard]) => it.map(_.keys).sum).sum
     if (total > expectedTotal) {
-      next.unpersist(blocking = false)
+      GraftRows.release(next)
       throw BloomTable.overfull(expectedTotal, total)
     }
-    rows.unpersist(blocking = false)
+    GraftRows.release(rows)
     rows = next
     val n = total - keys
     keys = total

@@ -30,4 +30,10 @@ object GraftRows {
       case Seq(r) => r
       case _      => spark.sparkContext.union(rdds)
     }, schema)
+
+  /** Free the stored blocks of `rdd` without blocking. The engine's stored
+    * rows are locally checkpointed, and `RDD.unpersist` warns about every
+    * such RDD that its lineage is gone, which is why the engine drops them.
+    */
+  def release(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -53,8 +53,8 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("resume after committed leaf waves == uninterrupted run, in both Bloom regimes") {
-    // waves 1-3 are leaf waves (profile pages at maxDepth 1): they commit an
-    // empty seen delta and no new frontier entries. Stopping after wave 2
+    // waves 1-3 are leaf waves (profile pages at maxDepth 1): they commit no
+    // new frontier entries, so the seen set does not grow. Stopping after wave 2
     // leaves the resumed crawl to restore the seen filter from the store and
     // run the last leaf wave.
     for (sharded <- Seq(false, true)) {
@@ -70,7 +70,6 @@ class ResumeSpec extends SparkSpec {
         spark.sessionState.conf.numShufflePartitions)
       assert(store.listCommitted().sorted === Seq(0, 1, 2))
       Seq(1, 2).foreach { w =>
-        assert(store.readDelta(w, "seen_delta").count() === 0L, s"leaf wave $w seen delta")
         assert(store.readDelta(w, "frontier_delta")
           .filter(org.apache.spark.sql.functions.col("status") === "pending").count() === 0L,
           s"leaf wave $w enqueued a URL")
@@ -105,9 +104,7 @@ class ResumeSpec extends SparkSpec {
       .select("url", "status", "depth", "discoveredWave").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3))).toSet
     def seenSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("url").collect().map(_.getString(0)).toSet
-    // the wave-0 pre-state of the seen set, as resume builds it
-    val seedSeen = seedRows.select(col("urlHash").as("url_hash"), col("url"))
+      df.select("url_hash", "url").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     // first, middle, and last committed wave (dedup'd for short histories)
     Seq(committed.head, committed(committed.size / 2), committed.max)
       .distinct.foreach { w =>
@@ -118,14 +115,13 @@ class ResumeSpec extends SparkSpec {
           cfg.copy(snapshotDir = Some(dirW), maxWaves = w + 1))
         assert(frontierSet(WaveSnapshots.frontierAsOf(store, seedRows, w)) ===
           frontierSet(bounded.frontier), s"frontier as-of wave $w")
-        assert(seenSet(WaveSnapshots.seenAsOf(store, seedSeen, w)) ===
+        assert(seenSet(WaveSnapshots.seenAsOf(store, seedRows, w)) ===
           seenSet(bounded.seen), s"seen as-of wave $w")
         bounded.release()
       }
-    // append-only reads: docs through the last wave == the full crawl's docs
-    val docsAll = WaveSnapshots.appendedAsOf(store, "docs_delta", committed.max)
-    assert(docsAll.isDefined)
-    assert(docsAll.get.select("url").collect().map(_.getString(0)).toSet ===
+    // the fetch log through the last wave: its ok rows are the full crawl's docs
+    val docsAll = WaveSnapshots.fetchLogAsOf(store, committed.max).filter(col("ok"))
+    assert(docsAll.select("url").collect().map(_.getString(0)).toSet ===
       full.docs.select("url").collect().map(_.getString(0)).toSet)
     // a never-committed wave is a loud error, not an empty read
     intercept[IllegalArgumentException] {
@@ -135,17 +131,48 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("every committed wave carries a manifest with per-partition lineage") {
+    // a wave commits exactly two tables, the frontier delta and the fetch
+    // log, plus a compacted frontier base at compaction waves (forced here)
     val dir = Files.createTempDirectory("graft_manifest").toString
     WaveRunner.run(spark, seeds, fetcher, Nil,
-      CrawlConfig(waveSeconds = 4.0, snapshotDir = Some(dir)))
+      CrawlConfig(waveSeconds = 4.0, snapshotDir = Some(dir), frontierDeltaMaxRows = 1)).release()
     val waves = new java.io.File(dir).listFiles().filter(_.getName.startsWith("wave="))
     assert(waves.nonEmpty)
+    val wave = Set("frontier_delta", "fetch_delta", "manifest.json", "_COMMITTED")
+    val base = Set("frontier_base", "_BASE_COMMITTED")
     waves.foreach { w =>
-      assert(new java.io.File(w, "_COMMITTED").exists())
+      val files = w.list().toSet
+      assert(files === wave || files === wave ++ base, w.getName)
       val manifest = Files.readString(new java.io.File(w, "manifest.json").toPath)
       assert(manifest.contains("\"wave\":"))
       assert(manifest.contains("\"partitions\":"))
       assert(manifest.contains("\"rows\":"))
+      assert(manifest.contains("\"format\":\"parquet-v2\""))
     }
+    assert(waves.exists(w => new java.io.File(w, "_BASE_COMMITTED").exists()),
+      "compaction must have fired")
+  }
+
+  test("a snapshot dir in the five-table layout is refused before anything is committed") {
+    // the older layout committed seen/docs/order/metrics deltas and no fetch
+    // log: its waves cannot be read back, so a resume must not append to it
+    val dir = Files.createTempDirectory("graft_v1").toString
+    WaveRunner.run(spark, seeds, fetcher, Nil,
+      CrawlConfig(waveSeconds = 2.0, snapshotDir = Some(dir), maxWaves = 2)).release()
+    val waves = new java.io.File(dir).listFiles().filter(_.getName.startsWith("wave="))
+    waves.foreach { w =>
+      val fetch = new java.io.File(w, "fetch_delta").toPath
+      Files.move(fetch, new java.io.File(w, "docs_delta").toPath)
+      Seq("seen_delta", "order_delta", "metrics_delta")
+        .foreach(t => Files.createDirectory(new java.io.File(w, t).toPath))
+    }
+    def listing = new java.io.File(dir).listFiles().sorted.map(w => w.getName -> w.list().toSet).toSeq
+    val before = listing
+    val e = intercept[IllegalStateException] {
+      WaveRunner.resume(spark, seeds, fetcher, Nil,
+        CrawlConfig(waveSeconds = 2.0, snapshotDir = Some(dir)))
+    }
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("parquet-v1"), e.getMessage)
+    assert(listing === before)
   }
 }
