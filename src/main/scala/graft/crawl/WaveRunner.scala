@@ -59,10 +59,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * merged to one row per host on the driver before the loop
   * ([[graft.frontier.Robots.mergeRules]]). In the broadcast regime the
   * URL-seen Bloom filter lives on the driver and takes every new key there:
-  * the seeds at a cold start, the store's seen set on resume, and each
-  * wave's discoveries as the job that stores them ends. In the sharded
-  * regime it is shard rows held like the seen rows
-  * ([[graft.frontier.BloomTable]]), which take the same keys where they live.
+  * the entry frontier's keys in the pass that stores it, and each wave's
+  * discoveries as the job that stores them ends. In the sharded regime it
+  * is shard rows held like the seen keys ([[graft.frontier.BloomTable]]),
+  * which take the same keys where they live.
+  *
+  * One entry: a crawl starts from a stored frontier, the seed rows at a cold
+  * start and the store's frontier at its last committed wave on resume. The
+  * pending base, the done rows and the seen keys all read those stored rows,
+  * and the pass that stores them also counts the pending ones, so the loop
+  * stops without an empty wave when nothing is left to fetch.
   *
   * Wave-synchronous batches — not Structured Streaming — because the primary
   * correctness obligation is deterministic, reproducible ordering vs the
@@ -82,12 +88,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The live frontier is `base ⧹ batch keys ∪ delta ∪ done`; a compaction
   * every ~`frontierDeltaMaxRows` touched keys folds deltas into a new base
-  * (the only O(frontier) work, amortized). The URL-seen rows get the same
-  * split: stable seen rows placed by key hash, which a Bloom-positive
-  * candidate's check reads one partition of, plus the discoveries since
-  * compaction. Selection is a partial-aggregating exact top-k (map-side
-  * bounded heaps), so even the selection shuffle moves O(hosts × budget)
-  * buffer rows, not O(pending). Fetch maps the selected batch only.
+  * (the only O(frontier) work, amortized). The URL-seen set is the
+  * frontier's key set, kept as url hashes only (8-byte fingerprints, not
+  * URLs) in two parts: stable seen keys placed by key hash, which a
+  * Bloom-positive candidate's check reads one partition of, plus the keys
+  * discovered since compaction, read from the delta. Selection is a
+  * partial-aggregating exact top-k (map-side bounded heaps), so even the
+  * selection shuffle moves O(hosts × budget) buffer rows, not O(pending).
+  * Fetch maps the selected batch only.
   */
 object WaveRunner {
 
@@ -97,15 +105,6 @@ object WaveRunner {
     * loudly (see the candidates projection), never by silent wraparound.
     */
   val RankBase = 100000L
-
-  // every frontier row set has this schema, nullability included: the
-  // generated code of a plan depends on its input's nullability, so a
-  // non-null seed table would give wave 0 and the waves after a compaction
-  // different classes
-  private val FrontierDdl =
-    "url string, urlHash long, host string, depth int, priority double, " +
-      "status string, retries int, discoveredWave int, discoveredRank long, " +
-      "parentUrl string"
 
   final case class CrawlConfig(
       maxDepth: Int = 1,
@@ -152,12 +151,14 @@ object WaveRunner {
 
   final case class CrawlResult(
       frontier: DataFrame,
-      seen: DataFrame,       // url_hash, url
+      seen: DataFrame,       // url_hash, url: the frontier's keys
       docs: DataFrame,       // url, urlHash, host, depth, wave, spans
       private val orderThunk: () => DataFrame,
       metrics: DataFrame,    // wave, host, fetched, errors, fetchMsTotal, urlsEnqueued
       waves: Int,
-      fetches: Long,         // total attempted fetches (= crawlOrder row count)
+      // fetches attempted by this call: a cold start's equal the crawlOrder
+      // row count, a resume counts only its own (0 for a finished crawl)
+      fetches: Long,
       held: Seq[RDD[_]]      // checkpointed row sets the DataFrames above read, Bloom shards
   ) {
     /** Global crawl order (seq, wave, host, host_rank, url). Lazy: deriving
@@ -190,33 +191,31 @@ object WaveRunner {
   def seedFrontier(spark: SparkSession, seeds: Seq[Seed]): DataFrame = {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(seedEntriesOf(seeds).map(e => Row.fromTuple(e)).asJava,
-      StructType.fromDDL(FrontierDdl))
+      FrontierSchema)
   }
 
-  /** Cold-start crawl from a seed list. */
+  /** Cold-start crawl from a seed list: the wave loop entered with the seed
+    * rows as its frontier.
+    */
   def run(
       spark: SparkSession,
       seeds: Seq[Seed],
       fetcher: String => Option[SpanDoc],
       rules: Seq[RobotsRule] = Nil,
       cfg: CrawlConfig = CrawlConfig()
-  ): CrawlResult = {
-    val basePending0 = seedFrontier(spark, seeds)
-    val seen0 = basePending0.select(col("urlHash").as("url_hash"), col("url"))
-    val whitelist = cfg.hostWhitelist.getOrElse(
-      seeds.map(s => Urls.hostOf(Urls.normalize(s.url))).distinct)
-    runLoop(spark, basePending0, Nil, seen0, startWave = 0, Nil, whitelist,
-      fetcher, rules, cfg, initialPending = Some(seeds.size.toLong),
-      seedHashes = Some(seedEntriesOf(seeds).map(_.urlHash)))
-  }
+  ): CrawlResult =
+    runLoop(spark, seedFrontier(spark, seeds), startWave = 0, Nil, whitelistOf(seeds, cfg),
+      fetcher, rules, cfg)
 
-  /** Resume a snapshot-mode crawl from its last committed wave: reconstruct
-    * the frontier from the newest compacted base (or the seed rows) folded
-    * latest-wins with the per-wave frontier deltas after it, take seen as
-    * its key set, rebuild the Bloom (fixed sizing ⇒ identical shape),
-    * and run the remaining waves. Resuming a completed crawl is a no-op:
-    * the restored frontier has no pending rows, so the loop commits nothing
-    * new and returns the committed state.
+  /** Resume a snapshot-mode crawl from its last committed wave: the wave
+    * loop entered with the frontier as of that wave (the newest compacted
+    * base, or the seed rows, folded latest-wins with the frontier deltas
+    * after it: [[WaveSnapshots.frontierAsOf]], run once). Seen is that
+    * frontier's key set, and the Bloom filter is rebuilt from it (fixed
+    * sizing ⇒ identical shape). Resuming a completed crawl is a no-op: the
+    * restored frontier has no pending rows, so the loop runs no wave and
+    * returns the committed state. A directory with no committed wave is a
+    * cold start.
     */
   def resume(
       spark: SparkSession,
@@ -232,51 +231,31 @@ object WaveRunner {
     val committed = store.listCommitted()
     if (committed.isEmpty) return run(spark, seeds, fetcher, rules, cfg)
 
-    val last  = committed.max
-    val waves = committed.sorted
-    val seedRows = seedFrontier(spark, seeds)
-
-    // frontier = newest compacted base (else the seed rows) + latest-wins
-    // fold of the frontier deltas committed after it — the shared
-    // time-travel read at wave `last` ([[WaveSnapshots.frontierAsOf]])
-    val frontier0 = WaveSnapshots.frontierAsOf(store, seedRows, last)
-    val basePending0 = frontier0.filter(col("status") === FrontierStatus.Pending)
-    val doneDeltas0 = Seq(frontier0.filter(col("status") =!= FrontierStatus.Pending))
-    // every URL ever enqueued is a frontier row: seen is the frontier's keys
-    val seen0 = frontier0.select(col("urlHash").as("url_hash"), col("url"))
-    val whitelist = cfg.hostWhitelist.getOrElse(
-      seeds.map(s => Urls.hostOf(Urls.normalize(s.url))).distinct)
-    // resumed crawls don't know the restored pending-row count without an
-    // extra job — the skip-empty-final-wave shortcut stays off and the loop
-    // terminates on an observed empty batch as before
-    runLoop(spark, basePending0, doneDeltas0, seen0, last + 1, waves, whitelist,
-      fetcher, rules, cfg, initialPending = None, seedHashes = None)
+    val last = committed.max
+    runLoop(spark, WaveSnapshots.frontierAsOf(store, seedFrontier(spark, seeds), last),
+      last + 1, committed.sorted, whitelistOf(seeds, cfg), fetcher, rules, cfg)
   }
+
+  private def whitelistOf(seeds: Seq[Seed], cfg: CrawlConfig): Seq[String] =
+    cfg.hostWhitelist.getOrElse(seeds.map(s => Urls.hostOf(Urls.normalize(s.url))).distinct)
 
   /** The wave loop (shared by cold start and resume).
     *
-    * @param basePending0   pending frontier rows at the starting base
-    * @param doneDeltas0    already-done frontier rows (resume reconstruction)
-    * @param committedWaves already-committed wave ids, whose deltas are
+    * @param entry          the frontier the loop starts from, every status:
+    *                       stored once, it is the pending base, the done
+    *                       rows and the seen keys
+    * @param committedWaves already-committed wave ids, whose fetch logs are
     *                       stitched into the returned result
-    * @param seedHashes     cold start: the whole seen set as url hashes, put
-    *                       into the broadcast-regime filter on the driver;
-    *                       None (resume), and the sharded regime, put the
-    *                       seen rows' hashes in a job
     */
   private def runLoop(
       spark: SparkSession,
-      basePending0: DataFrame,
-      doneDeltas0: Seq[DataFrame],
-      seenBase0: DataFrame,
+      entry: DataFrame,
       startWave: Int,
       committedWaves: Seq[Int],
       whitelist: Seq[String],
       fetcher: String => Option[SpanDoc],
       rules: Seq[RobotsRule],
-      cfg: CrawlConfig,
-      initialPending: Option[Long],
-      seedHashes: Option[Seq[Long]]
+      cfg: CrawlConfig
   ): CrawlResult = {
     import spark.implicits._
     import scala.concurrent.{Await, Future}
@@ -285,36 +264,36 @@ object WaveRunner {
     val P  = shufflePartitions(spark)
     val sc = spark.sparkContext
 
-    // The frontier/seen state is RDDs of rows, local-checkpointed: the
-    // bookkeeping between waves (delta, compaction, seen) is row filters,
+    // The frontier/seen state is RDDs of rows and keys, local-checkpointed:
+    // the bookkeeping between waves (delta, compaction, seen) is row filters,
     // unions and a key partitioning, with no query plan to compile. SQL
     // runs the relational work — selection and link extraction — over
     // scans of these rows. Every stored RDD is in `held` until it is
     // superseded, or until the result is released.
     val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    def hold(rdd: RDD[InternalRow], eager: Boolean): RDD[InternalRow] = {
+    def hold[T](rdd: RDD[T], eager: Boolean): RDD[T] = {
       rdd.localCheckpoint()
       if (eager) rdd.count()
       held.synchronized { held += rdd }
       rdd
     }
-    def drop(rdd: RDD[InternalRow]): Unit = {
+    def drop(rdd: RDD[_]): Unit = {
       held.synchronized { held -= rdd }
       GraftRows.release(rdd)
     }
-    // seen rows are placed by their url hash
+    // seen keys are placed by their value
     val byKey = new HashPartitioner(P)
-    def partitioned(rows: RDD[InternalRow], keyAt: Int): RDD[InternalRow] =
-      rows.map(r => (r.getLong(keyAt), r)).partitionBy(byKey).values
-    def stored(df: DataFrame, cols: Seq[String]): RDD[InternalRow] =
-      GraftRows.rows(df.select(cols.map(col): _*)).map(_.copy())
+    def placed(keys: RDD[Long]): RDD[Long] = keys.map(h => (h, ())).partitionBy(byKey).keys
 
     // -- frontier/seen state (see the class doc for the model) --
-    var baseRdd  = hold(stored(basePending0, FrontierCols), eager = false)
-    var seenRdd  = hold(partitioned(stored(seenBase0, Seq("url_hash", "url")), 0), eager = false)
+    // the entry rows, stored once: the pending base, the first done rows and
+    // the seen keys read them (done rows stay views over stored rows)
+    val entryRdd = hold(GraftRows.rows(entry.select(FrontierCols.map(col): _*)).map(_.copy()),
+      eager = false)
+    var baseRdd  = entryRdd.filter(isPending)
+    var seenRdd  = hold(placed(entryRdd.map(_.getLong(UrlHashAt))), eager = false)
     var deltaRdd = sc.emptyRDD[InternalRow]
-    val doneRdds = scala.collection.mutable.ArrayBuffer(
-      doneDeltas0.map(d => hold(stored(d, FrontierCols), eager = false)): _*)
+    val doneRdds = scala.collection.mutable.ArrayBuffer(entryRdd.filter(!isPending(_)))
     var deltaRowsBound = 0L  // upper bound on |deltaState| (drives compaction)
     var newSinceCompaction = 0L
     // keys SELECTED into a batch since the last compaction — the only base
@@ -328,10 +307,9 @@ object WaveRunner {
     // discoveredWave, a base retry keeps its pre-compaction one
     var watermark = startWave
 
-    def newKeys: RDD[InternalRow] = {
+    def newKeys: RDD[Long] = {
       val w = watermark
-      deltaRdd.filter(_.getInt(DiscoveredWaveAt) > w).mapPartitions(asRows(SeenSchema) { r =>
-        Array[Any](r.getLong(UrlHashAt), r.getUTF8String(UrlAt)) })
+      deltaRdd.filter(_.getInt(DiscoveredWaveAt) > w).map(_.getLong(UrlHashAt))
     }
     def liveBase: RDD[InternalRow] = withoutKeys(baseRdd, batchKeys)
 
@@ -342,7 +320,7 @@ object WaveRunner {
     //    copy per wave, probed row-locally — no extra shuffle. The driver
     //    object is BOUNDED BY CONFIG and its puts throw past it.
     //  - sharded regime (the 10^10 path): a BloomTable, shard rows placed by
-    //    shard id on the executors like the seen rows are by key; candidates
+    //    shard id on the executors like the seen keys are by value; candidates
     //    and new keys move to their shard, the shards never move.
     // Both take a wave's new keys in the job that stores them, and count them.
     val bloomBroadcast = cfg.bloomBroadcastable
@@ -354,10 +332,24 @@ object WaveRunner {
       else new BloomTable(sc, cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp, P)
     def addToBloom(rows: RDD[InternalRow], at: Int): Long =
       if (bloomBroadcast) bloomDriver.putHashes(rows, at) else bloomTable.putHashes(rows, at)
-    seedHashes match {
-      case Some(hashes) if bloomBroadcast => bloomDriver.putAll(hashes.toArray)
-      case _                              => addToBloom(seenRdd, 0)
-    }
+    // the entry pass: one job over the entry rows stores them, counts the
+    // pending ones and, in the broadcast regime, brings their keys to the
+    // driver filter a partition at a time. The sharded regime's keys stay on
+    // the executors: its shards take them in a job of their own.
+    var entryPending = 0L
+    sc.runJob(entryRdd, (it: Iterator[InternalRow]) => {
+      var pending = 0L
+      val keys = Array.newBuilder[Long]
+      it.foreach { r =>
+        if (isPending(r)) pending += 1
+        if (bloomBroadcast) keys += r.getLong(UrlHashAt)
+      }
+      (pending, keys.result())
+    }, (_: Int, part: (Long, Array[Long])) => {
+      entryPending += part._1
+      if (bloomBroadcast) bloomDriver.putAll(part._2)
+    })
+    if (!bloomBroadcast) bloomTable.putHashes(entryRdd, UrlHashAt)
     // the wave's candidates are placed where their exact check (broadcast
     // regime) or their shard (sharded regime) reads them
     val candidatePlacement = if (bloomBroadcast) byKey else bloomTable.placement
@@ -402,26 +394,27 @@ object WaveRunner {
     // fetch (measured ~0.7 s on the bench corpus) only to observe an empty
     // batch the driver already knows is empty. Denied/over-budget rows keep
     // the count positive, so the shortcut can only fire when the frontier
-    // is truly drained; None (resume, retries) falls back to the observed
-    // empty batch exactly as before.
+    // is truly drained; None (retries) falls back to the observed empty
+    // batch. It starts from the entry's pending rows, so a resume of a
+    // finished crawl runs no wave.
     var pendingKnown: Option[Long] =
-      if (cfg.maxRetries == 0) initialPending else None
+      if (cfg.maxRetries == 0) Some(entryPending) else None
 
     // -- compaction: fold deltas into new base rows and the discoveries into
-    // the seen rows (re-placed by key) — the ONLY O(frontier) work in the
+    // the seen keys (re-placed by value) — the ONLY O(frontier) work in the
     // engine, amortized over the waves between compactions.
     // Done rows move to the append-only doneRdds (never rewritten again).
     def maybeCompact(committedWave: Int): Unit = if (deltaRowsBound > cfg.frontierDeltaMaxRows) {
       phase("compaction", committedWave) {
-        val pendingDelta = deltaRdd.filter(_.getUTF8String(StatusAt) == PendingUtf8)
+        val pendingDelta = deltaRdd.filter(isPending)
         val bpF = Future { hold(sc.union(liveBase, pendingDelta).coalesce(P), eager = true) }
         val sbF =
           if (newSinceCompaction == 0L) Future.successful(seenRdd)
-          else Future { hold(partitioned(sc.union(seenRdd, newKeys), 0), eager = true) }
+          else Future { hold(placed(seenRdd.union(newKeys)), eager = true) }
         val bp2 = Await.result(bpF, Duration.Inf)
         val sb2 = Await.result(sbF, Duration.Inf)
         // the folded deltaRdd stays held: the done rows are a view over it
-        doneRdds += deltaRdd.filter(_.getUTF8String(StatusAt) != PendingUtf8)
+        doneRdds += deltaRdd.filter(!isPending(_))
         store.foreach { st =>
           st.commitFrontierBase(committedWave,
             GraftRows.scan(spark, bp2 +: doneRdds.toSeq, FrontierSchema))
@@ -577,7 +570,7 @@ object WaveRunner {
           val flagged =
             if (bloomBroadcast) UrlSeen.flag(firsts, bloomDriver.copy())
             else UrlSeen.flagSharded(firsts, bloomTable.shards, bloomTable.placement)
-          hold(UrlSeen.exact(flagged, seenRdd, newKeys.map(_.getLong(0)), byKey), eager = false)
+          hold(UrlSeen.exact(flagged, seenRdd, newKeys, byKey), eager = false)
         }
         // the job that puts the new keys into the filter also stores them
         val n = newRows.fold(0L) { rows =>
@@ -632,7 +625,6 @@ object WaveRunner {
     if (!bloomBroadcast) held += bloomTable.shards // released with the result
     val frontierFinal =
       GraftRows.scan(spark, Seq(liveBase, deltaRdd) ++ doneRdds, FrontierSchema)
-    val seenFinal = GraftRows.scan(spark, Seq(seenRdd, newKeys), SeenSchema)
     // urlsEnqueued from the frontier: wave w's discoveries are stamped
     // discoveredWave = w + 1 (seeds are 0)
     val enqueued = frontierFinal.filter(col("discoveredWave") > 0)
@@ -641,17 +633,19 @@ object WaveRunner {
     val metrics = fetchMetricsOf(log).join(enqueued, Seq("wave"), "left")
       .select(col("wave"), col("host"), col("fetched"), col("errors"), col("fetchMsTotal"),
         coalesce(col("urlsEnqueued"), lit(0L)).as("urlsEnqueued"))
-    CrawlResult(frontierFinal, seenFinal, docsOf(log), () => order(spark, log), metrics, wave,
-      totalFetches, held.toSeq)
+    CrawlResult(frontierFinal, WaveSnapshots.seenOf(frontierFinal), docsOf(log),
+      () => order(spark, log), metrics, wave, totalFetches, held.toSeq)
   }
 
   // every frontier row set has this schema, nullability included: the
   // generated code of a plan depends on its input's nullability, so a
   // non-null seed table would give wave 0 and the waves after a compaction
   // different classes
-  private val FrontierSchema = StructType.fromDDL(FrontierDdl)
-  private val FrontierCols = FrontierSchema.fieldNames.toSeq
-  private val SeenSchema = StructType.fromDDL("url_hash long, url string")
+  private val FrontierSchema = StructType.fromDDL(
+    "url string, urlHash long, host string, depth int, priority double, " +
+      "status string, retries int, discoveredWave int, discoveredRank long, " +
+      "parentUrl string")
+  private[crawl] val FrontierCols = FrontierSchema.fieldNames.toSeq
   private val FetchSchema = StructType.fromDDL(
     "url string, urlHash long, host string, depth int, priority double, retries int, " +
       "discoveredWave int, discoveredRank long, parentUrl string, host_rank long, ok boolean, " +
@@ -681,6 +675,8 @@ object WaveRunner {
     val toUnsafe = UnsafeProjection.create(schema)
     it.map(r => toUnsafe(new GenericInternalRow(fields(r))).copy())
   }
+
+  private def isPending(r: InternalRow): Boolean = r.getUTF8String(StatusAt) == PendingUtf8
 
   /** Frontier rows whose `urlHash` is not among `sortedKeys`. */
   private def withoutKeys(rows: RDD[InternalRow], sortedKeys: Array[Long]): RDD[InternalRow] =

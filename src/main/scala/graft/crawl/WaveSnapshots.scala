@@ -1,6 +1,6 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Time-travel reads over a [[WaveStore]] — the Iceberg snapshot semantics
@@ -12,16 +12,16 @@ import org.apache.spark.sql.functions._
   * boots from (resume ≡ `frontierAsOf(lastCommitted)`): start from the
   * newest compacted base at or before the target wave (else the seed rows)
   * and fold the frontier deltas committed after it, each key taking its
-  * newest delta row. Cost is O(base + deltas-since-base), never
-  * O(waves × frontier) — compaction amortizes time travel exactly as it
-  * amortizes resume. The seen set is that frontier's key set, and docs,
-  * order and metrics are projections of the fetch log up to the target wave.
+  * row of the newest wave (a base row is older than every delta row), in
+  * one aggregate over one scan of the deltas. Cost is O(base +
+  * deltas-since-base), never O(waves × frontier) — compaction amortizes
+  * time travel exactly as it amortizes resume. The seen set is that
+  * frontier's key set, and docs, order and metrics are projections of the
+  * fetch log up to the target wave.
   */
 object WaveSnapshots {
 
-  private[crawl] val FrontierCols = Seq("url", "urlHash", "host", "depth",
-    "priority", "status", "retries", "discoveredWave", "discoveredRank",
-    "parentUrl")
+  private val FrontierCols = WaveRunner.FrontierCols
 
   /** Committed waves at or before `wave` (sorted). Fails loudly on a wave
     * that was never committed — a time-travel read of an uncommitted wave
@@ -45,38 +45,29 @@ object WaveSnapshots {
     val (base0, deltaWaves) =
       if (bases.isEmpty) (seedRows, waves)
       else (store.readFrontierBase(bases.max), waves.filter(_ > bases.max))
-    deltaWaves
-      .map(w => store.readDelta(w, "frontier_delta").withColumn("__dw", lit(w)))
-      .reduceOption(_ unionByName _) match {
-      case None => base0.select(FrontierCols.map(col): _*)
-      case Some(du) =>
-        val latest = du.groupBy(col("urlHash"))
-          .agg(max_by(struct(FrontierCols.map(col): _*), col("__dw")).as("c"))
-          .select(col("c.*"))
-        base0.join(latest.select(col("urlHash")), Seq("urlHash"), "left_anti")
-          .select(FrontierCols.map(col): _*)
-          .unionByName(latest.select(FrontierCols.map(col): _*))
-    }
+    val base = base0.select(FrontierCols.map(col): _*)
+    if (deltaWaves.isEmpty) base
+    else base.withColumn("wave", lit(-1))
+      .unionByName(store.readFrontierDeltas(deltaWaves)
+        .select((FrontierCols :+ "wave").map(col): _*))
+      .groupBy(col("urlHash"))
+      .agg(max_by(struct(FrontierCols.map(col): _*), col("wave")).as("c"))
+      .select(col("c.*"))
   }
 
   /** The URL-seen set as of committed `wave`: every URL ever enqueued is a
     * frontier row, so the seen set is the frontier's key set.
     */
   def seenAsOf(store: WaveStore, seedRows: DataFrame, wave: Int): DataFrame =
-    frontierAsOf(store, seedRows, wave).select(col("urlHash").as("url_hash"), col("url"))
+    seenOf(frontierAsOf(store, seedRows, wave))
+
+  /** The URL-seen set (`url_hash`, `url`) of a frontier: its key set. */
+  def seenOf(frontier: DataFrame): DataFrame =
+    frontier.select(col("urlHash").as("url_hash"), col("url"))
 
   /** The fetch log (every attempted fetch, with its spans) through committed
     * `wave`, as one scan: docs, crawl order and metrics are projections of it.
     */
   def fetchLogAsOf(store: WaveStore, wave: Int): DataFrame =
     store.readDeltas(wavesThrough(store, wave), "fetch_delta")
-
-  /** Convenience: time-travel a committed snapshot DIRECTORY (the engine's
-    * parquet store layout) without constructing the store by hand.
-    */
-  def frontierAsOf(spark: SparkSession, dir: String, seedRows: DataFrame,
-      wave: Int): DataFrame = {
-    val p = spark.sessionState.conf.numShufflePartitions
-    frontierAsOf(new ParquetSnapshotStore(spark, dir, p), seedRows, wave)
-  }
 }

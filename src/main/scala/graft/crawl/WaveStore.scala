@@ -27,7 +27,8 @@ import java.nio.file.{Files, Paths}
   * Catalog mapping: `commitWave` = one append-only snapshot/commit per wave
   * (Iceberg MERGE writes only changed files — the delta IS the changed-file
   * set); `commitFrontierBase` = a rewrite/compaction commit; `listCommitted`
-  * = snapshot log; `readDelta`/`readFrontierBase` = time-travel reads.
+  * = snapshot log; `readDeltas`/`readFrontierDeltas`/`readFrontierBase` =
+  * time-travel reads.
   */
 trait WaveStore {
   /** Committed wave ids (unordered). */
@@ -43,8 +44,10 @@ trait WaveStore {
   /** Waves at which a compacted frontier base was committed (unordered). */
   def listFrontierBases(): Seq[Int]
   def readFrontierBase(wave: Int): DataFrame
-  /** kind ∈ {frontier_delta, fetch_delta}. */
-  def readDelta(wave: Int, kind: String): DataFrame
+  /** The frontier deltas of several (≥ 1) waves as ONE scan, each row with
+    * the `wave` that committed it.
+    */
+  def readFrontierDeltas(waves: Seq[Int]): DataFrame
   /** One table kind of several (≥ 1) waves as ONE scan. */
   def readDeltas(waves: Seq[Int], kind: String): DataFrame
 }
@@ -113,11 +116,14 @@ final class ParquetSnapshotStore(spark: SparkSession, dir: String,
   override def readFrontierBase(wave: Int): DataFrame =
     spark.read.parquet(s"${wdir(wave)}/frontier_base")
 
-  override def readDelta(wave: Int, kind: String): DataFrame =
-    spark.read.parquet(s"${wdir(wave)}/$kind")
-
   override def readDeltas(waves: Seq[Int], kind: String): DataFrame =
     spark.read.parquet(waves.map(w => s"${wdir(w)}/$kind"): _*)
+
+  // the wave dirs are Hive-style partitions: read from the store dir as the
+  // base path, every row carries the `wave` of its dir
+  override def readFrontierDeltas(waves: Seq[Int]): DataFrame =
+    spark.read.option("basePath", dir)
+      .parquet(waves.map(w => s"${wdir(w)}/frontier_delta"): _*)
 
   /** Iceberg-style commit manifest: wave id, input snapshot, and per-partition
     * lineage (logical hash partition of the wave's frontier delta → row

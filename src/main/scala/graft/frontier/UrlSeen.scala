@@ -16,7 +16,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * wrongly DROP unseen URLs if trusted. It is therefore only the cheap
   * fast-path: candidates whose shard-Bloom probe is NEGATIVE are definitely
   * unseen and skip the check; probe-positive candidates (rare: FPP + true
-  * dups) are checked exactly against the seen rows ([[UrlSeen.exact]]). The
+  * dups) are checked exactly against the seen keys ([[UrlSeen.exact]]). The
   * resulting seen set is exactly the reference's (reference dedup grounding:
   * `main.py:187-190` natural-key probes; `scraper.py:43-63` one fetch per
   * discovered URL).
@@ -247,21 +247,21 @@ object UrlSeen {
     * partition of `seen` that holds their keys, which is scanned only when
     * it has any, and are also checked against `recent`.
     *
-    * @param seen   seen rows, `url_hash` first, placed by `part`
+    * @param seen   seen url hashes, placed by `part`
     * @param recent more seen keys (the bounded additions not yet in `seen`)
     */
-  def exact(flagged: RDD[Flagged], seen: RDD[InternalRow], recent: RDD[Long],
+  def exact(flagged: RDD[Flagged], seen: RDD[Long], recent: RDD[Long],
       part: Partitioner): RDD[InternalRow] = {
     val fast = flagged.flatMap { case (_, (r, maybe)) => if (maybe) None else Some(r) }
     val maybe = flagged.flatMap { case (h, (r, maybe)) => if (maybe) Some((h, r)) else None }
       .partitionBy(part)
     val rescued = maybe.zipPartitions(seen, recent.map(h => (h, ())).partitionBy(part)) {
-      (cands, seenRows, recentKeys) =>
+      (cands, seenKeys, recentKeys) =>
         if (!cands.hasNext) Iterator.empty
         else {
           val byKey = cands.toArray
           val wanted = scala.collection.mutable.HashSet.empty[Long] ++= byKey.map(_._1)
-          seenRows.foreach(r => wanted -= r.getLong(0))
+          seenKeys.foreach(wanted -= _)
           recentKeys.foreach { case (h, _) => wanted -= h }
           byKey.iterator.collect { case (h, r) if wanted(h) => r }
         }
@@ -295,9 +295,9 @@ object UrlSeen {
     val part = new HashPartitioner(shufflePartitions(candidates))
     val at = candidates.schema.fieldIndex("url_hash")
     val cands = GraftRows.rows(candidates).map(r => (r.getLong(at), r.copy()))
-    val seenRows = GraftRows.rows(seen.select(col("url_hash"))).map(r => (r.getLong(0), r.copy()))
-      .partitionBy(part).values
-    GraftRows.scan(spark, Seq(exact(probe(cands), seenRows, spark.sparkContext.emptyRDD[Long],
+    val seenKeys = GraftRows.rows(seen.select(col("url_hash"))).map(r => (r.getLong(0), ()))
+      .partitionBy(part).keys
+    GraftRows.scan(spark, Seq(exact(probe(cands), seenKeys, spark.sparkContext.emptyRDD[Long],
       part)), candidates.schema)
   }
 }

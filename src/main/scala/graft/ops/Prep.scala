@@ -83,12 +83,7 @@ object Prep {
   }
 
   val sampleStratifiedSql: String = {
-    // DuckDB has no hex→int cast; rebuild the 6-digit value arithmetically
-    // (same trick as the media-stub oracle)
-    val digits = (1 to 6).map { i =>
-      s"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), $i, 1)) - 1)" +
-        s" * ${math.pow(16, 6 - i).toLong}"
-    }.mkString("( ", "\n      + ", " )")
+    val digits = md5Mod6Sql("CAST(doc_id AS VARCHAR)")
     val cases = SampleRatesBp.toSeq.sortBy(_._1)
       .map { case (l, bp) => s"WHEN lang = '$l' THEN $bp" }.mkString(" ")
     s"""SELECT doc_id, lang, sample_key FROM (

@@ -63,6 +63,24 @@ class CrawlOracleSpec extends SparkSpec {
     assert(engineRecords(spark, engine, seeds) === oracle.records)
   }
 
+  test("memory mode: the seen set is the frontier's (url_hash, url) keys in both Bloom regimes") {
+    val site = SiteConfig(universities = 2, deptsPerU = 1, facultyPerDept = 4,
+      errorFraction = 0.2)
+    for (maxBytes <- Seq(CrawlConfig().bloomBroadcastMaxBytes, 0L)) {
+      val (_, oracle, engine) = runBoth(site,
+        CrawlConfig(maxDepth = 2, waveSeconds = 2.0, bloomBroadcastMaxBytes = maxBytes))
+      assert(engine.seen.schema ===
+        org.apache.spark.sql.types.StructType.fromDDL("url_hash long, url string"))
+      val seen = engine.seen.collect().map(r => (r.getLong(0), r.getString(1)))
+      val keys = engine.frontier.select("urlHash", "url").collect()
+        .map(r => (r.getLong(0), r.getString(1)))
+      assert(seen.length === seen.distinct.length, s"bloomBroadcastMaxBytes = $maxBytes")
+      assert(seen.toSet === keys.toSet, s"bloomBroadcastMaxBytes = $maxBytes")
+      assert(seen.map(_._2).toSet === oracle.seen, s"bloomBroadcastMaxBytes = $maxBytes")
+      engine.release()
+    }
+  }
+
   test("single host: URL-seen set and faculty records match exactly") {
     val site = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 6)
     val (seeds, oracle, engine) = runBoth(site)

@@ -52,6 +52,42 @@ class ResumeSpec extends SparkSpec {
       new java.io.File(dirA).listFiles().count(_.getName.startsWith("wave=")))
   }
 
+  test("a no-op resume reads the frontier once and runs no wave") {
+    // resuming a finished crawl stores its frontier as of the last wave in
+    // one pass, which finds no pending row: no selection or fetch job runs
+    // after it, and the frontier fold is not run again
+    import graft.crawl.{ParquetSnapshotStore, WaveSnapshots}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def jobsOf[T](body: => T): (Int, T) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val r = body
+        org.apache.spark.GraftListenerSync.drain(spark.sparkContext)
+        (jobs.get(), r)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val dir = Files.createTempDirectory("graft_noop").toString
+    val cfg = CrawlConfig(waveSeconds = 2.0, snapshotDir = Some(dir))
+    val full = WaveRunner.run(spark, seeds, fetcher, Nil, cfg)
+    val store = new ParquetSnapshotStore(spark, dir, spark.sessionState.conf.numShufflePartitions)
+    val last = store.listCommitted().max
+    val (foldJobs, _) = jobsOf(
+      WaveSnapshots.frontierAsOf(store, WaveRunner.seedFrontier(spark, seeds), last).collect())
+    val (resumeJobs, again) = jobsOf(WaveRunner.resume(spark, seeds, fetcher, Nil, cfg))
+    assert(again.fetches === 0L)
+    assert(again.waves === full.waves)
+    assert(store.listCommitted().max === last)
+    // the fold's jobs, with the entry pass in place of the collect, and one
+    // more: opening the fetch log (parquet schema) that docs and order read
+    assert(resumeJobs <= foldJobs + 1,
+      s"the no-op resume ran $resumeJobs jobs; one read of its frontier runs $foldJobs")
+    full.release(); again.release()
+  }
+
   test("resume after committed leaf waves == uninterrupted run, in both Bloom regimes") {
     // waves 1-3 are leaf waves (profile pages at maxDepth 1): they commit no
     // new frontier entries, so the seen set does not grow. Stopping after wave 2
@@ -70,7 +106,7 @@ class ResumeSpec extends SparkSpec {
         spark.sessionState.conf.numShufflePartitions)
       assert(store.listCommitted().sorted === Seq(0, 1, 2))
       Seq(1, 2).foreach { w =>
-        assert(store.readDelta(w, "frontier_delta")
+        assert(store.readFrontierDeltas(Seq(w))
           .filter(org.apache.spark.sql.functions.col("status") === "pending").count() === 0L,
           s"leaf wave $w enqueued a URL")
       }
