@@ -1,7 +1,7 @@
 package graft.crawl
 
-import graft.extract.SpanExtract
 import graft.frontier.{BloomTable, PartitionedBloom, Robots, TopKSelectNative, UrlSeen, WaveSelector}
+import graft.functions.SpanExprs
 import graft.model._
 import graft.synth.SyntheticSite.Seed
 import graft.urls.Urls
@@ -27,9 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * SQL runs the relational steps whose semantics live in Column
   * expressions: selection (robots join, native top-k), link extraction
-  * ([[graft.extract.SpanExtract]]) and the records. The engine's own
-  * bookkeeping — fetch, first-discovery dedup, URL-seen check, delta,
-  * compaction — works on RDDs of rows, which compile no code.
+  * ([[graft.functions.SpanExprs.anchorLinks]]) and the records. The
+  * engine's own bookkeeping — fetch, first-discovery dedup, URL-seen check,
+  * delta, compaction — works on RDDs of rows, which compile no code.
   *
   * Class budget. Spark caches generated classes in a Guava cache of 100
   * entries built with 4 segments, so each segment is an LRU of 25; the key
@@ -74,8 +74,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * correctness obligation is deterministic, reproducible ordering vs the
   * sequential reference (`scraper.py:43-63`); see SURVEY.md §2.9.
   *
-  * State model (the 1000-executor / 10^10-URL design): per-wave work is
-  * O(wave batch), never O(frontier). The frontier lives as
+  * State model (the 1000-executor / 10^10-URL design): what a wave shuffles
+  * and writes is O(wave batch), never O(frontier), but selection still SCANS
+  * every pending row (robots join and top-k over all of them). With a fixed
+  * 768-row batch on 4 cores, selection took 0.28 s at 10^4 pending rows and
+  * 2.6 s at 4·10^6. The frontier lives as
   *
   *  - base rows: the pending rows as of the last compaction — stable,
   *    lineage-truncated rows that per-wave jobs only ever SCAN (no per-wave
@@ -505,24 +508,17 @@ object WaveRunner {
         // (no such page) discovers nothing, so it builds none of this.
         val isParent = col("ok") && col("depth") < cfg.maxDepth
         val newRows: Option[RDD[InternalRow]] = if (parentCount == 0L) None else Some {
-          // Two projections on purpose: the first materializes the sorted
-          // spans and first-heading offset per ROW; referencing those as
-          // attributes in the second keeps link extraction O(spans), not
-          // O(spans × links) (an inlined aggregate re-evaluates per transform
-          // element). The depth guard comes first: a leaf row's links would
-          // all die at it, so they are never extracted or canonicalized.
+          // One projection: anchorLinks reads each page's spans once and
+          // keeps the name-element anchors only (scraper.py:54). The depth
+          // guard comes first: a leaf row's links would all die at it, so
+          // they are never extracted or canonicalized.
           val links = fetched.filter(isParent)
             .select(col("url").as("parent_url"), col("depth").as("parent_depth"),
               col("discoveredRank").as("parent_rank"),
               // from the parent rows, not a lit(): an inlined wave literal
               // would change the generated code every wave
               (col("wave") + 1).as("discoveredWave"),
-              SpanExtract.sortedSpans(col("spans")).as("__spans"))
-            .withColumn("__firstH", SpanExtract.firstAnyHeadingOffset(col("__spans")))
-            .select(col("parent_url"), col("parent_depth"), col("parent_rank"),
-              col("discoveredWave"),
-              explode(SpanExtract.pageLinksFrom(col("__spans"), col("__firstH"))).as("lnk"))
-            .filter(col("lnk.anchorKind") === "anchor") // name-element anchors only (scraper.py:54)
+              explode(SpanExprs.anchorLinks(col("spans"))).as("lnk"))
             .select(col("parent_url"), col("parent_depth"), col("parent_rank"),
               col("discoveredWave"),
               col("lnk.url").as("raw_url"), col("lnk.rank").as("link_rank"))
@@ -619,7 +615,7 @@ object WaveRunner {
     // reads every committed wave's fetch table in one scan
     val allWaves = committedWaves ++ (startWave until wave)
     val log = store match {
-      case Some(st) if allWaves.nonEmpty => st.readDeltas(allWaves, "fetch_delta")
+      case Some(st) if allWaves.nonEmpty => st.readFetchLog(allWaves)
       case _ => GraftRows.scan(spark, fetchedRdds.toSeq, FetchSchema)
     }
     if (!bloomBroadcast) held += bloomTable.shards // released with the result
@@ -641,12 +637,12 @@ object WaveRunner {
   // generated code of a plan depends on its input's nullability, so a
   // non-null seed table would give wave 0 and the waves after a compaction
   // different classes
-  private val FrontierSchema = StructType.fromDDL(
+  private[crawl] val FrontierSchema = StructType.fromDDL(
     "url string, urlHash long, host string, depth int, priority double, " +
       "status string, retries int, discoveredWave int, discoveredRank long, " +
       "parentUrl string")
   private[crawl] val FrontierCols = FrontierSchema.fieldNames.toSeq
-  private val FetchSchema = StructType.fromDDL(
+  private[crawl] val FetchSchema = StructType.fromDDL(
     "url string, urlHash long, host string, depth int, priority double, retries int, " +
       "discoveredWave int, discoveredRank long, parentUrl string, host_rank long, ok boolean, " +
       "spans array<struct<kind:string,text:string,media_ref:string,offset:int,cls:string>>, " +

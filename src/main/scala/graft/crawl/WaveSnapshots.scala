@@ -69,5 +69,5 @@ object WaveSnapshots {
     * `wave`, as one scan: docs, crawl order and metrics are projections of it.
     */
   def fetchLogAsOf(store: WaveStore, wave: Int): DataFrame =
-    store.readDeltas(wavesThrough(store, wave), "fetch_delta")
+    store.readFetchLog(wavesThrough(store, wave))
 }

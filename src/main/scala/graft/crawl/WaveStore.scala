@@ -27,7 +27,7 @@ import java.nio.file.{Files, Paths}
   * Catalog mapping: `commitWave` = one append-only snapshot/commit per wave
   * (Iceberg MERGE writes only changed files — the delta IS the changed-file
   * set); `commitFrontierBase` = a rewrite/compaction commit; `listCommitted`
-  * = snapshot log; `readDeltas`/`readFrontierDeltas`/`readFrontierBase` =
+  * = snapshot log; `readFetchLog`/`readFrontierDeltas`/`readFrontierBase` =
   * time-travel reads.
   */
 trait WaveStore {
@@ -48,15 +48,17 @@ trait WaveStore {
     * the `wave` that committed it.
     */
   def readFrontierDeltas(waves: Seq[Int]): DataFrame
-  /** One table kind of several (≥ 1) waves as ONE scan. */
-  def readDeltas(waves: Seq[Int], kind: String): DataFrame
+  /** The fetch logs of several (≥ 1) waves as ONE scan. */
+  def readFetchLog(waves: Seq[Int]): DataFrame
 }
 
 /** No-catalog-jar implementation (the sandbox has no Iceberg jar): parquet
   * data files + JSON manifest + `_COMMITTED` / `_BASE_COMMITTED` markers as
-  * the atomic commits. Refuses a directory written in the older five-table
-  * layout (`parquet-v1`, whose committed waves have no `fetch_delta`): its
-  * waves cannot be read back, and a resume must not append to it.
+  * the atomic commits. Tables are read with the engine's schemas, so
+  * opening one runs no job to infer a schema from parquet footers. Refuses
+  * a directory written in the older five-table layout (`parquet-v1`, whose
+  * committed waves have no `fetch_delta`): its waves cannot be read back,
+  * and a resume must not append to it.
   */
 final class ParquetSnapshotStore(spark: SparkSession, dir: String,
     partitions: Int) extends WaveStore {
@@ -113,16 +115,20 @@ final class ParquetSnapshotStore(spark: SparkSession, dir: String,
     ()
   }
 
-  override def readFrontierBase(wave: Int): DataFrame =
-    spark.read.parquet(s"${wdir(wave)}/frontier_base")
+  private def frontierReader = spark.read.schema(WaveRunner.FrontierSchema)
 
-  override def readDeltas(waves: Seq[Int], kind: String): DataFrame =
-    spark.read.parquet(waves.map(w => s"${wdir(w)}/$kind"): _*)
+  override def readFrontierBase(wave: Int): DataFrame =
+    frontierReader.parquet(s"${wdir(wave)}/frontier_base")
+
+  override def readFetchLog(waves: Seq[Int]): DataFrame =
+    spark.read.schema(WaveRunner.FetchSchema)
+      .parquet(waves.map(w => s"${wdir(w)}/fetch_delta"): _*)
 
   // the wave dirs are Hive-style partitions: read from the store dir as the
-  // base path, every row carries the `wave` of its dir
+  // base path, every row carries the `wave` of its dir (a partition column
+  // is added to the given schema)
   override def readFrontierDeltas(waves: Seq[Int]): DataFrame =
-    spark.read.option("basePath", dir)
+    frontierReader.option("basePath", dir)
       .parquet(waves.map(w => s"${wdir(w)}/frontier_delta"): _*)
 
   /** Iceberg-style commit manifest: wave id, input snapshot, and per-partition
@@ -133,7 +139,7 @@ final class ParquetSnapshotStore(spark: SparkSession, dir: String,
     * manifest records.
     */
   private def writeManifest(w: String, wave: Int): Unit = {
-    val parts = spark.read.parquet(s"$w/frontier_delta")
+    val parts = frontierReader.parquet(s"$w/frontier_delta")
       .groupBy(pmod(col("urlHash"), lit(partitions)).as("pt")).count()
       .collect().sortBy(_.getLong(0))
       .map(r => s"""{"partition":${r.getLong(0)},"rows":${r.getLong(1)}}""")

@@ -1,9 +1,10 @@
 package graft
 
 import graft.extract.SpanExtract
+import graft.functions.SpanExprs
 import graft.model.Span
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
 
 /** Extraction-operator fixtures lifted from the reference's regexes and
   * slicing rules (SURVEY §5.2 #1).
@@ -37,6 +38,17 @@ class ExtractSpec extends SparkSpec {
       Span("heading", "My Research Topics", "", 0),
       Span("text", " ML , ; NLP • Vision;", "", 1)))
     assert(r.getSeq[String](1).toList === List("ML", "NLP", "Vision"))
+  }
+
+  test("interests: items are trimmed of line breaks, tabs and carriage returns") {
+    // HtmlSpans keeps <p> text verbatim, so a real page's block carries its
+    // line breaks; the oracle trims with String.trim, the reference with strip()
+    val spans = Seq(
+      Span("heading", "Research", "", 0),
+      Span("text", "ML,\n  NLP;\tVision\r\n•\r Robotics \t;\n", "", 1))
+    val expected = List("ML", "NLP", "Vision", "Robotics")
+    assert(profile(spans).getSeq[String](1).toList === expected)
+    assert(graft.oracle.SequentialOracle.extractInterests(spans.toArray).toList === expected)
   }
 
   test("interests: missing heading or block yields empty (scraper.py:102-106)") {
@@ -177,16 +189,16 @@ class ExtractSpec extends SparkSpec {
     assert(profileFieldsOf(profile) === oracleProfileFields(profile))
   }
 
-  test("pageLinks: links before the first heading are nav, after are anchors") {
+  test("anchor links: nav links before the first heading are dropped but still ranked") {
     val df = spansDF(Seq(
+      Span("link", "Dr. A", "/people/f0", 3),
       Span("link", "nav", "/about", 0),
       Span("heading", "Dr. A", "", 1),
-      Span("link", "Dr. A", "/people/f0", 2)))
-    val links = df.select(explode(
-      SpanExtract.pageLinks(SpanExtract.sortedSpans(col("spans")))).as("l"))
-      .select("l.url", "l.anchorKind").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(links === Set(("/about", "nav"), ("/people/f0", "anchor")))
+      Span("link", "nav", "/contact", 2)))
+    val links = df.select(explode(SpanExprs.anchorLinks(col("spans"))).as("l"))
+      .select("l.url", "l.rank").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(links === Seq(("/contact", 1L), ("/people/f0", 2L)))
   }
 
   test("year extraction (main.py:263-265)") {
@@ -242,8 +254,7 @@ class ExtractSpec extends SparkSpec {
       .select("name", "title", "href").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
     val byClass = df.select(explode(
-      SpanExtract.indexRowsByClass(SpanExtract.sortedSpans(col("spans")),
-        "field-content", "people-title")).as("r"))
+      indexRowsByClass(sortedSpans(col("spans")), "field-content", "people-title")).as("r"))
       .select("r.name", "r.title", "r.href").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
     // the class-addressed answer is the reference's: the chrome h3 starts no
@@ -262,10 +273,201 @@ class ExtractSpec extends SparkSpec {
       Span("text", "b", "", 1, "people-title-extra"), // not a token match
       Span("text", "c", "", 2, ""))
     val got = spansDF(spans).select(
-      transform(SpanExtract.sortedSpans(col("spans")),
-        s => SpanExtract.hasClass(s, "people-title")).as("m"))
+      transform(sortedSpans(col("spans")), s => hasClass(s, "people-title")).as("m"))
       .collect().head.getSeq[Boolean](0)
     assert(got === Seq(true, false, false))
   }
 
+
+  // ---- class-addressed extraction (reference `scraper.py:41,46,50`) ----
+  // Expressed as higher-order functions over the sorted spans: only the
+  // cases above use it, to show where the reference's class selectors and
+  // the order heuristic of `indexRowsDF` part ways.
+
+  private def sortedSpans(spans: Column): Column =
+    array_sort(spans, (a, b) => a.getField("offset") - b.getField("offset"))
+
+  /** True when the span's class context contains `cls` as a whitespace token.
+    * `Span.cls` carries the element's own classes plus its ancestors' (see
+    * the model), so this is the flat-span analog of a CSS descendant selector
+    * `.cls <kind>` — `hasClass(h3Span, "field-content")` matches the
+    * reference's `.field-content h3` (`scraper.py:46`).
+    */
+  private def hasClass(s: Column, cls: String): Column =
+    array_contains(split(s.getField("cls"), " "), cls)
+
+  /** Class-ADDRESSED faculty index rows — the reference's NESTED selector
+    * logic (`scraper.py:41-55`): rows are `.views-row` containers (`rowCls`);
+    * the name is the `.field-content h3` heading inside one (class-gated, so
+    * decorative headings never start a row); the title text must carry both
+    * the `nameCls` (field wrapper) and `titleCls` tokens, as
+    * `.field-content .people-title` (`scraper.py:50`) selects, else it is ""
+    * as the reference's `select_one` miss gives (`scraper.py:51`); the
+    * anchor sits inside the name element (`scraper.py:54`), so the row's
+    * link is class-gated on `nameCls` too. Same output shape as
+    * `SpanExprs.indexRows`.
+    */
+  private def indexRowsByClass(spans: Column, nameCls: String, titleCls: String,
+      rowCls: String = "views-row"): Column = {
+    val maxOff = lit(Int.MaxValue)
+    val nameHeadings = filter(spans, s =>
+      s.getField("kind") === "heading" && hasClass(s, nameCls) && hasClass(s, rowCls))
+    transform(nameHeadings, (h, i) => {
+      val hOff  = h.getField("offset")
+      val nextH = aggregate(filter(nameHeadings, s => s.getField("offset") > hOff),
+        maxOff, (acc, s) => least(acc, s.getField("offset")))
+      val inRow = (s: Column) =>
+        s.getField("offset") >= hOff && s.getField("offset") < nextH
+      val link = get(filter(spans, s =>
+        s.getField("kind") === "link" && hasClass(s, nameCls) &&
+          hasClass(s, rowCls) && inRow(s)), lit(0))
+      val text = get(filter(spans, s =>
+        s.getField("kind") === "text" && hasClass(s, titleCls) &&
+          hasClass(s, nameCls) && hasClass(s, rowCls) && inRow(s)), lit(0))
+      struct(
+        i.as("rank"),
+        h.getField("text").as("name"),
+        coalesce(text.getField("text"), lit("")).as("title"),
+        link.getField("media_ref").as("href"))
+    })
+  }
+
+  // ---- parity with the sequential oracle on generated pages ----
+
+  /** The link rule link discovery used before `anchorLinks`, restated
+    * sequentially: the links of the offset-sorted spans, ranked among all
+    * links, kept when they sit after the first heading.
+    */
+  private def anchorLinksSeq(spans: Seq[Span]): Seq[(String, Long)] = {
+    val s = spans.sortBy(_.offset)
+    val firstHeading = s.filter(_.kind == "heading").map(_.offset)
+      .foldLeft(Int.MaxValue)(math.min)
+    s.filter(_.kind == "link").zipWithIndex
+      .collect { case (l, i) if l.offset > firstHeading => (l.media_ref, i.toLong) }
+  }
+
+  private object Pages {
+    import org.scalacheck.Gen
+
+    private val headingText = Gen.oneOf("Research", "My research topics", "RESEARCH",
+      "Research Publications", "Selected Publications", "selected publications",
+      "Publications", "PUBLICATIONS and talks", "Teaching", "Dr. Ada Lovelace", "Zoë Ng",
+      "研究")
+    private val item = Gen.oneOf("ML", "NLP", "Vision", "Théorie des graphes", "数据",
+      "", "Sys tems", "P 2001 in Proc. X")
+    private val pad = Gen.oneOf("", " ", "\n  ", "\t", "\r\n", " \t", "\r")
+    private val sep = Gen.oneOf(",", ";", "•", ",;", " , ", "•;", ",,\n")
+    private val blob = Gen.choose(0, 6).flatMap(n => Gen.listOfN(n,
+      for (a <- pad; i <- item; b <- pad; s <- sep) yield a + i + b + s).map(_.mkString))
+    private val plain = Gen.oneOf("Professor", "mail ada@cs.uni.edu today",
+      "a.b-c@x.org, z@y.io", "no@tld", "Lecturer ✓", "", "x@y.z.edu!", "Zoë@uni.fr")
+
+    private def text(kind: String): Gen[String] = kind match {
+      case "heading"  => headingText
+      case "text"     => Gen.oneOf(blob, plain)
+      case "listitem" => Gen.oneOf(plain, item)
+      case "link"     => Gen.oneOf(item, plain)
+      case _          => Gen.const("")
+    }
+    private val kind = Gen.frequency(4 -> "heading", 3 -> "text", 3 -> "link",
+      3 -> "listitem", 1 -> "media")
+    private def spans(kinds: Seq[String]): Gen[Seq[(String, String)]] =
+      Gen.sequence[Seq[(String, String)], (String, String)](kinds.map(k => text(k).map(k -> _)))
+
+    private val randomBody = Gen.frequency(1 -> Gen.choose(0, 3), 3 -> Gen.choose(4, 30))
+      .flatMap(n => Gen.listOfN(n, kind)).flatMap(spans)
+    private val indexBody = Gen.choose(0, 8).flatMap(rows => Gen.listOfN(rows,
+      for {
+        link <- Gen.oneOf(true, false)
+        title <- Gen.oneOf(true, false)
+        linkFirst <- Gen.oneOf(true, false)
+        extra <- Gen.listOfN(2, Gen.oneOf("link", "text"))
+      } yield {
+        val body = (if (link) Seq("link") else Nil) ++ (if (title) Seq("text") else Nil)
+        "heading" +: ((if (linkFirst) body else body.reverse) ++ extra.take(rows % 3))
+      })).map(_.flatten).flatMap(spans)
+    private val profileBody = for {
+      pubs <- Gen.choose(0, 9)
+      after <- Gen.choose(0, 3)
+      research <- Gen.oneOf(true, false)
+      order <- Gen.oneOf(true, false)
+      r <- spans((if (research) Seq("heading", "text") else Nil) ++ Seq("text"))
+      p <- spans("heading" +: Seq.fill(pubs)("listitem"))
+      t <- spans("heading" +: Seq.fill(after)("listitem"))
+      researchHead <- Gen.oneOf("Research", "research interests", "RESEARCH AREAS")
+      pubsHead <- Gen.oneOf("Selected Publications", "PUBLICATIONS", "publications")
+    } yield {
+      val rs = if (research) (("heading", researchHead) +: r.tail) else r
+      val ps = ("heading", pubsHead) +: p.tail
+      if (order) rs ++ ps ++ t else ps ++ rs ++ t
+    }
+
+    /** A page: 0-3 navigation links and a text, then a random, index-shaped
+      * or profile-shaped body; offsets dense or strided, and shuffled or not.
+      */
+    val page: Gen[Seq[Span]] = for {
+      navN <- Gen.choose(0, 3)
+      nav <- spans(Seq.fill(navN)("link") :+ "text")
+      body <- Gen.frequency(2 -> randomBody, 1 -> indexBody, 1 -> profileBody)
+      stride <- Gen.oneOf(1, 3)
+      shuffled <- Gen.oneOf(true, false)
+      seed <- Gen.long
+    } yield {
+      val all = (nav ++ body).zipWithIndex.map { case ((k, t), i) =>
+        Span(k, t, if (k == "link") s"/people/f$i" else "", i * stride) }
+      if (shuffled) new scala.util.Random(seed).shuffle(all) else all
+    }
+  }
+
+  test("generated pages: native extraction equals the sequential oracle and the link rule") {
+    import graft.oracle.SequentialOracle._
+    val pages = GenHelper.samples(Pages.page, 400, seed = 20261020L).zipWithIndex
+      .map { case (spans, i) => (s"p$i", spans) }
+    val df = pages.map { case (u, s) => (u, s.toArray) }.toDF("url", "spans")
+
+    val rows = SpanExtract.indexRowsDF(df).collect()
+      .groupBy(_.getAs[String]("parent_url"))
+      .map { case (u, rs) => u -> rs.sortBy(_.getAs[Int]("rank")).toSeq.map(r =>
+        (r.getAs[Int]("rank"), r.getAs[String]("name"), r.getAs[String]("title"),
+          Option(r.getAs[String]("href")))) }
+    val fields = SpanExtract.profileFieldsDF(df).collect()
+      .map(r => r.getString(0) -> ((r.getString(1), r.getSeq[String](2).toList,
+        r.getSeq[String](3).toList))).toMap
+    val links = df.select(col("url"), explode(SpanExprs.anchorLinks(col("spans"))).as("l"))
+      .select(col("url"), col("l.url"), col("l.rank")).collect()
+      .groupBy(_.getString(0))
+      .map { case (u, rs) => u -> rs.toSeq.map(r => (r.getString(1), r.getLong(2))) }
+
+    var withRows, withPubs, withInterests, withMail = 0
+    for ((u, spans) <- pages) {
+      val a = spans.toArray
+      val oracleRows = parseIndexRows(a).map(r => (r.rank, r.name, r.title, r.href))
+      assert(rows.getOrElse(u, Nil) === oracleRows, s"index rows of $u: $spans")
+      val oracleFields = (extractEmail(a), extractInterests(a).toList, extractPublications(a).toList)
+      assert(fields(u) === oracleFields, s"profile fields of $u: $spans")
+      assert(links.getOrElse(u, Nil) === anchorLinksSeq(spans), s"anchor links of $u: $spans")
+      if (oracleRows.nonEmpty) withRows += 1
+      if (oracleFields._1.nonEmpty) withMail += 1
+      if (oracleFields._2.nonEmpty) withInterests += 1
+      if (oracleFields._3.size == 5) withPubs += 1
+    }
+    // the generator reaches every rule
+    assert(Seq(withRows, withMail, withInterests, withPubs).forall(_ > 20),
+      s"rows $withRows, mail $withMail, interests $withInterests, 5 pubs $withPubs")
+  }
+
+  test("a 2,048-row index page gives the sequential oracle's rows") {
+    val spans = (0 until 2048).flatMap { i =>
+      Seq(Span("heading", s"Dr. F$i", "", 3 * i),
+        Span("link", s"Dr. F$i", s"/people/f$i", 3 * i + 1),
+        Span("text", if (i % 7 == 0) "" else s"Professor $i", "", 3 * i + 2))
+    }
+    val got = SpanExtract.indexRowsDF(spansDF(spans)).orderBy("rank").collect()
+      .map(r => (r.getAs[Int]("rank"), r.getAs[String]("name"), r.getAs[String]("title"),
+        Option(r.getAs[String]("href")))).toSeq
+    val oracle = graft.oracle.SequentialOracle.parseIndexRows(spans.toArray)
+      .map(r => (r.rank, r.name, r.title, r.href))
+    assert(got.size === 2048)
+    assert(got === oracle)
+  }
 }
