@@ -6,7 +6,6 @@ import graft.model._
 import graft.synth.SyntheticSite.Seed
 import graft.urls.Urls
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftRows, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -67,8 +66,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * One entry: a crawl starts from a stored frontier, the seed rows at a cold
   * start and the store's frontier at its last committed wave on resume. The
   * pending base, the done rows and the seen keys all read those stored rows,
-  * and the pass that stores them also counts the pending ones, so the loop
-  * stops without an empty wave when nothing is left to fetch.
+  * and the pass that stores them also counts the pending ones. Each wave's
+  * fetch job counts the rows that re-enter pending as retries, so the count
+  * stays exact for every `maxRetries` and the loop stops without an empty
+  * wave when nothing is left to fetch.
   *
   * Wave-synchronous batches — not Structured Streaming — because the primary
   * correctness obligation is deterministic, reproducible ordering vs the
@@ -93,10 +94,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * every ~`frontierDeltaMaxRows` touched keys folds deltas into a new base
   * (the only O(frontier) work, amortized). The URL-seen set is the
   * frontier's key set, kept as url hashes only (8-byte fingerprints, not
-  * URLs) in two parts: stable seen keys placed by key hash, which a
-  * Bloom-positive candidate's check reads one partition of, plus the keys
-  * discovered since compaction, read from the delta. Selection is a
-  * partial-aggregating exact top-k (map-side bounded heaps), so even the
+  * URLs) in held parts: the entry's keys, then each non-leaf wave's new
+  * keys, stored by the job that puts them into the Bloom filter; compaction
+  * concatenates them partition by partition. The parts, each wave's
+  * candidates and the Bloom shards share ONE partitioner
+  * ([[graft.frontier.ShardPlacement]]), so the URL-seen check, the sharded
+  * put and compaction move nothing. It has `min(bloomShards, P)` partitions
+  * for `P` shuffle partitions: every test and benchmark shape has `P <= 32`,
+  * the default `bloomShards`. Selection is
+  * a partial-aggregating exact top-k (map-side bounded heaps), so even the
   * selection shuffle moves O(hosts × budget) buffer rows, not O(pending).
   * Fetch maps the selected batch only.
   */
@@ -142,8 +148,7 @@ object WaveRunner {
         * join. Set to 0 to force the shuffle regime (tests do).
         */
       rulesBroadcastMaxRows: Long = 1L << 20,
-      snapshotDir: Option[String] = None, // Some(dir) = committed, resumable waves
-      hostWhitelist: Option[Seq[String]] = None // default: seed hosts
+      snapshotDir: Option[String] = None // Some(dir) = committed, resumable waves
   ) {
     /** Conservative whole-filter size estimate from the configured sizing. */
     def bloomBytesEstimate: Long =
@@ -207,7 +212,7 @@ object WaveRunner {
       rules: Seq[RobotsRule] = Nil,
       cfg: CrawlConfig = CrawlConfig()
   ): CrawlResult =
-    runLoop(spark, seedFrontier(spark, seeds), startWave = 0, Nil, whitelistOf(seeds, cfg),
+    runLoop(spark, seedFrontier(spark, seeds), startWave = 0, Nil, whitelistOf(seeds),
       fetcher, rules, cfg)
 
   /** Resume a snapshot-mode crawl from its last committed wave: the wave
@@ -236,11 +241,12 @@ object WaveRunner {
 
     val last = committed.max
     runLoop(spark, WaveSnapshots.frontierAsOf(store, seedFrontier(spark, seeds), last),
-      last + 1, committed.sorted, whitelistOf(seeds, cfg), fetcher, rules, cfg)
+      last + 1, committed.sorted, whitelistOf(seeds), fetcher, rules, cfg)
   }
 
-  private def whitelistOf(seeds: Seq[Seed], cfg: CrawlConfig): Seq[String] =
-    cfg.hostWhitelist.getOrElse(seeds.map(s => Urls.hostOf(Urls.normalize(s.url))).distinct)
+  /** The hosts a crawl may enter: its seeds'. */
+  private def whitelistOf(seeds: Seq[Seed]): Seq[String] =
+    seeds.map(s => Urls.hostOf(Urls.normalize(s.url))).distinct
 
   /** The wave loop (shared by cold start and resume).
     *
@@ -268,11 +274,10 @@ object WaveRunner {
     val sc = spark.sparkContext
 
     // The frontier/seen state is RDDs of rows and keys, local-checkpointed:
-    // the bookkeeping between waves (delta, compaction, seen) is row filters,
-    // unions and a key partitioning, with no query plan to compile. SQL
-    // runs the relational work — selection and link extraction — over
-    // scans of these rows. Every stored RDD is in `held` until it is
-    // superseded, or until the result is released.
+    // the bookkeeping between waves (delta, compaction, seen) is row filters
+    // and unions, with no query plan to compile. SQL runs the relational
+    // work — selection and link extraction — over scans of these rows. Every
+    // stored RDD is in `held` until it is superseded or the result released.
     val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
     def hold[T](rdd: RDD[T], eager: Boolean): RDD[T] = {
       rdd.localCheckpoint()
@@ -284,48 +289,36 @@ object WaveRunner {
       held.synchronized { held -= rdd }
       GraftRows.release(rdd)
     }
-    // seen keys are placed by their value
-    val byKey = new HashPartitioner(P)
-    def placed(keys: RDD[Long]): RDD[Long] = keys.map(h => (h, ())).partitionBy(byKey).keys
-
     // -- frontier/seen state (see the class doc for the model) --
     // the entry rows, stored once: the pending base, the first done rows and
     // the seen keys read them (done rows stay views over stored rows)
     val entryRdd = hold(GraftRows.rows(entry.select(FrontierCols.map(col): _*)).map(_.copy()),
       eager = false)
     var baseRdd  = entryRdd.filter(isPending)
-    var seenRdd  = hold(placed(entryRdd.map(_.getLong(UrlHashAt))), eager = false)
     var deltaRdd = sc.emptyRDD[InternalRow]
     val doneRdds = scala.collection.mutable.ArrayBuffer(entryRdd.filter(!isPending(_)))
     var deltaRowsBound = 0L  // upper bound on |deltaState| (drives compaction)
-    var newSinceCompaction = 0L
     // keys SELECTED into a batch since the last compaction — the only base
     // rows a delta can supersede (discoveries never enter the base between
     // compactions). Bounded by the politeness budgets and the compaction
     // threshold; sorted, on the driver.
     var batchKeys = Array.emptyLongArray
-    // discoveredWave watermark of the last compaction: rows discovered after
-    // it (discoveredWave > watermark) are exactly the seen-set additions not
-    // yet folded into seenRdd — a fetched discovery keeps its
-    // discoveredWave, a base retry keeps its pre-compaction one
-    var watermark = startWave
-
-    def newKeys: RDD[Long] = {
-      val w = watermark
-      deltaRdd.filter(_.getInt(DiscoveredWaveAt) > w).map(_.getLong(UrlHashAt))
-    }
     def liveBase: RDD[InternalRow] = withoutKeys(baseRdd, batchKeys)
 
-    // URL-seen Bloom state, residency chosen statically from the configured
-    // sizing (cfg.bloomBroadcastable, like Spark's broadcast-join threshold):
+    // URL-seen state, all of it placed by one partitioner: the seen keys as
+    // held parts (the entry's, then each non-leaf wave's new keys, stored by
+    // the job that puts them into the Bloom filter), and the filter, its
+    // residency chosen statically from the configured sizing
+    // (cfg.bloomBroadcastable, like Spark's broadcast-join threshold):
     //  - broadcast regime (filter fits the bound): a driver PartitionedBloom
     //    that takes each wave's new keys on the driver and is broadcast as a
-    //    copy per wave, probed row-locally — no extra shuffle. The driver
-    //    object is BOUNDED BY CONFIG and its puts throw past it.
-    //  - sharded regime (the 10^10 path): a BloomTable, shard rows placed by
-    //    shard id on the executors like the seen keys are by value; candidates
-    //    and new keys move to their shard, the shards never move.
-    // Both take a wave's new keys in the job that stores them, and count them.
+    //    copy per wave, probed row-locally. The driver object is BOUNDED BY
+    //    CONFIG and its puts throw past it.
+    //  - sharded regime (the 10^10 path): a BloomTable, shard rows on the
+    //    executors that take the new keys and probes of their partition.
+    val placement = BloomTable.placement(cfg.bloomShards, P)
+    val seenParts = scala.collection.mutable.ArrayBuffer(
+      hold(UrlSeen.place(UrlSeen.keysOf(entryRdd, UrlHashAt), placement), eager = false))
     val bloomBroadcast = cfg.bloomBroadcastable
     val bloomDriver =
       if (bloomBroadcast) PartitionedBloom.empty(cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
@@ -333,12 +326,10 @@ object WaveRunner {
     val bloomTable =
       if (bloomBroadcast) null
       else new BloomTable(sc, cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp, P)
-    def addToBloom(rows: RDD[InternalRow], at: Int): Long =
-      if (bloomBroadcast) bloomDriver.putHashes(rows, at) else bloomTable.putHashes(rows, at)
     // the entry pass: one job over the entry rows stores them, counts the
     // pending ones and, in the broadcast regime, brings their keys to the
-    // driver filter a partition at a time. The sharded regime's keys stay on
-    // the executors: its shards take them in a job of their own.
+    // driver filter a partition at a time. The sharded regime's shards take
+    // the entry's seen part in a job of their own, which also stores it.
     var entryPending = 0L
     sc.runJob(entryRdd, (it: Iterator[InternalRow]) => {
       var pending = 0L
@@ -352,10 +343,7 @@ object WaveRunner {
       entryPending += part._1
       if (bloomBroadcast) bloomDriver.putAll(part._2)
     })
-    if (!bloomBroadcast) bloomTable.putHashes(entryRdd, UrlHashAt)
-    // the wave's candidates are placed where their exact check (broadcast
-    // regime) or their shard (sharded regime) reads them
-    val candidatePlacement = if (bloomBroadcast) byKey else bloomTable.placement
+    if (!bloomBroadcast) bloomTable.putKeys(seenParts.head)
 
     // merged to one row per host here, once: the per-wave join then needs no
     // aggregate over the rules
@@ -388,32 +376,24 @@ object WaveRunner {
     var wave = startWave
     var done = false
     var totalFetches = 0L
-    // Exact pending-row count, maintained arithmetically (pending' =
-    // pending − batch + discoveries) — exact only when maxRetries == 0
-    // (the reference's fetch-once discipline and the engine default), since
-    // retries re-enter pending in numbers only a job could count. When it
-    // reaches zero the loop stops WITHOUT running the final empty wave: the
-    // termination wave costs a full frontier scan + selection + zero-row
-    // fetch (measured ~0.7 s on the bench corpus) only to observe an empty
-    // batch the driver already knows is empty. Denied/over-budget rows keep
-    // the count positive, so the shortcut can only fire when the frontier
-    // is truly drained; None (retries) falls back to the observed empty
-    // batch. It starts from the entry's pending rows, so a resume of a
-    // finished crawl runs no wave.
-    var pendingKnown: Option[Long] =
-      if (cfg.maxRetries == 0) Some(entryPending) else None
+    // Exact pending-row count from the entry's pending rows: pending' =
+    // pending − batch + retrying + discoveries (the fetch job counts the
+    // retrying rows). At zero the loop stops WITHOUT the empty wave (a
+    // frontier scan + selection + zero-row fetch, ~0.7 s on the bench corpus)
+    // that would only observe it, so a resume of a finished crawl runs no
+    // wave. Robots-denied rows keep it positive: an empty batch stops then.
+    var pendingCount = entryPending
 
-    // -- compaction: fold deltas into new base rows and the discoveries into
-    // the seen keys (re-placed by value) — the ONLY O(frontier) work in the
-    // engine, amortized over the waves between compactions.
+    // -- compaction: fold deltas into new base rows — the ONLY O(frontier)
+    // work in the engine, amortized over the waves between compactions —
+    // and the seen parts into one, partition by partition (no shuffle).
     // Done rows move to the append-only doneRdds (never rewritten again).
     def maybeCompact(committedWave: Int): Unit = if (deltaRowsBound > cfg.frontierDeltaMaxRows) {
       phase("compaction", committedWave) {
         val pendingDelta = deltaRdd.filter(isPending)
         val bpF = Future { hold(sc.union(liveBase, pendingDelta).coalesce(P), eager = true) }
-        val sbF =
-          if (newSinceCompaction == 0L) Future.successful(seenRdd)
-          else Future { hold(placed(seenRdd.union(newKeys)), eager = true) }
+        val sbF = if (seenParts.size == 1) Future.successful(seenParts.head)
+          else Future { hold(sc.union(seenParts.toSeq), eager = true) }
         val bp2 = Await.result(bpF, Duration.Inf)
         val sb2 = Await.result(sbF, Duration.Inf)
         // the folded deltaRdd stays held: the done rows are a view over it
@@ -423,20 +403,16 @@ object WaveRunner {
             GraftRows.scan(spark, bp2 +: doneRdds.toSeq, FrontierSchema))
         }
         drop(baseRdd); baseRdd = bp2
-        if (!(sb2 eq seenRdd)) { drop(seenRdd); seenRdd = sb2 }
+        if (seenParts.size > 1) { seenParts.foreach(drop); seenParts.clear(); seenParts += sb2 }
         deltaRdd = sc.emptyRDD[InternalRow]
-        // watermark = the wave the folded deltas were committed against:
-        // wave w's discoveries are stamped discoveredWave = w + 1 and ARE
-        // folded above, so anything stamped > committedWave + 1 is exactly
-        // the not-yet-folded set (regression-tested in CrawlDepth2Spec)
-        watermark = committedWave + 1
         batchKeys = Array.emptyLongArray
-        newSinceCompaction = 0L
         deltaRowsBound = 0L
       }
     }
 
-    while (!done && wave < cfg.maxWaves && !pendingKnown.exists(_ <= 0L)) {
+    val maxDepth = cfg.maxDepth
+    val maxRetries = cfg.maxRetries
+    while (!done && wave < cfg.maxWaves && pendingCount > 0L) {
       // live pending rows: untouched base rows + touched keys' latest state,
       // as ONE scan. The base rows lose the batch keys selected since
       // compaction — the sole base rows a delta can supersede (discoveries
@@ -481,20 +457,23 @@ object WaveRunner {
 
       // one job per wave over the fetched rows (a plain RDD job: no plan to
       // compile) stores them, decides termination, counts the pages that may
-      // still link within maxDepth, and brings the batch keys to the driver
-      val maxDepth = cfg.maxDepth
+      // still link within maxDepth and the rows that will retry, and brings
+      // the batch keys to the driver
       val parts = phase("select+fetch", wave) {
         sc.runJob(fetchedRdd, (it: Iterator[InternalRow]) => {
           var parents = 0L
+          var retrying = 0L
           val keys = Array.newBuilder[Long]
           it.foreach { r =>
-            if (r.getBoolean(FetchOkAt) && r.getInt(DepthAt) < maxDepth) parents += 1
+            if (!r.getBoolean(FetchOkAt)) {
+              if (r.getInt(FetchRetriesAt) + 1 <= maxRetries) retrying += 1
+            } else if (r.getInt(DepthAt) < maxDepth) parents += 1
             keys += r.getLong(UrlHashAt)
           }
-          (parents, keys.result())
+          (parents, retrying, keys.result())
         })
       }
-      val waveKeys = parts.flatMap(_._2).sorted
+      val waveKeys = parts.flatMap(_._3).sorted
       val batchCount = waveKeys.length.toLong
       val parentCount = parts.map(_._1).sum
       totalFetches += batchCount
@@ -557,27 +536,31 @@ object WaveRunner {
           // first discovery wins when several pages link the same URL this
           // wave (every parent of a wave carries the same discoveredWave)
           val firsts = GraftRows.rows(candidates).map(r => (r.getLong(UrlHashAt), r.copy()))
-            .reduceByKey(candidatePlacement, firstDiscovery _)
-          // URL-seen: Bloom fast path + exact check. The exact rescue never
-          // rewrites the seen set: it reads seenRdd's partition of each
-          // Bloom-positive key, and the discoveries since compaction. The
-          // broadcast regime probes a copy: the driver filter takes this
-          // wave's keys while the copy is in use.
+            .reduceByKey(placement, firstDiscovery _)
+          // URL-seen: Bloom fast path + exact check, both on the candidates'
+          // own partition (nothing moves): a Bloom-positive key is checked
+          // against its partition of the seen parts. The broadcast regime
+          // probes a copy: the driver filter takes this wave's keys while
+          // the copy is in use.
           val flagged =
             if (bloomBroadcast) UrlSeen.flag(firsts, bloomDriver.copy())
-            else UrlSeen.flagSharded(firsts, bloomTable.shards, bloomTable.placement)
-          hold(UrlSeen.exact(flagged, seenRdd, newKeys, byKey), eager = false)
+            else UrlSeen.flagSharded(firsts, bloomTable.shards, placement)
+          hold(UrlSeen.exact(flagged, sc.union(seenParts.toSeq)), eager = false)
         }
         // the job that puts the new keys into the filter also stores them
+        // (the rows, and their keys as the wave's seen part)
         val n = newRows.fold(0L) { rows =>
-          phase("discover+seen", wave) { addToBloom(rows, UrlHashAt) } }
+          val part = hold(UrlSeen.keysOf(rows, UrlHashAt), eager = false)
+          seenParts += part
+          phase("discover+seen", wave) {
+            if (bloomBroadcast) bloomDriver.putKeys(part) else bloomTable.putKeys(part) }
+        }
 
         // -- state transition (G8): selected rows leave pending (errors
         // retry); the wave's DELTA is just their new statuses + discoveries —
         // O(batch), never O(frontier). deltaState' = deltaState ⧹ batchKeys ∪
         // waveDelta; only the BATCH keys need removing (discoveries are
         // unseen, so they cannot already be in deltaState).
-        val maxRetries = cfg.maxRetries
         val finished = fetchedRdd.mapPartitions(asRows(FrontierSchema) { r =>
           val ok = r.getBoolean(FetchOkAt)
           val retries = r.getInt(FetchRetriesAt)
@@ -602,9 +585,8 @@ object WaveRunner {
         newRows.foreach(drop)
         if (store.isDefined) drop(fetchedRdd) else fetchedRdds += fetchedRdd
         deltaRowsBound += batchCount + n
-        newSinceCompaction += n
         batchKeys = (batchKeys ++ waveKeys).sorted
-        pendingKnown = pendingKnown.map(_ - batchCount + n)
+        pendingCount += parts.map(_._2).sum - batchCount + n
         maybeCompact(wave)
         wave += 1
       }

@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.{HashPartitioner, Partitioner, SparkContext}
+import org.apache.spark.{Partitioner, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftRows}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -53,14 +53,16 @@ final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter],
     hashes.foreach(put)
   }
 
-  /** [[putAll]] the hash at field `at` of every row, one partition at a
-    * time as its task ends (the driver never holds more than one
-    * partition's keys); returns how many were put.
+  /** [[putKeys]] the hash at field `at` of every row. */
+  def putHashes(rows: RDD[InternalRow], at: Int): Long = putKeys(UrlSeen.keysOf(rows, at))
+
+  /** [[putAll]] `keys`, one partition at a time as its task ends (the
+    * driver never holds more than one partition's keys), in one job that
+    * also stores `keys` when they are held; returns how many were put.
     */
-  def putHashes(rows: RDD[InternalRow], at: Int): Long = {
+  def putKeys(keys: RDD[Long]): Long = {
     var n = 0L
-    rows.sparkContext.runJob(rows,
-      (it: Iterator[InternalRow]) => it.map(_.getLong(at)).toArray,
+    keys.sparkContext.runJob(keys, (it: Iterator[Long]) => it.toArray,
       (_: Int, part: Array[Long]) => { putAll(part); n += part.length })
     n
   }
@@ -89,8 +91,10 @@ object PartitionedBloom {
 final case class BloomShard(shard: Int, keys: Long, bloom: BloomFilter)
 
 /** Places a url hash on the partition that holds its Bloom shard
-  * (`shard % numPartitions`): the sharded regime's candidates and new keys
-  * are placed by it, so they meet their shard where it lives.
+  * (`shard % numPartitions`). It is the one placement of every URL-seen row
+  * set in both regimes — seen keys, candidates, new keys and shard rows —
+  * and each keeps it, so a check or put reads its own partition and moves
+  * nothing.
   */
 final case class ShardPlacement(nShards: Int, numPartitions: Int) extends Partitioner {
   def getPartition(key: Any): Int =
@@ -108,10 +112,11 @@ final case class ShardPlacement(nShards: Int, numPartitions: Int) extends Partit
   * shards) and nothing driver-side grows with the URL count. Filter bytes
   * never cross the wire:
   *
-  *  - [[putHashes]] moves the hashes to their shard's partition and puts
-  *    them there, into a copy of each shard (stored rows are never mutated);
-  *  - a probe ([[UrlSeen.flagSharded]]) moves the candidates to their
-  *    shard's partition the same way.
+  *  - [[putKeys]] zips placed keys with their shards and puts them into a
+  *    copy of each shard where it lives (stored rows are never mutated);
+  *    keys not placed yet move to their shard's partition first;
+  *  - a probe ([[UrlSeen.flagSharded]]) zips placed candidates with their
+  *    shards the same way.
   *
   * Same sizing and sharding as [[PartitionedBloom]], so for the same keys a
   * shard holds the same bits. Not thread-safe: one crawl loop drives it.
@@ -128,13 +133,17 @@ final class BloomTable(sc: SparkContext, nShards: Int, expectedTotal: Long, fpp:
   /** The current shard rows: stored once anything was put. */
   def shards: RDD[BloomShard] = rows
 
-  /** Put the hash at field `at` of every row, in one job that also stores
-    * the grown shards; returns how many were put. All or none: throws
-    * before the table would hold more than `expectedTotal` keys, like
+  /** [[putKeys]] the hash at field `at` of every row. */
+  def putHashes(hashRows: RDD[InternalRow], at: Int): Long = putKeys(UrlSeen.keysOf(hashRows, at))
+
+  /** Put `hashes`, in one job that also stores the grown shards (and
+    * `hashes` when they are held); returns how many were put. Hashes placed
+    * by [[placement]] are not moved. All or none: throws before the table
+    * would hold more than `expectedTotal` keys, like
     * [[PartitionedBloom.putAll]], and keeps the shards it had.
     */
-  def putHashes(hashRows: RDD[InternalRow], at: Int): Long = {
-    val next = BloomTable.grow(rows, hashRows.map(_.getLong(at)), placement)
+  def putKeys(hashes: RDD[Long]): Long = {
+    val next = BloomTable.grow(rows, UrlSeen.place(hashes, placement), placement.nShards)
     next.localCheckpoint()
     val total = sc.runJob(next, (it: Iterator[BloomShard]) => it.map(_.keys).sum).sum
     if (total > expectedTotal) {
@@ -178,10 +187,12 @@ object BloomTable {
   def placement(nShards: Int, partitions: Int): ShardPlacement =
     ShardPlacement(nShards, math.min(nShards, partitions))
 
-  /** Shards holding `hashes`, built where they are placed; not stored. */
+  /** Shards holding `hashes` (placed by `placement`), built where they
+    * are; not stored.
+    */
   def build(hashes: RDD[Long], placement: ShardPlacement, expectedTotal: Long,
       fpp: Double): RDD[BloomShard] =
-    grow(empty(hashes.sparkContext, placement, expectedTotal, fpp), hashes, placement)
+    grow(empty(hashes.sparkContext, placement, expectedTotal, fpp), hashes, placement.nShards)
 
   /** Empty shards, each on its placed partition (not stored: cheap to make). */
   private def empty(sc: SparkContext, placement: ShardPlacement, expectedTotal: Long,
@@ -194,16 +205,15 @@ object BloomTable {
     }
   }
 
-  /** `shards` with `hashes` put in: the hashes move to their shard's
-    * partition and are put into a copy of each shard there.
+  /** `shards` with `hashes` put in, each into a copy of its shard where it
+    * lives: `hashes` are placed as the shards are.
     */
-  private def grow(shards: RDD[BloomShard], hashes: RDD[Long],
-      placement: ShardPlacement): RDD[BloomShard] =
-    hashes.map(h => (h, ())).partitionBy(placement).zipPartitions(shards) { (hs, olds) =>
+  private def grow(shards: RDD[BloomShard], hashes: RDD[Long], nShards: Int): RDD[BloomShard] =
+    hashes.zipPartitions(shards) { (hs, olds) =>
       val mine = olds.map(s => s.shard -> s.copy(bloom = deserialize(serialize(s.bloom)))).toMap
-      val added = new Array[Long](placement.nShards)
-      hs.foreach { case (h, _) =>
-        val s = shardOf(h, placement.nShards)
+      val added = new Array[Long](nShards)
+      hs.foreach { h =>
+        val s = shardOf(h, nShards)
         mine(s).bloom.putLong(h)
         added(s) += 1
       }
@@ -218,6 +228,16 @@ object UrlSeen {
     */
   type Flagged = (Long, (InternalRow, Boolean))
 
+  /** `keys` placed by `placement`: no move when they are already. */
+  def place(keys: RDD[Long], placement: ShardPlacement): RDD[Long] =
+    if (keys.partitioner.contains(placement)) keys
+    else keys.map(h => (h, ())).partitionBy(placement)
+      .mapPartitions(_.map(_._1), preservesPartitioning = true)
+
+  /** The hash at field `at` of every row, kept where the row is. */
+  def keysOf(rows: RDD[InternalRow], at: Int): RDD[Long] =
+    rows.mapPartitions(_.map(_.getLong(at)), preservesPartitioning = true)
+
   /** Broadcast-regime probe: every candidate against the broadcast filter,
     * row-locally (no shuffle; the candidates keep their placement).
     */
@@ -227,53 +247,48 @@ object UrlSeen {
       preservesPartitioning = true)
   }
 
-  /** Sharded-regime probe: each candidate moves to the partition that
-    * holds its shard (no move when they are placed there already) and is
-    * probed there; the shards stay where they are, so executor residency is
-    * O(shards/executor), never O(filter).
+  /** Sharded-regime probe: candidates placed by `placement` are probed
+    * against the shards of their own partition; nothing moves, so executor
+    * residency is O(shards/executor), never O(filter).
     */
   def flagSharded(candidates: RDD[(Long, InternalRow)], shards: RDD[BloomShard],
       placement: ShardPlacement): RDD[Flagged] =
-    candidates.partitionBy(placement).zipPartitions(shards, preservesPartitioning = true) {
-      (cands, own) =>
-        val bloom = own.map(s => s.shard -> s.bloom).toMap
-        cands.map { case (h, r) =>
-          (h, (r, bloom(BloomTable.shardOf(h, placement.nShards)).mightContainLong(h))) }
+    candidates.zipPartitions(shards, preservesPartitioning = true) { (cands, own) =>
+      val bloom = own.map(s => s.shard -> s.bloom).toMap
+      cands.map { case (h, r) =>
+        (h, (r, bloom(BloomTable.shardOf(h, placement.nShards)).mightContainLong(h))) }
     }
 
-  /** The rows of `flagged` whose key is NOT in the seen set — exactly.
-    * Bloom-negative rows are definitely unseen and skip the check; the
-    * Bloom-positive ones (rare: FPP + true duplicates) move to the
-    * partition of `seen` that holds their keys, which is scanned only when
-    * it has any, and are also checked against `recent`.
-    *
-    * @param seen   seen url hashes, placed by `part`
-    * @param recent more seen keys (the bounded additions not yet in `seen`)
+  /** The rows of `flagged` whose key is NOT in `seen` — exactly, in one
+    * partition-local pass: both are placed by the same partitioner, so each
+    * candidate partition reads only its own partition of the seen keys.
+    * Bloom-negative rows are definitely unseen and pass; the Bloom-positive
+    * ones (rare: FPP + true duplicates) are checked, and the seen partition
+    * is scanned only when it has any. Keeps the placement.
     */
-  def exact(flagged: RDD[Flagged], seen: RDD[Long], recent: RDD[Long],
-      part: Partitioner): RDD[InternalRow] = {
-    val fast = flagged.flatMap { case (_, (r, maybe)) => if (maybe) None else Some(r) }
-    val maybe = flagged.flatMap { case (h, (r, maybe)) => if (maybe) Some((h, r)) else None }
-      .partitionBy(part)
-    val rescued = maybe.zipPartitions(seen, recent.map(h => (h, ())).partitionBy(part)) {
-      (cands, seenKeys, recentKeys) =>
-        if (!cands.hasNext) Iterator.empty
-        else {
-          val byKey = cands.toArray
-          val wanted = scala.collection.mutable.HashSet.empty[Long] ++= byKey.map(_._1)
-          seenKeys.foreach(wanted -= _)
-          recentKeys.foreach { case (h, _) => wanted -= h }
-          byKey.iterator.collect { case (h, r) if wanted(h) => r }
-        }
+  def exact(flagged: RDD[Flagged], seen: RDD[Long]): RDD[InternalRow] = {
+    require(flagged.partitioner.isDefined && flagged.partitioner == seen.partitioner,
+      s"candidates (${flagged.partitioner}) and seen keys (${seen.partitioner}) " +
+        "must be placed alike")
+    flagged.zipPartitions(seen, preservesPartitioning = true) { (cands, seenKeys) =>
+      val maybe = scala.collection.mutable.ArrayBuffer.empty[(Long, InternalRow)]
+      val unseen = cands.flatMap { case (h, (r, m)) =>
+        if (m) { maybe += ((h, r)); None } else Some(r) }
+      unseen ++ {
+        val wanted = scala.collection.mutable.HashSet.empty[Long] ++= maybe.map(_._1)
+        if (wanted.nonEmpty) seenKeys.foreach(wanted -= _)
+        maybe.iterator.collect { case (h, r) if wanted(h) => r }
+      }
     }
-    fast.union(rescued)
   }
 
   /** DataFrame form of the broadcast-regime filter: the rows of
     * `candidates` (which carry `url_hash`) whose key is not in `seen`.
     */
-  def filterUnseen(candidates: DataFrame, seen: DataFrame, bloom: PartitionedBloom): DataFrame =
-    viaRows(candidates, seen)(flag(_, bloom))
+  def filterUnseen(candidates: DataFrame, seen: DataFrame, bloom: PartitionedBloom): DataFrame = {
+    val placement = BloomTable.placement(bloom.nShards, shufflePartitions(candidates))
+    viaRows(candidates, placedKeys(seen, placement), placement)(flag(_, bloom))
+  }
 
   /** DataFrame form of the sharded-regime filter (see [[filterUnseen]]):
     * the shards are built from `seen` for this query and not stored.
@@ -281,23 +296,23 @@ object UrlSeen {
   def filterUnseenSharded(candidates: DataFrame, seen: DataFrame, nShards: Int,
       expectedTotal: Long, fpp: Double): DataFrame = {
     val placement = BloomTable.placement(nShards, shufflePartitions(candidates))
-    val shards = BloomTable.build(GraftRows.rows(seen.select(col("url_hash"))).map(_.getLong(0)),
-      placement, expectedTotal, fpp)
-    viaRows(candidates, seen)(flagSharded(_, shards, placement))
+    val seenKeys = placedKeys(seen, placement)
+    val shards = BloomTable.build(seenKeys, placement, expectedTotal, fpp)
+    viaRows(candidates, seenKeys, placement)(flagSharded(_, shards, placement))
   }
 
   private def shufflePartitions(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
-  private def viaRows(candidates: DataFrame, seen: DataFrame)(
+  private def placedKeys(seen: DataFrame, placement: ShardPlacement): RDD[Long] =
+    place(keysOf(GraftRows.rows(seen.select(col("url_hash"))), 0), placement)
+
+  private def viaRows(candidates: DataFrame, seenKeys: RDD[Long], placement: ShardPlacement)(
       probe: RDD[(Long, InternalRow)] => RDD[Flagged]): DataFrame = {
-    val spark = candidates.sparkSession
-    val part = new HashPartitioner(shufflePartitions(candidates))
     val at = candidates.schema.fieldIndex("url_hash")
     val cands = GraftRows.rows(candidates).map(r => (r.getLong(at), r.copy()))
-    val seenKeys = GraftRows.rows(seen.select(col("url_hash"))).map(r => (r.getLong(0), ()))
-      .partitionBy(part).keys
-    GraftRows.scan(spark, Seq(exact(probe(cands), seenKeys, spark.sparkContext.emptyRDD[Long],
-      part)), candidates.schema)
+      .partitionBy(placement)
+    GraftRows.scan(candidates.sparkSession, Seq(exact(probe(cands), seenKeys)),
+      candidates.schema)
   }
 }

@@ -7,6 +7,8 @@ import graft.urls.Urls
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.{Seed, SiteConfig}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 /** Frontier dynamics beyond the reference scenario: depth-2 crawls where
   * profile pages link back to the index and to collaborators — every such
   * candidate is a duplicate, so the Bloom+anti-join dedup is exercised by
@@ -92,38 +94,36 @@ class CrawlDepth2Spec extends SparkSpec {
     assert(engine.waves === 3)
   }
 
-  test("deferred-bloom compaction keeps multi-wave discoveries in seen (watermark regression)") {
-    // Chain site: seed -> /a -> /b — genuinely NEW URLs are discovered at
-    // every depth, unlike the synthetic site (which discovers everything at
-    // wave 0). frontierDeltaMaxRows = 1 forces a compaction after every
-    // wave. Regression for the deferred-bloom watermark: resolveBloom runs
-    // after the loop advanced `wave`, so a compaction there must derive the
-    // seen watermark from the COMMITTED wave, not the current one —
-    // otherwise the in-flight wave's discoveries (here /b) are excluded
-    // from the seen accumulator forever: missing from the final seen set
-    // and eligible for re-fetch on rediscovery.
+  test("seen keys keep every wave's discoveries across compactions: no refetch") {
+    // Chain site: seed -> /a -> /b -> /c, and /c links back to every earlier
+    // page. Each wave discovers one genuinely NEW URL (unlike the synthetic
+    // site, which discovers everything at wave 0), so the loop's seen keys
+    // grow by one wave's part at a time. By /c's wave the seed is an entry
+    // key, /a was discovered three waves before and /b two, and with
+    // frontierDeltaMaxRows = 1 each was folded by a compaction since. A key
+    // missing from the seen keys is Bloom-positive but not found by the
+    // exact check, so its page is rediscovered and fetched a second time.
+    // Run with a compaction after every wave and with none.
     import graft.model.{Span, SpanDoc}
     val seed = "https://chain.test/"
     val a    = "https://chain.test/a"
     val b    = "https://chain.test/b"
-    def page(self: String, next: Option[String]): SpanDoc = SpanDoc(self,
-      (Seq(Span("heading", "Page", "", 0)) ++
-        next.map(n => Span("link", "next", n, 1))).toArray)
-    val fetcher: String => Option[SpanDoc] = {
-      case `seed` => Some(page(seed, Some(a)))
-      case `a`    => Some(page(a, Some(b)))
-      case `b`    => Some(page(b, None))
-      case _      => None
+    val c    = "https://chain.test/c"
+    def page(self: String, links: String*): SpanDoc = SpanDoc(self,
+      (Span("heading", "Page", "", 0) +: links.zipWithIndex.map { case (l, i) =>
+        Span("link", "next", l, i + 1) }).toArray)
+    val pages = Map(seed -> page(seed, a), a -> page(a, b), b -> page(b, c),
+      c -> page(c, seed, a, b))
+    for (deltaMaxRows <- Seq(1L, CrawlConfig().frontierDeltaMaxRows)) {
+      val engine = WaveRunner.run(spark, Seq(Seed(seed, 0, "U", "D")), pages.get, Nil,
+        CrawlConfig(maxDepth = 4, waveSeconds = 1.0, frontierDeltaMaxRows = deltaMaxRows))
+      val urls = engine.crawlOrder.orderBy("seq").select("url").collect().map(_.getString(0))
+      assert(urls.toSeq === Seq(seed, a, b, c),
+        s"frontierDeltaMaxRows = $deltaMaxRows: every page is fetched once, in chain order")
+      assert(engine.fetches === 4L)
+      assert(engine.seen.select("url").collect().map(_.getString(0)).toSet === pages.keySet)
+      engine.release()
     }
-    val engine = WaveRunner.run(spark, Seq(Seed(seed, 0, "U", "D")), fetcher, Nil,
-      CrawlConfig(maxDepth = 2, waveSeconds = 3.0, frontierDeltaMaxRows = 1L))
-    val seen = engine.seen.select("url").collect().map(_.getString(0)).toSet
-    assert(seen === Set(seed, a, b),
-      "every discovered URL must survive compaction into the final seen set")
-    val urls = engine.crawlOrder.select("url").collect().map(_.getString(0)).toSeq
-    assert(urls.sorted === Seq(seed, a, b).sorted)
-    assert(urls.distinct.length === urls.length, "no URL may be fetched twice")
-    engine.release()
   }
 
   test("depth 2: a wave mixing leaf and non-leaf pages still discovers every link") {
@@ -154,8 +154,8 @@ class CrawlDepth2Spec extends SparkSpec {
     val site  = SiteConfig(universities = 1, deptsPerU = 1, facultyPerDept = 4,
       errorFraction = 0.5)
     val seeds = SyntheticSite.seeds(site)
-    val engine = WaveRunner.run(spark, seeds, SyntheticSite.fetcher(site), Nil,
-      CrawlConfig(waveSeconds = 4.0, maxRetries = 2))
+    val cfg   = CrawlConfig(waveSeconds = 4.0, maxRetries = 2)
+    val (engine, jobs) = jobsOf(WaveRunner.run(spark, seeds, SyntheticSite.fetcher(site), Nil, cfg))
     val errorProfiles = (0 until 4).count(k => SyntheticSite.isErrorProfile(site, 0, 0, k))
     assert(errorProfiles > 0, "fixture must contain error pages")
     // every error page is attempted 1 + maxRetries times (deterministic failure)
@@ -168,5 +168,28 @@ class CrawlDepth2Spec extends SparkSpec {
     val statuses = engine.frontier.collect()
       .map(r => r.getAs[String]("url") -> r.getAs[String]("status")).toMap
     errUrls.foreach(u => assert(statuses(u) === "error"))
+    // the loop counts the rows that re-enter pending, so it stops after the
+    // last fetching wave without an empty one: capped at the waves it ran,
+    // the same crawl runs the same jobs
+    val (capped, cappedJobs) = jobsOf(WaveRunner.run(spark, seeds, SyntheticSite.fetcher(site),
+      Nil, cfg.copy(maxWaves = engine.waves)))
+    assert(capped.fetches === engine.fetches)
+    assert(jobs === cappedJobs, s"uncapped: $jobs jobs, capped at ${engine.waves} waves: " +
+      s"$cappedJobs jobs")
+    engine.release(); capped.release()
+  }
+
+  /** `crawl` and the Spark jobs it ran. */
+  private def jobsOf(crawl: => WaveRunner.CrawlResult): (WaveRunner.CrawlResult, Long) = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = crawl
+      org.apache.spark.GraftListenerSync.drain(spark.sparkContext)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -2,7 +2,11 @@ package graft
 
 import graft.frontier.{BloomTable, PartitionedBloom, Robots, TopKSelectNative, UrlSeen}
 import graft.model.RobotsRule
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftRows}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import GenHelper.samples
@@ -95,6 +99,49 @@ class FrontierSpec extends SparkSpec {
       assert(byShard(sh).mightContainLong(k), s"false negative for $k in shard $sh")
     }
     table.shards.unpersist()
+  }
+
+  test("placed URL-seen steps move nothing: no shuffle in the check, one stage per put") {
+    // candidates, seen key parts and shards share one placement, so the exact
+    // check is partition-local and a put of placed keys zips with its shards
+    val sc = spark.sparkContext
+    val placement = BloomTable.placement(nShards = 16, partitions = 8)
+    def stored[T](rdd: RDD[T]): RDD[T] = { rdd.localCheckpoint(); rdd.count(); rdd }
+    def shuffles(rdd: RDD[_]): Int = rdd.dependencies.map { d =>
+      (if (d.isInstanceOf[ShuffleDependency[_, _, _]]) 1 else 0) + shuffles(d.rdd) }.sum
+    val parts = Seq(0L until 300L, 300L until 600L)
+      .map(ks => stored(UrlSeen.place(sc.parallelize(ks, 3), placement)))
+    val seen = sc.union(parts)
+    val cands = stored(sc.parallelize((500L until 900L).map(h => (h, InternalRow(h))), 3)
+      .partitionBy(placement))
+    // a tiny filter: most of the 100 seen candidates and many unseen ones
+    // are Bloom-positive, so the check runs
+    val bloom = PartitionedBloom.empty(nShards = 16, expectedTotal = 64, fpp = 0.5)
+    (0L until 600L).foreach(bloom.put)
+    val broadcastChecked = UrlSeen.exact(UrlSeen.flag(cands, bloom), seen)
+    assert(shuffles(broadcastChecked) === 0)
+    assert(broadcastChecked.map(_.getLong(0)).collect().toSet === (600L until 900L).toSet)
+
+    val table = new BloomTable(sc, nShards = 16, expectedTotal = 1 << 12, fpp = 0.01,
+      numPartitions = 8)
+    val stages = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        stages.addAndGet(e.stageInfos.size.toLong); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try parts.foreach(table.putKeys)
+    finally {
+      org.apache.spark.GraftListenerSync.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(stages.get() === 2L, "each put of placed keys is one job of one stage")
+    assert(table.size === 600L)
+    val shardedChecked = UrlSeen.exact(UrlSeen.flagSharded(cands, table.shards, placement), seen)
+    assert(shuffles(shardedChecked) === 0)
+    assert(shardedChecked.map(_.getLong(0)).collect().toSet === (600L until 900L).toSet)
+    (cands +: table.shards +: parts).foreach(GraftRows.release)
   }
 
   test("native selection == exact per-host top-k restated in Scala") {
