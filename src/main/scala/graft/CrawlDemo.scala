@@ -6,14 +6,17 @@ import graft.oracle.SequentialOracle
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.SiteConfig
 
+import org.apache.spark.GraftListenerSync
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** User-facing demo / operational entry: run the crawl engine on the
   * deterministic synthetic site and report what the north rule measures —
   * frontier URLs/sec, waves, seen-set size, record count, the classes Spark
   * compiled for the crawl and its records (`codegen_compiles`, `codegen_ms`),
-  * and (optionally) exactness vs the sequential oracle.
+  * the Spark jobs they ran (`spark_jobs`), and (optionally) exactness vs the
+  * sequential oracle.
   *
   * Usage: runMain graft.CrawlDemo [universities] [deptsPerU] [facultyPerDept]
   *          [errorFraction] [waveSeconds] [pubsPerFaculty] [snapshotDir]
@@ -40,8 +43,13 @@ object CrawlDemo {
     val fetcher = SyntheticSite.fetcher(site)
     val cfg     = CrawlConfig(waveSeconds = waveSeconds, snapshotDir = snapshotDir)
 
-    // classes Spark compiles for the crawl plus its records, and the time
-    // spent compiling them (the JVM-wide codegen counters, before and after)
+    // classes Spark compiles for the crawl plus its records, the time spent
+    // compiling them (the JVM-wide codegen counters, before and after) and
+    // the jobs they run (counted by a listener, the bus drained before reading)
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    })
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val compileNs0 = CodeGenerator.compileTime
     val t0 = System.nanoTime()
@@ -54,11 +62,13 @@ object CrawlDemo {
     val records = Records.facultyRecords(spark, result.docs, seeds).count()
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
+    GraftListenerSync.drain(spark.sparkContext)
+    val sparkJobs = jobs.get()
     val seen    = result.seen.count()
     println(f"""{"hosts":${seeds.size},"waves":${result.waves},"fetches":$fetches,""" +
       f""""seen":$seen,"records":$records,"sec":$secs%.2f,""" +
       f""""urls_per_sec":${fetches / secs}%.1f,""" +
-      f""""codegen_compiles":$compiles,"codegen_ms":$compileMs%.1f}""")
+      f""""codegen_compiles":$compiles,"codegen_ms":$compileMs%.1f,"spark_jobs":$sparkJobs}""")
 
     if (checkOracle) {
       val oracle = SequentialOracle.run(seeds, fetcher)

@@ -1,6 +1,6 @@
 package graft.crawl
 
-import graft.frontier.{BloomTable, PartitionedBloom, Robots, TopKSelectNative, UrlSeen, WaveSelector}
+import graft.frontier.{BloomTable, HostRules, PartitionedBloom, UrlSeen, WaveSelector}
 import graft.functions.SpanExprs
 import graft.model._
 import graft.synth.SyntheticSite.Seed
@@ -18,17 +18,18 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The crawl engine: a wave-synchronous driver loop of Spark jobs
   * (SURVEY.md §3 E1, §2.8). Each wave is one pipeline:
   *
-  *   frontier → robots broadcast-join → per-host top-k batch select
+  *   frontier → robots rule per host → per-host top-k batch select
   *            → fetch (per partition) → span docs
   *            → link explode → canonicalize → xxhash64 → whitelist/depth
   *            → first discovery per key → Bloom pre-filter + exact check
   *            → state DELTA committed;  wave outputs committed atomically.
   *
-  * SQL runs the relational steps whose semantics live in Column
-  * expressions: selection (robots join, native top-k), link extraction
-  * ([[graft.functions.SpanExprs.anchorLinks]]) and the records. The
-  * engine's own bookkeeping — fetch, first-discovery dedup, URL-seen check,
-  * delta, compaction — works on RDDs of rows, which compile no code.
+  * SQL runs only link extraction ([[graft.functions.SpanExprs.anchorLinks]])
+  * and the records, whose semantics live in Column expressions. The rest —
+  * selection ([[graft.frontier.WaveSelector.select]]: the robots rules and
+  * per-host heaps, run as the first stages of the wave's fetch job), fetch,
+  * whitelist, first-discovery dedup, URL-seen check, delta, compaction —
+  * works on RDDs of rows, which compile no code and plan no query.
   *
   * Class budget. Spark caches generated classes in a Guava cache of 100
   * entries built with 4 segments, so each segment is an LRU of 25; the key
@@ -55,8 +56,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `maxDepth = 1`) every wave after the index wave is a leaf.
   *
   * Work fixed for the crawl runs once, not per wave: the robots rules are
-  * merged to one row per host on the driver before the loop
-  * ([[graft.frontier.Robots.mergeRules]]). In the broadcast regime the
+  * merged to one per host and shipped to the selection tasks before the
+  * loop ([[graft.frontier.HostRules]]), the whitelist hosts are broadcast
+  * once, and both are released when the loop ends. In the broadcast regime the
   * URL-seen Bloom filter lives on the driver and takes every new key there:
   * the entry frontier's keys in the pass that stores it, and each wave's
   * discoveries as the job that stores them ends. In the sharded regime it
@@ -77,7 +79,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * State model (the 1000-executor / 10^10-URL design): what a wave shuffles
   * and writes is O(wave batch), never O(frontier), but selection still SCANS
-  * every pending row (robots join and top-k over all of them). With a fixed
+  * every pending row (robots rule and heap for each of them). With a fixed
   * 768-row batch on 4 cores, selection took 0.28 s at 10^4 pending rows and
   * 2.6 s at 4·10^6. The frontier lives as
   *
@@ -103,8 +105,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * for `P` shuffle partitions: every test and benchmark shape has `P <= 32`,
   * the default `bloomShards`. Selection is
   * a partial-aggregating exact top-k (map-side bounded heaps), so even the
-  * selection shuffle moves O(hosts × budget) buffer rows, not O(pending).
-  * Fetch maps the selected batch only.
+  * selection shuffle moves O(hosts × budget) rows, not O(pending), while the
+  * rules are broadcast. Fetch maps the selected batch only.
   */
 object WaveRunner {
 
@@ -142,10 +144,11 @@ object WaveRunner {
         * comfortably in driver and executor memory.
         */
       frontierDeltaMaxRows: Long = 1L << 22,
-      /** Robots-rules join regime bound (static, like the Bloom residency):
-        * rule sets with ≤ this many rows broadcast-join onto the frontier;
-        * above it (millions of hosts) the join degrades to a shuffled hash
-        * join. Set to 0 to force the shuffle regime (tests do).
+      /** Robots-rules regime bound (static, like the Bloom residency): rule
+        * sets with ≤ this many hosts are broadcast to the selection once per
+        * crawl; above it (millions of hosts) they are rows placed by host,
+        * and each wave moves the pending rows to them. Set to 0 to force the
+        * placed regime (tests do).
         */
       rulesBroadcastMaxRows: Long = 1L << 20,
       snapshotDir: Option[String] = None // Some(dir) = committed, resumable waves
@@ -266,7 +269,6 @@ object WaveRunner {
       rules: Seq[RobotsRule],
       cfg: CrawlConfig
   ): CrawlResult = {
-    import spark.implicits._
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -345,13 +347,10 @@ object WaveRunner {
     })
     if (!bloomBroadcast) bloomTable.putKeys(seenParts.head)
 
-    // merged to one row per host here, once: the per-wave join then needs no
-    // aggregate over the rules
-    val perHost = Robots.mergeRules(rules)
-    val rulesDF = Robots.rulesDF(spark,
-      if (perHost.nonEmpty) perHost else Seq(RobotsRule("__none__", Nil, Robots.DefaultCrawlDelayS)))
-    val rulesBroadcastable = perHost.size <= cfg.rulesBroadcastMaxRows
-    val whitelistDF = whitelist.toDF("host")
+    // fixed for the crawl, shipped once and released when the loop ends: the
+    // robots rules the selection reads and the hosts discovery may enter
+    val hostRules = new HostRules(sc, rules, cfg.rulesBroadcastMaxRows, P)
+    val hosts = sc.broadcast(whitelist.map(UTF8String.fromString).toSet)
 
     // snapshot-mode table store (G10) — the engine speaks only to WaveStore;
     // a real Iceberg/Delta catalog drops in behind the trait
@@ -412,37 +411,26 @@ object WaveRunner {
 
     val maxDepth = cfg.maxDepth
     val maxRetries = cfg.maxRetries
-    while (!done && wave < cfg.maxWaves && pendingCount > 0L) {
-      // live pending rows: untouched base rows + touched keys' latest state,
-      // as ONE scan. The base rows lose the batch keys selected since
-      // compaction — the sole base rows a delta can supersede (discoveries
-      // live only in the delta). The plan is the same in every wave.
-      val pending = GraftRows.scan(spark, Seq(liveBase, deltaRdd), FrontierSchema)
-        .filter(col("status") === FrontierStatus.Pending &&
-          col("retries") <= cfg.maxRetries)
-      val ruled = Robots.withRules(pending, rulesDF, rulesBroadcastable)
-        .filter(col("allowed"))
-        .withColumn("budget", Robots.waveBudget(cfg.waveSeconds))
-      // the batch carries ALL frontier fields through the fetch stage so the
-      // post-fetch state transition is a pure projection — no join back
-      // against the frontier (one fewer shuffle per wave)
-      val selected = TopKSelectNative.select(ruled)
-      // Size fetch parallelism by request count, NOT by shuffle bytes: the
-      // selection output is tiny (batch rows), so AQE would coalesce it to
-      // ~1 partition and run the expensive fetch+encode stage serially.
-      // Explicit repartition pins P*3 fetch tasks (at cluster scale: one
-      // unit of politeness-bounded fetch work per core). Measured round 4
-      // with AQE off: running the fetch directly on the selection reducers
-      // (16 host-hashed partitions at 8 cores) is NOT faster — the saved
-      // batch shuffle is repaid in coarser task granularity at the stage
-      // tail — so the round-robin stays unconditional.
-      val batch = selected.repartition(P * 3)
+    try while (!done && wave < cfg.maxWaves && pendingCount > 0L) {
+      // the batch, selected from the live rows (untouched base rows + touched
+      // keys' latest state; the base rows lose the batch keys selected since
+      // compaction — the sole base rows a delta can supersede, as discoveries
+      // live only in the delta) by row code that runs as the first stages of
+      // the wave's fetch job. It carries ALL frontier fields through the
+      // fetch so the post-fetch state transition is a pure projection — no
+      // join back against the frontier. Its rows are spread round-robin over
+      // P*3 fetch tasks, sized by request count: the selection has only the
+      // few partitions its hosts hash to (measured round 4: fetching on 16
+      // host-hashed partitions at 8 cores is not faster — the saved shuffle
+      // is repaid in coarser tasks at the stage tail).
+      val batch = WaveSelector.select(sc.union(liveBase, deltaRdd), hostRules, cfg.waveSeconds,
+        maxRetries, P * 3)
 
       // the fetch maps the batch rows (url, urlHash, host, depth, priority,
       // retries, discoveredWave, discoveredRank, parentUrl, host_rank) to
       // fetch-log rows; the wave id travels in the closure
       val waveNow = wave
-      val fetchedRdd = hold(GraftRows.rows(batch).mapPartitions(asRows(FetchSchema) { e =>
+      val fetchedRdd = hold(batch.mapPartitions(asRows(FetchSchema) { e =>
         val t0  = System.nanoTime()
         val doc = fetcher(e.getUTF8String(0).toString)
         val fetchMs = (System.nanoTime() - t0) / 1000000L
@@ -506,10 +494,6 @@ object WaveRunner {
             .withColumn("depth", col("parent_depth") + 1)
             .withColumn("url", Urls.canonicalizeUdf(col("raw_url"), col("parent_url")))
             .withColumn("host", Urls.hostOfUdf(col("url")))
-            // whitelist as a broadcast SEMI JOIN, not an isInCollection literal:
-            // a large host list inlined into codegen recompiles every wave (and
-            // a real crawl's whitelist is millions of hosts — join-shaped)
-            .join(broadcast(whitelistDF), Seq("host"), "left_semi")
             .select(
               col("url"),
               xxhash64(col("url")).as("urlHash"),
@@ -533,9 +517,13 @@ object WaveRunner {
                   lit("); discoveredRank encoding cannot order them"))))
                 .as("discoveredRank"),
               col("parent_url").as("parentUrl"))
-          // first discovery wins when several pages link the same URL this
-          // wave (every parent of a wave carries the same discoveredWave)
-          val firsts = GraftRows.rows(candidates).map(r => (r.getLong(UrlHashAt), r.copy()))
+          // the whitelisted ones (a broadcast set, not a literal in the
+          // plan, which would recompile with the list); first discovery wins
+          // when several pages link the same URL this wave (every parent of a
+          // wave carries the same discoveredWave)
+          val firsts = GraftRows.rows(candidates)
+            .filter(r => hosts.value.contains(r.getUTF8String(HostAt)))
+            .map(r => (r.getLong(UrlHashAt), r.copy()))
             .reduceByKey(placement, firstDiscovery _)
           // URL-seen: Bloom fast path + exact check, both on the candidates'
           // own partition (nothing moves): a Bloom-positive key is checked
@@ -590,7 +578,7 @@ object WaveRunner {
         maybeCompact(wave)
         wave += 1
       }
-    }
+    } finally { hostRules.release(); hosts.destroy() }
 
     // the fetch log, which docs, order and metrics project: memory mode
     // scans the fetched rows of every wave as ONE relation; snapshot mode

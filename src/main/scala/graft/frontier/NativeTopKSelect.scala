@@ -85,15 +85,94 @@ private[graft] final class NativeTopKBuf(var k: Long, var n: Int,
       siftDown()
     }
   }
+
+  /** Merge `b` in: both must hold candidates of one host, so their budgets
+    * agree (or one buffer is still unset).
+    */
+  def merge(b: NativeTopKBuf): NativeTopKBuf = {
+    if (k == TopKSelectNative.UnsetK) k = b.k
+    else require(b.k == TopKSelectNative.UnsetK || b.k == k,
+      s"TopKSelectNative requires a constant per-host budget (the " +
+        s"aggregation key is host): merged buffers carry budgets $k and ${b.k}")
+    if (k > 0) { var i = 0; while (i < b.n) { insert(b.items(i)); i += 1 } }
+    this
+  }
+
+  /** The top `k` candidates, best first. */
+  def sorted: Array[NativeCand] = {
+    val out = java.util.Arrays.copyOfRange(items, 0, n)
+    java.util.Arrays.sort(out, (a: NativeCand, b: NativeCand) =>
+      cmp(a.priority, a.discoveredWave, a.discoveredRank, a.urlHash, b))
+    out.take(math.min(math.max(k, 0L), n.toLong).toInt)
+  }
+
+  /** The buffer as a flat length-prefixed byte image (the shuffle format). */
+  def toBytes: Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    def str(s: UTF8String): Unit = {
+      val b = s.getBytes
+      out.writeInt(b.length)
+      out.write(b)
+    }
+    out.writeLong(k)
+    out.writeInt(n)
+    var i = 0
+    while (i < n) {
+      val c = items(i)
+      str(c.url)
+      out.writeLong(c.urlHash)
+      str(c.host)
+      out.writeInt(c.depth)
+      out.writeDouble(c.priority)
+      out.writeInt(c.retries)
+      out.writeInt(c.discoveredWave)
+      out.writeLong(c.discoveredRank)
+      str(c.parentUrl)
+      i += 1
+    }
+    out.flush()
+    bos.toByteArray
+  }
 }
 
-/** The crawl's batch selector: exact per-host top-`budget` selection as a
-  * NATIVE Catalyst [[TypedImperativeAggregate]], partial-aggregating: each
-  * input partition reduces to a bounded per-host heap map-side, so the
-  * selection shuffle moves O(hostsPerPartition × budget) buffers — never
-  * O(pending), which a ranked window would shuffle every wave. A hot host
-  * (10^6 pending URLs on one domain) therefore needs no salting: its final
-  * merge combines ≤ P bounded buffers, not its raw rows.
+private[graft] object NativeTopKBuf {
+
+  /** An empty buffer of budget `k` ([[TopKSelectNative.UnsetK]]: not known yet). */
+  def empty(k: Long): NativeTopKBuf = new NativeTopKBuf(k, 0, new Array[NativeCand](16))
+
+  /** The buffer [[NativeTopKBuf.toBytes]] wrote. */
+  def fromBytes(bytes: Array[Byte]): NativeTopKBuf = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    val k = in.readLong()
+    val n = in.readInt()
+    def str(): UTF8String = {
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      UTF8String.fromBytes(b)
+    }
+    val items = new Array[NativeCand](math.max(n, 16))
+    var i = 0
+    while (i < n) {
+      items(i) = new NativeCand(str(), in.readLong(), str(), in.readInt(),
+        in.readDouble(), in.readInt(), in.readInt(), in.readLong(), str())
+      i += 1
+    }
+    // items arrived in heap order from toBytes — heap property preserved
+    new NativeTopKBuf(k, n, items)
+  }
+}
+
+/** The batch selector as a NATIVE Catalyst [[TypedImperativeAggregate]], for
+  * DataFrame queries (`q_frontier_select`, `q_frontier_select_native`): exact
+  * per-host top-`budget` selection, partial-aggregating: each input
+  * partition reduces to a bounded per-host heap map-side, so the selection
+  * shuffle moves O(hostsPerPartition × budget) buffers — never O(pending),
+  * which a ranked window would shuffle. A hot host (10^6 pending URLs on one
+  * domain) therefore needs no salting: its final merge combines ≤ P bounded
+  * buffers, not its raw rows. The crawl runs the same heaps, their merge,
+  * sorted output and byte image ([[NativeTopKBuf]]) as row code
+  * ([[WaveSelector.select]]).
   *
   *   - `update` reads the four ordering primitives straight off the
   *     [[InternalRow]], asks the heap [[NativeTopKBuf.accepts]], and only
@@ -103,9 +182,9 @@ private[graft] final class NativeTopKBuf(var k: Long, var n: Int,
   *   - buffer serialization (once per host per map partition, on the
   *     shuffle) is a flat length-prefixed byte image, not an encoder pass.
   *
-  * REQUIRES `budget` constant per host (true for the engine's own caller:
-  * budget derives from the host-level crawl delay in [[Robots.waveBudget]],
-  * and the aggregation key is the host). The contract is ENFORCED in
+  * REQUIRES `budget` constant per host (the crawl's budget derives from the
+  * host-level crawl delay, [[Robots.waveBudget]], and the aggregation key is
+  * the host). The contract is ENFORCED in
   * `update` and `merge`: per-row budgets fail with an
   * IllegalArgumentException naming the host, not a silently mis-sized batch.
   *
@@ -138,7 +217,7 @@ final case class TopKSelectNative(
     StructField("parentUrl", StringType))), containsNull = false)
 
   override def createAggregationBuffer(): NativeTopKBuf =
-    new NativeTopKBuf(TopKSelectNative.UnsetK, 0, new Array[NativeCand](16))
+    NativeTopKBuf.empty(TopKSelectNative.UnsetK)
 
   override def update(buf: NativeTopKBuf, input: InternalRow): NativeTopKBuf = {
     val b = budget.eval(input).asInstanceOf[Long]
@@ -162,88 +241,17 @@ final case class TopKSelectNative(
     buf
   }
 
-  override def merge(a: NativeTopKBuf, b: NativeTopKBuf): NativeTopKBuf = {
-    if (a.k == TopKSelectNative.UnsetK) a.k = b.k
-    else require(b.k == TopKSelectNative.UnsetK || b.k == a.k,
-      s"TopKSelectNative requires a constant per-host budget (the " +
-        s"aggregation key is host): merged buffers carry budgets " +
-        s"${a.k} and ${b.k}")
-    if (a.k <= 0) return a
-    var i = 0
-    while (i < b.n) { a.insert(b.items(i)); i += 1 }
-    a
-  }
+  override def merge(a: NativeTopKBuf, b: NativeTopKBuf): NativeTopKBuf = a.merge(b)
 
-  override def eval(buf: NativeTopKBuf): Any = {
-    val sorted = java.util.Arrays.copyOfRange(buf.items, 0, buf.n)
-    java.util.Arrays.sort(sorted, new java.util.Comparator[NativeCand] {
-      def compare(a: NativeCand, b: NativeCand): Int = {
-        var c = java.lang.Double.compare(b.priority, a.priority)
-        if (c != 0) return c
-        c = Integer.compare(a.discoveredWave, b.discoveredWave)
-        if (c != 0) return c
-        c = java.lang.Long.compare(a.discoveredRank, b.discoveredRank)
-        if (c != 0) return c
-        java.lang.Long.compare(a.urlHash, b.urlHash)
-      }
-    })
-    val out = math.min(math.max(buf.k, 0L), buf.n.toLong).toInt
-    new GenericArrayData(Array.tabulate[Any](out) { i =>
-      val c = sorted(i)
+  override def eval(buf: NativeTopKBuf): Any =
+    new GenericArrayData(buf.sorted.map { c =>
       new GenericInternalRow(Array[Any](c.url, c.urlHash, c.host, c.depth,
-        c.priority, c.retries, c.discoveredWave, c.discoveredRank, c.parentUrl))
+        c.priority, c.retries, c.discoveredWave, c.discoveredRank, c.parentUrl)): Any
     })
-  }
 
-  override def serialize(buf: NativeTopKBuf): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeLong(buf.k)
-    out.writeInt(buf.n)
-    var i = 0
-    while (i < buf.n) {
-      val c = buf.items(i)
-      def str(s: UTF8String): Unit = {
-        val b = s.getBytes
-        out.writeInt(b.length)
-        out.write(b)
-      }
-      str(c.url)
-      out.writeLong(c.urlHash)
-      str(c.host)
-      out.writeInt(c.depth)
-      out.writeDouble(c.priority)
-      out.writeInt(c.retries)
-      out.writeInt(c.discoveredWave)
-      out.writeLong(c.discoveredRank)
-      str(c.parentUrl)
-      i += 1
-    }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: NativeTopKBuf): Array[Byte] = buf.toBytes
 
-  override def deserialize(bytes: Array[Byte]): NativeTopKBuf = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val k = in.readLong()
-    val n = in.readInt()
-    def str(): UTF8String = {
-      val b = new Array[Byte](in.readInt())
-      in.readFully(b)
-      UTF8String.fromBytes(b)
-    }
-    val items = Array.fill(math.max(n, 16)) {
-      null.asInstanceOf[NativeCand]
-    }
-    var i = 0
-    while (i < n) {
-      items(i) = new NativeCand(str(), in.readLong(), str(), in.readInt(),
-        in.readDouble(), in.readInt(), in.readInt(), in.readLong(), str())
-      i += 1
-    }
-    // items arrived in heap order from serialize — heap property preserved
-    new NativeTopKBuf(k, n, items)
-  }
+  override def deserialize(bytes: Array[Byte]): NativeTopKBuf = NativeTopKBuf.fromBytes(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKSelectNative =
     copy(mutableAggBufferOffset = newOffset)
@@ -261,12 +269,12 @@ final case class TopKSelectNative(
 object TopKSelectNative {
 
   /** Sentinel budget of a buffer that has not yet absorbed a row (budgets
-    * from [[Robots.waveBudget]] are ≥ 0, so -1 is unreachable as data).
+    * from [[Robots.waveBudget]] are ≥ 1, so -1 is unreachable as data).
     */
   val UnsetK: Long = -1L
 
-  /** Select this wave's batch via the native aggregate: the candidate
-    * columns (minus `budget`) plus `host_rank`, the 0-based intra-host fetch
+  /** Each host's top `budget` rows of `pending` via the native aggregate:
+    * the candidate columns (minus `budget`) plus `host_rank`, the 0-based intra-host fetch
     * position. `pending` must carry the url, urlHash, host, depth, priority,
     * retries, discoveredWave, discoveredRank, parentUrl and budget columns.
     */

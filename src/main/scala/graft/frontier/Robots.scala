@@ -1,33 +1,52 @@
 package graft.frontier
 
 import graft.model.RobotsRule
+import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Robots rules as a broadcast-joined table (SURVEY.md §2.8 G9, J7).
+/** One crawl's robots rules, merged to one per host ([[Robots.mergeRules]]),
+  * as the batch selector ([[WaveSelector.select]]) reads them. The regime is
+  * chosen statically, like the URL-seen Bloom residency: up to
+  * `broadcastMaxRows` rules are one host map broadcast once; above that they
+  * are rows placed by host over `partitions` partitions, to which the
+  * selection moves the pending rows (millions of hosts never sit in one
+  * map). Made once per crawl; [[release]] frees the broadcast.
+  */
+final class HostRules(sc: SparkContext, rules: Seq[RobotsRule], broadcastMaxRows: Long,
+    val partitions: Int) {
+  private val merged = Robots.mergeRules(rules)
+  val regime: Either[Broadcast[Map[String, RobotsRule]], RDD[(UTF8String, RobotsRule)]] =
+    if (merged.size <= broadcastMaxRows) Left(sc.broadcast(merged.map(r => r.host -> r).toMap))
+    else Right(sc.parallelize(merged.map(r => (UTF8String.fromString(r.host), r)))
+      .partitionBy(new HashPartitioner(partitions)))
+
+  def release(): Unit = regime.left.foreach(_.destroy())
+}
+
+/** Robots rules, one per host, looked up by the batch selector (SURVEY.md
+  * §2.8 G9, J7).
   *
   * The reference has no robots handling (grep-verified, SURVEY §2.8); its
   * politeness is a hard-coded 1 req/s sleep (reference `scraper.py:83`) and
   * the API's per-key budget maps (reference `limiter.py:30-42`). The engine
   * therefore defaults every host to allow-all with crawl_delay = 1.0 s — the
-  * reference-equivalent budget — and lets an explicit rules table override
-  * per host (deny prefixes + crawl delay), exactly the broadcast-join shape
-  * the north rule mandates.
+  * reference-equivalent budget — and lets an explicit rule override it per
+  * host (deny prefixes + crawl delay): [[allows]] and [[waveBudget]] are the
+  * one definition of what a rule does, and [[HostRules]] carries a crawl's
+  * rules to the selection tasks.
   */
 object Robots {
 
   val DefaultCrawlDelayS = 1.0 // scraper.py:83
 
-  def rulesDF(spark: SparkSession, rules: Seq[RobotsRule]): DataFrame = {
-    import spark.implicits._
-    rules.toDS().toDF()
-  }
-
   /** Rules merged to ONE row per host, on the driver: deny prefixes unioned,
     * sorted and de-duplicated; the most conservative — largest — crawl delay
-    * kept. Duplicate host rows would fan the frontier out through the
-    * [[withRules]] join and the same URL would be selected/fetched twice in
-    * a wave, corrupting ordering and budgets. Hosts keep first-seen order.
+    * kept. Hosts keep first-seen order. [[HostRules]] holds a crawl's rules
+    * merged.
     */
   def mergeRules(rules: Seq[RobotsRule]): Seq[RobotsRule] = {
     val byHost = rules.groupBy(_.host)
@@ -37,51 +56,20 @@ object Robots {
     }
   }
 
-  /** Left-join rules onto a frontier (must carry `host`, `url`); null rule →
-    * default allow + 1 s delay. Adds:
-    *   `crawl_delay_s: double`, `allowed: boolean`.
-    * Deny semantics: URL path starts with any deny prefix.
-    *
-    * `rules` must hold at most ONE row per host — merge a rule list with
-    * [[mergeRules]] first (the crawl does, once per crawl); [[fetchRulesDF]]
-    * over distinct hosts already is. The join then adds no aggregate over
-    * the rules to the plan that uses it.
-    *
-    * Join regime is chosen STATICALLY by the caller (same pattern as the
-    * URL-seen Bloom residency): `broadcastRules = true` below the configured
-    * row bound — one broadcast, no shuffle; `false` for a rules table too big
-    * to broadcast (millions of hosts), degrading to a shuffled hash join on
-    * `host`.
-    */
-  def withRules(frontier: DataFrame, rules: DataFrame,
-      broadcastRules: Boolean = true): DataFrame = {
-    val perHost = rules.select(col("host"), col("denyPrefixes").as("__deny"),
-      col("crawlDelayS").as("__delay"))
-    val rulesSide = if (broadcastRules) broadcast(perHost) else perHost.hint("shuffle_hash")
-    frontier.join(rulesSide, Seq("host"), "left")
-      .withColumn("crawl_delay_s", coalesce(col("__delay"), lit(DefaultCrawlDelayS)))
-      .withColumn("allowed", allowedUdf(col("url"), col("__deny")))
-      .drop("__deny", "__delay")
-  }
-
-  /** True unless the URL's path starts with a deny prefix. A Scala UDF, not
-    * an `exists` lambda: a higher-order function has no generated code, so
-    * it would take its filter out of the join's whole-stage-codegen stage.
-    */
-  private val allowedUdf = udf { (url: String, deny: Seq[String]) =>
+  /** True unless the URL's path starts with one of the `deny` prefixes. */
+  def allows(url: String, deny: Seq[String]): Boolean =
     url == null || deny == null || {
       val path = url.replaceFirst("^https?://[^/]*", "")
       !deny.exists(p => p != null && path.startsWith(p))
     }
-  }
 
   /** Per-host fetch budget for one wave: how many requests a wave of
-    * `waveSeconds` allows at the host's crawl delay (token-bucket refill for
-    * one wave; reference budget semantics from `limiter.py:122-144`:
-    * N requests per fixed window).
+    * `waveSeconds` allows at the host's crawl delay, at least one
+    * (token-bucket refill for one wave; reference budget semantics from
+    * `limiter.py:122-144`: N requests per fixed window).
     */
-  def waveBudget(waveSeconds: Double): org.apache.spark.sql.Column =
-    greatest(lit(1L), floor(lit(waveSeconds) / col("crawl_delay_s")).cast("long"))
+  def waveBudget(waveSeconds: Double, crawlDelayS: Double): Long =
+    math.max(1L, math.floor(waveSeconds / crawlDelayS).toLong)
 
   // ---- robots.txt parsing (north rule: "Robots.txt fetch/parse ... run as
   // a broadcast-joined rules table") ----
@@ -155,10 +143,10 @@ object Robots {
     * `https://host/robots.txt` through the engine's fetcher (robots bodies
     * travel as the text spans of a SpanDoc, same boundary as every other
     * fetch) and parses each body on the executors; a missing or unfetchable
-    * robots.txt yields the default allow-all / 1 s rule. The rules TABLE this
-    * returns never visits the driver — at web scale (millions of hosts) pass
-    * it straight to [[withRules]] with `broadcastRules = false`; below the
-    * broadcast bound, [[fetchRules]] is the collected convenience form.
+    * robots.txt yields the default allow-all / 1 s rule. The rules table this
+    * returns is computed on the executors; a crawl takes its rules as a list
+    * ([[fetchRules]] collects them), which [[HostRules]] broadcasts up to
+    * `rulesBroadcastMaxRows` and above that places by host as rows.
     *
     * @param hosts a DataFrame with a `host: string` column
     */

@@ -35,7 +35,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * their shards hold the same bits.
   */
 final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter],
-    val capacity: Long) extends Serializable {
+    val capacity: Long, fpp: Double) extends Serializable {
   private var keys = 0L
   /** Keys put so far (duplicates included). */
   def size: Long = keys
@@ -69,8 +69,9 @@ final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter],
 
   /** A copy to probe while this filter keeps taking puts. */
   def copy(): PartitionedBloom = {
-    val c = new PartitionedBloom(nShards, shards.map { s =>
-      BloomTable.deserialize(BloomTable.serialize(s)) }, capacity)
+    // each shard's bits merged into an empty shard made alike (same shape)
+    val c = new PartitionedBloom(nShards,
+      shards.map(s => BloomTable.emptyShard(capacity, nShards, fpp).mergeInPlace(s)), capacity, fpp)
     c.keys = keys
     c
   }
@@ -78,11 +79,9 @@ final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter],
 
 object PartitionedBloom {
   /** Shards sized for `expectedTotal` keys at `fpp`, fixed at crawl start. */
-  def empty(nShards: Int, expectedTotal: Long, fpp: Double): PartitionedBloom = {
-    val perShard = BloomTable.perShard(expectedTotal, nShards)
+  def empty(nShards: Int, expectedTotal: Long, fpp: Double): PartitionedBloom =
     new PartitionedBloom(nShards,
-      Array.fill(nShards)(BloomFilter.create(perShard, fpp)), expectedTotal)
-  }
+      Array.fill(nShards)(BloomTable.emptyShard(expectedTotal, nShards, fpp)), expectedTotal, fpp)
 }
 
 /** One shard of the sharded URL-seen Bloom: its id, the keys put into it
@@ -143,7 +142,8 @@ final class BloomTable(sc: SparkContext, nShards: Int, expectedTotal: Long, fpp:
     * [[PartitionedBloom.putAll]], and keeps the shards it had.
     */
   def putKeys(hashes: RDD[Long]): Long = {
-    val next = BloomTable.grow(rows, UrlSeen.place(hashes, placement), placement.nShards)
+    val next = BloomTable.grow(rows, UrlSeen.place(hashes, placement), placement.nShards,
+      expectedTotal, fpp)
     next.localCheckpoint()
     val total = sc.runJob(next, (it: Iterator[BloomShard]) => it.map(_.keys).sum).sum
     if (total > expectedTotal) {
@@ -160,17 +160,9 @@ final class BloomTable(sc: SparkContext, nShards: Int, expectedTotal: Long, fpp:
 
 object BloomTable {
 
-  private[frontier] def perShard(expectedTotal: Long, nShards: Int): Long =
-    math.max(64L, expectedTotal / nShards)
-
-  private[frontier] def serialize(bf: BloomFilter): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
-  }
-
-  private[frontier] def deserialize(bytes: Array[Byte]): BloomFilter =
-    BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+  /** One empty shard of a filter sized for `expectedTotal` keys at `fpp`. */
+  private[frontier] def emptyShard(expectedTotal: Long, nShards: Int, fpp: Double): BloomFilter =
+    BloomFilter.create(math.max(64L, expectedTotal / nShards), fpp)
 
   def shardOf(hash: Long, nShards: Int): Int =
     (((hash % nShards) + nShards) % nShards).toInt
@@ -192,25 +184,28 @@ object BloomTable {
     */
   def build(hashes: RDD[Long], placement: ShardPlacement, expectedTotal: Long,
       fpp: Double): RDD[BloomShard] =
-    grow(empty(hashes.sparkContext, placement, expectedTotal, fpp), hashes, placement.nShards)
+    grow(empty(hashes.sparkContext, placement, expectedTotal, fpp), hashes, placement.nShards,
+      expectedTotal, fpp)
 
   /** Empty shards, each on its placed partition (not stored: cheap to make). */
   private def empty(sc: SparkContext, placement: ShardPlacement, expectedTotal: Long,
       fpp: Double): RDD[BloomShard] = {
     val np = placement.numPartitions
     val nShards = placement.nShards
-    val cap = perShard(expectedTotal, nShards)
     sc.parallelize(0 until np, np).flatMap { p =>
-      (p until nShards by np).map(s => BloomShard(s, 0L, BloomFilter.create(cap, fpp)))
+      (p until nShards by np).map(s => BloomShard(s, 0L, emptyShard(expectedTotal, nShards, fpp)))
     }
   }
 
   /** `shards` with `hashes` put in, each into a copy of its shard where it
-    * lives: `hashes` are placed as the shards are.
+    * lives (its bits merged into an empty shard made alike): `hashes` are
+    * placed as the shards are.
     */
-  private def grow(shards: RDD[BloomShard], hashes: RDD[Long], nShards: Int): RDD[BloomShard] =
+  private def grow(shards: RDD[BloomShard], hashes: RDD[Long], nShards: Int,
+      expectedTotal: Long, fpp: Double): RDD[BloomShard] =
     hashes.zipPartitions(shards) { (hs, olds) =>
-      val mine = olds.map(s => s.shard -> s.copy(bloom = deserialize(serialize(s.bloom)))).toMap
+      val mine = olds.map(s => s.shard ->
+        s.copy(bloom = emptyShard(expectedTotal, nShards, fpp).mergeInPlace(s.bloom))).toMap
       val added = new Array[Long](nShards)
       hs.foreach { h =>
         val s = shardOf(h, nShards)

@@ -1,9 +1,20 @@
 package graft.frontier
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import graft.model.{FrontierStatus, RobotsRule}
 
-/** Fetch priority for the crawl frontier (SURVEY.md §2.8 G5/G6, §2.5 W4).
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
+
+/** Fetch priority and the batch selector of the crawl frontier (SURVEY.md
+  * §2.8 G5/G6, §2.5 W4).
   *
   * Priority reproduces the reference's fetch discipline (index pages before
   * profiles, index-document order within a host — reference `scraper.py:43-63`)
@@ -12,8 +23,9 @@ import org.apache.spark.sql.functions._
   * (discoveredWave, discoveredRank, urlHash) — urlHash is unique, so the
   * order is total and selection is reproducible run-to-run, which is what
   * makes the committed crawl ordering comparable to the sequential oracle.
-  * The one batch selector, [[TopKSelectNative]], takes each host's top
-  * `budget` rows in that order.
+  * [[select]] takes each host's top `budget` rows in that order with a
+  * per-host [[NativeTopKBuf]] heap, as row code; [[TopKSelectNative]] is the
+  * same heap as a Catalyst aggregate for DataFrame queries.
   */
 object WaveSelector {
 
@@ -31,4 +43,89 @@ object WaveSelector {
     */
   def profileShaped(url: Column): Column =
     url.rlike("""/(people|faculty|profiles?)/[^/]+$""")
+
+  private val PendingUtf8 = UTF8String.fromString(FrontierStatus.Pending)
+
+  /** The fields of a batch row: the frontier row's, less its status, plus
+    * `host_rank`, the 0-based fetch position within its host.
+    */
+  private val BatchTypes: Array[DataType] = Array(StringType, LongType, StringType, IntegerType,
+    DoubleType, IntegerType, IntegerType, LongType, StringType, LongType)
+
+  /** A wave's batch: of the pending `frontier` rows with at most
+    * `maxRetries` retries, each host's top `budget` rows that its robots
+    * rule allows ([[Robots.allows]], [[Robots.waveBudget]]; a host with no
+    * rule allows all at the default delay), as batch rows round-robined to `fetchPartitions` partitions, so fetch parallelism
+    * follows the request count, not the few selection partitions.
+    *
+    * Row code, no query plan: the stages run inside the job that consumes
+    * the result. Broadcast rules: every input partition reduces to a
+    * bounded heap per host, and the heaps are merged by host, so the shuffle
+    * moves O(hosts × budget) candidates, never O(pending) rows. Rules placed
+    * by host: the pending rows move to their host's rules, where the heaps
+    * are then complete.
+    */
+  def select(frontier: RDD[InternalRow], rules: HostRules, waveSeconds: Double,
+      maxRetries: Int, fetchPartitions: Int): RDD[InternalRow] = {
+    // frontier row fields: url 0, urlHash 1, host 2, depth 3, priority 4,
+    // status 5, retries 6, discoveredWave 7, discoveredRank 8, parentUrl 9
+    val pending = frontier.filter(r => r.getUTF8String(5) == PendingUtf8 && r.getInt(6) <= maxRetries)
+    val heaps = rules.regime match {
+      case Left(bc) =>
+        pending.mapPartitions(hostHeaps(_, bc.value.get, waveSeconds).map { case (h, b) =>
+            (h, b.toBytes) })
+          .partitionBy(new HashPartitioner(rules.partitions))
+          .mapPartitions { parts =>
+            val byHost = new java.util.HashMap[UTF8String, NativeTopKBuf]()
+            parts.foreach { case (h, bytes) =>
+              byHost.merge(h, NativeTopKBuf.fromBytes(bytes), (a, b) => a.merge(b)) }
+            byHost.values.iterator.asScala
+          }
+      case Right(byHost) =>
+        pending.map { r => val c = r.copy(); (c.getUTF8String(2), c) }
+          .partitionBy(byHost.partitioner.get)
+          .zipPartitions(byHost) { (rows, rs) =>
+            val local = rs.map { case (h, rule) => h.toString -> rule }.toMap
+            hostHeaps(rows.map(_._2), local.get, waveSeconds).map(_._2)
+          }
+    }
+    heaps.mapPartitions { bufs =>
+      val toUnsafe = UnsafeProjection.create(BatchTypes)
+      bufs.flatMap(_.sorted.iterator.zipWithIndex.map { case (c, rank) =>
+        toUnsafe(new GenericInternalRow(Array[Any](c.url, c.urlHash, c.host, c.depth,
+          c.priority, c.retries, c.discoveredWave, c.discoveredRank, c.parentUrl,
+          rank.toLong))).copy(): InternalRow
+      })
+    }.repartition(fetchPartitions)
+  }
+
+  /** Per host of `rows` with an allowed row: a heap of the rows its rule
+    * allows, sized by its budget. A row is tested against the rule before
+    * it enters the heap, and only when the heap would take it.
+    */
+  private def hostHeaps(rows: Iterator[InternalRow], ruleOf: String => Option[RobotsRule],
+      waveSeconds: Double): Iterator[(UTF8String, NativeTopKBuf)] = {
+    final class Slot(val host: UTF8String, val buf: NativeTopKBuf, val deny: Seq[String])
+    val slots = new java.util.HashMap[UTF8String, Slot]()
+    rows.foreach { r =>
+      val host = r.getUTF8String(2)
+      var slot = slots.get(host)
+      if (slot == null) {
+        val rule = ruleOf(host.toString)
+        val delay = rule.fold(Robots.DefaultCrawlDelayS)(_.crawlDelayS)
+        slot = new Slot(host.clone(), NativeTopKBuf.empty(Robots.waveBudget(waveSeconds, delay)),
+          rule.fold(Seq.empty[String])(_.denyPrefixes))
+        slots.put(slot.host, slot)
+      }
+      val pri  = r.getDouble(4)
+      val wave = r.getInt(7)
+      val rank = r.getLong(8)
+      val hash = r.getLong(1)
+      if (slot.buf.accepts(pri, wave, rank, hash) &&
+          (slot.deny.isEmpty || Robots.allows(r.getUTF8String(0).toString, slot.deny)))
+        slot.buf.insert(new NativeCand(r.getUTF8String(0).clone(), hash, slot.host,
+          r.getInt(3), pri, r.getInt(6), wave, rank, r.getUTF8String(9).clone()))
+    }
+    slots.values.iterator.asScala.collect { case s if s.buf.n > 0 => (s.host, s.buf) }
+  }
 }

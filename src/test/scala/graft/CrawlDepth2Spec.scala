@@ -76,7 +76,7 @@ class CrawlDepth2Spec extends SparkSpec {
     val rules = Seq(
       RobotsRule(host0, Seq("/people/f0", "/people/f1"), 1.0), // deny 2 profiles
       RobotsRule(graft.urls.Urls.hostOf(seeds(1).url), Nil, 0.25)) // 4x budget
-    // rulesBroadcastMaxRows = 0 forces the shuffled-hash rules join (the
+    // rulesBroadcastMaxRows = 0 forces the rules placed by host (the
     // millions-of-hosts regime) through the FULL engine — deny/budget
     // semantics must be identical to the broadcast regime
     val engine = WaveRunner.run(spark, seeds, SyntheticSite.fetcher(site), rules,

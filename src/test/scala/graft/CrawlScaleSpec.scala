@@ -199,6 +199,29 @@ class CrawlScaleSpec extends SparkSpec {
     }
   }
 
+  test("a crawl of the benchmark shape runs 11 Spark jobs: each wave selects inside its fetch job") {
+    // an index wave and two leaf profile waves: the entry pass, one fetch job
+    // per wave (its batch selection runs as that job's first stages), the
+    // index wave's discovery put, one delta store per wave, and two
+    // compactions (the first also folds the seen parts). Selecting with a
+    // query plan ran 3 more jobs per wave, and the whitelist as a broadcast
+    // join one more per non-leaf wave: 21 jobs.
+    val (seeds, fetcher, rules, cfg) = BenchShape(1)
+    val jobs = new AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val r = try {
+      val r = WaveRunner.run(spark, seeds, fetcher, rules, cfg)
+      org.apache.spark.GraftListenerSync.drain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    r.release()
+    assert(r.waves === 3)
+    assert(jobs.get() === 11L)
+  }
+
   test("a crawl of the benchmark shape fits the codegen cache: a bigger one compiles nothing") {
     // Spark's cache holds 100 classes in 4 LRU segments of 25, keyed by class
     // loader, so a whole-stage stage takes two entries (plan-time

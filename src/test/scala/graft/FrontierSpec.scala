@@ -1,10 +1,11 @@
 package graft
 
-import graft.frontier.{BloomTable, PartitionedBloom, Robots, TopKSelectNative, UrlSeen}
-import graft.model.RobotsRule
+import graft.frontier.{BloomTable, HostRules, PartitionedBloom, Robots, TopKSelectNative, UrlSeen,
+  WaveSelector}
+import graft.model.{FrontierEntry, FrontierStatus, RobotsRule}
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftRows}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -45,6 +46,37 @@ class FrontierSpec extends SparkSpec {
     }.toSet
 
   private def hashRows(keys: Seq[Long]) = GraftRows.rows(keys.toDF("url_hash"))
+
+  /** A pending depth-1 frontier row; discoveredRank = urlHash. */
+  private def entry(url: String, hash: Long, priority: Double): FrontierEntry =
+    FrontierEntry(url, hash, graft.urls.Urls.hostOf(url), 1, priority, FrontierStatus.Pending,
+      0, 0, hash, "")
+
+  /** A batch row: host, host_rank, url, then the other frontier fields. */
+  private type Batched = (String, Long, String, Long, Int, Double, Int, Int, Long, String)
+
+  /** `entries` as stored frontier rows over 4 partitions. */
+  private def stored(entries: Seq[FrontierEntry]): RDD[InternalRow] = {
+    val rows = GraftRows.rows(entries.toDF().repartition(4)).map(_.copy())
+    rows.localCheckpoint()
+    rows.count()
+    rows
+  }
+
+  /** The batch [[WaveSelector.select]] takes from `rows`, in (host,
+    * host_rank) order, with the rules broadcast or placed by host.
+    */
+  private def batchOf(rows: RDD[InternalRow], rules: Seq[RobotsRule], waveSeconds: Double,
+      maxRetries: Int, broadcastRules: Boolean): Seq[Batched] = {
+    val hostRules = new HostRules(spark.sparkContext, rules,
+      if (broadcastRules) Long.MaxValue else 0L, partitions = 3)
+    try WaveSelector.select(rows, hostRules, waveSeconds, maxRetries, fetchPartitions = 5)
+      .map(r => (r.getUTF8String(2).toString, r.getLong(9), r.getUTF8String(0).toString,
+        r.getLong(1), r.getInt(3), r.getDouble(4), r.getInt(5), r.getInt(6), r.getLong(7),
+        r.getUTF8String(8).toString))
+      .collect().toSeq.sortBy(b => (b._1, b._2))
+    finally hostRules.release()
+  }
 
   test("property: Bloom pre-filter + exact anti-join never drops an unseen key") {
     val gen = for {
@@ -168,6 +200,58 @@ class FrontierSpec extends SparkSpec {
     assert(a === topK(rows, 6))
   }
 
+  test("property: the row selector == per-host top-k restated in Scala, in both rules regimes") {
+    // hosts with and without rules, deny prefixes that match and that do
+    // not, budgets from non-integral quotients and of 1, non-pending rows,
+    // rows past maxRetries, and priority ties broken by (discoveredWave,
+    // discoveredRank, urlHash)
+    val hosts = Seq("h0.edu", "h1.edu", "h2.edu", "h3.edu")
+    val rule = for {
+      host  <- Gen.oneOf(hosts.take(3))
+      deny  <- Gen.chooseNum(0, 2).flatMap(Gen.listOfN(_,
+        Gen.oneOf("/pu", "/people/x", "/private", "/z", "/none")))
+      delay <- Gen.oneOf(0.3, 0.7, 1.0, 2.5, 4.0)
+    } yield RobotsRule(host, deny, delay)
+    val row = for {
+      host   <- Gen.oneOf(hosts)
+      path   <- Gen.oneOf("/people/x", "/people/y", "/private/a", "/pub", "/zz")
+      pri    <- Gen.oneOf(1.0, 10.0, 110.0)
+      status <- Gen.frequency(6 -> FrontierStatus.Pending, 1 -> FrontierStatus.Fetched,
+        1 -> FrontierStatus.Error)
+      retries <- Gen.chooseNum(0, 2)
+      wave   <- Gen.chooseNum(0, 2)
+      rank   <- Gen.chooseNum(0L, 3L)
+      hash   <- Gen.chooseNum(-1000000L, 1000000L)
+    } yield FrontierEntry(s"https://$host$path/$hash", hash, host, wave, pri, status, retries,
+      wave, rank, "")
+    val gen = for {
+      rules <- Gen.chooseNum(0, 4).flatMap(Gen.listOfN(_, rule))
+      rows  <- Gen.chooseNum(1, 150).flatMap(Gen.listOfN(_, row)).map(_.distinctBy(_.urlHash))
+    } yield (rules, rows)
+    val waveSeconds = 2.0
+    val maxRetries = 1
+    samples(gen, 10, seed = 20261017L).foreach { case (rules, rows) =>
+      val byHost = Robots.mergeRules(rules).map(r => r.host -> r).toMap
+      val want = rows
+        .filter(e => e.status == FrontierStatus.Pending && e.retries <= maxRetries)
+        .filterNot(e => byHost.get(e.host).exists(_.denyPrefixes.exists(
+          e.url.stripPrefix(s"https://${e.host}").startsWith(_))))
+        .groupBy(_.host).toSeq.flatMap { case (h, es) =>
+          val delay = byHost.get(h).fold(1.0)(_.crawlDelayS)
+          es.sortBy(e => (-e.priority, e.discoveredWave, e.discoveredRank, e.urlHash))
+            .take(math.max(1, (waveSeconds / delay).toInt)).zipWithIndex.map { case (e, i) =>
+              (h, i.toLong, e.url, e.urlHash, e.depth, e.priority, e.retries, e.discoveredWave,
+                e.discoveredRank, e.parentUrl)
+            }
+        }.sortBy(b => (b._1, b._2))
+      val frontier = stored(rows)
+      for (broadcastRules <- Seq(true, false))
+        assert(batchOf(frontier, rules, waveSeconds, maxRetries, broadcastRules) === want,
+          s"broadcastRules = $broadcastRules, rules: $rules")
+      GraftRows.release(frontier)
+    }
+  }
+
   test("native buffer: split + serialize round-trip + merge equals sorted top-k") {
     // the native TypedImperativeAggregate's partial-aggregation invariant:
     // any split of a candidate stream into partial buffers, each pushed
@@ -254,24 +338,26 @@ class FrontierSpec extends SparkSpec {
   }
 
   test("robots: deny prefixes drop URLs; crawl_delay drives the wave budget") {
-    val rules = Robots.rulesDF(spark, Seq(
+    val rules = Seq(
       RobotsRule("h1.com", Seq("/private", "/tmp"), 0.5),
-      RobotsRule("h2.com", Nil, 2.0)))
-    val frontier = Seq(
-      ("h1.com", "https://h1.com/private/x"),
-      ("h1.com", "https://h1.com/public/x"),
-      ("h2.com", "https://h2.com/anything"),
-      ("h3.com", "https://h3.com/no-rule")).toDF("host", "url")
-    val got = Robots.withRules(frontier, rules)
-      .withColumn("budget", Robots.waveBudget(4.0))
-      .select("url", "allowed", "crawl_delay_s", "budget")
-      .collect().map(r => (r.getString(0), r.getBoolean(1), r.getDouble(2), r.getLong(3)))
-      .toSet
-    assert(got === Set(
-      ("https://h1.com/private/x", false, 0.5, 8L),
-      ("https://h1.com/public/x", true, 0.5, 8L),
-      ("https://h2.com/anything", true, 2.0, 2L),
-      ("https://h3.com/no-rule", true, 1.0, 4L))) // default: allow, 1s (scraper.py:83)
+      RobotsRule("h2.com", Nil, 2.0))
+    assert(!Robots.allows("https://h1.com/private/x", Seq("/private", "/tmp")))
+    assert(Robots.allows("https://h1.com/public/x", Seq("/private", "/tmp")))
+    assert(Robots.allows("https://h1.com/x/private", Seq("/private")))
+    assert(Robots.waveBudget(4.0, 0.5) === 8L && Robots.waveBudget(4.0, 3.0) === 1L)
+    assert(Robots.waveBudget(4.0, 8.0) === 1L, "a wave fetches at least one URL per host")
+    // the denied URLs rank first on h1.com: the deny applies before the
+    // budget, so h1.com still fills its budget of 8 with allowed URLs
+    val denied = Seq("https://h1.com/private/x", "https://h1.com/tmp/y")
+    val urls = denied ++ (0 until 10).map(i => s"https://h1.com/public/$i") ++
+      (0 until 5).map(i => s"https://h2.com/anything/$i") ++
+      (0 until 6).map(i => s"https://h3.com/no-rule/$i")
+    val rows = stored(urls.zipWithIndex.map { case (u, i) =>
+      entry(u, i.toLong, if (denied.contains(u)) 10.0 else 1.0) })
+    val got = batchOf(rows, rules, waveSeconds = 4.0, maxRetries = 0, broadcastRules = true)
+    assert(got.groupBy(_._1).view.mapValues(_.size).toMap ===
+      Map("h1.com" -> 8, "h2.com" -> 2, "h3.com" -> 4)) // default: allow, 1s (scraper.py:83)
+    assert(got.forall(g => !denied.contains(g._3)))
   }
 
   test("robots.txt parser: groups, agent specificity, crawl-delay, comments") {
@@ -311,23 +397,36 @@ class FrontierSpec extends SparkSpec {
   }
 
   test("robots rules beyond broadcast: shuffle-join regime is plan-real and result-identical") {
-    val rules = Robots.rulesDF(spark, Seq(
-      RobotsRule("h1.com", Seq("/private"), 0.5),
-      RobotsRule("h2.com", Nil, 2.0)))
-    val frontier = Seq(
-      ("h1.com", "https://h1.com/private/x"),
-      ("h1.com", "https://h1.com/public/x"),
-      ("h2.com", "https://h2.com/anything"),
-      ("h3.com", "https://h3.com/no-rule")).toDF("host", "url")
-    def result(broadcastRules: Boolean) =
-      Robots.withRules(frontier, rules, broadcastRules)
-        .select("url", "allowed", "crawl_delay_s")
-        .collect().map(r => (r.getString(0), r.getBoolean(1), r.getDouble(2))).toSet
-    assert(result(broadcastRules = false) === result(broadcastRules = true))
-    val plan = Robots.withRules(frontier, rules, broadcastRules = false)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastHashJoin"),
-      s"above-threshold rules must not broadcast:\n$plan")
+    // above the broadcast bound the pending rows move to their host's rules
+    // (an O(pending) shuffle); below it each partition ships one heap per host
+    val rules = Seq(RobotsRule("h1.com", Seq("/private"), 0.5), RobotsRule("h2.com", Nil, 2.0))
+    val rows = stored((0 until 400).map { i =>
+      val host = s"h${1 + i % 3}.com"
+      val path = if (i % 7 == 0) "private" else "public"
+      entry(s"https://$host/$path/$i", i.toLong, (i % 11).toDouble)
+    })
+    def shuffled(broadcastRules: Boolean): (Seq[Batched], Long) = {
+      val records = new java.util.concurrent.atomic.AtomicLong(0L)
+      val listener = new SparkListener {
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (t.taskMetrics != null) {
+          records.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val got = batchOf(rows, rules, waveSeconds = 3.0, maxRetries = 0, broadcastRules)
+        org.apache.spark.GraftListenerSync.drain(spark.sparkContext)
+        (got, records.get())
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (byHost, hostShuffle) = shuffled(broadcastRules = false)
+    val (broadcast, heapShuffle) = shuffled(broadcastRules = true)
+    assert(byHost === broadcast)
+    assert(broadcast.size === 6 + 1 + 3)
+    GraftRows.release(rows)
+    assert(hostShuffle >= 400L, s"rules placed by host: $hostShuffle records shuffled")
+    assert(heapShuffle <= 4 * 3 + broadcast.size,
+      s"broadcast rules: $heapShuffle records shuffled, more than one heap per host and partition")
   }
 
   test("property: driver-merged robots rules equal the per-wave groupBy merge on duplicate hosts") {
@@ -348,17 +447,19 @@ class FrontierSpec extends SparkSpec {
     } yield (rules, paths)
     samples(gen, 12).foreach { case (rules, paths) =>
       val frontier = (hosts :+ "h3.com").flatMap(h => paths.distinct.map(p => (h, s"https://$h$p")))
-        .toDF("host", "url")
-      def result(rulesSide: org.apache.spark.sql.DataFrame) =
-        Robots.withRules(frontier, rulesSide)
-          .withColumn("budget", Robots.waveBudget(3.0))
-          .select("url", "allowed", "crawl_delay_s", "budget").collect()
-          .map(r => (r.getString(0), r.getBoolean(1), r.getDouble(2), r.getLong(3))).toSet
+      def result(rulesSide: Seq[RobotsRule]) = {
+        val byHost = rulesSide.map(r => r.host -> r).toMap
+        frontier.map { case (h, url) =>
+          val delay = byHost.get(h).fold(Robots.DefaultCrawlDelayS)(_.crawlDelayS)
+          (url, Robots.allows(url, byHost.get(h).fold(Seq.empty[String])(_.denyPrefixes)),
+            delay, Robots.waveBudget(3.0, delay))
+        }.toSet
+      }
       val merged = Robots.mergeRules(rules)
       assert(merged.map(_.host).distinct.size === merged.size, "one row per host")
-      val got = result(Robots.rulesDF(spark, merged))
-      assert(got.size === frontier.count(), "merged rules must not fan the frontier out")
-      assert(got === result(groupByMerged(Robots.rulesDF(spark, rules))), s"rules: $rules")
+      val grouped = groupByMerged(rules.toDF()).collect().toSeq
+        .map(r => RobotsRule(r.getString(0), r.getSeq[String](1), r.getDouble(2)))
+      assert(result(merged) === result(grouped), s"rules: $rules")
     }
   }
 
