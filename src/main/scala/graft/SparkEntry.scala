@@ -84,8 +84,8 @@ object SparkEntry {
     "q_media_decode_stub" -> ((s, d) => Multimodal.mediaDecodeStub(s, d)),
     // crawl operators (SURVEY §2.8)
     "q_url_canonicalize" -> ((s, d) => CrawlQueries.urlCanonicalize(s, d)),
-    "q_frontier_select"  -> ((s, d) => CrawlQueries.frontierSelectNative(s, d)),
-    "q_frontier_select_native" -> ((s, d) => CrawlQueries.frontierSelectNative(s, d)),
+    "q_frontier_select"  -> ((s, d) => CrawlQueries.frontierSelect(s, d)),
+    "q_frontier_select_native" -> ((s, d) => CrawlQueries.frontierSelect(s, d)),
     "q_bloom_antijoin"   -> ((s, d) => CrawlQueries.bloomAntijoin(s, d)),
     "q_crawl_synthetic"  -> ((s, d) => CrawlQueries.crawlSynthetic(s, d)),
     "q_match_synthetic"  -> ((s, d) => CrawlQueries.matchSynthetic(s, d))

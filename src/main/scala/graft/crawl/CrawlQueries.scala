@@ -1,11 +1,12 @@
 package graft.crawl
 
-import graft.frontier.UrlSeen
+import graft.frontier.{HostRules, UrlSeen, WaveSelector}
+import graft.model.FrontierStatus
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.SiteConfig
 import graft.urls.Urls
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftRows, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Crawl-operator queries expressed over the driver's testdata so the DuckDB
@@ -37,25 +38,33 @@ object CrawlQueries {
       |  'https://shop.example.com/a/item/' || o_orderkey AS canonical_url
       |FROM orders""".stripMargin
 
-  /** Wave batch selection (W4/G5/G6): per-host ranked top-`budget` through
-    * the crawl's batch selector, the native Catalyst
-    * [[graft.frontier.TopKSelectNative]] aggregate; the oracle is the
-    * equivalent ranked window. Hosts/priorities synthesized from orders.
+  /** Wave batch selection (W4/G5/G6): each host's top 3 through the crawl's
+    * own batch selector, [[WaveSelector.select]], over pending frontier rows
+    * synthesized from orders. No host has a robots rule, so each gets the
+    * default 1 s delay and a 3 s wave's budget is 3; the oracle is the
+    * equivalent ranked window. The selector's rules broadcast (an empty map)
+    * is left to the context cleaner: the returned plan reads it whenever it
+    * runs.
     */
-  def frontierSelectNative(spark: SparkSession, dir: String): DataFrame = {
-    val frontier = orders(spark, dir).select(
-      concat(lit("https://h"), pmod(col("o_custkey"), lit(50)),
-        lit(".com/o/"), col("o_orderkey")).as("url"),
+  def frontierSelect(spark: SparkSession, dir: String): DataFrame = {
+    val host = concat(lit("h"), pmod(col("o_custkey"), lit(50)))
+    val frontier = orders(spark, dir).select( // WaveRunner.FrontierSchema's columns
+      concat(lit("https://"), host, lit(".com/o/"), col("o_orderkey")).as("url"),
       col("o_orderkey").as("urlHash"),
-      concat(lit("h"), pmod(col("o_custkey"), lit(50))).as("host"),
+      host.as("host"),
       lit(1).as("depth"),
       col("o_totalprice").as("priority"),
+      lit(FrontierStatus.Pending).as("status"),
       lit(0).as("retries"),
       lit(0).as("discoveredWave"),
       col("o_orderkey").as("discoveredRank"),
-      lit("").as("parentUrl"),
-      lit(3L).as("budget"))
-    graft.frontier.TopKSelectNative.select(frontier)
+      lit("").as("parentUrl"))
+    val P = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val rules = new HostRules(spark.sparkContext, Nil, broadcastMaxRows = Long.MaxValue,
+      partitions = P)
+    val batch = WaveSelector.select(GraftRows.rows(frontier), rules, waveSeconds = 3.0,
+      maxRetries = 0, fetchPartitions = P)
+    GraftRows.scan(spark, Seq(batch), WaveSelector.BatchSchema)
       .select(col("host"), col("host_rank"), col("url"))
   }
 

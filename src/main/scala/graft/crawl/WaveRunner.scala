@@ -104,7 +104,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * put and compaction move nothing. It has `min(bloomShards, P)` partitions
   * for `P` shuffle partitions: every test and benchmark shape has `P <= 32`,
   * the default `bloomShards`. Selection is
-  * a partial-aggregating exact top-k (map-side bounded heaps), so even the
+  * an exact top-k over map-side bounded heaps merged by host, so even the
   * selection shuffle moves O(hosts × budget) rows, not O(pending), while the
   * rules are broadcast. Fetch maps the selected batch only.
   */
@@ -277,9 +277,10 @@ object WaveRunner {
 
     // The frontier/seen state is RDDs of rows and keys, local-checkpointed:
     // the bookkeeping between waves (delta, compaction, seen) is row filters
-    // and unions, with no query plan to compile. SQL runs the relational
-    // work — selection and link extraction — over scans of these rows. Every
-    // stored RDD is in `held` until it is superseded or the result released.
+    // and unions, with no query plan to compile; so is selection, inside
+    // each wave's fetch job. SQL runs only link extraction over scans of
+    // these rows. Every stored RDD is in `held` until it is superseded or the
+    // result released.
     val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
     def hold[T](rdd: RDD[T], eager: Boolean): RDD[T] = {
       rdd.localCheckpoint()
@@ -612,11 +613,10 @@ object WaveRunner {
       "status string, retries int, discoveredWave int, discoveredRank long, " +
       "parentUrl string")
   private[crawl] val FrontierCols = FrontierSchema.fieldNames.toSeq
-  private[crawl] val FetchSchema = StructType.fromDDL(
-    "url string, urlHash long, host string, depth int, priority double, retries int, " +
-      "discoveredWave int, discoveredRank long, parentUrl string, host_rank long, ok boolean, " +
-      "spans array<struct<kind:string,text:string,media_ref:string,offset:int,cls:string>>, " +
-      "fetchMs long, wave int")
+  // a fetch-log row is its batch row and what the fetch returned
+  private[crawl] val FetchSchema = StructType(WaveSelector.BatchSchema.fields ++ StructType.fromDDL(
+    "ok boolean, spans array<struct<kind:string,text:string,media_ref:string,offset:int," +
+      "cls:string>>, fetchMs long, wave int").fields)
   // field positions the row-level bookkeeping reads (frontier and fetch rows
   // share the first five fields)
   private val UrlAt = 0

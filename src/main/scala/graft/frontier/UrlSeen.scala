@@ -53,9 +53,6 @@ final class PartitionedBloom(val nShards: Int, val shards: Array[BloomFilter],
     hashes.foreach(put)
   }
 
-  /** [[putKeys]] the hash at field `at` of every row. */
-  def putHashes(rows: RDD[InternalRow], at: Int): Long = putKeys(UrlSeen.keysOf(rows, at))
-
   /** [[putAll]] `keys`, one partition at a time as its task ends (the
     * driver never holds more than one partition's keys), in one job that
     * also stores `keys` when they are held; returns how many were put.
@@ -131,9 +128,6 @@ final class BloomTable(sc: SparkContext, nShards: Int, expectedTotal: Long, fpp:
 
   /** The current shard rows: stored once anything was put. */
   def shards: RDD[BloomShard] = rows
-
-  /** [[putKeys]] the hash at field `at` of every row. */
-  def putHashes(hashRows: RDD[InternalRow], at: Int): Long = putKeys(UrlSeen.keysOf(hashRows, at))
 
   /** Put `hashes`, in one job that also stores the grown shards (and
     * `hashes` when they are held); returns how many were put. Hashes placed
@@ -277,37 +271,21 @@ object UrlSeen {
     }
   }
 
-  /** DataFrame form of the broadcast-regime filter: the rows of
-    * `candidates` (which carry `url_hash`) whose key is not in `seen`.
-    */
-  def filterUnseen(candidates: DataFrame, seen: DataFrame, bloom: PartitionedBloom): DataFrame = {
-    val placement = BloomTable.placement(bloom.nShards, shufflePartitions(candidates))
-    viaRows(candidates, placedKeys(seen, placement), placement)(flag(_, bloom))
-  }
-
-  /** DataFrame form of the sharded-regime filter (see [[filterUnseen]]):
-    * the shards are built from `seen` for this query and not stored.
+  /** DataFrame form of the sharded-regime filter: the rows of `candidates`
+    * (which carry `url_hash`) whose key is not in `seen`. The shards are
+    * built from `seen` for this query and not stored.
     */
   def filterUnseenSharded(candidates: DataFrame, seen: DataFrame, nShards: Int,
       expectedTotal: Long, fpp: Double): DataFrame = {
-    val placement = BloomTable.placement(nShards, shufflePartitions(candidates))
-    val seenKeys = placedKeys(seen, placement)
+    val spark = candidates.sparkSession
+    val placement = BloomTable.placement(nShards,
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val seenKeys = place(keysOf(GraftRows.rows(seen.select(col("url_hash"))), 0), placement)
     val shards = BloomTable.build(seenKeys, placement, expectedTotal, fpp)
-    viaRows(candidates, seenKeys, placement)(flagSharded(_, shards, placement))
-  }
-
-  private def shufflePartitions(df: DataFrame): Int =
-    df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-  private def placedKeys(seen: DataFrame, placement: ShardPlacement): RDD[Long] =
-    place(keysOf(GraftRows.rows(seen.select(col("url_hash"))), 0), placement)
-
-  private def viaRows(candidates: DataFrame, seenKeys: RDD[Long], placement: ShardPlacement)(
-      probe: RDD[(Long, InternalRow)] => RDD[Flagged]): DataFrame = {
     val at = candidates.schema.fieldIndex("url_hash")
     val cands = GraftRows.rows(candidates).map(r => (r.getLong(at), r.copy()))
       .partitionBy(placement)
-    GraftRows.scan(candidates.sparkSession, Seq(exact(probe(cands), seenKeys)),
+    GraftRows.scan(spark, Seq(exact(flagSharded(cands, shards, placement), seenKeys)),
       candidates.schema)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import graft.frontier.{BloomTable, HostRules, PartitionedBloom, Robots, TopKSelectNative, UrlSeen,
-  WaveSelector}
+import graft.frontier.{BloomTable, HostRules, NativeCand, NativeTopKBuf, PartitionedBloom, Robots,
+  UrlSeen, WaveSelector}
 import graft.model.{FrontierEntry, FrontierStatus, RobotsRule}
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
@@ -19,23 +19,6 @@ import GenHelper.samples
 class FrontierSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Frontier rows (host, priority, urlHash) with every column the batch
-    * selector reads; discoveredRank = urlHash.
-    */
-  private def frontier(rows: Seq[(String, Double, Long)], budget: Long): DataFrame =
-    rows.toDF("host", "priority", "urlHash")
-      .withColumn("discoveredWave", lit(0))
-      .withColumn("discoveredRank", col("urlHash"))
-      .withColumn("url", concat(lit("u"), col("urlHash")))
-      .withColumn("depth", lit(1))
-      .withColumn("retries", lit(0))
-      .withColumn("parentUrl", lit(""))
-      .withColumn("budget", lit(budget))
-
-  private def selected(df: DataFrame): Set[(String, Long, Long)] =
-    TopKSelectNative.select(df).select("host", "host_rank", "urlHash")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-
   /** The per-host top-`budget` of `rows` restated in Scala: priority desc,
     * then urlHash asc (the frontier order when wave and rank tie with it).
     */
@@ -45,7 +28,8 @@ class FrontierSpec extends SparkSpec {
         .map { case (r, i) => (h, i.toLong, r._3) }
     }.toSet
 
-  private def hashRows(keys: Seq[Long]) = GraftRows.rows(keys.toDF("url_hash"))
+  private def hashKeys(keys: Seq[Long]): RDD[Long] =
+    UrlSeen.keysOf(GraftRows.rows(keys.toDF("url_hash")), 0)
 
   /** A pending depth-1 frontier row; discoveredRank = urlHash. */
   private def entry(url: String, hash: Long, priority: Double): FrontierEntry =
@@ -55,9 +39,12 @@ class FrontierSpec extends SparkSpec {
   /** A batch row: host, host_rank, url, then the other frontier fields. */
   private type Batched = (String, Long, String, Long, Int, Double, Int, Int, Long, String)
 
-  /** `entries` as stored frontier rows over 4 partitions. */
-  private def stored(entries: Seq[FrontierEntry]): RDD[InternalRow] = {
-    val rows = GraftRows.rows(entries.toDF().repartition(4)).map(_.copy())
+  /** `entries` as stored frontier rows, over 4 partitions unless `layout`
+    * places them otherwise.
+    */
+  private def stored(entries: Seq[FrontierEntry],
+      layout: DataFrame => DataFrame = _.repartition(4)): RDD[InternalRow] = {
+    val rows = GraftRows.rows(layout(entries.toDF())).map(_.copy())
     rows.localCheckpoint()
     rows.count()
     rows
@@ -78,20 +65,35 @@ class FrontierSpec extends SparkSpec {
     finally hostRules.release()
   }
 
+  /** (host, host_rank, urlHash) of the batch [[WaveSelector.select]] takes
+    * from pending rows (host, priority, urlHash) stored by `layout`, with no
+    * robots rules: every host's budget is `budget` (at the default 1 s delay).
+    */
+  private def selected(rows: Seq[(String, Double, Long)], budget: Int,
+      layout: DataFrame => DataFrame = _.repartition(4)): Set[(String, Long, Long)] = {
+    val frontier = stored(rows.map { case (h, p, id) => entry(s"https://$h/u$id", id, p) }, layout)
+    try batchOf(frontier, Nil, waveSeconds = budget.toDouble, maxRetries = 0,
+      broadcastRules = true).map(b => (b._1, b._2, b._4)).toSet
+    finally GraftRows.release(frontier)
+  }
+
   test("property: Bloom pre-filter + exact anti-join never drops an unseen key") {
     val gen = for {
       seenKeys <- Gen.listOf(Gen.chooseNum(-5000L, 5000L)).map(_.distinct)
       candKeys <- Gen.nonEmptyListOf(Gen.chooseNum(-5000L, 5000L)).map(_.distinct)
     } yield (seenKeys, candKeys)
     samples(gen, 12).foreach { case (seenKeys, candKeys) =>
-      val seen = seenKeys.toDF("url_hash")
-      val cand = candKeys.toDF("url_hash")
+      // seen keys and candidates placed alike, as the crawl places them
+      val placement = BloomTable.placement(nShards = 4, partitions = 3)
+      val seen = UrlSeen.place(spark.sparkContext.parallelize(seenKeys, 2), placement)
+      val cand = spark.sparkContext.parallelize(candKeys.map(h => (h, InternalRow(h))), 2)
+        .partitionBy(placement)
       // tiny expectedTotal forces a high Bloom FP rate → exercises the rescue path
       val bloom = PartitionedBloom.empty(nShards = 4, expectedTotal = 64, fpp = 0.5)
       seenKeys.foreach(bloom.put)
       seenKeys.foreach(k => assert(bloom.mightContain(k), "bloom must have no false negatives"))
-      val got = UrlSeen.filterUnseen(cand, seen, bloom)
-        .collect().map(_.getLong(0)).toSet
+      val got = UrlSeen.exact(UrlSeen.flag(cand, bloom), seen)
+        .map(_.getLong(0)).collect().toSet
       assert(got === (candKeys.toSet -- seenKeys.toSet))
     }
   }
@@ -118,8 +120,8 @@ class FrontierSpec extends SparkSpec {
     // a build, then a second put grown into the stored shards where they live
     val table = new BloomTable(spark.sparkContext, nShards = 16, expectedTotal = 1 << 14,
       fpp = 0.01, numPartitions = 8)
-    assert(table.putHashes(hashRows(0L until 600L), 0) === 600L)
-    assert(table.putHashes(hashRows(600L until 1000L), 0) === 400L)
+    assert(table.putKeys(hashKeys(0L until 600L)) === 600L)
+    assert(table.putKeys(hashKeys(600L until 1000L)) === 400L)
     assert(table.size === 1000L)
     val shards = table.shards.collect()
     assert(shards.map(_.keys).sum === 1000L)
@@ -186,7 +188,7 @@ class FrontierSpec extends SparkSpec {
       } yield (host, pri, id))
     } yield rows.distinctBy(_._3)
     samples(gen, 8).foreach { rows =>
-      assert(selected(frontier(rows, 4L)) === topK(rows, 4), "native top-k selection must be exact")
+      assert(selected(rows, 4) === topK(rows, 4), "native top-k selection must be exact")
     }
   }
 
@@ -194,9 +196,9 @@ class FrontierSpec extends SparkSpec {
     // the distributed bounded-heap top-k must not depend on row arrival
     // order or partition layout (its tiebreak order is total via urlHash)
     val rows = (1 to 400).map(i => (s"h${i % 5}", (i % 13).toDouble, i.toLong))
-    val a = selected(frontier(rows, 6L))
-    assert(selected(frontier(rows, 6L).orderBy(col("urlHash").desc).repartition(7)) === a)
-    assert(selected(frontier(rows, 6L).repartition(3, col("priority"))) === a)
+    val a = selected(rows, 6)
+    assert(selected(rows, 6, _.orderBy(col("urlHash").desc).repartition(7)) === a)
+    assert(selected(rows, 6, _.repartition(3, col("priority"))) === a)
     assert(a === topK(rows, 6))
   }
 
@@ -253,17 +255,12 @@ class FrontierSpec extends SparkSpec {
   }
 
   test("native buffer: split + serialize round-trip + merge equals sorted top-k") {
-    // the native TypedImperativeAggregate's partial-aggregation invariant:
-    // any split of a candidate stream into partial buffers, each pushed
-    // through the shuffle byte format, merged in any order, must finish as
-    // the sorted top-k (priority desc, then urlHash asc)
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.Literal
+    // the row selector's heap shuffle invariant: any split of a candidate
+    // stream into per-partition heaps, each pushed through the shuffle byte
+    // format, merged in any order, must finish as the sorted top-k
+    // (priority desc, then urlHash asc)
     import org.apache.spark.unsafe.types.UTF8String
-    val expr = graft.frontier.TopKSelectNative(Literal("u"), Literal(0L),
-      Literal("h"), Literal(1), Literal(1.0), Literal(0), Literal(0),
-      Literal(0L), Literal(""), Literal(9L))
-    def cand(id: Long) = new graft.frontier.NativeCand(
+    def cand(id: Long) = new NativeCand(
       UTF8String.fromString(s"u$id"), id, UTF8String.fromString("h"), 1,
       (id % 17).toDouble, 0, 0, id, UTF8String.fromString(""))
     val rnd = new scala.util.Random(23)
@@ -271,70 +268,28 @@ class FrontierSpec extends SparkSpec {
       val n = 1 + rnd.nextInt(60)
       val ids = rnd.shuffle((0L until 200L).toList).take(n)
       val bufs = ids.grouped(1 + rnd.nextInt(4)).toList.map { p =>
-        val b = expr.createAggregationBuffer()
-        b.k = 9L
+        val b = NativeTopKBuf.empty(9L)
         p.foreach(id => b.insert(cand(id)))
-        expr.deserialize(expr.serialize(b)) // through the shuffle format
+        NativeTopKBuf.fromBytes(b.toBytes) // through the shuffle format
       }
-      val merged = bufs.reduce(expr.merge)
-      val got = expr.eval(merged)
-        .asInstanceOf[org.apache.spark.sql.catalyst.util.GenericArrayData]
-        .array.map(_.asInstanceOf[InternalRow])
-        .map(r => (r.getUTF8String(0).toString, r.getLong(1), r.getDouble(4)))
-        .toSeq
+      val got = rnd.shuffle(bufs).reduce(_ merge _).sorted
+        .map(c => (c.url.toString, c.urlHash, c.priority)).toSeq
       val want = ids.sortBy(id => (-(id % 17).toDouble, id)).take(9)
         .map(id => (s"u$id", id, (id % 17).toDouble))
       assert(got === want, s"n=$n")
     }
   }
 
-  test("native selector rejects differing budgets on one host (constant-budget contract)") {
-    // the aggregate sizes each host's selection by its budget, which must be
-    // host-constant (the engine derives it from the host crawl delay); a
-    // caller passing per-row budgets must fail loudly, not get a silently
-    // mis-sized batch
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
-    import org.apache.spark.sql.types._
-    import org.apache.spark.unsafe.types.UTF8String
-    val types = Seq(StringType, LongType, StringType, IntegerType, DoubleType,
-      IntegerType, IntegerType, LongType, StringType, LongType)
-    val refs = types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = false) }
-    val expr = graft.frontier.TopKSelectNative(refs(0), refs(1), refs(2),
-      refs(3), refs(4), refs(5), refs(6), refs(7), refs(8), refs(9))
-    def row(id: Long, budget: Long) = new GenericInternalRow(Array[Any](
-      UTF8String.fromString(s"u$id"), id, UTF8String.fromString("h"), 1, 1.0,
-      0, 0, id, UTF8String.fromString(""), budget))
-    val b = expr.update(expr.createAggregationBuffer(), row(1L, 4L))
-    val exUpd = intercept[IllegalArgumentException] { expr.update(b, row(2L, 5L)) }
-    assert(exUpd.getMessage.contains("constant per-host budget"))
-    val b2 = expr.update(expr.createAggregationBuffer(), row(3L, 5L))
-    val exMrg = intercept[IllegalArgumentException] { expr.merge(b, b2) }
-    assert(exMrg.getMessage.contains("constant per-host budget"))
-    // an empty buffer merges with either side
-    assert(expr.merge(expr.createAggregationBuffer(), b2).k === 5L)
-    // end-to-end: the contract violation surfaces as a job failure
-    val df = Seq(("h", 1.0, 1L, 4L), ("h", 2.0, 2L, 5L))
-      .toDF("host", "priority", "urlHash", "budget")
-      .withColumn("discoveredWave", lit(0))
-      .withColumn("discoveredRank", col("urlHash"))
-      .withColumn("url", concat(lit("u"), col("urlHash")))
-      .withColumn("depth", lit(1))
-      .withColumn("retries", lit(0))
-      .withColumn("parentUrl", lit(""))
-    def chain(t: Throwable): Seq[String] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
-    val exNat = intercept[Exception] {
-      graft.frontier.TopKSelectNative.select(df).collect()
-    }
-    assert(chain(exNat).exists(m => m != null && m.contains("constant per-host budget")))
-  }
-
   test("per-host per-wave budget is never exceeded (politeness invariant)") {
-    val rows = (1 to 500).map(i => (s"h${i % 3}", i.toDouble, i.toLong))
-    val counts = TopKSelectNative.select(frontier(rows, 7L)).groupBy("host").count()
-      .collect().map(_.getLong(1))
-    assert(counts.forall(_ <= 7L))
-    assert(counts.length === 3)
+    // h0 and h1 have rules (budgets 14 and 3 in a 7 s wave), h2 the default (7)
+    val rules = Seq(RobotsRule("h0", Nil, 0.5), RobotsRule("h1", Nil, 2.0))
+    val rows = stored((1 to 500).map(i => entry(s"https://h${i % 3}/u$i", i.toLong, i.toDouble)))
+    for (broadcastRules <- Seq(true, false)) {
+      val counts = batchOf(rows, rules, waveSeconds = 7.0, maxRetries = 0, broadcastRules)
+        .groupBy(_._1).view.mapValues(_.size).toMap
+      assert(counts === Map("h0" -> 14, "h1" -> 3, "h2" -> 7), s"broadcastRules = $broadcastRules")
+    }
+    GraftRows.release(rows)
   }
 
   test("robots: deny prefixes drop URLs; crawl_delay drives the wave budget") {
@@ -507,9 +462,9 @@ class FrontierSpec extends SparkSpec {
     assert(pb.size === 60L)
     val table = new BloomTable(spark.sparkContext, nShards = 4, expectedTotal = 100,
       fpp = 0.01, numPartitions = 2)
-    table.putHashes(hashRows(0L until 60L), 0)
+    table.putKeys(hashKeys(0L until 60L))
     val stored = table.shards
-    intercept[IllegalStateException](table.putHashes(hashRows(60L until 120L), 0))
+    intercept[IllegalStateException](table.putKeys(hashKeys(60L until 120L)))
     assert(table.size === 60L && (table.shards eq stored))
     assert(table.shards.map(_.keys).sum().toLong === 60L)
     table.shards.unpersist()
@@ -521,10 +476,10 @@ class FrontierSpec extends SparkSpec {
     // regime) must give bit-identical shards and the same key count
     val keys = (-500L until 500L).map(_ * 0x9E3779B97F4A7C15L)
     val put = PartitionedBloom.empty(nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
-    val n = put.putHashes(GraftRows.rows(keys.toDF("url_hash").repartition(4)), 0)
+    val n = put.putKeys(UrlSeen.keysOf(GraftRows.rows(keys.toDF("url_hash").repartition(4)), 0))
     val sharded = new BloomTable(spark.sparkContext, nShards = 16, expectedTotal = 1 << 14,
       fpp = 0.01, numPartitions = 8)
-    assert(sharded.putHashes(hashRows(keys), 0) === n)
+    assert(sharded.putKeys(hashKeys(keys)) === n)
     val table = sharded.shards.collect().sortBy(_.shard)
     sharded.shards.unpersist()
     def bytes(bf: org.apache.spark.util.sketch.BloomFilter): Seq[Byte] = {

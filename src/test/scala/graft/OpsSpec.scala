@@ -764,24 +764,6 @@ class OpsSpec extends SparkSpec {
       assert(got.length === 4)
     }
 
-    // the native batch selector on a DataFrame of the fresh session
-    val frontier = ns.createDataFrame(
-        (1 to 60).map(i => (s"h${i % 4}", (i % 7).toDouble, i.toLong)))
-      .toDF("host", "priority", "urlHash")
-      .withColumn("discoveredWave", lit(0))
-      .withColumn("discoveredRank", col("urlHash"))
-      .withColumn("url", concat(lit("u"), col("urlHash")))
-      .withColumn("depth", lit(1))
-      .withColumn("retries", lit(0))
-      .withColumn("parentUrl", lit(""))
-      .withColumn("budget", lit(3L))
-    val topK = (1 to 60).groupBy(i => s"h${i % 4}").toSeq.flatMap { case (h, is) =>
-      is.sortBy(i => (-(i % 7), i)).take(3).zipWithIndex
-        .map { case (i, r) => org.apache.spark.sql.Row(h, r.toLong, i.toLong) }
-    }.toSet
-    assert(graft.frontier.TopKSelectNative.select(frontier)
-      .select("host", "host_rank", "urlHash").collect().toSet === topK)
-
     // a whole dedup query runs there and registers nothing
     assert(SparkEntry.queries("q_minhash_lsh")(ns, sf).count() >= 0L)
     val graftFns = ns.sessionState.functionRegistry.listFunction()

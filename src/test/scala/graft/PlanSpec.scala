@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -32,20 +33,31 @@ class PlanSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(p).size >= 2, "expect partial+final agg")
   }
 
-  test("native selector: partial ObjectHashAggregate before the host exchange") {
-    // the native TypedImperativeAggregate must keep its partial-aggregation
-    // shape: a map-side ObjectHashAggregate combines each partition's
-    // candidates into ≤k-entry heaps BEFORE the host shuffle, so the
-    // exchange moves O(hosts×budget) buffers, never O(pending) rows
-    val p = plan(SparkEntry.queries("q_frontier_select_native")(spark, sf))
-    assert(p.contains("ObjectHashAggregate"), p)
-    assert("ObjectHashAggregate".r.findAllIn(p).size >= 2,
-      "expect partial+final object hash aggregation")
-    // the details section spells the aggregate mode: a partial_ invocation
-    // of the native aggregate (printed by its expression nodeName) is the
-    // map-side combine itself
-    assert(p.contains("partial_topkselectnative"),
-      "the native aggregate must run in Partial mode before the exchange")
+  test("frontier select: shuffles per-host heaps and its batch, never pending rows") {
+    // the row selector reduces each input partition to one bounded heap per
+    // host before the host shuffle, so the query writes at most one heap
+    // image per host (50) per input partition, plus its batch of 150 rows
+    // (50 hosts × budget 3) to the output partitions: never the O(pending)
+    // rows a ranked window would shuffle
+    val sc = spark.sparkContext
+    val orders = spark.read.parquet(s"$sf/orders.parquet")
+    val records = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (t.taskMetrics != null) {
+        records.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten); ()
+      }
+    }
+    val query = SparkEntry.queries("q_frontier_select")(spark, sf)
+    sc.addSparkListener(listener)
+    val batch = try {
+      val rows = query.collect()
+      org.apache.spark.GraftListenerSync.drain(sc)
+      rows
+    } finally sc.removeSparkListener(listener)
+    assert(batch.length === 150)
+    val bound = 50L * orders.rdd.getNumPartitions + 150L
+    assert(records.get() <= bound, s"${records.get()} shuffle records, bound $bound")
+    assert(records.get() * 4 < orders.count(), s"${records.get()} shuffle records")
   }
 
   test("length stats: one pruned corpus scan, partial percentile aggregation") {
