@@ -1,6 +1,6 @@
 package graft.crawl
 
-import graft.frontier.{BloomTable, HostRules, PartitionedBloom, UrlSeen, WaveSelector}
+import graft.frontier.{BloomTable, HostRules, UrlSeen, WaveSelector}
 import graft.functions.SpanExprs
 import graft.model._
 import graft.synth.SyntheticSite.Seed
@@ -58,12 +58,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Work fixed for the crawl runs once, not per wave: the robots rules are
   * merged to one per host and shipped to the selection tasks before the
   * loop ([[graft.frontier.HostRules]]), the whitelist hosts are broadcast
-  * once, and both are released when the loop ends. In the broadcast regime the
-  * URL-seen Bloom filter lives on the driver and takes every new key there:
-  * the entry frontier's keys in the pass that stores it, and each wave's
-  * discoveries as the job that stores them ends. In the sharded regime it
-  * is shard rows held like the seen keys ([[graft.frontier.BloomTable]]),
-  * which take the same keys where they live.
+  * once, and both are released when the loop ends. The URL-seen Bloom
+  * filter is shard rows held like the seen keys
+  * ([[graft.frontier.BloomTable]]), at every size: nothing of it lives on
+  * the driver or is broadcast. Its shards start from the entry's seen keys
+  * and take each non-leaf wave's discoveries where they live; the entry's
+  * shards are built by the first job that probes them, so they cost no job
+  * of their own.
   *
   * One entry: a crawl starts from a stored frontier, the seed rows at a cold
   * start and the store's frontier at its last committed wave on resume. The
@@ -79,9 +80,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * State model (the 1000-executor / 10^10-URL design): what a wave shuffles
   * and writes is O(wave batch), never O(frontier), but selection still SCANS
-  * every pending row (robots rule and heap for each of them). With a fixed
-  * 768-row batch on 4 cores, selection took 0.28 s at 10^4 pending rows and
-  * 2.6 s at 4·10^6. The frontier lives as
+  * every pending row (robots rule and heap for each of them). With 64 hosts
+  * at a budget of 12 on 4 cores, selection took 140 ms at 10^4 pending rows
+  * and 234 ms at 4·10^6. The frontier lives as
   *
   *  - base rows: the pending rows as of the last compaction — stable,
   *    lineage-truncated rows that per-wave jobs only ever SCAN (no per-wave
@@ -100,7 +101,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * keys, stored by the job that puts them into the Bloom filter; compaction
   * concatenates them partition by partition. The parts, each wave's
   * candidates and the Bloom shards share ONE partitioner
-  * ([[graft.frontier.ShardPlacement]]), so the URL-seen check, the sharded
+  * ([[graft.frontier.ShardPlacement]]), so the URL-seen check, the Bloom
   * put and compaction move nothing. It has `min(bloomShards, P)` partitions
   * for `P` shuffle partitions: every test and benchmark shape has `P <= 32`,
   * the default `bloomShards`. Selection is
@@ -122,20 +123,15 @@ object WaveRunner {
       maxWaves: Int = 10000,
       maxRetries: Int = 0,          // reference fetches once, no retry (scraper.py:160-162)
       waveSeconds: Double = 1.0,    // × 1/crawl_delay = per-host budget (scraper.py:83)
+      /** URL-seen Bloom sizing, fixed for the crawl: `bloomShards` shard
+        * rows on the executors ([[graft.frontier.BloomTable]]), together
+        * sized for `bloomExpected` keys at `bloomFpp`. A crawl whose seen set
+        * would outgrow `bloomExpected` throws, at entry or at the wave that
+        * would overfill it.
+        */
       bloomShards: Int = 32,
       bloomExpected: Long = 1L << 20,
       bloomFpp: Double = 0.01,
-      /** URL-seen Bloom residency is chosen STATICALLY from the configured
-        * sizing (like Spark's broadcast-join threshold): when the whole
-        * filter (≈ 1.2·bloomExpected bytes at 1% fpp) fits under this bound
-        * it lives on the driver and is broadcast, probed row-locally — no
-        * extra shuffle; above it the filter lives as shard rows on the
-        * executors ([[graft.frontier.BloomTable]]), which take the new keys
-        * and the probes where they live (the 10^10 path: a 12 GB filter must
-        * never exist on the driver or as one broadcast, nor cross the wire).
-        * Set to 0 to force the sharded path regardless of sizing (tests do).
-        */
-      bloomBroadcastMaxBytes: Long = 256L << 20,
       /** Frontier/seen compaction threshold: when the keys touched since the
         * last compaction exceed this, deltas fold into new base rows (the
         * only O(frontier) work — amortized over the waves between
@@ -144,21 +140,15 @@ object WaveRunner {
         * comfortably in driver and executor memory.
         */
       frontierDeltaMaxRows: Long = 1L << 22,
-      /** Robots-rules regime bound (static, like the Bloom residency): rule
-        * sets with ≤ this many hosts are broadcast to the selection once per
-        * crawl; above it (millions of hosts) they are rows placed by host,
-        * and each wave moves the pending rows to them. Set to 0 to force the
-        * placed regime (tests do).
+      /** Robots-rules regime bound (static, like Spark's broadcast-join
+        * threshold): rule sets with ≤ this many hosts are broadcast to the
+        * selection once per crawl; above it (millions of hosts) they are
+        * rows placed by host, and each wave moves the pending rows to them.
+        * Set to 0 to force the placed regime (tests do).
         */
       rulesBroadcastMaxRows: Long = 1L << 20,
       snapshotDir: Option[String] = None // Some(dir) = committed, resumable waves
-  ) {
-    /** Conservative whole-filter size estimate from the configured sizing. */
-    def bloomBytesEstimate: Long =
-      (bloomExpected * math.ceil(
-        -math.log(bloomFpp) / (math.log(2) * math.log(2))).toLong) / 8 + 64 * bloomShards
-    def bloomBroadcastable: Boolean = bloomBytesEstimate <= bloomBroadcastMaxBytes
-  }
+  )
 
   final case class CrawlResult(
       frontier: DataFrame,
@@ -310,43 +300,21 @@ object WaveRunner {
 
     // URL-seen state, all of it placed by one partitioner: the seen keys as
     // held parts (the entry's, then each non-leaf wave's new keys, stored by
-    // the job that puts them into the Bloom filter), and the filter, its
-    // residency chosen statically from the configured sizing
-    // (cfg.bloomBroadcastable, like Spark's broadcast-join threshold):
-    //  - broadcast regime (filter fits the bound): a driver PartitionedBloom
-    //    that takes each wave's new keys on the driver and is broadcast as a
-    //    copy per wave, probed row-locally. The driver object is BOUNDED BY
-    //    CONFIG and its puts throw past it.
-    //  - sharded regime (the 10^10 path): a BloomTable, shard rows on the
-    //    executors that take the new keys and probes of their partition.
+    // the job that puts them into the Bloom filter), and the filter as shard
+    // rows on the executors that take the new keys and probes of their
+    // partition. The entry part and the shards built from it are stored by
+    // the first job that reads them: the first non-leaf wave's discovery put.
     val placement = BloomTable.placement(cfg.bloomShards, P)
     val seenParts = scala.collection.mutable.ArrayBuffer(
       hold(UrlSeen.place(UrlSeen.keysOf(entryRdd, UrlHashAt), placement), eager = false))
-    val bloomBroadcast = cfg.bloomBroadcastable
-    val bloomDriver =
-      if (bloomBroadcast) PartitionedBloom.empty(cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp)
-      else null
-    val bloomTable =
-      if (bloomBroadcast) null
-      else new BloomTable(sc, cfg.bloomShards, cfg.bloomExpected, cfg.bloomFpp, P)
-    // the entry pass: one job over the entry rows stores them, counts the
-    // pending ones and, in the broadcast regime, brings their keys to the
-    // driver filter a partition at a time. The sharded regime's shards take
-    // the entry's seen part in a job of their own, which also stores it.
-    var entryPending = 0L
-    sc.runJob(entryRdd, (it: Iterator[InternalRow]) => {
-      var pending = 0L
-      val keys = Array.newBuilder[Long]
-      it.foreach { r =>
-        if (isPending(r)) pending += 1
-        if (bloomBroadcast) keys += r.getLong(UrlHashAt)
-      }
-      (pending, keys.result())
-    }, (_: Int, part: (Long, Array[Long])) => {
-      entryPending += part._1
-      if (bloomBroadcast) bloomDriver.putAll(part._2)
-    })
-    if (!bloomBroadcast) bloomTable.putKeys(seenParts.head)
+    // the entry pass: one job over the entry rows stores them and counts
+    // them and the pending ones; the filter throws here, before any wave,
+    // when the entry alone exceeds its sizing
+    val entryCounts = sc.runJob(entryRdd, (it: Iterator[InternalRow]) =>
+      it.foldLeft((0L, 0L)) { case ((rows, pending), r) =>
+        (rows + 1, if (isPending(r)) pending + 1 else pending) })
+    val bloom = new BloomTable(seenParts.head, entryCounts.map(_._1).sum, placement,
+      cfg.bloomExpected, cfg.bloomFpp)
 
     // fixed for the crawl, shipped once and released when the loop ends: the
     // robots rules the selection reads and the hosts discovery may enter
@@ -382,7 +350,7 @@ object WaveRunner {
     // frontier scan + selection + zero-row fetch, ~0.7 s on the bench corpus)
     // that would only observe it, so a resume of a finished crawl runs no
     // wave. Robots-denied rows keep it positive: an empty batch stops then.
-    var pendingCount = entryPending
+    var pendingCount = entryCounts.map(_._2).sum
 
     // -- compaction: fold deltas into new base rows — the ONLY O(frontier)
     // work in the engine, amortized over the waves between compactions —
@@ -528,21 +496,16 @@ object WaveRunner {
             .reduceByKey(placement, firstDiscovery _)
           // URL-seen: Bloom fast path + exact check, both on the candidates'
           // own partition (nothing moves): a Bloom-positive key is checked
-          // against its partition of the seen parts. The broadcast regime
-          // probes a copy: the driver filter takes this wave's keys while
-          // the copy is in use.
-          val flagged =
-            if (bloomBroadcast) UrlSeen.flag(firsts, bloomDriver.copy())
-            else UrlSeen.flagSharded(firsts, bloomTable.shards, placement)
-          hold(UrlSeen.exact(flagged, sc.union(seenParts.toSeq)), eager = false)
+          // against its partition of the seen parts
+          hold(UrlSeen.exact(UrlSeen.flagSharded(firsts, bloom.shards, placement),
+            sc.union(seenParts.toSeq)), eager = false)
         }
         // the job that puts the new keys into the filter also stores them
         // (the rows, and their keys as the wave's seen part)
         val n = newRows.fold(0L) { rows =>
           val part = hold(UrlSeen.keysOf(rows, UrlHashAt), eager = false)
           seenParts += part
-          phase("discover+seen", wave) {
-            if (bloomBroadcast) bloomDriver.putKeys(part) else bloomTable.putKeys(part) }
+          phase("discover+seen", wave)(bloom.putKeys(part))
         }
 
         // -- state transition (G8): selected rows leave pending (errors
@@ -589,7 +552,7 @@ object WaveRunner {
       case Some(st) if allWaves.nonEmpty => st.readFetchLog(allWaves)
       case _ => GraftRows.scan(spark, fetchedRdds.toSeq, FetchSchema)
     }
-    if (!bloomBroadcast) held += bloomTable.shards // released with the result
+    held += bloom.shards // released with the result
     val frontierFinal =
       GraftRows.scan(spark, Seq(liveBase, deltaRdd) ++ doneRdds, FrontierSchema)
     // urlsEnqueued from the frontier: wave w's discoveries are stamped

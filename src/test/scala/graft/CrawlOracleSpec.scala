@@ -2,7 +2,8 @@ package graft
 
 import graft.crawl.{Records, WaveRunner}
 import graft.crawl.WaveRunner.CrawlConfig
-import graft.model.FacultyRecord
+import graft.frontier.Robots
+import graft.model.{FacultyRecord, RobotsRule}
 import graft.oracle.SequentialOracle
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.SiteConfig
@@ -16,11 +17,12 @@ import org.apache.spark.sql.Row
   */
 class CrawlOracleSpec extends SparkSpec {
 
-  private def runBoth(site: SiteConfig, crawl: CrawlConfig = CrawlConfig()) = {
+  private def runBoth(site: SiteConfig, crawl: CrawlConfig = CrawlConfig(),
+      rules: Seq[RobotsRule] = Nil) = {
     val seeds   = SyntheticSite.seeds(site)
     val fetcher = SyntheticSite.fetcher(site)
     val oracle  = SequentialOracle.run(seeds, fetcher)
-    val engine  = WaveRunner.run(spark, seeds, fetcher, Nil, crawl)
+    val engine  = WaveRunner.run(spark, seeds, fetcher, rules, crawl)
     (seeds, oracle, engine)
   }
 
@@ -49,13 +51,11 @@ class CrawlOracleSpec extends SparkSpec {
   }
 
   test("forced shard-local bloom residency: ordering, seen, records unchanged") {
-    // bloomBroadcastMaxBytes = 0 forces the sharded Bloom (shard rows on the
-    // executors, the 10^10 residency) through the FULL engine — exactness
-    // must hold identically to the broadcast regime
+    // the Bloom filter as shard rows on the executors (the 10^10 residency,
+    // every crawl's) through the FULL engine, over 4 hosts with errors
     val site = SiteConfig(universities = 2, deptsPerU = 2, facultyPerDept = 5,
       errorFraction = 0.2)
-    val (seeds, oracle, engine) =
-      runBoth(site, CrawlConfig(bloomBroadcastMaxBytes = 0L))
+    val (seeds, oracle, engine) = runBoth(site)
     val got = engineOrder(engine).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val exp = oracle.crawlOrder.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     assert(got === exp)
@@ -63,22 +63,19 @@ class CrawlOracleSpec extends SparkSpec {
     assert(engineRecords(spark, engine, seeds) === oracle.records)
   }
 
-  test("memory mode: the seen set is the frontier's (url_hash, url) keys in both Bloom regimes") {
+  test("memory mode: the seen set is the frontier's (url_hash, url) keys") {
     val site = SiteConfig(universities = 2, deptsPerU = 1, facultyPerDept = 4,
       errorFraction = 0.2)
-    for (maxBytes <- Seq(CrawlConfig().bloomBroadcastMaxBytes, 0L)) {
-      val (_, oracle, engine) = runBoth(site,
-        CrawlConfig(maxDepth = 2, waveSeconds = 2.0, bloomBroadcastMaxBytes = maxBytes))
-      assert(engine.seen.schema ===
-        org.apache.spark.sql.types.StructType.fromDDL("url_hash long, url string"))
-      val seen = engine.seen.collect().map(r => (r.getLong(0), r.getString(1)))
-      val keys = engine.frontier.select("urlHash", "url").collect()
-        .map(r => (r.getLong(0), r.getString(1)))
-      assert(seen.length === seen.distinct.length, s"bloomBroadcastMaxBytes = $maxBytes")
-      assert(seen.toSet === keys.toSet, s"bloomBroadcastMaxBytes = $maxBytes")
-      assert(seen.map(_._2).toSet === oracle.seen, s"bloomBroadcastMaxBytes = $maxBytes")
-      engine.release()
-    }
+    val (_, oracle, engine) = runBoth(site, CrawlConfig(maxDepth = 2, waveSeconds = 2.0))
+    assert(engine.seen.schema ===
+      org.apache.spark.sql.types.StructType.fromDDL("url_hash long, url string"))
+    val seen = engine.seen.collect().map(r => (r.getLong(0), r.getString(1)))
+    val keys = engine.frontier.select("urlHash", "url").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(seen.length === seen.distinct.length)
+    assert(seen.toSet === keys.toSet)
+    assert(seen.map(_._2).toSet === oracle.seen)
+    engine.release()
   }
 
   test("single host: URL-seen set and faculty records match exactly") {
@@ -150,20 +147,24 @@ class CrawlOracleSpec extends SparkSpec {
   // The leaf-wave rule: a wave with no fetched page below maxDepth skips
   // discovery. At maxDepth 1 every profile wave is a leaf; at maxDepth 2 none
   // is (its links are all duplicates), so both must give the oracle's crawl,
-  // in every URL-seen regime and in snapshot mode.
+  // in both robots-rules regimes and in snapshot mode.
   private val leafRegimes: Seq[(String, () => CrawlConfig)] = Seq(
     "memory mode"   -> (() => CrawlConfig()),
     "snapshot mode" -> (() => CrawlConfig(
       snapshotDir = Some(java.nio.file.Files.createTempDirectory("graft_leaf").toString))),
-    "sharded bloom" -> (() => CrawlConfig(bloomBroadcastMaxBytes = 0L)))
+    "placed robots" -> (() => CrawlConfig(rulesBroadcastMaxRows = 0L)))
 
   for ((regime, cfg) <- leafRegimes; maxDepth <- Seq(1, 2))
     test(s"leaf waves, $regime, maxDepth $maxDepth: order, seen set and records match") {
       // 2 hosts × 5 profiles at 2 per wave: an index wave, then 3 profile waves
       val site = SiteConfig(universities = 2, deptsPerU = 1, facultyPerDept = 5,
         errorFraction = 0.2)
+      // every host's rule is the default (allow all, 1 s delay), so the rules
+      // change no budget; they give the placed regime rows to place
+      val rules = SyntheticSite.seeds(site).map(s => RobotsRule(
+        graft.urls.Urls.hostOf(graft.urls.Urls.normalize(s.url)), Nil, Robots.DefaultCrawlDelayS))
       val (seeds, oracle, engine) =
-        runBoth(site, cfg().copy(maxDepth = maxDepth, waveSeconds = 2.0))
+        runBoth(site, cfg().copy(maxDepth = maxDepth, waveSeconds = 2.0), rules)
       val got = engineOrder(engine).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       val exp = oracle.crawlOrder.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       assert(got === exp)

@@ -84,14 +84,13 @@ class CrawlScaleSpec extends SparkSpec {
   }
 
   test("sharded Bloom: a crawl's shuffle bytes do not grow with the filter's sizing") {
-    // the sharded filter's new keys and probes move to the shards, never the
-    // shards to them: a 16x larger filter must not add to the shuffle
+    // the filter's new keys and probes move to the shards, never the shards
+    // to them: a 16x larger filter must not add to the shuffle
     val site  = SiteConfig(universities = 2, deptsPerU = 2, facultyPerDept = 6)
     val seeds = SyntheticSite.seeds(site)
     def crawl(bloomExpected: Long): Long = shuffleWritten(_.bytesWritten) {
       WaveRunner.run(spark, seeds, SyntheticSite.fetcher(site), Nil,
-        CrawlConfig(maxDepth = 2, waveSeconds = 2.0, bloomBroadcastMaxBytes = 0L,
-          bloomExpected = bloomExpected))
+        CrawlConfig(maxDepth = 2, waveSeconds = 2.0, bloomExpected = bloomExpected))
     }
     val small = crawl(1L << 20)
     val big   = crawl(1L << 24)
@@ -227,25 +226,20 @@ class CrawlScaleSpec extends SparkSpec {
     // loader, so a whole-stage stage takes two entries (plan-time
     // check compile + task compile). After a 1-university crawl with its records and
     // order, a 2-university crawl of the same shape — robots delays,
-    // compaction, index + profile waves — must find every class cached, in
-    // both URL-seen Bloom regimes.
-    for (sharded <- Seq(false, true)) {
-      def crawlWithRecordsAndOrder(universities: Int): Unit = {
-        val (seeds, fetcher, rules, shape) = BenchShape(universities)
-        val cfg = if (sharded) shape.copy(bloomBroadcastMaxBytes = 0L) else shape
-        val r = WaveRunner.run(spark, seeds, fetcher, rules, cfg)
-        graft.crawl.Records.facultyRecords(spark, r.docs, seeds)
-          .write.format("noop").mode("overwrite").save()
-        assert(r.crawlOrder.collect().length.toLong === r.fetches)
-        r.release()
-      }
-      crawlWithRecordsAndOrder(1)
-      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      crawlWithRecordsAndOrder(2)
-      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-      assert(compiled === 0L, s"sharded = $sharded: the 2-university crawl compiled " +
-        s"$compiled classes")
+    // compaction, index + profile waves — must find every class cached.
+    def crawlWithRecordsAndOrder(universities: Int): Unit = {
+      val (seeds, fetcher, rules, cfg) = BenchShape(universities)
+      val r = WaveRunner.run(spark, seeds, fetcher, rules, cfg)
+      graft.crawl.Records.facultyRecords(spark, r.docs, seeds)
+        .write.format("noop").mode("overwrite").save()
+      assert(r.crawlOrder.collect().length.toLong === r.fetches)
+      r.release()
     }
+    crawlWithRecordsAndOrder(1)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    crawlWithRecordsAndOrder(2)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled === 0L, s"the 2-university crawl compiled $compiled classes")
   }
 }
 

@@ -1,7 +1,7 @@
 package graft
 
-import graft.frontier.{BloomTable, HostRules, NativeCand, NativeTopKBuf, PartitionedBloom, Robots,
-  UrlSeen, WaveSelector}
+import graft.frontier.{BloomTable, HostRules, NativeCand, NativeTopKBuf, Robots, UrlSeen,
+  WaveSelector}
 import graft.model.{FrontierEntry, FrontierStatus, RobotsRule}
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
@@ -83,24 +83,29 @@ class FrontierSpec extends SparkSpec {
       candKeys <- Gen.nonEmptyListOf(Gen.chooseNum(-5000L, 5000L)).map(_.distinct)
     } yield (seenKeys, candKeys)
     samples(gen, 12).foreach { case (seenKeys, candKeys) =>
-      // seen keys and candidates placed alike, as the crawl places them
+      // the crawl's own calls: seen keys and candidates placed alike, and a
+      // table seeded lazily from the seen keys, as the crawl's entry is
       val placement = BloomTable.placement(nShards = 4, partitions = 3)
       val seen = UrlSeen.place(spark.sparkContext.parallelize(seenKeys, 2), placement)
       val cand = spark.sparkContext.parallelize(candKeys.map(h => (h, InternalRow(h))), 2)
         .partitionBy(placement)
       // tiny expectedTotal forces a high Bloom FP rate → exercises the rescue path
-      val bloom = PartitionedBloom.empty(nShards = 4, expectedTotal = 64, fpp = 0.5)
-      seenKeys.foreach(bloom.put)
-      seenKeys.foreach(k => assert(bloom.mightContain(k), "bloom must have no false negatives"))
-      val got = UrlSeen.exact(UrlSeen.flag(cand, bloom), seen)
+      val table = new BloomTable(seen, seenKeys.size.toLong, placement, expectedTotal = 64,
+        fpp = 0.5)
+      // the probe's job builds the shards
+      val got = UrlSeen.exact(UrlSeen.flagSharded(cand, table.shards, placement), seen)
         .map(_.getLong(0)).collect().toSet
       assert(got === (candKeys.toSet -- seenKeys.toSet))
+      val shards = table.shards.collect().map(s => s.shard -> s.bloom).toMap
+      seenKeys.foreach(k => assert(shards(BloomTable.shardOf(k, 4)).mightContainLong(k),
+        "bloom must have no false negatives"))
+      GraftRows.release(table.shards)
     }
   }
 
   test("property: sharded Bloom table probe never drops an unseen key") {
-    // same exactness contract as the broadcast variant, via the shard rows
-    // the crawl engine uses in the sharded regime (shard-local residency)
+    // same exactness contract through the DataFrame form, which builds the
+    // shard rows for one query and does not store them
     val gen = for {
       seenKeys <- Gen.listOf(Gen.chooseNum(-5000L, 5000L)).map(_.distinct)
       candKeys <- Gen.nonEmptyListOf(Gen.chooseNum(-5000L, 5000L)).map(_.distinct)
@@ -117,10 +122,11 @@ class FrontierSpec extends SparkSpec {
   }
 
   test("bloom table: distributed build+merge has no false negatives; counts sum") {
-    // a build, then a second put grown into the stored shards where they live
-    val table = new BloomTable(spark.sparkContext, nShards = 16, expectedTotal = 1 << 14,
-      fpp = 0.01, numPartitions = 8)
-    assert(table.putKeys(hashKeys(0L until 600L)) === 600L)
+    // a lazy build from entry keys, then a put grown into the shards where
+    // they live (the put's job stores both)
+    val table = new BloomTable(hashKeys(0L until 600L), 600L,
+      BloomTable.placement(nShards = 16, partitions = 8), expectedTotal = 1 << 14, fpp = 0.01)
+    assert(table.size === 600L)
     assert(table.putKeys(hashKeys(600L until 1000L)) === 400L)
     assert(table.size === 1000L)
     val shards = table.shards.collect()
@@ -148,16 +154,9 @@ class FrontierSpec extends SparkSpec {
     val seen = sc.union(parts)
     val cands = stored(sc.parallelize((500L until 900L).map(h => (h, InternalRow(h))), 3)
       .partitionBy(placement))
-    // a tiny filter: most of the 100 seen candidates and many unseen ones
-    // are Bloom-positive, so the check runs
-    val bloom = PartitionedBloom.empty(nShards = 16, expectedTotal = 64, fpp = 0.5)
-    (0L until 600L).foreach(bloom.put)
-    val broadcastChecked = UrlSeen.exact(UrlSeen.flag(cands, bloom), seen)
-    assert(shuffles(broadcastChecked) === 0)
-    assert(broadcastChecked.map(_.getLong(0)).collect().toSet === (600L until 900L).toSet)
-
-    val table = new BloomTable(sc, nShards = 16, expectedTotal = 1 << 12, fpp = 0.01,
-      numPartitions = 8)
+    // the table starts from the first part, lazily: the put of the second
+    // builds the first part's shards in its own one stage
+    val table = new BloomTable(parts.head, 300L, placement, expectedTotal = 1 << 12, fpp = 0.01)
     val stages = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -165,12 +164,12 @@ class FrontierSpec extends SparkSpec {
       }
     }
     sc.addSparkListener(listener)
-    try parts.foreach(table.putKeys)
+    try table.putKeys(parts(1))
     finally {
       org.apache.spark.GraftListenerSync.drain(sc)
       sc.removeSparkListener(listener)
     }
-    assert(stages.get() === 2L, "each put of placed keys is one job of one stage")
+    assert(stages.get() === 1L, "a put of placed keys is one job of one stage")
     assert(table.size === 600L)
     val shardedChecked = UrlSeen.exact(UrlSeen.flagSharded(cands, table.shards, placement), seen)
     assert(shuffles(shardedChecked) === 0)
@@ -438,31 +437,24 @@ class FrontierSpec extends SparkSpec {
     assert(rules("c.edu") === RobotsRule("c.edu", Nil, 1.0)) // no robots.txt
   }
 
-  test("broadcast Bloom: a wave whose new keys exceed the filter's sizing throws") {
-    // one index page that links 24 profiles; the filter is sized for 8 keys,
-    // in the broadcast and in the sharded regime
+  /** The [[IllegalStateException]] in `e`'s cause chain, if any. */
+  private def stateCause(e: Throwable): Option[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .find(_.isInstanceOf[IllegalStateException])
+
+  test("Bloom: a wave whose new keys exceed the filter's sizing throws") {
+    // one index page that links 24 profiles; the filter is sized for 8 keys
     val site = graft.synth.SyntheticSite.SiteConfig(universities = 1, deptsPerU = 1,
       facultyPerDept = 24)
-    for (maxBytes <- Seq(graft.crawl.WaveRunner.CrawlConfig().bloomBroadcastMaxBytes, 0L)) {
-      val cfg = graft.crawl.WaveRunner.CrawlConfig(bloomExpected = 8L,
-        bloomBroadcastMaxBytes = maxBytes)
-      assert(cfg.bloomBroadcastable === (maxBytes > 0L))
-      val e = intercept[Exception] {
-        graft.crawl.WaveRunner.run(spark, graft.synth.SyntheticSite.seeds(site),
-          graft.synth.SyntheticSite.fetcher(site), Nil, cfg)
-      }
-      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-      assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
-        c.getMessage.contains("sized for 8 keys")), s"bloomBroadcastMaxBytes=$maxBytes: $e")
+    val e = intercept[Exception] {
+      graft.crawl.WaveRunner.run(spark, graft.synth.SyntheticSite.seeds(site),
+        graft.synth.SyntheticSite.fetcher(site), Nil,
+        graft.crawl.WaveRunner.CrawlConfig(bloomExpected = 8L))
     }
+    assert(stateCause(e).exists(_.getMessage.contains("sized for 8 keys")), e)
     // all or none: a put that does not fit leaves the filter as it was
-    val pb = PartitionedBloom.empty(nShards = 4, expectedTotal = 100, fpp = 0.01)
-    pb.putAll((0L until 60L).toArray)
-    intercept[IllegalStateException](pb.putAll((60L until 120L).toArray))
-    assert(pb.size === 60L)
-    val table = new BloomTable(spark.sparkContext, nShards = 4, expectedTotal = 100,
-      fpp = 0.01, numPartitions = 2)
-    table.putKeys(hashKeys(0L until 60L))
+    val table = new BloomTable(hashKeys(0L until 60L), 60L,
+      BloomTable.placement(nShards = 4, partitions = 2), expectedTotal = 100, fpp = 0.01)
     val stored = table.shards
     intercept[IllegalStateException](table.putKeys(hashKeys(60L until 120L)))
     assert(table.size === 60L && (table.shards eq stored))
@@ -470,16 +462,35 @@ class FrontierSpec extends SparkSpec {
     table.shards.unpersist()
   }
 
+  test("Bloom: an entry frontier that alone overfills the filter throws before any fetch") {
+    // 4 seeds and no discovery (maxDepth 0): only the entry pass counts the
+    // keys, since the entry's shards are built lazily. The fetcher fails
+    // the crawl differently if anything is fetched.
+    val site = graft.synth.SyntheticSite.SiteConfig(universities = 1, deptsPerU = 4,
+      facultyPerDept = 3)
+    val seeds = graft.synth.SyntheticSite.seeds(site)
+    assert(seeds.size === 4)
+    val e = intercept[Exception] {
+      graft.crawl.WaveRunner.run(spark, seeds,
+        (url: String) => throw new UnsupportedOperationException(s"fetched $url"), Nil,
+        graft.crawl.WaveRunner.CrawlConfig(bloomExpected = 2L, maxDepth = 0))
+    }
+    assert(stateCause(e).exists(_.getMessage.contains("sized for 2 keys")), e)
+  }
+
   test("partitioned bloom: shard merge and scaling math hold") {
-    // the driver put of collected hashes (every broadcast-regime wave, and
-    // resume) and the shard rows built from the same keys (the sharded
-    // regime) must give bit-identical shards and the same key count
+    // the shard rows, seeded lazily from entry keys and grown by a put, must
+    // hold bit for bit what one filter per shard filled on the driver holds:
+    // BloomFilter.create(max(64, expected / nShards), fpp), each key put
+    // into shard pmod(key, nShards)
     val keys = (-500L until 500L).map(_ * 0x9E3779B97F4A7C15L)
-    val put = PartitionedBloom.empty(nShards = 16, expectedTotal = 1 << 14, fpp = 0.01)
-    val n = put.putKeys(UrlSeen.keysOf(GraftRows.rows(keys.toDF("url_hash").repartition(4)), 0))
-    val sharded = new BloomTable(spark.sparkContext, nShards = 16, expectedTotal = 1 << 14,
-      fpp = 0.01, numPartitions = 8)
-    assert(sharded.putKeys(hashKeys(keys)) === n)
+    val (expected, nShards) = (1L << 14, 16)
+    val reference = Array.fill(nShards)(
+      org.apache.spark.util.sketch.BloomFilter.create(math.max(64L, expected / nShards), 0.01))
+    keys.foreach(k => reference(BloomTable.shardOf(k, nShards)).putLong(k))
+    val sharded = new BloomTable(hashKeys(keys.take(600)), 600L,
+      BloomTable.placement(nShards, partitions = 8), expected, fpp = 0.01)
+    assert(sharded.putKeys(hashKeys(keys.drop(600))) === 400L)
     val table = sharded.shards.collect().sortBy(_.shard)
     sharded.shards.unpersist()
     def bytes(bf: org.apache.spark.util.sketch.BloomFilter): Seq[Byte] = {
@@ -487,17 +498,11 @@ class FrontierSpec extends SparkSpec {
       bf.writeTo(bos)
       bos.toByteArray.toSeq
     }
-    assert(n === keys.size.toLong)
-    assert(put.size === keys.size.toLong)
-    assert(table.map(_.keys).sum === n)
-    assert(table.map(_.shard).toSeq === (0 until 16))
-    assert(table.map(s => bytes(s.bloom)).toSeq === put.shards.map(bytes).toSeq)
-    keys.foreach(k => assert(put.mightContain(k)))
-    // a copy probes the same bits and does not see later puts
-    val copy = put.copy()
-    assert(copy.shards.map(bytes).toSeq === put.shards.map(bytes).toSeq)
-    put.put(7L)
-    assert(copy.size === n && put.size === n + 1)
+    assert(sharded.size === keys.size.toLong)
+    assert(table.map(_.keys).sum === keys.size.toLong)
+    assert(table.map(_.shard).toSeq === (0 until nShards))
+    assert(table.map(s => bytes(s.bloom)).toSeq === reference.map(bytes).toSeq)
+    keys.foreach(k => assert(table(BloomTable.shardOf(k, nShards)).bloom.mightContainLong(k)))
     // documented 10^10 sizing: ~9.6 bits/key at 1% fpp → ~1.2 GB per 10^9 keys,
     // sharded so a single shard stays executor-resident
     val bitsPerKey = -math.log(0.01) / (math.log(2) * math.log(2))

@@ -89,35 +89,32 @@ class ResumeSpec extends SparkSpec {
     full.release(); again.release()
   }
 
-  test("resume after committed leaf waves == uninterrupted run, in both Bloom regimes") {
+  test("resume after committed leaf waves == uninterrupted run") {
     // waves 1-3 are leaf waves (profile pages at maxDepth 1): they commit no
     // new frontier entries, so the seen set does not grow. Stopping after wave 2
     // leaves the resumed crawl to restore the seen filter from the store and
     // run the last leaf wave.
-    for (sharded <- Seq(false, true)) {
-      def cfg(dir: String, maxWaves: Int = CrawlConfig().maxWaves) = CrawlConfig(
-        waveSeconds = 2.0, snapshotDir = Some(dir), maxWaves = maxWaves,
-        bloomBroadcastMaxBytes = if (sharded) 0L else CrawlConfig().bloomBroadcastMaxBytes)
-      val full = WaveRunner.run(spark, seeds, fetcher, Nil,
-        cfg(Files.createTempDirectory("graft_leaf_full").toString))
-      val expected = stateOf(full)
-      val dir = Files.createTempDirectory("graft_leaf_cut").toString
-      WaveRunner.run(spark, seeds, fetcher, Nil, cfg(dir, maxWaves = 3)).release()
-      val store = new graft.crawl.ParquetSnapshotStore(spark, dir,
-        spark.sessionState.conf.numShufflePartitions)
-      assert(store.listCommitted().sorted === Seq(0, 1, 2))
-      Seq(1, 2).foreach { w =>
-        val delta = store.readFrontierDeltas(Seq(w))
-        assert(delta.filter(org.apache.spark.sql.functions.col("status") === "pending")
-          .count() === 0L, s"leaf wave $w enqueued a URL")
-        // the wave comes from the Hive-style dir name, beside the given schema
-        assert(delta.select("wave").distinct().collect().map(_.getInt(0)).toSeq === Seq(w))
-      }
-      val resumed = WaveRunner.resume(spark, seeds, fetcher, Nil, cfg(dir))
-      assert(stateOf(resumed) === expected, s"sharded = $sharded")
-      assert(store.listCommitted().sorted === Seq(0, 1, 2, 3))
-      full.release(); resumed.release()
+    def cfg(dir: String, maxWaves: Int = CrawlConfig().maxWaves) = CrawlConfig(
+      waveSeconds = 2.0, snapshotDir = Some(dir), maxWaves = maxWaves)
+    val full = WaveRunner.run(spark, seeds, fetcher, Nil,
+      cfg(Files.createTempDirectory("graft_leaf_full").toString))
+    val expected = stateOf(full)
+    val dir = Files.createTempDirectory("graft_leaf_cut").toString
+    WaveRunner.run(spark, seeds, fetcher, Nil, cfg(dir, maxWaves = 3)).release()
+    val store = new graft.crawl.ParquetSnapshotStore(spark, dir,
+      spark.sessionState.conf.numShufflePartitions)
+    assert(store.listCommitted().sorted === Seq(0, 1, 2))
+    Seq(1, 2).foreach { w =>
+      val delta = store.readFrontierDeltas(Seq(w))
+      assert(delta.filter(org.apache.spark.sql.functions.col("status") === "pending")
+        .count() === 0L, s"leaf wave $w enqueued a URL")
+      // the wave comes from the Hive-style dir name, beside the given schema
+      assert(delta.select("wave").distinct().collect().map(_.getInt(0)).toSeq === Seq(w))
     }
+    val resumed = WaveRunner.resume(spark, seeds, fetcher, Nil, cfg(dir))
+    assert(stateOf(resumed) === expected)
+    assert(store.listCommitted().sorted === Seq(0, 1, 2, 3))
+    full.release(); resumed.release()
   }
 
   test("time travel: frontier/seen as-of wave w == a crawl stopped at wave w") {
