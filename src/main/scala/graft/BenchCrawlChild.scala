@@ -30,20 +30,12 @@ object BenchCrawlChild {
       errorFraction = if (args.length > 6) args(6).toDouble else 0.05,
       pubsPerFaculty = if (args.length > 7) args(7).toInt else 12,
       bioWords = if (args.length > 8) args(8).toInt else 250) // default ~2 KB prose per profile: realistic page weight
-    val base = CrawlConfig(waveSeconds = args(4).toDouble,
+    val crawl = CrawlConfig(waveSeconds = args(4).toDouble,
       // bounded-wave mode for the politeness-regime selection bench: time a
       // fixed number of waves over a DEEP frontier (budget ≪ pending) rather
       // than draining it — the per-wave selection cost is the measurand
       maxWaves = sys.env.get("GRAFT_MAX_WAVES").map(_.toInt)
         .getOrElse(CrawlConfig().maxWaves))
-    // GRAFT_REGIME=sharded places the robots rules by host, the one
-    // beyond-broadcast path left (every crawl keeps its Bloom filter as
-    // shard rows), so the bench can record the 10^10-regime machinery's
-    // CONSTANTS on the same corpus, not just its property-tested shape
-    val crawl =
-      if (sys.env.get("GRAFT_REGIME").contains("sharded"))
-        base.copy(rulesBroadcastMaxRows = 0L)
-      else base
     val runs  = args(5).toInt
     val skipCeil = sys.env.contains("GRAFT_SKIP_CEIL")
     // the parent's narrow (N) level, which the ceilings are measured against

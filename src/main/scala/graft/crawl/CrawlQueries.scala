@@ -1,7 +1,7 @@
 package graft.crawl
 
-import graft.frontier.{HostRules, UrlSeen, WaveSelector}
-import graft.model.FrontierStatus
+import graft.frontier.{UrlSeen, WaveSelector}
+import graft.model.{FrontierStatus, RobotsRule}
 import graft.synth.SyntheticSite
 import graft.synth.SyntheticSite.SiteConfig
 import graft.urls.Urls
@@ -42,9 +42,8 @@ object CrawlQueries {
     * own batch selector, [[WaveSelector.select]], over pending frontier rows
     * synthesized from orders. No host has a robots rule, so each gets the
     * default 1 s delay and a 3 s wave's budget is 3; the oracle is the
-    * equivalent ranked window. The selector's rules broadcast (an empty map)
-    * is left to the context cleaner: the returned plan reads it whenever it
-    * runs.
+    * equivalent ranked window. The rules broadcast (an empty map) is left to
+    * the context cleaner: the returned plan reads it whenever it runs.
     */
   def frontierSelect(spark: SparkSession, dir: String): DataFrame = {
     val host = concat(lit("h"), pmod(col("o_custkey"), lit(50)))
@@ -60,10 +59,9 @@ object CrawlQueries {
       col("o_orderkey").as("discoveredRank"),
       lit("").as("parentUrl"))
     val P = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val rules = new HostRules(spark.sparkContext, Nil, broadcastMaxRows = Long.MaxValue,
-      partitions = P)
-    val batch = WaveSelector.select(GraftRows.rows(frontier), rules, waveSeconds = 3.0,
-      maxRetries = 0, fetchPartitions = P)
+    val noRules = spark.sparkContext.broadcast(Map.empty[String, RobotsRule])
+    val batch = WaveSelector.select(GraftRows.rows(frontier), noRules, waveSeconds = 3.0,
+      maxRetries = 0, heapPartitions = P, fetchPartitions = P)
     GraftRows.scan(spark, Seq(batch), WaveSelector.BatchSchema)
       .select(col("host"), col("host_rank"), col("url"))
   }

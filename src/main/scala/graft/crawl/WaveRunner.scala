@@ -1,6 +1,6 @@
 package graft.crawl
 
-import graft.frontier.{BloomTable, HostRules, UrlSeen, WaveSelector}
+import graft.frontier.{BloomTable, Robots, UrlSeen, WaveSelector}
 import graft.functions.SpanExprs
 import graft.model._
 import graft.synth.SyntheticSite.Seed
@@ -56,9 +56,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `maxDepth = 1`) every wave after the index wave is a leaf.
   *
   * Work fixed for the crawl runs once, not per wave: the robots rules are
-  * merged to one per host and shipped to the selection tasks before the
-  * loop ([[graft.frontier.HostRules]]), the whitelist hosts are broadcast
-  * once, and both are released when the loop ends. The URL-seen Bloom
+  * merged to one per host ([[graft.frontier.Robots.mergeRules]]) and that
+  * host map is broadcast to the selection tasks before the loop, the
+  * whitelist hosts are broadcast once, and both are destroyed when the loop
+  * ends. The URL-seen Bloom
   * filter is shard rows held like the seen keys
   * ([[graft.frontier.BloomTable]]), at every size: nothing of it lives on
   * the driver or is broadcast. Its shards start from the entry's seen keys
@@ -106,8 +107,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * for `P` shuffle partitions: every test and benchmark shape has `P <= 32`,
   * the default `bloomShards`. Selection is
   * an exact top-k over map-side bounded heaps merged by host, so even the
-  * selection shuffle moves O(hosts × budget) rows, not O(pending), while the
-  * rules are broadcast. Fetch maps the selected batch only.
+  * selection shuffle moves O(hosts × budget) rows, not O(pending). Fetch
+  * maps the selected batch only.
   */
 object WaveRunner {
 
@@ -118,6 +119,10 @@ object WaveRunner {
     */
   val RankBase = 100000L
 
+  /** A crawl's settings. The robots rules are not among them: a crawl takes
+    * its rules as a list, and the selection reads them merged to one per
+    * host, broadcast once per crawl, whatever their number.
+    */
   final case class CrawlConfig(
       maxDepth: Int = 1,
       maxWaves: Int = 10000,
@@ -140,13 +145,6 @@ object WaveRunner {
         * comfortably in driver and executor memory.
         */
       frontierDeltaMaxRows: Long = 1L << 22,
-      /** Robots-rules regime bound (static, like Spark's broadcast-join
-        * threshold): rule sets with ≤ this many hosts are broadcast to the
-        * selection once per crawl; above it (millions of hosts) they are
-        * rows placed by host, and each wave moves the pending rows to them.
-        * Set to 0 to force the placed regime (tests do).
-        */
-      rulesBroadcastMaxRows: Long = 1L << 20,
       snapshotDir: Option[String] = None // Some(dir) = committed, resumable waves
   )
 
@@ -316,9 +314,10 @@ object WaveRunner {
     val bloom = new BloomTable(seenParts.head, entryCounts.map(_._1).sum, placement,
       cfg.bloomExpected, cfg.bloomFpp)
 
-    // fixed for the crawl, shipped once and released when the loop ends: the
-    // robots rules the selection reads and the hosts discovery may enter
-    val hostRules = new HostRules(sc, rules, cfg.rulesBroadcastMaxRows, P)
+    // fixed for the crawl, broadcast once and destroyed when the loop ends:
+    // the robots rules the selection reads, merged to one per host, and the
+    // hosts discovery may enter
+    val rulesByHost = sc.broadcast(Robots.mergeRules(rules).map(r => r.host -> r).toMap)
     val hosts = sc.broadcast(whitelist.map(UTF8String.fromString).toSet)
 
     // snapshot-mode table store (G10) — the engine speaks only to WaveStore;
@@ -392,8 +391,8 @@ object WaveRunner {
       // few partitions its hosts hash to (measured round 4: fetching on 16
       // host-hashed partitions at 8 cores is not faster — the saved shuffle
       // is repaid in coarser tasks at the stage tail).
-      val batch = WaveSelector.select(sc.union(liveBase, deltaRdd), hostRules, cfg.waveSeconds,
-        maxRetries, P * 3)
+      val batch = WaveSelector.select(sc.union(liveBase, deltaRdd), rulesByHost, cfg.waveSeconds,
+        maxRetries, P, P * 3)
 
       // the fetch maps the batch rows (url, urlHash, host, depth, priority,
       // retries, discoveredWave, discoveredRank, parentUrl, host_rank) to
@@ -542,7 +541,7 @@ object WaveRunner {
         maybeCompact(wave)
         wave += 1
       }
-    } finally { hostRules.release(); hosts.destroy() }
+    } finally { rulesByHost.destroy(); hosts.destroy() }
 
     // the fetch log, which docs, order and metrics project: memory mode
     // scans the fetched rows of every wave as ONE relation; snapshot mode

@@ -1,31 +1,8 @@
 package graft.frontier
 
 import graft.model.RobotsRule
-import org.apache.spark.{HashPartitioner, SparkContext}
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
-
-/** One crawl's robots rules, merged to one per host ([[Robots.mergeRules]]),
-  * as the batch selector ([[WaveSelector.select]]) reads them. The regime is
-  * chosen statically, like the URL-seen Bloom residency: up to
-  * `broadcastMaxRows` rules are one host map broadcast once; above that they
-  * are rows placed by host over `partitions` partitions, to which the
-  * selection moves the pending rows (millions of hosts never sit in one
-  * map). Made once per crawl; [[release]] frees the broadcast.
-  */
-final class HostRules(sc: SparkContext, rules: Seq[RobotsRule], broadcastMaxRows: Long,
-    val partitions: Int) {
-  private val merged = Robots.mergeRules(rules)
-  val regime: Either[Broadcast[Map[String, RobotsRule]], RDD[(UTF8String, RobotsRule)]] =
-    if (merged.size <= broadcastMaxRows) Left(sc.broadcast(merged.map(r => r.host -> r).toMap))
-    else Right(sc.parallelize(merged.map(r => (UTF8String.fromString(r.host), r)))
-      .partitionBy(new HashPartitioner(partitions)))
-
-  def release(): Unit = regime.left.foreach(_.destroy())
-}
 
 /** Robots rules, one per host, looked up by the batch selector (SURVEY.md
   * §2.8 G9, J7).
@@ -36,8 +13,8 @@ final class HostRules(sc: SparkContext, rules: Seq[RobotsRule], broadcastMaxRows
   * therefore defaults every host to allow-all with crawl_delay = 1.0 s — the
   * reference-equivalent budget — and lets an explicit rule override it per
   * host (deny prefixes + crawl delay): [[allows]] and [[waveBudget]] are the
-  * one definition of what a rule does, and [[HostRules]] carries a crawl's
-  * rules to the selection tasks.
+  * one definition of what a rule does. A crawl merges its rules to one per
+  * host and broadcasts that host map to the selection tasks once.
   */
 object Robots {
 
@@ -45,8 +22,8 @@ object Robots {
 
   /** Rules merged to ONE row per host, on the driver: deny prefixes unioned,
     * sorted and de-duplicated; the most conservative — largest — crawl delay
-    * kept. Hosts keep first-seen order. [[HostRules]] holds a crawl's rules
-    * merged.
+    * kept. Hosts keep first-seen order. A crawl's selection reads its rules
+    * merged, as a map keyed by host.
     */
   def mergeRules(rules: Seq[RobotsRule]): Seq[RobotsRule] = {
     val byHost = rules.groupBy(_.host)
@@ -56,11 +33,18 @@ object Robots {
     }
   }
 
-  /** True unless the URL's path starts with one of the `deny` prefixes. */
+  /** True unless the URL's path starts with one of the `deny` prefixes. The
+    * path is what follows a leading `http://` or `https://` (matched
+    * case-sensitively) and the authority up to the first `/`: empty when no
+    * `/` follows, the whole URL when neither scheme leads it. A scan, no
+    * regex: the selection calls this for every row a host's heap takes.
+    */
   def allows(url: String, deny: Seq[String]): Boolean =
     url == null || deny == null || {
-      val path = url.replaceFirst("^https?://[^/]*", "")
-      !deny.exists(p => p != null && path.startsWith(p))
+      val scheme = if (url.startsWith("https://")) 8 else if (url.startsWith("http://")) 7 else 0
+      val slash = if (scheme == 0) 0 else url.indexOf('/', scheme)
+      val path = if (slash < 0) url.length else slash
+      !deny.exists(p => p != null && url.startsWith(p, path))
     }
 
   /** Per-host fetch budget for one wave: how many requests a wave of
@@ -145,8 +129,8 @@ object Robots {
     * fetch) and parses each body on the executors; a missing or unfetchable
     * robots.txt yields the default allow-all / 1 s rule. The rules table this
     * returns is computed on the executors; a crawl takes its rules as a list
-    * ([[fetchRules]] collects them), which [[HostRules]] broadcasts up to
-    * `rulesBroadcastMaxRows` and above that places by host as rows.
+    * ([[fetchRules]] collects them), merges them to one per host and
+    * broadcasts them to its selection once.
     *
     * @param hosts a DataFrame with a `host: string` column
     */
@@ -170,9 +154,7 @@ object Robots {
       .toDF()
   }
 
-  /** Collected convenience form of [[fetchRulesDF]] — only for rule sets
-    * known to fit the broadcast regime.
-    */
+  /** Collected form of [[fetchRulesDF]]: the list a crawl takes. */
   def fetchRules(spark: SparkSession, hosts: Seq[String],
       fetcher: String => Option[graft.model.SpanDoc],
       agent: String = "*"): Seq[RobotsRule] = {

@@ -3,6 +3,7 @@ package graft.frontier
 import graft.model.{FrontierStatus, RobotsRule}
 
 import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
@@ -206,48 +207,37 @@ object WaveSelector {
   /** A wave's batch: of the pending `frontier` rows with at most
     * `maxRetries` retries, each host's top `budget` rows that its robots
     * rule allows ([[Robots.allows]], [[Robots.waveBudget]]; a host with no
-    * rule allows all at the default delay), as batch rows round-robined to `fetchPartitions` partitions, so fetch parallelism
-    * follows the request count, not the few selection partitions.
+    * rule in `rules`, the crawl's merged rules keyed by host, allows all at
+    * the default delay), as batch rows round-robined to `fetchPartitions`
+    * partitions, so fetch parallelism follows the request count, not the
+    * few selection partitions.
     *
     * Row code, no query plan: the stages run inside the job that consumes
-    * the result. Broadcast rules: every input partition reduces to a
-    * bounded heap per host, and the heaps are merged by host, so the shuffle
-    * moves O(hosts × budget) candidates, never O(pending) rows. Rules placed
-    * by host: the pending rows move to their host's rules, where the heaps
-    * are then complete.
+    * the result. Every input partition reduces to a bounded heap per host,
+    * and the heaps are merged by host over `heapPartitions` partitions, so
+    * the shuffle moves O(hosts × budget) candidates, never O(pending) rows.
     */
-  def select(frontier: RDD[InternalRow], rules: HostRules, waveSeconds: Double,
-      maxRetries: Int, fetchPartitions: Int): RDD[InternalRow] = {
+  def select(frontier: RDD[InternalRow], rules: Broadcast[Map[String, RobotsRule]],
+      waveSeconds: Double, maxRetries: Int, heapPartitions: Int,
+      fetchPartitions: Int): RDD[InternalRow] = {
     // frontier row fields: url 0, urlHash 1, host 2, depth 3, priority 4,
     // status 5, retries 6, discoveredWave 7, discoveredRank 8, parentUrl 9
     val pending = frontier.filter(r => r.getUTF8String(5) == PendingUtf8 && r.getInt(6) <= maxRetries)
-    val heaps = rules.regime match {
-      case Left(bc) =>
-        pending.mapPartitions(hostHeaps(_, bc.value.get, waveSeconds).map { case (h, b) =>
-            (h, b.toBytes) })
-          .partitionBy(new HashPartitioner(rules.partitions))
-          .mapPartitions { parts =>
-            val byHost = new java.util.HashMap[UTF8String, NativeTopKBuf]()
-            parts.foreach { case (h, bytes) =>
-              byHost.merge(h, NativeTopKBuf.fromBytes(bytes), (a, b) => a.merge(b)) }
-            byHost.values.iterator.asScala
-          }
-      case Right(byHost) =>
-        pending.map { r => val c = r.copy(); (c.getUTF8String(2), c) }
-          .partitionBy(byHost.partitioner.get)
-          .zipPartitions(byHost) { (rows, rs) =>
-            val local = rs.map { case (h, rule) => h.toString -> rule }.toMap
-            hostHeaps(rows.map(_._2), local.get, waveSeconds).map(_._2)
-          }
-    }
-    heaps.mapPartitions { bufs =>
-      val toUnsafe = UnsafeProjection.create(BatchSchema)
-      bufs.flatMap(_.sorted.iterator.zipWithIndex.map { case (c, rank) =>
-        toUnsafe(new GenericInternalRow(Array[Any](c.url, c.urlHash, c.host, c.depth,
-          c.priority, c.retries, c.discoveredWave, c.discoveredRank, c.parentUrl,
-          rank.toLong))).copy(): InternalRow
-      })
-    }.repartition(fetchPartitions)
+    pending.mapPartitions(hostHeaps(_, rules.value.get, waveSeconds).map {
+        case (h, b) => (h, b.toBytes) })
+      .partitionBy(new HashPartitioner(heapPartitions))
+      .mapPartitions { parts =>
+        val byHost = new java.util.HashMap[UTF8String, NativeTopKBuf]()
+        parts.foreach { case (h, bytes) =>
+          byHost.merge(h, NativeTopKBuf.fromBytes(bytes), (a, b) => a.merge(b)) }
+        val toUnsafe = UnsafeProjection.create(BatchSchema)
+        byHost.values.iterator.asScala.flatMap(_.sorted.iterator.zipWithIndex.map {
+          case (c, rank) =>
+            toUnsafe(new GenericInternalRow(Array[Any](c.url, c.urlHash, c.host, c.depth,
+              c.priority, c.retries, c.discoveredWave, c.discoveredRank, c.parentUrl,
+              rank.toLong))).copy(): InternalRow
+        })
+      }.repartition(fetchPartitions)
   }
 
   /** Per host of `rows` with an allowed row: a heap of the rows its rule

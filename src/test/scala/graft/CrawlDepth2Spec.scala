@@ -76,11 +76,10 @@ class CrawlDepth2Spec extends SparkSpec {
     val rules = Seq(
       RobotsRule(host0, Seq("/people/f0", "/people/f1"), 1.0), // deny 2 profiles
       RobotsRule(graft.urls.Urls.hostOf(seeds(1).url), Nil, 0.25)) // 4x budget
-    // rulesBroadcastMaxRows = 0 forces the rules placed by host (the
-    // millions-of-hosts regime) through the FULL engine — deny/budget
-    // semantics must be identical to the broadcast regime
+    // the rules through the FULL engine: merged, broadcast once, and read by
+    // every wave's selection
     val engine = WaveRunner.run(spark, seeds, SyntheticSite.fetcher(site), rules,
-      CrawlConfig(waveSeconds = 1.0, rulesBroadcastMaxRows = 0L))
+      CrawlConfig(waveSeconds = 1.0))
     val fetched = engine.crawlOrder.collect()
       .map(r => (r.getAs[String]("host"), r.getAs[String]("url")))
     // host0: index + the two allowed profiles; f0/f1 denied

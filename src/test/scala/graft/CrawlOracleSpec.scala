@@ -147,12 +147,11 @@ class CrawlOracleSpec extends SparkSpec {
   // The leaf-wave rule: a wave with no fetched page below maxDepth skips
   // discovery. At maxDepth 1 every profile wave is a leaf; at maxDepth 2 none
   // is (its links are all duplicates), so both must give the oracle's crawl,
-  // in both robots-rules regimes and in snapshot mode.
+  // in memory and in snapshot mode.
   private val leafRegimes: Seq[(String, () => CrawlConfig)] = Seq(
     "memory mode"   -> (() => CrawlConfig()),
     "snapshot mode" -> (() => CrawlConfig(
-      snapshotDir = Some(java.nio.file.Files.createTempDirectory("graft_leaf").toString))),
-    "placed robots" -> (() => CrawlConfig(rulesBroadcastMaxRows = 0L)))
+      snapshotDir = Some(java.nio.file.Files.createTempDirectory("graft_leaf").toString))))
 
   for ((regime, cfg) <- leafRegimes; maxDepth <- Seq(1, 2))
     test(s"leaf waves, $regime, maxDepth $maxDepth: order, seen set and records match") {
@@ -160,7 +159,7 @@ class CrawlOracleSpec extends SparkSpec {
       val site = SiteConfig(universities = 2, deptsPerU = 1, facultyPerDept = 5,
         errorFraction = 0.2)
       // every host's rule is the default (allow all, 1 s delay), so the rules
-      // change no budget; they give the placed regime rows to place
+      // change no budget; the selection still looks each host up in them
       val rules = SyntheticSite.seeds(site).map(s => RobotsRule(
         graft.urls.Urls.hostOf(graft.urls.Urls.normalize(s.url)), Nil, Robots.DefaultCrawlDelayS))
       val (seeds, oracle, engine) =

@@ -1,7 +1,6 @@
 package graft
 
-import graft.frontier.{BloomTable, HostRules, NativeCand, NativeTopKBuf, Robots, UrlSeen,
-  WaveSelector}
+import graft.frontier.{BloomTable, NativeCand, NativeTopKBuf, Robots, UrlSeen, WaveSelector}
 import graft.model.{FrontierEntry, FrontierStatus, RobotsRule}
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
@@ -51,18 +50,18 @@ class FrontierSpec extends SparkSpec {
   }
 
   /** The batch [[WaveSelector.select]] takes from `rows`, in (host,
-    * host_rank) order, with the rules broadcast or placed by host.
+    * host_rank) order, with `rules` merged and broadcast as a crawl does.
     */
   private def batchOf(rows: RDD[InternalRow], rules: Seq[RobotsRule], waveSeconds: Double,
-      maxRetries: Int, broadcastRules: Boolean): Seq[Batched] = {
-    val hostRules = new HostRules(spark.sparkContext, rules,
-      if (broadcastRules) Long.MaxValue else 0L, partitions = 3)
-    try WaveSelector.select(rows, hostRules, waveSeconds, maxRetries, fetchPartitions = 5)
+      maxRetries: Int): Seq[Batched] = {
+    val byHost = spark.sparkContext.broadcast(Robots.mergeRules(rules).map(r => r.host -> r).toMap)
+    try WaveSelector.select(rows, byHost, waveSeconds, maxRetries, heapPartitions = 3,
+        fetchPartitions = 5)
       .map(r => (r.getUTF8String(2).toString, r.getLong(9), r.getUTF8String(0).toString,
         r.getLong(1), r.getInt(3), r.getDouble(4), r.getInt(5), r.getInt(6), r.getLong(7),
         r.getUTF8String(8).toString))
       .collect().toSeq.sortBy(b => (b._1, b._2))
-    finally hostRules.release()
+    finally byHost.destroy()
   }
 
   /** (host, host_rank, urlHash) of the batch [[WaveSelector.select]] takes
@@ -72,8 +71,8 @@ class FrontierSpec extends SparkSpec {
   private def selected(rows: Seq[(String, Double, Long)], budget: Int,
       layout: DataFrame => DataFrame = _.repartition(4)): Set[(String, Long, Long)] = {
     val frontier = stored(rows.map { case (h, p, id) => entry(s"https://$h/u$id", id, p) }, layout)
-    try batchOf(frontier, Nil, waveSeconds = budget.toDouble, maxRetries = 0,
-      broadcastRules = true).map(b => (b._1, b._2, b._4)).toSet
+    try batchOf(frontier, Nil, waveSeconds = budget.toDouble, maxRetries = 0)
+      .map(b => (b._1, b._2, b._4)).toSet
     finally GraftRows.release(frontier)
   }
 
@@ -201,7 +200,7 @@ class FrontierSpec extends SparkSpec {
     assert(a === topK(rows, 6))
   }
 
-  test("property: the row selector == per-host top-k restated in Scala, in both rules regimes") {
+  test("property: the row selector == per-host top-k restated in Scala") {
     // hosts with and without rules, deny prefixes that match and that do
     // not, budgets from non-integral quotients and of 1, non-pending rows,
     // rows past maxRetries, and priority ties broken by (discoveredWave,
@@ -246,9 +245,7 @@ class FrontierSpec extends SparkSpec {
             }
         }.sortBy(b => (b._1, b._2))
       val frontier = stored(rows)
-      for (broadcastRules <- Seq(true, false))
-        assert(batchOf(frontier, rules, waveSeconds, maxRetries, broadcastRules) === want,
-          s"broadcastRules = $broadcastRules, rules: $rules")
+      assert(batchOf(frontier, rules, waveSeconds, maxRetries) === want, s"rules: $rules")
       GraftRows.release(frontier)
     }
   }
@@ -283,11 +280,9 @@ class FrontierSpec extends SparkSpec {
     // h0 and h1 have rules (budgets 14 and 3 in a 7 s wave), h2 the default (7)
     val rules = Seq(RobotsRule("h0", Nil, 0.5), RobotsRule("h1", Nil, 2.0))
     val rows = stored((1 to 500).map(i => entry(s"https://h${i % 3}/u$i", i.toLong, i.toDouble)))
-    for (broadcastRules <- Seq(true, false)) {
-      val counts = batchOf(rows, rules, waveSeconds = 7.0, maxRetries = 0, broadcastRules)
-        .groupBy(_._1).view.mapValues(_.size).toMap
-      assert(counts === Map("h0" -> 14, "h1" -> 3, "h2" -> 7), s"broadcastRules = $broadcastRules")
-    }
+    val counts = batchOf(rows, rules, waveSeconds = 7.0, maxRetries = 0)
+      .groupBy(_._1).view.mapValues(_.size).toMap
+    assert(counts === Map("h0" -> 14, "h1" -> 3, "h2" -> 7))
     GraftRows.release(rows)
   }
 
@@ -308,10 +303,44 @@ class FrontierSpec extends SparkSpec {
       (0 until 6).map(i => s"https://h3.com/no-rule/$i")
     val rows = stored(urls.zipWithIndex.map { case (u, i) =>
       entry(u, i.toLong, if (denied.contains(u)) 10.0 else 1.0) })
-    val got = batchOf(rows, rules, waveSeconds = 4.0, maxRetries = 0, broadcastRules = true)
+    val got = batchOf(rows, rules, waveSeconds = 4.0, maxRetries = 0)
     assert(got.groupBy(_._1).view.mapValues(_.size).toMap ===
       Map("h1.com" -> 8, "h2.com" -> 2, "h3.com" -> 4)) // default: allow, 1s (scraper.py:83)
     assert(got.forall(g => !denied.contains(g._3)))
+  }
+
+  test("property: Robots.allows == its regex form on schemes, hosts, paths and queries") {
+    // the path test as it was written with a regex, restated: strip a
+    // leading http:// or https:// (case-sensitive) and the authority up to
+    // the first '/'
+    def regexAllows(url: String, deny: Seq[String]): Boolean =
+      url == null || deny == null || {
+        val path = url.replaceFirst("^https?://[^/]*", "")
+        !deny.exists(p => p != null && path.startsWith(p))
+      }
+    val url = for {
+      scheme <- Gen.oneOf("https://", "http://", "HTTP://", "Https://", "ftp://", "https:/",
+        "http:", "")
+      host   <- Gen.oneOf("h.edu", "h.edu:8080", "", "user@h.edu", "h.edu?")
+      path   <- Gen.oneOf("", "/", "/p", "/p/", "/private/x", "/people/f0?q=1", "?q=/p",
+        "/p?x=/private", "#/p", "//p")
+    } yield scheme + host + path
+    val deny = Gen.listOf(Gen.oneOf("/", "/p", "/p/", "/private", "?q", "", "h.edu", "https:",
+      "/people/f0?q", null))
+    val gen = for {
+      u <- Gen.frequency(20 -> url, 1 -> Gen.const(null: String))
+      d <- Gen.frequency(20 -> deny, 1 -> Gen.const(null: Seq[String]))
+    } yield (u, d)
+    samples(gen, 2000, seed = 20261021L).foreach { case (u, d) =>
+      assert(Robots.allows(u, d) === regexAllows(u, d), s"url = $u, deny = $d")
+    }
+    // the shapes named above, pinned
+    assert(!Robots.allows("https://h.edu", Seq("")) && Robots.allows("https://h.edu", Seq("/")))
+    assert(!Robots.allows("HTTP://h.edu/p", Seq("HTTP:")), "an upper-case scheme is no scheme")
+    assert(!Robots.allows("h.edu/p", Seq("h.edu")), "a URL with no scheme is all path")
+    assert(!Robots.allows("https://h.edu?q=/p", Seq("/p")),
+      "the authority ends at the first '/', even one in a query")
+    assert(Robots.allows(null, Seq("/")))
   }
 
   test("robots.txt parser: groups, agent specificity, crawl-delay, comments") {
@@ -350,37 +379,50 @@ class FrontierSpec extends SparkSpec {
     assert(Robots.parseRobotsTxt("h", "just text") === RobotsRule("h", Nil, 1.0))
   }
 
-  test("robots rules beyond broadcast: shuffle-join regime is plan-real and result-identical") {
-    // above the broadcast bound the pending rows move to their host's rules
-    // (an O(pending) shuffle); below it each partition ships one heap per host
-    val rules = Seq(RobotsRule("h1.com", Seq("/private"), 0.5), RobotsRule("h2.com", Nil, 2.0))
-    val rows = stored((0 until 400).map { i =>
-      val host = s"h${1 + i % 3}.com"
-      val path = if (i % 7 == 0) "private" else "public"
-      entry(s"https://$host/$path/$i", i.toLong, (i % 11).toDouble)
-    })
-    def shuffled(broadcastRules: Boolean): (Seq[Batched], Long) = {
-      val records = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (t.taskMetrics != null) {
-          records.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten); ()
-        }
+  test("pending >> batch: 64 hosts x 10^5 rows shuffle per-host heaps and the batch only") {
+    // the crawl's scale shape: every host has far more pending rows than its
+    // budget, so a selection that moved pending rows would shuffle ~10^5
+    // records; bounded heaps shuffle one per host and input partition, then
+    // the batch's round-robin to the fetch partitions
+    val (hosts, partitions, pending) = (64, 8, 100000L)
+    val rows = GraftRows.rows(spark.range(0L, pending, 1L, partitions).select(
+      concat(lit("https://h"), col("id") % hosts, lit(".edu/"),
+        when(col("id") % 7 === 0, "private").otherwise("public"), lit("/"), col("id")).as("url"),
+      col("id").as("urlHash"),
+      concat(lit("h"), col("id") % hosts, lit(".edu")).as("host"),
+      lit(1).as("depth"),
+      (col("id") % 11).cast("double").as("priority"),
+      lit(FrontierStatus.Pending).as("status"),
+      lit(0).as("retries"),
+      lit(0).as("discoveredWave"),
+      col("id").as("discoveredRank"),
+      lit("").as("parentUrl"))).map(_.copy())
+    rows.localCheckpoint()
+    assert(rows.count() === pending && rows.getNumPartitions === partitions)
+    // h0 denies /private and fetches at 0.5 s (budget 24); the rest default (12)
+    val rules = Seq(RobotsRule("h0.edu", Seq("/private"), 0.5))
+    val records = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (t.taskMetrics != null) {
+        records.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten); ()
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val got = batchOf(rows, rules, waveSeconds = 3.0, maxRetries = 0, broadcastRules)
-        org.apache.spark.GraftListenerSync.drain(spark.sparkContext)
-        (got, records.get())
-      } finally spark.sparkContext.removeSparkListener(listener)
     }
-    val (byHost, hostShuffle) = shuffled(broadcastRules = false)
-    val (broadcast, heapShuffle) = shuffled(broadcastRules = true)
-    assert(byHost === broadcast)
-    assert(broadcast.size === 6 + 1 + 3)
+    spark.sparkContext.addSparkListener(listener)
+    val got = try {
+      val b = batchOf(rows, rules, waveSeconds = 12.0, maxRetries = 0)
+      org.apache.spark.GraftListenerSync.drain(spark.sparkContext)
+      b
+    } finally spark.sparkContext.removeSparkListener(listener)
     GraftRows.release(rows)
-    assert(hostShuffle >= 400L, s"rules placed by host: $hostShuffle records shuffled")
-    assert(heapShuffle <= 4 * 3 + broadcast.size,
-      s"broadcast rules: $heapShuffle records shuffled, more than one heap per host and partition")
+    val perHost = got.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    assert(perHost.size === hosts)
+    assert(perHost.forall { case (h, ranks) =>
+      ranks === (0L until (if (h == "h0.edu") 24L else 12L)) })
+    assert(got.size === 63 * 12 + 24)
+    assert(got.filter(_._1 == "h0.edu").forall(_._3.startsWith("https://h0.edu/public/")))
+    assert(records.get() <= hosts.toLong * partitions + got.size,
+      s"${records.get()} records shuffled, more than one heap per host and partition " +
+        "plus the batch")
   }
 
   test("property: driver-merged robots rules equal the per-wave groupBy merge on duplicate hosts") {
