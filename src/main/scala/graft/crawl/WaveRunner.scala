@@ -59,8 +59,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * merged to one per host ([[graft.frontier.Robots.mergeRules]]) and that
   * host map is broadcast to the selection tasks before the loop, the
   * whitelist hosts are broadcast once, and both are destroyed when the loop
-  * ends. The URL-seen Bloom
-  * filter is shard rows held like the seen keys
+  * ends. The URL-seen Bloom filter is shard rows held like the seen keys
   * ([[graft.frontier.BloomTable]]), at every size: nothing of it lives on
   * the driver or is broadcast. Its shards start from the entry's seen keys
   * and take each non-leaf wave's discoveries where they live; the entry's

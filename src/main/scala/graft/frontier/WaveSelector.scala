@@ -223,7 +223,7 @@ object WaveSelector {
     // frontier row fields: url 0, urlHash 1, host 2, depth 3, priority 4,
     // status 5, retries 6, discoveredWave 7, discoveredRank 8, parentUrl 9
     val pending = frontier.filter(r => r.getUTF8String(5) == PendingUtf8 && r.getInt(6) <= maxRetries)
-    pending.mapPartitions(hostHeaps(_, rules.value.get, waveSeconds).map {
+    pending.mapPartitions(hostHeaps(_, rules.value, waveSeconds).map {
         case (h, b) => (h, b.toBytes) })
       .partitionBy(new HashPartitioner(heapPartitions))
       .mapPartitions { parts =>
@@ -240,11 +240,11 @@ object WaveSelector {
       }.repartition(fetchPartitions)
   }
 
-  /** Per host of `rows` with an allowed row: a heap of the rows its rule
-    * allows, sized by its budget. A row is tested against the rule before
-    * it enters the heap, and only when the heap would take it.
+  /** Per host of `rows` with an allowed row: a heap of the rows its rule in
+    * `rules` allows, sized by its budget. A row is tested against the rule
+    * before it enters the heap, and only when the heap would take it.
     */
-  private def hostHeaps(rows: Iterator[InternalRow], ruleOf: String => Option[RobotsRule],
+  private def hostHeaps(rows: Iterator[InternalRow], rules: Map[String, RobotsRule],
       waveSeconds: Double): Iterator[(UTF8String, NativeTopKBuf)] = {
     final class Slot(val host: UTF8String, val buf: NativeTopKBuf, val deny: Seq[String])
     val slots = new java.util.HashMap[UTF8String, Slot]()
@@ -252,7 +252,7 @@ object WaveSelector {
       val host = r.getUTF8String(2)
       var slot = slots.get(host)
       if (slot == null) {
-        val rule = ruleOf(host.toString)
+        val rule = rules.get(host.toString)
         val delay = rule.fold(Robots.DefaultCrawlDelayS)(_.crawlDelayS)
         slot = new Slot(host.clone(), NativeTopKBuf.empty(Robots.waveBudget(waveSeconds, delay)),
           rule.fold(Seq.empty[String])(_.denyPrefixes))
